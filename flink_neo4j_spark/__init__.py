@@ -9,8 +9,8 @@ This engine provides:
 - the full relational query surface the reference exercises through Cypher
   (:mod:`flink_neo4j_spark.operators.relational`),
 - a Cypher source/sink with the reference's batching semantics, re-expressed
-  over ``mapInPandas``/``foreachPartition`` with a pluggable transport
-  (:mod:`flink_neo4j_spark.sources.cypher`),
+  over ``mapInArrow`` (shuffle-free split reads, Arrow-fed batch writes) with
+  a pluggable transport (:mod:`flink_neo4j_spark.sources.cypher`),
 - LLM-data-pipeline operators: dedup, similarity search, text analysis,
   multimodal columns (:mod:`flink_neo4j_spark.operators`),
 - Structured Streaming windowing over the events table

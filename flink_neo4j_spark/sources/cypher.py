@@ -4,20 +4,20 @@
 Read side (`Neo4jInputFormat.java`): the reference POSTs one Cypher query and
 streams JSON rows into typed tuples on a SINGLE task (`NonParallelInput`,
 Input:42,161-165). Here reads are *partition-planned*: N generated per-split
-queries (``SKIP/LIMIT`` or an id-range predicate) fan out across executors
-via ``mapInPandas`` — fixing the reference's DOP=1 (SURVEY §4). Typed decode
-follows the reference's 6-type table (Input:114-134) with the same
-unsupported-type error behavior.
+queries (``SKIP/LIMIT`` or an id-range predicate) run one per partition of
+``spark.range(0, N, 1, N).mapInArrow`` — no shuffle, fixing the reference's
+DOP=1 (SURVEY §4). Typed decode follows the reference's 6-type table
+(Input:114-134) with the same unsupported-type error, a column at a time.
 
-Write side (`Neo4jOutputFormat.java`): per-partition micro-batched
-``UNWIND $rows AS r ...`` transactions with the reference's exact batch
-semantics — flush when full, final partial flush at close, ``batch_size=-1``
-means one batch per task at close (Output:72-75,106-121). The UNWIND
-parameter-name contract (Output:129-136) is kept (with its error) for
-user-supplied templates, but the engine can also *generate* the template
-from ``df.schema`` — column names are the parameter keys, making the
-reference's positional ``addParameterKey`` (Output:261-282) and one-row type
-inference (Output:182-202) unnecessary.
+Write side (`Neo4jOutputFormat.java`): ``mapInArrow`` feeds each partition's
+Arrow batches into micro-batched ``UNWIND $rows AS r ...`` transactions with
+the reference's exact batch semantics — flush when full, final partial flush
+at close, ``batch_size=-1`` means one batch per task at close
+(Output:72-75,106-121). The UNWIND parameter-name contract (Output:129-136)
+is kept (with its error) for user-supplied templates, but the engine can
+also *generate* the template from ``df.schema`` — column names are the
+parameter keys, making the reference's positional ``addParameterKey``
+(Output:261-282) and one-row type inference (Output:182-202) unnecessary.
 
 Delivery semantics: at-least-once for CREATE templates (Spark retries
 partitions; the reference has the same exposure, SURVEY §4); use MERGE
@@ -28,13 +28,14 @@ from __future__ import annotations
 
 import itertools
 import re
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from flink_neo4j_spark.sources.transport import Transport
 
@@ -119,17 +120,26 @@ _WRITABLE = (
 )
 
 #: Python-value coercions for the source's typed decode — the reference's
-#: 6 read types incl. null (`Neo4jInputFormat.java:114-134`).
-_READ_COERCE: dict[type, Callable[[Any], Any]] = {
-    T.BooleanType: bool,
-    T.IntegerType: int,
-    T.LongType: int,
-    T.DoubleType: float,
-    T.StringType: str,
+#: 6 read types incl. null (`Neo4jInputFormat.java:114-134`) — each with the
+#: value types a fetched column may already hold to skip the coercion.
+_READ_COERCE: dict[type, tuple[Callable[[Any], Any], set[type]]] = {
+    T.BooleanType: (bool, {bool}),
+    T.IntegerType: (int, {int}),
+    T.LongType: (int, {int}),
+    T.DoubleType: (float, {float, int}),
+    T.StringType: (str, {str}),
 }
 
 
-def _check_writable_schema(schema: T.StructType) -> None:
+def _check_sink_args(
+    schema: T.StructType, query: str | None, label: str | None, batch_size: int
+) -> None:
+    if (query is None) == (label is None):
+        raise ValueError("pass exactly one of 'query' or 'label'")
+    if batch_size == 0 or batch_size < -1:
+        raise ValueError(f"batch_size must be positive or -1, got {batch_size}")
+    if query is not None:
+        extract_parameter_name(query)  # validate; raises like Output:129-136
     for field in schema.fields:
         if not isinstance(field.dataType, _WRITABLE):
             raise TypeError(
@@ -137,6 +147,21 @@ def _check_writable_schema(schema: T.StructType) -> None:
                 f"column '{field.name}' on the Cypher write path (supported: "
                 f"boolean, int, bigint, float, double, string)"
             )
+    if not schema.fields:
+        # parity with the reference's >=1 parameter key rule (Output:310-312)
+        raise ValueError("DataFrame must have at least one column to write")
+
+
+def sink_statement(
+    columns: list[str], query: str | None, label: str | None, merge_key: str | None
+) -> str:
+    """The UNWIND statement a sink sends: the user ``query``, else the
+    template generated for ``label`` (idempotent MERGE on ``merge_key``)."""
+    if query is not None:
+        return query
+    if merge_key is not None:
+        return unwind_merge_template(label, merge_key, [c for c in columns if c != merge_key])
+    return unwind_create_template(label, columns)
 
 
 def decode_value(value: Any, dtype: T.DataType, column: str) -> Any:
@@ -144,7 +169,7 @@ def decode_value(value: Any, dtype: T.DataType, column: str) -> Any:
     unsupported shapes (`Neo4jInputFormat.java:129-132`)."""
     if value is None:
         return None
-    for spark_type, coerce in _READ_COERCE.items():
+    for spark_type, (coerce, _) in _READ_COERCE.items():
         if isinstance(dtype, spark_type):
             try:
                 return coerce(value)
@@ -159,6 +184,85 @@ def decode_value(value: Any, dtype: T.DataType, column: str) -> Any:
     )
 
 
+def decode_column(values: list[Any], dtype: T.DataType, column: str) -> pa.Array:
+    """One fetched column -> typed Arrow array, with the values and errors
+    of :func:`decode_value` per cell. A column already holding the target's
+    Python types (nulls allowed) goes to Arrow as is, unless Arrow refuses
+    it (an int a double cannot hold exactly)."""
+    arrow_type = to_arrow_type(dtype)
+    kinds = set(map(type, values)) - {type(None)}
+    if kinds <= _READ_COERCE.get(type(dtype), (None, set()))[1]:
+        try:
+            return pa.array(values, type=arrow_type)
+        except (pa.ArrowInvalid, OverflowError):
+            pass
+    decoded = [decode_value(v, dtype, column) for v in values]
+    try:
+        return pa.array(decoded, type=arrow_type)
+    except (pa.ArrowInvalid, OverflowError) as exc:
+        raise TypeError(
+            f"Field value out of range for column '{column}' ({dtype.simpleString()})"
+        ) from exc
+
+
+def fetch_rows(
+    transport: Transport, query: str, schema: T.StructType, params: dict[str, Any] | None
+) -> pa.RecordBatch:
+    """Run one split's query on ``transport`` (closed after, A1/A8) and
+    decode the rows a column at a time into one ``RecordBatch``. ``params``
+    are pushed-down predicate values (parameterized, never spliced — the
+    injection-safe replacement for Base:60's escaping), passed only when
+    present so pre-pushdown ``run(statement, rows)`` transports still work."""
+    try:
+        raw = transport.run(query, params=params) if params else transport.run(query)
+    finally:
+        transport.close()
+    return pa.RecordBatch.from_arrays(
+        [decode_column([r.get(f.name) for r in raw], f.dataType, f.name) for f in schema.fields],
+        schema=to_arrow_schema(schema),
+    )
+
+
+def _arrow_rows(batches: Iterable[pa.RecordBatch]) -> Iterator[dict[str, Any]]:
+    """Row dicts from Arrow batches, converted a column at a time
+    (``to_numpy().tolist()``, or ``to_pylist()`` for a column with nulls)."""
+    for batch in batches:
+        names = batch.schema.names
+        columns = [
+            c.to_pylist() if c.null_count else c.to_numpy(zero_copy_only=False).tolist()
+            for c in batch.columns
+        ]
+        for values in zip(*columns):
+            yield dict(zip(names, values))
+
+
+def send_batches(
+    transport: Transport, statement: str, batches: Iterable[pa.RecordBatch], batch_size: int
+) -> tuple[int, int]:
+    """Micro-batch the rows of ``batches`` into ``statement`` transactions
+    on ``transport`` (closed after) with the reference's semantics: flush
+    every ``batch_size`` rows across Arrow batch boundaries, flush the
+    partial batch at close, ``-1`` = one batch at close. Returns
+    ``(rows, transactions)``."""
+    rows = _arrow_rows(batches)
+    size = batch_size if batch_size > 0 else None
+    n_rows = n_batches = 0
+    try:
+        while True:
+            # A13 micro-batch accumulation; islice(None) = all-at-close
+            batch = list(itertools.islice(rows, size))
+            if not batch:
+                break  # A15: nothing left; partial batch already sent
+            transport.run(statement, rows=batch)  # A14 batch send
+            n_rows += len(batch)
+            n_batches += 1
+            if size is None:
+                break
+    finally:
+        transport.close()
+    return n_rows, n_batches
+
+
 # -- sink (A9-A15) ---------------------------------------------------------
 
 
@@ -169,9 +273,9 @@ def write_cypher(
     label: str | None = None,
     merge_key: str | None = None,
     batch_size: int = -1,
-) -> None:
+) -> int:
     """Write a DataFrame through per-partition micro-batched UNWIND
-    transactions.
+    transactions; returns the number of rows sent.
 
     Exactly one of ``query`` (user template, validated via
     :func:`extract_parameter_name`) or ``label`` (generated template; with
@@ -179,42 +283,14 @@ def write_cypher(
     the reference: N rows per transaction; ``-1`` = one transaction per
     partition at close (`Neo4jOutputFormat.java:72-75`).
     """
-    if (query is None) == (label is None):
-        raise ValueError("pass exactly one of 'query' or 'label'")
-    if batch_size == 0 or batch_size < -1:
-        raise ValueError(f"batch_size must be positive or -1, got {batch_size}")
-    _check_writable_schema(df.schema)
-    columns = df.columns
-    if not columns:
-        # parity with the reference's >=1 parameter key rule (Output:310-312)
-        raise ValueError("DataFrame must have at least one column to write")
-    if query is not None:
-        extract_parameter_name(query)  # validate; raises like Output:129-136
-        statement = query
-    elif merge_key is not None:
-        statement = unwind_merge_template(
-            label, merge_key, [c for c in columns if c != merge_key]
-        )
-    else:
-        statement = unwind_create_template(label, columns)
+    _check_sink_args(df.schema, query, label, batch_size)
+    statement = sink_statement(df.columns, query, label, merge_key)
 
-    def write_partition(rows: Iterator) -> None:
-        transport = transport_factory()
-        try:
-            it = (dict(zip(columns, r)) for r in rows)
-            size = batch_size if batch_size > 0 else None
-            while True:
-                # A13 micro-batch accumulation; islice(None) = all-at-close
-                batch = list(itertools.islice(it, size))
-                if not batch:
-                    break  # A15: nothing left; partial batch already sent
-                transport.run(statement, rows=batch)  # A14 batch send
-                if size is None:
-                    break
-        finally:
-            transport.close()
+    def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        n_rows, _ = send_batches(transport_factory(), statement, batches, batch_size)
+        yield pa.RecordBatch.from_pydict({"rows": pa.array([n_rows], pa.int64())})
 
-    df.foreachPartition(write_partition)
+    return sum(r.rows for r in df.mapInArrow(write_partition, "rows long").collect())
 
 
 def write_cypher_stream(
@@ -249,23 +325,10 @@ def write_cypher_stream(
     """
     # fail fast at start() time, not first-batch time: same checks the
     # batch writer applies (Output:129-136 / Output:310-312 parity)
-    if (query is None) == (label is None):
-        raise ValueError("pass exactly one of 'query' or 'label'")
-    if batch_size == 0 or batch_size < -1:
-        raise ValueError(f"batch_size must be positive or -1, got {batch_size}")
-    if query is not None:
-        extract_parameter_name(query)
-    _check_writable_schema(stream_df.schema)
+    _check_sink_args(stream_df.schema, query, label, batch_size)
 
     def sink_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        write_cypher(
-            batch_df,
-            transport_factory,
-            query=query,
-            label=label,
-            merge_key=merge_key,
-            batch_size=batch_size,
-        )
+        write_cypher(batch_df, transport_factory, query, label, merge_key, batch_size)
 
     writer = stream_df.writeStream.foreachBatch(sink_batch)
     if checkpoint_dir is not None:
@@ -361,7 +424,7 @@ class CypherSinkBuilder(_ConnectionOptionsMixin):
         self._batch_size = batch_size
         return self
 
-    def finish(self) -> Callable[[DataFrame], None]:
+    def _validated(self) -> tuple[Callable[[], Transport], dict[str, Any]]:
         # validate() parity: Base:201-208 requires uri+query; here a
         # transport factory OR a REST URI stands in for the uri, and one of
         # query/label for the statement.
@@ -370,18 +433,18 @@ class CypherSinkBuilder(_ConnectionOptionsMixin):
             raise ValueError("transport factory or REST URI not set")
         if (self._query is None) == (self._label is None):
             raise ValueError("exactly one of cypher query or label required")
-        query, label = self._query, self._label
-        merge_key, batch_size = self._merge_key, self._batch_size
+        return factory, dict(
+            query=self._query,
+            label=self._label,
+            merge_key=self._merge_key,
+            batch_size=self._batch_size,
+        )
 
-        def sink(df: DataFrame) -> None:
-            write_cypher(
-                df,
-                factory,
-                query=query,
-                label=label,
-                merge_key=merge_key,
-                batch_size=batch_size,
-            )
+    def finish(self) -> Callable[[DataFrame], int]:
+        factory, kw = self._validated()
+
+        def sink(df: DataFrame) -> int:
+            return write_cypher(df, factory, **kw)
 
         return sink
 
@@ -390,34 +453,31 @@ class CypherSinkBuilder(_ConnectionOptionsMixin):
         ``start(stream_df, checkpoint_dir=None, available_now=True)`` which
         begins a :func:`write_cypher_stream` query with this builder's
         validated configuration."""
-        factory = self._resolve_transport_factory(self._transport_factory)
-        if factory is None:
-            raise ValueError("transport factory or REST URI not set")
-        if (self._query is None) == (self._label is None):
-            raise ValueError("exactly one of cypher query or label required")
-        query, label = self._query, self._label
-        merge_key, batch_size = self._merge_key, self._batch_size
+        factory, kw = self._validated()
 
-        def start(
-            stream_df: DataFrame,
-            checkpoint_dir: str | None = None,
-            available_now: bool = True,
-        ):
+        def start(stream_df: DataFrame, checkpoint_dir: str | None = None, available_now=True):
             return write_cypher_stream(
-                stream_df,
-                factory,
-                query=query,
-                label=label,
-                merge_key=merge_key,
-                batch_size=batch_size,
-                checkpoint_dir=checkpoint_dir,
-                available_now=available_now,
+                stream_df, factory, checkpoint_dir=checkpoint_dir, available_now=available_now, **kw
             )
 
         return start
 
 
 # -- source (A1-A8) --------------------------------------------------------
+
+
+def split_queries(query: str, num_partitions: int, template: str | None) -> list[str]:
+    """One query per read split: ``query`` alone for one split, else
+    ``template`` with its ``{i}``/``{n}`` placeholders filled per split."""
+    if num_partitions == 1:
+        return [query]
+    if not template:
+        raise ValueError(
+            "num_partitions > 1 requires a partition_template with {i}/{n} "
+            "placeholders (id-range or SKIP/LIMIT) — re-partitioned reads are "
+            "only safe for deterministic pattern scans"
+        )
+    return [template.format(i=i, n=num_partitions) for i in range(num_partitions)]
 
 
 def read_cypher(
@@ -437,51 +497,22 @@ def read_cypher(
     id-range clause, or SKIP/LIMIT) — opt-in because re-partitioned reads are
     only safe for deterministic pattern scans (SURVEY §7 hard-part 4).
 
-    The fetch runs on executors inside ``mapInPandas`` (Arrow-batched); the
-    driver never sees row data. Decode applies the reference's 6-type
-    dispatch with its unsupported-type error.
+    The fetch runs on executors inside ``mapInArrow``, so row data never
+    leaves them. Decode applies the reference's 6-type dispatch with its
+    unsupported-type error, one column at a time (:func:`fetch_rows`).
     """
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
-    if num_partitions > 1 and partition_template is None:
-        raise ValueError(
-            "num_partitions > 1 requires a partition_template with {i}/{n} "
-            "placeholders (id-range or SKIP/LIMIT)"
-        )
-    fields = [(f.name, f.dataType) for f in schema.fields]
-    queries = (
-        [query]
-        if num_partitions == 1
-        else [partition_template.format(i=i, n=num_partitions) for i in range(num_partitions)]
-    )
-    splits = spark.createDataFrame(
-        [(i, q) for i, q in enumerate(queries)], "split_id int, split_query string"
-    ).repartition(len(queries), "split_id")
+    queries = split_queries(query, num_partitions, partition_template)
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for q in pdf["split_query"]:
-                transport = transport_factory()  # A1 open
-                try:
-                    # streamed by the transport; params are the pushed-down
-                    # predicate values (parameterized, never spliced — the
-                    # injection-safe replacement for Base:60's escaping).
-                    # Only passed when present so pre-pushdown transports
-                    # (run(statement, rows)) keep working.
-                    raw = (
-                        transport.run(q, params=params)
-                        if params
-                        else transport.run(q)
-                    )
-                finally:
-                    transport.close()  # A8 close
-                decoded = {
-                    name: [decode_value(row.get(name), dtype, name) for row in raw]
-                    for name, dtype in fields
-                }
-                yield pd.DataFrame(decoded, columns=[n for n, _ in fields])
+    def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for split in batch.column(0).to_pylist():
+                yield fetch_rows(transport_factory(), queries[split], schema, params)
 
-    return splits.mapInPandas(fetch, schema=schema)
+    # one split id per partition: the split's query is looked up on the
+    # executor, so planning the read costs no shuffle
+    return spark.range(0, len(queries), 1, len(queries)).mapInArrow(fetch, schema)
 
 
 # -- pushdown rendering (SURVEY §4, optional item 2) -----------------------
@@ -510,8 +541,7 @@ def render_pattern_scan(
     quote-escaping at `Neo4jFormatBase.java:60`).
     """
     for name in [label, var, *columns]:
-        if not _IDENT_RE.match(name):
-            raise ValueError(f"invalid Cypher identifier: {name!r}")
+        validate_identifier(name)
 
     def ref(col: str) -> str:
         return f"id({var})" if col == "id" else f"{var}.{col}"
@@ -522,8 +552,7 @@ def render_pattern_scan(
             raise ValueError(
                 f"predicate operator {op!r} not pushable (supported: {_PUSHABLE_OPS})"
             )
-        if not _IDENT_RE.match(col):
-            raise ValueError(f"invalid Cypher identifier: {col!r}")
+        validate_identifier(col)
         query_params[f"p{i}"] = value
         where.append(f"{ref(col)} {op} $p{i}")
     returns = ", ".join(f"{ref(c)} AS {c}" for c in columns)

@@ -14,12 +14,15 @@ resolution:
   ``read_cypher``)
 - ``DataSourceReader.read``    ↔ open/nextRecord/close
   (`Neo4jInputFormat.java:57-105`): one transport per partition, the
-  6-type decode per field, close in ``finally``
-- ``DataSourceWriter.write``   ↔ open/writeRecord/close
+  6-type decode a column at a time into one Arrow ``RecordBatch``, close
+  in ``finally`` (``cypher.fetch_rows``, shared with ``read_cypher``)
+- ``DataSourceArrowWriter.write`` ↔ open/writeRecord/close
   (`Neo4jOutputFormat.java:161-225`): micro-batch accumulation to
-  ``batch_size``, one ``UNWIND $rows`` statement per batch, final flush
-  at iterator end; ``commit``/``abort`` complete the task-commit protocol
-  the reference lacks (its failures leave half-written batches).
+  ``batch_size`` over Arrow record batches, one ``UNWIND $rows``
+  statement per batch, final flush at iterator end
+  (``cypher.send_batches``, shared with ``write_cypher``);
+  ``commit``/``abort`` complete the task-commit protocol the reference
+  lacks (its failures leave half-written batches).
 
 Transports are reconstructed ON EXECUTORS from string options (the
 DataSource API ships options, not closures — the same constraint as the
@@ -32,23 +35,23 @@ from __future__ import annotations
 
 import json
 from collections.abc import Iterator, Sequence
-from itertools import islice
-from typing import Any
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
 from pyspark.sql import types as T
 
 from flink_neo4j_spark.sources.cypher import (
-    decode_value,
     extract_parameter_name,
-    unwind_create_template,
-    unwind_merge_template,
+    fetch_rows,
+    send_batches,
+    sink_statement,
+    split_queries,
 )
 from flink_neo4j_spark.sources.transport import (
     BoltTransport,
@@ -102,43 +105,17 @@ class CypherReader(DataSourceReader):
             raise ValueError("option 'query' is required for cypher reads")
 
     def partitions(self) -> Sequence[InputPartition]:
-        n = int(self._options.get("num_partitions", "1"))
-        template = self._options.get("partition_template")
-        if n > 1 and not template:
-            raise ValueError(
-                "num_partitions > 1 requires partition_template with "
-                "{i}/{n} placeholders (id-range or SKIP/LIMIT) — "
-                "re-partitioned reads are only safe for deterministic "
-                "pattern scans"
-            )
-        if n == 1:
-            return [CypherInputPartition(0, self._query)]
-        return [
-            CypherInputPartition(i, template.format(i=i, n=n))
-            for i in range(n)
-        ]
-
-    def read(self, partition: CypherInputPartition) -> Iterator[tuple]:
-        params = (
-            json.loads(self._options["params"])
-            if self._options.get("params")
-            else None
+        queries = split_queries(
+            self._query,
+            int(self._options.get("num_partitions", "1")),
+            self._options.get("partition_template"),
         )
-        fields = [(f.name, f.dataType) for f in self._schema.fields]
-        transport = _transport_from_options(self._options)  # A1 open
-        try:
-            raw = (
-                transport.run(partition.query, params=params)
-                if params
-                else transport.run(partition.query)
-            )
-        finally:
-            transport.close()  # A8 close
-        for row in raw:  # A2/A3 iterate + materialize
-            yield tuple(
-                decode_value(row.get(name), dtype, name)
-                for name, dtype in fields
-            )
+        return [CypherInputPartition(i, q) for i, q in enumerate(queries)]
+
+    def read(self, partition: CypherInputPartition) -> Iterator[pa.RecordBatch]:
+        params = json.loads(self._options["params"]) if self._options.get("params") else None
+        transport = _transport_from_options(self._options)  # A1 open; A8 close in fetch_rows
+        yield fetch_rows(transport, partition.query, self._schema, params)
 
 
 class CypherCommit(WriterCommitMessage):
@@ -147,48 +124,28 @@ class CypherCommit(WriterCommitMessage):
         self.n_batches = n_batches
 
 
-class CypherWriter(DataSourceWriter):
+class CypherWriter(DataSourceArrowWriter):
     def __init__(self, schema: T.StructType, options: dict[str, str]):
-        self._schema = schema
         self._options = options
         self._batch_size = int(options.get("batch_size", "1000"))
-        query = options.get("query")
-        label = options.get("label")
-        if query:
-            extract_parameter_name(query)  # A10 validate early
-            self._template = query
-        elif label:
-            cols = [f.name for f in schema.fields]
-            merge_key = options.get("merge_key")
-            self._template = (
-                unwind_merge_template(
-                    label, merge_key, [c for c in cols if c != merge_key]
-                )
-                if merge_key
-                else unwind_create_template(label, cols)
-            )
-        else:
+        query, label = options.get("query"), options.get("label")
+        if not (query or label):
             raise ValueError(
                 "cypher writes need option 'query' (an UNWIND $rows "
                 "statement) or 'label' [+ 'merge_key']"
             )
+        if query:
+            extract_parameter_name(query)  # A10 validate early
+        self._template = sink_statement(
+            [f.name for f in schema.fields],
+            query or None,
+            label,
+            options.get("merge_key") or None,
+        )
 
-    def write(self, iterator: Iterator[Any]) -> CypherCommit:
-        names = [f.name for f in self._schema.fields]
+    def write(self, iterator: Iterator[pa.RecordBatch]) -> CypherCommit:
         transport = _transport_from_options(self._options)  # A9 task open
-        n_rows = n_batches = 0
-        try:
-            dicts = (dict(zip(names, row)) for row in iterator)
-            while True:
-                chunk = list(islice(dicts, self._batch_size))  # A13
-                if not chunk:
-                    break  # A15: islice already flushed the final partial
-                transport.run(self._template, rows=chunk)  # A14 batch send
-                n_rows += len(chunk)
-                n_batches += 1
-        finally:
-            transport.close()
-        return CypherCommit(n_rows, n_batches)
+        return CypherCommit(*send_batches(transport, self._template, iterator, self._batch_size))
 
     def commit(self, messages):  # pragma: no cover - trivial
         return None

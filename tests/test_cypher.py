@@ -4,14 +4,21 @@ incl. error branches, template/param-name contract, builder validation."""
 
 from __future__ import annotations
 
+import math
+
+import pyarrow as pa
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from flink_neo4j_spark.sources.cypher import (
     CypherSinkBuilder,
     CypherSourceBuilder,
+    decode_column,
     decode_value,
     extract_parameter_name,
     read_cypher,
+    send_batches,
     unwind_create_template,
     unwind_merge_template,
     write_cypher,
@@ -79,6 +86,56 @@ def test_decode_unsupported_type_errors():
         decode_value("not-an-int", T.IntegerType(), "c")
 
 
+#: JSON cell shapes a transport can hand back: the read types' own Python
+#: types, values the coercions accept (numeric strings, bools as ints) and
+#: values they reject (nested lists, non-numeric text, NaN/inf as ints).
+_CELL_KINDS = [
+    st.integers(-(2**31), 2**31 - 1),
+    st.floats(-1e9, 1e9) | st.sampled_from([math.nan, math.inf, -math.inf]),
+    st.booleans(),
+    st.integers(-1000, 1000).map(str),
+    st.floats(-1e3, 1e3).map(str),
+    st.text(max_size=4),
+    st.lists(st.integers(-5, 5) | st.lists(st.integers(-5, 5), max_size=2), max_size=3),
+]
+_COLUMNS = st.one_of(
+    st.lists(st.none() | st.one_of(_CELL_KINDS), max_size=8),
+    # one kind plus nulls: the columns the Arrow fast path takes
+    st.sampled_from(_CELL_KINDS).flatmap(lambda kind: st.lists(st.none() | kind, max_size=8)),
+)
+_READ_TYPES = [T.BooleanType(), T.IntegerType(), T.LongType(), T.DoubleType(), T.StringType()]
+
+
+def _outcome(fn):
+    try:
+        return "ok", [repr(v) for v in fn()]
+    except Exception as exc:  # the exact error is part of the contract
+        return type(exc), str(exc)
+
+
+@settings(max_examples=400, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(values=_COLUMNS, dtype=st.sampled_from([*_READ_TYPES, T.FloatType()]))
+def test_decode_column_matches_per_cell_decode(values, dtype):
+    """The column decoder gives per-cell decode_value's values, or raises
+    its exact error, for every read type (and the unsupported float)."""
+    assert _outcome(lambda: decode_column(values, dtype, "c").to_pylist()) == _outcome(
+        lambda: [decode_value(v, dtype, "c") for v in values]
+    )
+
+
+def test_decode_column_edge_cases():
+    # an all-null column of an unsupported read type decodes to nulls
+    nulls = decode_column([None, None], T.FloatType(), "c")
+    assert nulls.type == pa.float32() and nulls.to_pylist() == [None, None]
+    with pytest.raises(TypeError, match="Unsupported field type float"):
+        decode_column([None, 1.5], T.FloatType(), "c")
+    # ints a double cannot hold exactly are coerced like decode_value does
+    assert decode_column([2**60 + 1], T.DoubleType(), "c").to_pylist() == [float(2**60 + 1)]
+    assert decode_column([2**60 + 1, None], T.LongType(), "c").to_pylist() == [2**60 + 1, None]
+    with pytest.raises(TypeError, match="out of range for column 'c' \\(int\\)"):
+        decode_column([2**31], T.IntegerType(), "c")
+
+
 def test_write_rejects_unsupported_schema(spark, tmp_path):
     df = spark.createDataFrame([([1, 2],)], "xs array<int>")
     with pytest.raises(TypeError, match="Unsupported field type"):
@@ -101,12 +158,31 @@ def test_write_rejects_unsupported_schema(spark, tmp_path):
 def test_batch_boundaries(spark, tmp_path, n_rows, batch_size, expected_batches):
     spool = str(tmp_path / f"spool-{n_rows}-{batch_size}")
     df = spark.range(n_rows).selectExpr("CAST(id AS INT) AS n").coalesce(1)
-    write_cypher(df, make_factory(spool), label="Num", batch_size=batch_size)
+    assert write_cypher(df, make_factory(spool), label="Num", batch_size=batch_size) == n_rows
     batches = FileTransport(spool).batches()
     assert len(batches) == expected_batches
     assert sum(len(b["rows"]) for b in batches) == n_rows
     if batch_size > 0:
         assert all(len(b["rows"]) <= batch_size for b in batches)
+
+
+@pytest.mark.parametrize(
+    "batch_size,expected_sizes", [(3, [3, 3, 1]), (4, [4, 3]), (-1, [7])]
+)
+def test_batches_cross_arrow_batch_boundaries(tmp_path, batch_size, expected_sizes):
+    """Micro-batches fill across the Arrow batches of one partition; nulls
+    and non-null columns both arrive as plain JSON values."""
+    spool = str(tmp_path / f"arrow-{batch_size}")
+    arrow = [
+        pa.RecordBatch.from_pydict({"n": [0, 1, 2], "s": ["a", None, "c"]}),
+        pa.RecordBatch.from_pydict({"n": [3, 4, 5, 6], "s": ["d", "e", "f", "g"]}),
+    ]
+    sent = send_batches(FileTransport(spool), "UNWIND $rows AS r CREATE (n)", arrow, batch_size)
+    assert sent == (7, len(expected_sizes))
+    batches = FileTransport(spool).batches()
+    assert sorted(len(b["rows"]) for b in batches) == sorted(expected_sizes)
+    rows = sorted((r for b in batches for r in b["rows"]), key=lambda r: r["n"])
+    assert rows == [{"n": i, "s": s} for i, s in enumerate(["a", None, "c", "d", "e", "f", "g"])]
 
 
 def test_batch_size_validation(spark, tmp_path):
@@ -160,6 +236,16 @@ def test_round_trip_null_fields(spark, tmp_path):
     )
 
 
+def test_round_trip_bigint_with_null_keeps_precision(spark, tmp_path):
+    """A null in a bigint column must not widen the read through float64:
+    2**60 + 1 comes back exact."""
+    factory = make_factory(str(tmp_path / "bigint"))
+    rows = [(2**60 + 1, "a"), (None, "b")]
+    write_cypher(spark.createDataFrame(rows, "k bigint, s string"), factory, label="K")
+    back = read_cypher(spark, factory, "MATCH (n:K) RETURN n.k, n.s", schema="k bigint, s string")
+    assert sorted((tuple(r) for r in back.collect()), key=lambda r: r[1]) == rows
+
+
 def test_partitioned_read(spark, tmp_path):
     """N>1 read splits (fixing the reference's DOP=1, Input:42,161-165)."""
     spool = str(tmp_path / "parts")
@@ -191,7 +277,9 @@ def test_partitioned_read(spark, tmp_path):
         num_partitions=4,
         partition_template="MATCH (n:Num) WHERE n.n % {n} = {i} RETURN n.n",
     )
+    # one split per partition, planned without a shuffle
     assert back.rdd.getNumPartitions() == 4
+    assert "Exchange" not in back._jdf.queryExecution().executedPlan().toString()
     assert sorted(r["n"] for r in back.collect()) == list(range(30))
 
 
