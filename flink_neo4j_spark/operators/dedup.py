@@ -42,6 +42,7 @@ from flink_neo4j_spark.functions import (
     shingles_from_tokens_expr,
     tokens_expr,
 )
+from flink_neo4j_spark.tuning import memoized_count, propagate
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -625,9 +626,28 @@ def d6_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # yet A, B, C must dedup to ONE canonical doc.
 #
 # Components via iterative min-label propagation over the pair graph with a
-# driver-side convergence check (a scalar count per round — metadata, not
-# row data; clusters are shallow so this converges in ~2-4 rounds). The
+# driver-side convergence check (a scalar count per checkpoint — metadata,
+# not row data; clusters are shallow so this converges in ~2-4 rounds). The
 # oracle computes the same fixpoint with a recursive CTE.
+def _pair_components(
+    pairs: DataFrame, vids: DataFrame, n_vids: int
+) -> DataFrame:
+    """(vid, comp) — min-label connected components of the undirected
+    graph over ``vids(vid)`` whose edges are ``pairs(a_id, b_id)``,
+    propagated to the fixpoint. MAX_CC_ROUNDS bounds a pathological chain
+    (the fixpoint is monotone, so stopping early yields a coarser-but-valid
+    partition rather than garbage)."""
+    und = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
+    und = und.unionAll(
+        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    comp = vids.select("vid", F.col("vid").alias("comp"))
+    return propagate(
+        und, comp, F.col("comp"), F.min, n_vids, MAX_CC_ROUNDS,
+        until_stable=True,
+    )
+
+
 def _minhash_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vid, comp) — the min-label connected-component fixpoint over the
     memoized near-dup pair table. Session-memoized like the pair table
@@ -638,56 +658,13 @@ def _minhash_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization read by several downstream queries)."""
 
     def build() -> DataFrame:
-        pairs = _minhash_pairs(spark, sf_dir).select("a_id", "b_id")
-        und = _materialized(
-            pairs.unionAll(
-                pairs.select(
-                    F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id")
-                )
-            )
+        docs = load_table(spark, sf_dir, "documents").select(
+            F.col("doc_id").alias("vid")
         )
-        docs = load_table(spark, sf_dir, "documents").select("doc_id")
-        from flink_neo4j_spark.tuning import iter_kernel, memoized_count
-
         n_docs = memoized_count(
             spark, ("documents", os.path.abspath(sf_dir)), docs
         )
-        with iter_kernel(spark, n_docs) as k:
-            comp = docs.select(
-                F.col("doc_id").alias("vid"), F.col("doc_id").alias("comp")
-            )
-            # Convergence is checked every 2nd round only: the check is a
-            # full comparison join + count() job, and dedup graphs converge
-            # in 2-4 rounds, so halving the check cadence saves a job per
-            # round at the cost of at most one redundant propagation.
-            # MAX_CC_ROUNDS bounds a pathological chain (the fixpoint is
-            # monotone, so stopping early yields a coarser-but-valid
-            # partition rather than garbage). Checkpoints are lazy: the
-            # convergence count (or the next round's check) is the
-            # materializing action.
-            for rnd in range(1, MAX_CC_ROUNDS + 1):
-                msgs = und.join(
-                    k.bc(comp.withColumnRenamed("vid", "a_id")), "a_id"
-                ).select(F.col("b_id").alias("vid"), "comp")
-                new_comp = (
-                    comp.unionByName(msgs)
-                    .groupBy("vid")
-                    .agg(F.min("comp").alias("comp"))
-                    .localCheckpoint(eager=False)
-                )
-                if rnd % 2 == 0 or rnd == MAX_CC_ROUNDS:
-                    changed = (
-                        new_comp.alias("n")
-                        .join(k.bc(comp.alias("o")), "vid")
-                        .filter(F.col("n.comp") != F.col("o.comp"))
-                        .count()
-                    )
-                    comp = new_comp
-                    if changed == 0:
-                        break
-                else:
-                    comp = new_comp
-        return comp
+        return _pair_components(_minhash_pairs(spark, sf_dir), docs, n_docs)
 
     key = ("minhash_cc", os.path.abspath(sf_dir))
     return session_memo(spark, key, build)
@@ -740,44 +717,15 @@ def d12_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("cos") >= SEM_COS_THRESHOLD)
         .select("a_id", "b_id")
+        .localCheckpoint(eager=False)  # every propagation round re-scans it
     )
-    und = _materialized(
-        pairs.unionAll(
-            pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
-        )
+    vids = load_table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("vid")
     )
-    vids = load_table(spark, sf_dir, "embeddings").select("vec_id")
-    from flink_neo4j_spark.tuning import iter_kernel, memoized_count
-
     n_vecs = memoized_count(
         spark, ("embeddings", os.path.abspath(sf_dir)), vids
     )
-    with iter_kernel(spark, n_vecs) as k:
-        comp = vids.select(
-            F.col("vec_id").alias("vid"), F.col("vec_id").alias("comp")
-        )
-        for rnd in range(1, MAX_CC_ROUNDS + 1):
-            msgs = und.join(
-                k.bc(comp.withColumnRenamed("vid", "a_id")), "a_id"
-            ).select(F.col("b_id").alias("vid"), "comp")
-            new_comp = (
-                comp.unionByName(msgs)
-                .groupBy("vid")
-                .agg(F.min("comp").alias("comp"))
-                .localCheckpoint(eager=False)
-            )
-            if rnd % 2 == 0 or rnd == MAX_CC_ROUNDS:
-                changed = (
-                    new_comp.alias("n")
-                    .join(k.bc(comp.alias("o")), "vid")
-                    .filter(F.col("n.comp") != F.col("o.comp"))
-                    .count()
-                )
-                comp = new_comp
-                if changed == 0:
-                    break
-            else:
-                comp = new_comp
+    comp = _pair_components(pairs, vids, n_vecs)
     return comp.select(
         F.col("vid").alias("vec_id"),
         "comp",

@@ -21,10 +21,12 @@ Scale notes (100 TB posture):
 
 - pattern hops are equi-joins on vertex ids — Catalyst broadcasts the small
   side (Nation/Region are dimension-sized) and AQE handles skew;
-- iterative algorithms truncate lineage each round with ``localCheckpoint``
-  (reliable ``checkpoint`` on a cluster) so the plan does not grow with the
-  iteration count, and the per-round state is one (vid, value) row per
-  vertex — the minimal shuffle payload;
+- iterative algorithms truncate lineage every ``CHECKPOINT_EVERY`` rounds
+  with ``localCheckpoint`` (reliable ``checkpoint`` on a cluster) so the
+  plan does not grow with the iteration count, and the per-round state is
+  one (vid, value) row per vertex — the minimal shuffle payload. The
+  message/combine kernels (CC, BFS, SSSP, harmonic centrality, integer
+  PPR) run on ``tuning.propagate``, which owns that cadence;
 - iteration counts are fixed by graph diameter (CC) or convergence budget
   (PageRank), never by driver-side inspection of row data.
 """
@@ -42,6 +44,12 @@ import os
 
 from flink_neo4j_spark.catalog import load_table, session_memo
 from flink_neo4j_spark.graph import PropertyGraph
+from flink_neo4j_spark.tuning import (
+    CHECKPOINT_EVERY,
+    memoized_count,
+    propagate,
+    right_size,
+)
 
 
 def _copurchase_edges(
@@ -223,10 +231,30 @@ def g2_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: nation -> customer), so the min label reaches every vertex in 4 rounds;
 #: one extra round of margin.
 CC_ITERATIONS = 5
-#: lineage-truncation cadence for iterative loops: every round is wasteful
-#: (one materialization job per round), unbounded is a plan blowup; 3 keeps
-#: the optimizer input shallow while amortizing the checkpoint cost.
-CHECKPOINT_EVERY = 3
+
+
+def _tpch_undirected(
+    spark: SparkSession, sf_dir: str
+) -> tuple[PropertyGraph, DataFrame, int]:
+    """The fixture graph, both directions of its edges as ``(src, dst,
+    w)``, and that edge count (the ``propagate`` kernel size). The edge
+    set is a session-memoized projection, right-sized and checkpointed
+    once, because every propagation round re-scans it."""
+    g = tpch_graph(spark, sf_dir)
+    n_e = 2 * memoized_count(
+        spark, ("tpch_edges", os.path.abspath(sf_dir)), g.edges
+    )
+
+    def build() -> DataFrame:
+        und = g.edges.select("src", "dst", "w").unionAll(
+            g.edges.select(
+                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
+            )
+        )
+        return right_size(und, n_e).localCheckpoint()
+
+    key = ("tpch_undirected", os.path.abspath(sf_dir))
+    return g, session_memo(spark, key, build), n_e
 
 
 # G3 — connected components by iterative min-label propagation (HashMin).
@@ -234,41 +262,13 @@ CHECKPOINT_EVERY = 3
 # closed-form because the fixture topology is known (components == regions),
 # while the implementation is the general algorithm.
 def g3_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_neo4j_spark.tuning import iter_kernel, memoized_count, right_size
-
-    g = tpch_graph(spark, sf_dir)
-    n_e = 2 * memoized_count(
-        spark, ("tpch_edges", os.path.abspath(sf_dir)), g.edges
+    g, und, n_e = _tpch_undirected(spark, sf_dir)
+    comp = g.vertices.select(
+        F.col("id").alias("vid"), F.col("id").alias("comp")
     )
-    with iter_kernel(spark, n_e) as k:
-        undirected = right_size(
-            g.edges.select("src", "dst").unionAll(
-                g.edges.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-            ),
-            n_e,
-        ).persist()  # reused every round
-        comp = g.vertices.select(
-            F.col("id").alias("vid"), F.col("id").alias("comp")
-        )
-        for i in range(CC_ITERATIONS):
-            msgs = (
-                undirected.join(k.bc(comp.withColumnRenamed("vid", "src")), "src")
-                .select(F.col("dst").alias("vid"), "comp")
-            )
-            comp = comp.unionByName(msgs).groupBy("vid").agg(
-                F.min("comp").alias("comp")
-            )
-            # truncate lineage every CHECKPOINT_EVERY rounds so the plan
-            # stays bounded; lazy for intermediates (the next round's plan
-            # materializes them), eager for the last so the whole loop
-            # executes at the kernel width, not the caller's
-            if i == CC_ITERATIONS - 1:
-                comp = comp.localCheckpoint()
-            elif (i + 1) % CHECKPOINT_EVERY == 0:
-                comp = comp.localCheckpoint(eager=False)
-    return comp.orderBy("vid")
+    return propagate(
+        und, comp, F.col("comp"), F.min, n_e, CC_ITERATIONS
+    ).orderBy("vid")
 
 
 #: PageRank: damping, an iteration *budget* (hard cap), and the L1-residual
@@ -287,7 +287,7 @@ PR_TOLERANCE = 1e-6
 # brittle (driver records the rows-only check; SURVEY §2.3 ROUND discipline
 # covers aggregates, not 12-round fp recurrences).
 def g4_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_neo4j_spark.tuning import iter_kernel, memoized_count, right_size
+    from flink_neo4j_spark.tuning import iter_kernel
 
     g = tpch_graph(spark, sf_dir)
     n_e = memoized_count(
@@ -382,47 +382,17 @@ BFS_SOURCE = REGION_BASE + 0
 # G6 — single-source BFS (minimum hop count to every reachable vertex) as
 # join/agg rounds over the undirected edge set: each round expands the
 # current distance table by one hop and re-minimizes. State is one (vid,
-# hops) row per reached vertex; the edge table is persisted and re-probed
-# per round; lineage truncates on the CC cadence. The oracle is a DuckDB
-# RECURSIVE CTE — a genuinely different evaluation strategy (tuple-at-a-time
-# semi-naive recursion) that must produce identical hop counts.
+# hops) row per reached vertex. The oracle is a DuckDB RECURSIVE CTE — a
+# genuinely different evaluation strategy (tuple-at-a-time semi-naive
+# recursion) that must produce identical hop counts.
 def g6_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_neo4j_spark.tuning import iter_kernel, memoized_count, right_size
-
-    g = tpch_graph(spark, sf_dir)
-    n_e = 2 * memoized_count(
-        spark, ("tpch_edges", os.path.abspath(sf_dir)), g.edges
+    g, und, n_e = _tpch_undirected(spark, sf_dir)
+    dist = g.vertices.filter(F.col("id") == BFS_SOURCE).select(
+        F.col("id").alias("vid"), F.lit(0).alias("hops")
     )
-    with iter_kernel(spark, n_e) as k:
-        undirected = right_size(
-            g.edges.select("src", "dst").unionAll(
-                g.edges.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-            ),
-            n_e,
-        ).persist()
-        dist = (
-            g.vertices.filter(F.col("id") == BFS_SOURCE)
-            .select(F.col("id").alias("vid"), F.lit(0).alias("hops"))
-        )
-        for i in range(BFS_MAX_HOPS):
-            reached = (
-                undirected.join(k.bc(dist.withColumnRenamed("vid", "src")), "src")
-                .select(
-                    F.col("dst").alias("vid"), (F.col("hops") + 1).alias("hops")
-                )
-            )
-            dist = (
-                dist.unionByName(reached)
-                .groupBy("vid")
-                .agg(F.min("hops").alias("hops"))
-            )
-            if i == BFS_MAX_HOPS - 1:
-                dist = dist.localCheckpoint()
-            elif (i + 1) % CHECKPOINT_EVERY == 0:
-                dist = dist.localCheckpoint(eager=False)
-    return dist.orderBy("vid")
+    return propagate(
+        und, dist, F.col("hops") + 1, F.min, n_e, BFS_MAX_HOPS
+    ).orderBy("vid")
 
 
 # G7 — the front end's read-side extensions under the conformance gate:
@@ -815,45 +785,13 @@ def g51_cypher_rel_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tuple-at-a-time semi-naive recursion vs bulk-synchronous relaxation must
 # produce identical costs.
 def g13_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_neo4j_spark.tuning import iter_kernel, memoized_count, right_size
-
-    g = tpch_graph(spark, sf_dir)
-    n_e = 2 * memoized_count(
-        spark, ("tpch_edges", os.path.abspath(sf_dir)), g.edges
+    g, und, n_e = _tpch_undirected(spark, sf_dir)
+    dist = g.vertices.filter(F.col("id") == BFS_SOURCE).select(
+        F.col("id").alias("vid"), F.lit(0).cast("long").alias("dist")
     )
-    with iter_kernel(spark, n_e) as k:
-        undirected = right_size(
-            g.edges.select("src", "dst", "w").unionAll(
-                g.edges.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-                )
-            ),
-            n_e,
-        ).persist()
-        dist = (
-            g.vertices.filter(F.col("id") == BFS_SOURCE)
-            .select(
-                F.col("id").alias("vid"), F.lit(0).cast("long").alias("dist")
-            )
-        )
-        for i in range(BFS_MAX_HOPS):
-            relaxed = (
-                undirected.join(k.bc(dist.withColumnRenamed("vid", "src")), "src")
-                .select(
-                    F.col("dst").alias("vid"),
-                    (F.col("dist") + F.col("w")).alias("dist"),
-                )
-            )
-            dist = (
-                dist.unionByName(relaxed)
-                .groupBy("vid")
-                .agg(F.min("dist").alias("dist"))
-            )
-            if i == BFS_MAX_HOPS - 1:
-                dist = dist.localCheckpoint()
-            elif (i + 1) % CHECKPOINT_EVERY == 0:
-                dist = dist.localCheckpoint(eager=False)
-    return dist.orderBy("vid")
+    return propagate(
+        und, dist, F.col("dist") + F.col("w"), F.min, n_e, BFS_MAX_HOPS
+    ).orderBy("vid")
 
 
 # G16 — WITH pipeline through the front end: aggregate per nation, keep the
@@ -1388,8 +1326,8 @@ LPA_ROUNDS = 2
 # reuses one exchange), one partial-agg count on (vertex, label), one
 # window row_number per vertex. All linear in |E|; no driver-side state, no
 # label table collect. The fixed-round schedule keeps lineage shallow
-# enough to skip checkpointing; the to-fixpoint variant would localCheckpoint
-# every k rounds like g3/g4.
+# enough to skip checkpointing; a to-fixpoint variant would localCheckpoint
+# every CHECKPOINT_EVERY rounds like g4.
 def g24_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_neo4j_spark.tuning import iter_kernel, memoized_count, right_size
 
@@ -1471,40 +1409,26 @@ def g33_ppr_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
     teleport ``(SEED_MASS · (100 − DAMP)) div 100``. Each round is one
     equi-join + one partial-agg sum, the g4/g6 plan shape; K rounds
     unroll in the oracle as materialized CTEs."""
-    from flink_neo4j_spark.tuning import iter_kernel, memoized_count
-
     adj = _walk_adjacency(spark, sf_dir)
     n_e = memoized_count(
         spark, ("walk_adjacency", os.path.abspath(sf_dir)), adj
     )
-    with iter_kernel(spark, n_e) as k:
-        und = adj.select("u", "v", "deg")
-        seeds = und.select("u").distinct().orderBy("u").limit(PPR_SEEDS)
-        teleport = seeds.select(
-            F.col("u").alias("vid"),
-            F.lit(PPR_SEED_MASS * (100 - PPR_DAMP_PCT) // 100).alias("t_mass"),
-        ).localCheckpoint()
-        mass = teleport.select(
-            "vid", F.lit(PPR_SEED_MASS).cast("long").alias("mass")
-        )
-        for i in range(PPR_ROUNDS):
-            fwd = (
-                k.bc(mass).join(und, mass.vid == und.u)
-                .select(
-                    F.col("v").alias("vid"),
-                    F.expr(f"(mass * {PPR_DAMP_PCT}) div (100 * deg)").alias(
-                        "m"
-                    ),
-                )
-            )
-            mass = (
-                fwd.unionByName(
-                    teleport.select("vid", F.col("t_mass").alias("m"))
-                )
-                .groupBy("vid")
-                .agg(F.sum("m").alias("mass"))
-                .localCheckpoint(eager=i == PPR_ROUNDS - 1)
-            )
+    # rk == 0 is one row per node: the seeds need no distinct shuffle,
+    # which matters because the teleport carry is re-read every round
+    seeds = adj.filter(F.col("rk") == 0).orderBy("u").limit(PPR_SEEDS)
+    teleport = seeds.select(
+        F.col("u").alias("vid"),
+        F.lit(PPR_SEED_MASS * (100 - PPR_DAMP_PCT) // 100).alias("mass"),
+    )
+    mass = propagate(
+        adj.select(F.col("u").alias("src"), F.col("v").alias("dst"), "deg"),
+        teleport.select("vid", F.lit(PPR_SEED_MASS).cast("long").alias("mass")),
+        F.expr(f"(mass * {PPR_DAMP_PCT}) div (100 * deg)"),
+        F.sum,
+        n_e,
+        PPR_ROUNDS,
+        carry=teleport,
+    )
     return (
         mass.filter(F.col("mass") > 0)
         .select("vid", "mass")
@@ -1737,33 +1661,21 @@ def g28_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # accumulate as exact integers scaled by LCM(1..HOPS), so the sum is
 # layout-independent and the single division at the end is deterministic.
 def g29_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_neo4j_spark.tuning import iter_kernel, memoized_count
-
     adj = _walk_adjacency(spark, sf_dir)
     n_e = memoized_count(
         spark, ("walk_adjacency", os.path.abspath(sf_dir)), adj
     )
-    with iter_kernel(spark, n_e) as k:
-        und = adj.select("u", "v")
-        sources = (
-            und.select("u").distinct().orderBy("u").limit(HARMONIC_SOURCES)
-        )
-        dist = sources.select(
-            F.col("u").alias("s"), F.col("u").alias("vid"), F.lit(0).alias("d")
-        )
-        for i in range(HARMONIC_HOPS):
-            reached = k.bc(dist).join(und, dist.vid == und.u).select(
-                "s", F.col("v").alias("vid"), (F.col("d") + 1).alias("d")
-            )
-            dist = (
-                dist.unionByName(reached)
-                .groupBy("s", "vid")
-                .agg(F.min("d").alias("d"))
-            )
-            if i == HARMONIC_HOPS - 1:
-                dist = dist.localCheckpoint()
-            elif (i + 1) % CHECKPOINT_EVERY == 0:
-                dist = dist.localCheckpoint(eager=False)
+    sources = adj.select("u").distinct().orderBy("u").limit(HARMONIC_SOURCES)
+    dist = propagate(
+        adj.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+        sources.select(
+            F.col("u").alias("vid"), F.col("u").alias("s"), F.lit(0).alias("d")
+        ),
+        F.col("d") + 1,
+        F.min,
+        n_e,
+        HARMONIC_HOPS,
+    )
     return (
         dist.filter(F.col("d") > 0)
         .groupBy("vid")
@@ -3310,7 +3222,7 @@ def betweenness_centrality(
     Undirected graphs symmetrize and halve (each unordered pair counted
     once). Raises if the forward BFS has not drained within
     ``max_iters`` levels — the conscious-ceiling contract."""
-    from flink_neo4j_spark.tuning import iter_kernel, right_size
+    from flink_neo4j_spark.tuning import iter_kernel
 
     n_in = edges.count()
     e = edges.select(
@@ -3721,7 +3633,7 @@ def modularity_optimization(
     """(u, v) undirected distinct pairs (u < v) → ((id, comm), q_num,
     4m²): the best-modularity assignment over ``rounds`` synchronous
     gain rounds; modularity Q = q_num / (4m²) exactly."""
-    from flink_neo4j_spark.tuning import iter_kernel, right_size
+    from flink_neo4j_spark.tuning import iter_kernel
 
     edges = edges.select(
         F.col("u").cast("long"), F.col("v").cast("long")

@@ -13,9 +13,6 @@ derived from the committed ``CORRECTNESS_r*.json`` artifacts themselves:
   was red, or implementation/oracle edited since their last green row).
   FIRST because a failed row turning green is the round's most important
   hard signal, and the tier is small by construction;
-- pinned backlog — ``_BACKLOG_PINNED``: explicitly listed never-checked
-  queries that earlier rounds' tier-B family ordering repeatedly deferred;
-  they outrank new additions so the backlog drains before it can grow;
 - tier B — queries with NO driver row in any previous round (newly added),
   ordered by operator family novelty (streaming/temporal/multimodal first,
   the well-trodden relational shapes last) so a cap cuts the queries whose
@@ -112,47 +109,6 @@ _CHANGED_THIS_ROUND: tuple[str, ...] = (
 # Round-8 tier-A entries all earned green rows in CORRECTNESS_r08.json,
 # so they drop back to tier C here.
 
-#: Round-5 pinned backlog (the judge's round-4 ask #1): the 29 q-series
-#: relational shapes that have NEVER had a driver CORRECTNESS row because
-#: three rounds of new-query additions jumped them in tier B (``q`` sorts
-#: last in ``_FAMILY_PRIORITY``). Pinned EXPLICITLY between tier A and
-#: tier B so round-5 additions cannot jump the queue again: 29 backlog +
-#: a handful of new round-5 queries fits well inside the driver's ~50-row
-#: cap. Once CORRECTNESS_r05.json lands, ``_previously_green`` absorbs
-#: them into tier C and this pin becomes a no-op (it only lists names not
-#: yet green, so it is safe to leave in place).
-_BACKLOG_PINNED: tuple[str, ...] = (
-    "q35_salted_join",
-    "q36_histogram_percentile",
-    "q37_unpivot",
-    "q38_ntile_buckets",
-    "q39_late_supplier",
-    "q40_top_supplier",
-    "q41_nation_share",
-    "q42_negative_sampling",
-    "q43_incremental_merge",
-    "q44_order_count_distribution",
-    "q45_profit_by_nation_year",
-    "q46_dq_audit",
-    "q47_snapshot_diff",
-    "q48_bloom_semi_join",
-    "q49_cheapest_supplier",
-    "q50_market_share",
-    "q51_surplus_suppliers",
-    "q52_returned_top_customers",
-    "q53_table_stats",
-    "q54_erasure_cascade",
-    "q55_incremental_join",
-    "q56_fk_discovery",
-    "q57_cdc_apply",
-    "q59_lonely_late_supplier",
-    "q60_revenue_scan",
-    "q61_promo_share",
-    "q62_large_orders",
-    "q63_pricing_summary",
-    "q64_brand_margin",
-)
-
 
 def _previously_green() -> set[str]:
     """Names with a fully-green row in any committed CORRECTNESS artifact.
@@ -221,18 +177,13 @@ def _ordered(merged: dict) -> dict:
     """Reorder a merged name->value dict into tier order (see module doc)."""
     green = _previously_green()
     tier_a = [n for n in _CHANGED_THIS_ROUND if n in merged]
-    pinned = [
-        n
-        for n in _BACKLOG_PINNED
-        if n in merged and n not in green and n not in _CHANGED_THIS_ROUND
-    ]
-    placed = set(tier_a) | set(pinned)
+    placed = set(tier_a)
     tier_b = sorted(
         (n for n in merged if n not in green and n not in placed),
         key=lambda n: _FAMILY_PRIORITY.get(n[0], 9),
     )
     tier_c = [n for n in merged if n in green and n not in placed]
-    return {n: merged[n] for n in (*tier_a, *pinned, *tier_b, *tier_c)}
+    return {n: merged[n] for n in (*tier_a, *tier_b, *tier_c)}
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

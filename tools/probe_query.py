@@ -30,7 +30,6 @@ def main() -> None:
     spark = get_spark("probe")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
     queries = all_queries()
 
     # prime codegen/JIT exactly like the bench warmup
@@ -46,7 +45,6 @@ def main() -> None:
 
     for name in names:
         for label in ("pass1", "pass2"):
-            jobs_before = tracker.getJobIdsForGroup(None)
             n_jobs0 = len(sc._jsc.sc().statusTracker().getJobIdsForGroup(None) or [])
             t0 = time.perf_counter()
             df = queries[name](spark, sf_dir)
@@ -57,8 +55,6 @@ def main() -> None:
             new_jobs = len(job_ids) - n_jobs0
             n_stages = 0
             n_tasks = 0
-            for jid in job_ids[:]:
-                pass
             # count stages+tasks of the jobs launched in this window
             for jid in sorted(job_ids)[-new_jobs:] if new_jobs else []:
                 info = jsc_tracker.getJobInfo(jid)
