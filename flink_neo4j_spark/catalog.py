@@ -178,14 +178,10 @@ def documents_for_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table_for_compute(spark, sf_dir, "documents")
 
 
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register every table as a temp view so ``spark.sql`` works directly."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    for name in TABLES:
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def observe_quality(

@@ -3763,9 +3763,9 @@ def _varlength_paths_unbounded(
     one row per LIVE partial path carrying its edge-id array; each round is
     ONE equi-join of the frontier head against the edge list plus a JVM
     ``array_contains`` filter — no Python, no driver-side path handling.
-    Lineage truncates with ``localCheckpoint`` per round, and the per-round
-    driver scalar is the frontier count (the SCC/k-core one-scalar
-    discipline), doubling as the loud guard: a frontier past
+    The hops run on ``tuning.frontier_levels`` (no settled keys: every
+    partial path is kept), whose per-hop frontier count doubles as the
+    loud guard: a frontier past
     ``VAR_UNBOUNDED_MAX_FRONTIER`` rows or a graph whose paths outlive
     ``VAR_UNBOUNDED_MAX_ROUNDS`` raises instead of OOMing — dense
     components make path COUNTS exponential, and that is a property of the
@@ -3788,57 +3788,28 @@ def _varlength_paths_unbounded(
         # pushed-down source predicate: the expansion starts from the
         # MATCHED sources only (see _common_single_var_conds)
         a_src = _src_prefilter(a_src, pat.src.var, src_conds)
-    a_ids = a_src.select(F.col("id").alias("__a"))
-    first = a_ids.join(e, F.col("__a") == F.col("src")).select(
-        "__a",
-        F.col("dst").alias("__cur"),
-        F.array("id").alias("__rels"),
-        F.array("__a", "dst").alias("__nodes"),
-        F.lit(1).alias("__len"),
+    # level 0: the zero-length path of every source
+    seeds = a_src.select(
+        F.col("id").alias("__a"),
+        F.col("id").alias("__cur"),
+        F.array().cast("array<bigint>").alias("__rels"),
+        F.array("id").alias("__nodes"),
+        F.lit(0).alias("__len"),
     )
-    frontier = first
-    parts: list[DataFrame] = []
-    drained = False
-    # iter_kernel sizing (guide §2.2), the betweenness discipline: the
-    # edge list is checkpointed ONCE (each round previously re-derived
-    # the filter+union lineage from the graph checkpoint), the kernel is
-    # sized by max(|e|, frontier) so a tiny frontier on a huge graph can
-    # never force the edge shuffle narrow, and each round's own frontier
-    # count feeds k.resize — a frontier that explodes gets its width
-    # (and AQE) back before the next round. Rows carry node/edge-id
-    # arrays, so the per-partition row target is
-    # PATH_STATE_ROWS_PER_PARTITION (wider rows than the narrow-state
-    # default). Lazy checkpoint + count: ONE job per round materializes
-    # the level AND answers the guard (the eager-checkpoint + count pair
-    # was two).
-    from flink_neo4j_spark.tuning import iter_kernel
+    # the edge list is checkpointed ONCE and the kernel sized by
+    # max(|e|, frontier), so a tiny frontier on a huge graph never forces
+    # the edge shuffle narrow; rows carry node/edge-id arrays, hence the
+    # smaller PATH_STATE_ROWS_PER_PARTITION target
+    from flink_neo4j_spark.tuning import frontier_levels, iter_kernel
 
     e = e.localCheckpoint()
     n_e = e.count()
-    kernel = iter_kernel(
+    with iter_kernel(
         e.sparkSession, n_e, rows_per_partition=PATH_STATE_ROWS_PER_PARTITION
-    )
-    k = kernel.__enter__()
-    try:
-        for rnd in range(VAR_UNBOUNDED_MAX_ROUNDS + 1):
-            frontier = frontier.localCheckpoint(eager=False)
-            n = frontier.count()
-            if n == 0:
-                drained = True
-                break
-            if n > VAR_UNBOUNDED_MAX_FRONTIER:
-                raise RuntimeError(
-                    f"unbounded variable-length expansion frontier hit {n} "
-                    f"partial paths (cap {VAR_UNBOUNDED_MAX_FRONTIER}) at hop "
-                    f"{rnd + 1} — the pattern enumerates exponentially many "
-                    "paths on this graph; bound it (*lo..hi) or use "
-                    "shortestPath()"
-                )
-            k.resize(max(n, n_e))
-            parts.append(frontier)
-            if rnd == VAR_UNBOUNDED_MAX_ROUNDS:
-                break
-            frontier = (
+    ) as k:
+
+        def expand(frontier: DataFrame) -> DataFrame:
+            return (
                 frontier.join(k.bc(e), F.col("__cur") == F.col("src"))
                 .filter(~F.array_contains("__rels", F.col("id")))
                 .select(
@@ -3849,28 +3820,35 @@ def _varlength_paths_unbounded(
                     (F.col("__len") + 1).alias("__len"),
                 )
             )
-    finally:
-        kernel.__exit__(None, None, None)
-    if not drained:
-        raise RuntimeError(
+
+        undrained = RuntimeError(
             "unbounded variable-length expansion did not drain within "
             f"{VAR_UNBOUNDED_MAX_ROUNDS} hops; bound the pattern "
             "(*lo..hi) or raise VAR_UNBOUNDED_MAX_ROUNDS consciously"
         )
-    if not parts:  # no a-labeled node has an outgoing edge: empty result
-        parts = [first.limit(0)]
-    if lo == 0:
         # *0..: the zero-length path binds both endpoints to the same
         # node (dst label enforced by the final b-join, per openCypher)
-        parts.append(
-            a_src.select(
-                F.col("id").alias("__a"),
-                F.col("id").alias("__cur"),
-                F.array().cast("array<bigint>").alias("__rels"),
-                F.array("id").alias("__nodes"),
-                F.lit(0).alias("__len"),
-            )
-        )
+        parts = [seeds] if lo == 0 else []
+        # a broadcast expand keeps its input's partitioning, so every
+        # level inherits the seeds' width: start it at the kernel's
+        for hop, (level, n) in enumerate(
+            frontier_levels(
+                k, seeds.coalesce(k.width), expand,
+                VAR_UNBOUNDED_MAX_ROUNDS, n_e, undrained=undrained,
+            ),
+            1,
+        ):
+            if n > VAR_UNBOUNDED_MAX_FRONTIER:
+                raise RuntimeError(
+                    f"unbounded variable-length expansion frontier hit {n} "
+                    f"partial paths (cap {VAR_UNBOUNDED_MAX_FRONTIER}) at "
+                    f"hop {hop} — the pattern enumerates exponentially "
+                    "many paths on this graph; bound it (*lo..hi) or use "
+                    "shortestPath()"
+                )
+            parts.append(level)
+    if not parts:  # no a-labeled node has an outgoing edge: empty result
+        parts = [seeds.limit(0)]
     paths = parts[0]
     for part in parts[1:]:
         paths = paths.unionByName(part)
@@ -4599,9 +4577,9 @@ def _shortest_path(
     ``sequence(1, count)`` — counts stay bounded because ties only
     accumulate within the hop bound. ``length(p)`` resolves to the hop
     count in both forms. Undirected patterns BFS over the symmetrized
-    edge list. The one driver-side scalar per round is the frontier
-    count (the g22 early-exit discipline). WHERE predicates apply after
-    translation; at scale a source-selective query should prefilter the
+    edge list. The levels run on ``tuning.frontier_levels``, whose one
+    driver-side scalar per level is the frontier count. WHERE predicates
+    apply after translation; at scale a source-selective query should prefilter the
     anchor label (the frontier starts from every a-label node)."""
     carry_rep = carry_paths and not all_paths
     carry_all = carry_paths and all_paths
@@ -4662,103 +4640,78 @@ def _shortest_path(
                 )
             ).alias("__paths")
         )
-    # iter_kernel sizing (guide §2.2), the betweenness discipline: edges
-    # checkpointed once (each level previously re-derived the
-    # filter+union lineage), kernel sized by max(|e|, |settled pairs|)
-    # with the path-state row target, per-level width re-derived from the
-    # frontier count (k.resize). Lazy checkpoint + count folds the
-    # materialize + isEmpty job pair into one job per level.
-    from flink_neo4j_spark.tuning import iter_kernel
+    # edges checkpointed once, kernel sized by max(|e|, frontier) with
+    # the path-state row target (as in _varlength_paths_unbounded)
+    from flink_neo4j_spark.tuning import frontier_levels, iter_kernel
 
     e = e.localCheckpoint()
     n_e = e.count()
-    kernel = iter_kernel(
+    with iter_kernel(
         e.sparkSession, n_e, rows_per_partition=PATH_STATE_ROWS_PER_PARTITION
-    )
-    k = kernel.__enter__()
-    try:
-        dist = a_nodes.select(*init_cols).localCheckpoint()
-        frontier = dist
-        return _shortest_path_bfs(
-            e, n_e, k, dist, frontier, graph, pat, pathvar, vcols, a_nodes,
-            lo, hi, unbounded, carry_rep, carry_all, carry_paths, all_paths,
-        )
-    finally:
-        kernel.__exit__(None, None, None)
+    ) as k:
+        seeds = a_nodes.select(*init_cols).localCheckpoint()
 
-
-def _shortest_path_bfs(
-    e, n_e, k, dist, frontier, graph, pat, pathvar, vcols, a_nodes,
-    lo, hi, unbounded, carry_rep, carry_all, carry_paths, all_paths,
-):
-    for i in range(hi):
-        aggs = [F.sum("__cnt").alias("__cnt")]
-        if carry_rep:
-            aggs.append(
-                F.min(
-                    F.struct(
-                        F.concat("__nodes", F.array(F.col("__d"))).alias("n"),
-                        F.concat("__rels", F.array(F.col("__eid"))).alias("r"),
-                    )
-                ).alias("__rep")
-            )
-        if carry_all:
-            aggs.append(
-                F.slice(
-                    F.array_sort(F.flatten(F.collect_list("__ext"))),
-                    1,
-                    ALL_PATHS_TIE_CAP + 1,
-                ).alias("__paths")
-            )
-        joined = frontier.join(k.bc(e), F.col("__v") == F.col("__s"))
-        if carry_all:
-            joined = joined.withColumn(
-                "__ext",
-                F.transform(
-                    F.col("__paths"),
-                    lambda pp: F.struct(
-                        F.concat(pp["n"], F.array(F.col("__d"))).alias("n"),
-                        F.concat(pp["r"], F.array(F.col("__eid"))).alias("r"),
+        def expand(frontier: DataFrame) -> DataFrame:
+            # every frontier row has the same __len; aggregating it keeps
+            # the plan free of a per-level literal
+            aggs = [
+                F.sum("__cnt").alias("__cnt"),
+                (F.max("__len") + 1).alias("__len"),
+            ]
+            if carry_rep:
+                aggs.append(
+                    F.min(
+                        F.struct(
+                            F.concat("__nodes", F.array(F.col("__d"))).alias("n"),
+                            F.concat("__rels", F.array(F.col("__eid"))).alias("r"),
+                        )
+                    ).alias("__rep")
+                )
+            if carry_all:
+                aggs.append(
+                    F.slice(
+                        F.array_sort(F.flatten(F.collect_list("__ext"))),
+                        1,
+                        ALL_PATHS_TIE_CAP + 1,
+                    ).alias("__paths")
+                )
+            joined = frontier.join(k.bc(e), F.col("__v") == F.col("__s"))
+            if carry_all:
+                joined = joined.withColumn(
+                    "__ext",
+                    F.transform(
+                        F.col("__paths"),
+                        lambda pp: F.struct(
+                            F.concat(pp["n"], F.array(F.col("__d"))).alias("n"),
+                            F.concat(pp["r"], F.array(F.col("__eid"))).alias("r"),
+                        ),
                     ),
-                ),
-            )
-        nxt = (
-            joined.groupBy("__a", F.col("__d").alias("__v"))
-            .agg(*aggs)
-            .withColumn("__len", F.lit(i + 1))
-        )
-        if carry_rep:
-            nxt = nxt.select(
-                "__a",
-                "__v",
-                "__len",
-                "__cnt",
-                F.col("__rep")["n"].alias("__nodes"),
-                F.col("__rep")["r"].alias("__rels"),
-            )
-        if carry_all:
-            nxt = nxt.select("__a", "__v", "__len", "__cnt", "__paths")
-        # lazy checkpoint + count: ONE job materializes the level AND
-        # answers the drain check (the eager-checkpoint + isEmpty pair
-        # was two jobs per level)
-        frontier = nxt.join(
-            dist.select("__a", "__v"), ["__a", "__v"], "left_anti"
-        ).localCheckpoint(eager=False)
-        n_front = frontier.count()
-        if n_front == 0:
-            break
-        k.resize(max(n_front, n_e))
-        dist = dist.unionByName(frontier.select(*dist.columns))
-        if (i + 1) % 3 == 0 or i == hi - 1:
-            dist = dist.localCheckpoint(eager=False)
-    else:
-        if unbounded and frontier.count() != 0:
-            raise RuntimeError(
-                "unbounded shortestPath BFS did not drain within "
-                f"{VAR_UNBOUNDED_MAX_ROUNDS} levels (graph diameter "
-                "exceeds the ceiling); bound the pattern or raise "
-                "VAR_UNBOUNDED_MAX_ROUNDS consciously"
-            )
+                )
+            nxt = joined.groupBy("__a", F.col("__d").alias("__v")).agg(*aggs)
+            if carry_rep:
+                nxt = nxt.select(
+                    "__a",
+                    "__v",
+                    "__len",
+                    "__cnt",
+                    F.col("__rep")["n"].alias("__nodes"),
+                    F.col("__rep")["r"].alias("__rels"),
+                )
+            if carry_all:
+                nxt = nxt.select("__a", "__v", "__len", "__cnt", "__paths")
+            return nxt
+
+        undrained = RuntimeError(
+            "unbounded shortestPath BFS did not drain within "
+            f"{VAR_UNBOUNDED_MAX_ROUNDS} levels (graph diameter "
+            "exceeds the ceiling); bound the pattern or raise "
+            "VAR_UNBOUNDED_MAX_ROUNDS consciously"
+        ) if unbounded else None
+        dist = seeds
+        for level, _ in frontier_levels(
+            k, seeds, expand, hi, n_e, ["__a", "__v"], undrained
+        ):
+            dist = dist.unionByName(level)
     # lo=0 admits the zero-length self-pair (settled at BFS level 0);
     # every lo>=1 keeps excluding it, as before
     paths = dist.filter(F.col("__len") >= lo)

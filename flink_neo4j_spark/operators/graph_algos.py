@@ -2925,13 +2925,8 @@ def strongly_connected_components(
     from flink_neo4j_spark.tuning import iter_kernel
 
     n_e = edges.count()
-    spark = edges.sparkSession
-    kernel = iter_kernel(spark, n_e)
-    k = kernel.__enter__()
-    try:
+    with iter_kernel(edges.sparkSession, n_e) as k:
         return _scc_kernel(edges, n_e, max_iters, max_rounds, back_iters, k)
-    finally:
-        kernel.__exit__(None, None, None)
 
 
 def _scc_kernel(
@@ -3199,8 +3194,9 @@ ORACLE["g57_cypher_pattern_comp"] = """
 # -- betweenness centrality ------------------------------------------------
 #
 # Brandes' algorithm, all sources BATCHED in one dataflow: the forward
-# pass is the same level-synchronous counting BFS as the shortestPath
-# front end (per-(source, v) state carrying (dist, σ) — never path
+# pass is a ``tuning.frontier_levels`` counting BFS, as in the
+# shortestPath front end (per-(source, v) state carrying σ, the level
+# index being the position in the level list — never path
 # enumeration), and the backward pass accumulates the dependency
 # recurrence δ(s,v) = Σ_{w : succ} σ_sv/σ_sw · (1 + δ(s,w)) one BFS
 # LEVEL at a time (one edge join + one state merge per level, all
@@ -3220,9 +3216,9 @@ def betweenness_centrality(
     ``sources=None`` = exact (every vertex a source); a DataFrame of
     ``vid`` rows computes the restricted sum (sampled estimator).
     Undirected graphs symmetrize and halve (each unordered pair counted
-    once). Raises if the forward BFS has not drained within
-    ``max_iters`` levels — the conscious-ceiling contract."""
-    from flink_neo4j_spark.tuning import iter_kernel
+    once). Raises if the forward BFS needs more than ``max_iters``
+    levels — the conscious-ceiling contract."""
+    from flink_neo4j_spark.tuning import frontier_levels, iter_kernel
 
     n_in = edges.count()
     e = edges.select(
@@ -3234,10 +3230,7 @@ def betweenness_centrality(
             e.select(F.col("__d").alias("__s"), F.col("__s").alias("__d"))
         )
     n_e = n_in * (2 if undirected else 1)
-    spark = edges.sparkSession
-    kernel = iter_kernel(spark, n_e)
-    k = kernel.__enter__()
-    try:
+    with iter_kernel(edges.sparkSession, n_e) as k:
         e = right_size(e, n_e).localCheckpoint()
         verts = (
             e.select(F.col("__s").alias("vid"))
@@ -3247,60 +3240,44 @@ def betweenness_centrality(
         src = verts if sources is None else sources.select(
             F.col("vid").cast("long")
         )
-        dist = src.select(
+        seeds = src.select(
             F.col("vid").alias("s"),
             F.col("vid").alias("v"),
             F.lit(1).cast("double").alias("sigma"),
         ).localCheckpoint()
-        frontier = dist
-        levels: list[DataFrame] = [frontier]  # level 0 = the sources
-        maxlev = 0
-        for i in range(max_iters):
-            # NOTE: no per-level literal in this plan (the old
-            # ``withColumn("d", lit(i+1))`` made every level's generated
-            # code unique, costing a fresh Janino compile per level; the
-            # level index lives in the Python-side ``levels`` list)
-            nxt = (
+
+        def expand(frontier: DataFrame) -> DataFrame:
+            # no per-level literal in this plan: every level reuses the
+            # same generated code (the level index is the position in
+            # ``levels``)
+            return (
                 frontier.join(k.bc(e), F.col("v") == F.col("__s"))
                 .groupBy("s", F.col("__d").alias("v"))
                 .agg(F.sum("sigma").alias("sigma"))
             )
-            # lazy checkpoint + count: ONE job materializes the level AND
-            # answers the drain check (the eager-checkpoint + isEmpty pair
-            # was two jobs per level)
-            frontier = nxt.join(
-                k.bc(dist.select("s", "v")), ["s", "v"], "left_anti"
-            ).localCheckpoint(eager=False)
-            if frontier.count() == 0:
-                break
-            maxlev = i + 1
-            levels.append(frontier)
-            # lazy 2-way union checkpoint: the NEXT level's job
-            # materializes it for free, and the anti-join's input is
-            # always a 2-way union of checkpointed scans — a constant
-            # plan shape, so every level reuses the same generated code
-            # (a growing k-way union recompiled per level)
-            dist = dist.unionByName(
-                frontier.select(*dist.columns)
-            ).localCheckpoint(eager=False)
-        else:
-            raise ValueError(
-                f"betweenness forward BFS did not drain in max_iters="
-                f"{max_iters} levels; raise the bound for this graph"
+
+        undrained = ValueError(
+            f"betweenness forward BFS did not drain in max_iters="
+            f"{max_iters} levels; raise the bound for this graph"
+        )
+        levels = [seeds] + [
+            level
+            for level, _ in frontier_levels(
+                k, seeds, expand, max_iters, n_e, ["s", "v"], undrained
             )
-        return _bc_backward(e, levels, maxlev, undirected, k)
-    finally:
-        kernel.__exit__(None, None, None)
+        ]
+        return _bc_backward(e, levels, undirected, k)
 
 
 def _bc_backward(
-    e: DataFrame, levels: list[DataFrame], maxlev: int, undirected: bool, k
+    e: DataFrame, levels: list[DataFrame], undirected: bool, k
 ) -> DataFrame:
     """Backward dependency accumulation of :func:`betweenness_centrality`
     (runs inside the caller's iter_kernel scope; the result is
     materialized before the scope closes so every backward stage executes
     at the kernel width)."""
     scale = 0.5 if undirected else 1.0
+    maxlev = len(levels) - 1
     if maxlev == 0:
         # edgeless sources: every betweenness is 0 and the original
         # d>0 filter yields the empty frame — keep that contract
@@ -3646,12 +3623,8 @@ def modularity_optimization(
             "modularity_optimization: 4m^2 exceeds int64 headroom; "
             "partition the graph or rescale first"
         )
-    kernel = iter_kernel(edges.sparkSession, 2 * m)
-    k_ = kernel.__enter__()
-    try:
-        return _modopt_kernel(edges, m, rounds, k_)
-    finally:
-        kernel.__exit__(None, None, None)
+    with iter_kernel(edges.sparkSession, 2 * m) as k:
+        return _modopt_kernel(edges, m, rounds, k)
 
 
 def _modopt_kernel(

@@ -4,39 +4,22 @@ Aggregates ``QUERIES``/``ORACLE`` from every operator module. A query with no
 oracle entry is checked rows-only by the driver (reserved for genuinely
 non-SQL-expressible operators, e.g. LSH bucketing or streaming state).
 
-Ordering matters: the conformance driver records at most ~50 query rows per
-run (round 1's CORRECTNESS file stopped at exactly 50 entries, cutting off
-the registry tail), so ``all_queries`` yields queries in priority order,
-derived from the committed ``CORRECTNESS_r*.json`` artifacts themselves:
-
-- tier A — queries listed in ``_CHANGED_THIS_ROUND`` (previous driver row
-  was red, or implementation/oracle edited since their last green row).
-  FIRST because a failed row turning green is the round's most important
-  hard signal, and the tier is small by construction;
-- tier B — queries with NO driver row in any previous round (newly added),
-  ordered by operator family novelty (streaming/temporal/multimodal first,
-  the well-trodden relational shapes last) so a cap cuts the queries whose
-  family already has many green rows;
-- tier C — everything else (green — or rows-only-recorded ``no_oracle`` —
-  in some previous round and unchanged), in stable module order. If the
-  driver cap cuts anything, it cuts here, and because the tiers are
-  recomputed from the artifacts each round, whatever the cap skipped
-  automatically rotates to the front next round.
-
-Local ``tests/test_conformance.py`` always checks the full set regardless.
+``all_queries`` yields the names in ``_CHANGED_THIS_ROUND`` first, then
+every other query in module order. The order is fixed by this code alone:
+a conformance driver that records only the first ~50 rows of a run
+certifies the pinned queries first. Local ``tests/test_conformance.py``
+always checks the full set.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 #: Queries whose engine code or oracle changed this round: their previous
-#: green rows no longer certify the current code. Update per round.
+#: green rows no longer certify the current code. They lead the
+#: ``all_queries`` order. Update per round.
 _CHANGED_THIS_ROUND: tuple[str, ...] = (
     # round 10 plan-changed (this optimization round): t14's source-pair
     # statistics now come from a bitmask aggregation (the sg-keyed
@@ -106,38 +89,6 @@ _CHANGED_THIS_ROUND: tuple[str, ...] = (
     "t8_pack_sequences",
     "t12_bigram_lm",
 )
-# Round-8 tier-A entries all earned green rows in CORRECTNESS_r08.json,
-# so they drop back to tier C here.
-
-
-def _previously_green() -> set[str]:
-    """Names with a fully-green row in any committed CORRECTNESS artifact.
-
-    Green = no error AND row counts matched AND (value hash matched, or the
-    query is rows-only so there is no hash to match). Failed/erred rows stay
-    out, so they keep tier-0 priority until a green row lands.
-    """
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    green: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("err") == "no_oracle":
-                # rows-only query, already recorded — a repeat row can never
-                # say more, so don't spend a capped driver slot on it again
-                green.add(name)
-                continue
-            if row.get("err") is not None:
-                continue
-            if row.get("rows_match") and row.get("hash_match") in (True, None):
-                green.add(name)
-    return green
 
 
 def _modules():
@@ -168,29 +119,12 @@ def _modules():
     )
 
 
-#: tier-B family order: least-proven operator families first (streaming,
-#: temporal, multimodal), the heavily-green relational tail last.
-_FAMILY_PRIORITY = {"w": 0, "a": 1, "m": 2, "s": 3, "g": 4, "d": 5, "t": 6, "q": 7}
-
-
-def _ordered(merged: dict) -> dict:
-    """Reorder a merged name->value dict into tier order (see module doc)."""
-    green = _previously_green()
-    tier_a = [n for n in _CHANGED_THIS_ROUND if n in merged]
-    placed = set(tier_a)
-    tier_b = sorted(
-        (n for n in merged if n not in green and n not in placed),
-        key=lambda n: _FAMILY_PRIORITY.get(n[0], 9),
-    )
-    tier_c = [n for n in merged if n in green and n not in placed]
-    return {n: merged[n] for n in (*tier_a, *tier_b, *tier_c)}
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _modules():
         merged.update(mod.QUERIES)
-    return _ordered(merged)
+    pinned = {n: merged.pop(n) for n in _CHANGED_THIS_ROUND if n in merged}
+    return pinned | merged
 
 
 def all_oracles() -> dict[str, str]:

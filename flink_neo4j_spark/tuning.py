@@ -39,13 +39,21 @@ scope, the lineage cadence (``CHECKPOINT_EVERY``) and the optional
 convergence check, so the kernels that use it (connected components,
 BFS/SSSP, harmonic centrality, integer PPR, the dedup clusterings) state
 only their edge projection, seed, message and combine.
+
+``frontier_levels`` is the one level-synchronous frontier loop (the
+σ-counting forward pass of Brandes 2001) run inside a caller's scope:
+Brandes betweenness, Cypher ``shortestPath``/``allShortestPaths`` and
+unbounded variable-length path enumeration. It owns the per-level
+checkpoint + count, the kernel resize, the anti-join against settled
+keys and the one drain-or-raise rule; callers state their edge
+projection, seeds, expand step and output.
 """
 
 from __future__ import annotations
 
 import math
 import threading
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -89,19 +97,18 @@ class IterKernel:
 
     def __init__(
         self,
-        width: int,
-        narrow: bool,
-        spark: SparkSession | None = None,
-        cap: int = 0,
-        rows_per_partition: int = ITER_ROWS_PER_PARTITION,
-        prev: tuple[str, str] | None = None,
+        spark: SparkSession,
+        n_rows: int,
+        cap: int,
+        rows_per_partition: int,
+        prev: tuple[str, str],
     ):
-        self.width = width
-        self.narrow = narrow
         self._spark = spark
         self._cap = cap
         self._rpp = rows_per_partition
         self._prev = prev
+        self.width, self.narrow = 0, False
+        self.resize(n_rows)
 
     def bc(self, df: DataFrame) -> DataFrame:
         """Broadcast-hint ``df`` when the kernel is narrow — with AQE off
@@ -113,27 +120,25 @@ class IterKernel:
         return F.broadcast(df) if self.narrow else df
 
     def resize(self, n_rows: int) -> None:
-        """Re-derive the kernel sizing from a NEW state row count — for
+        """(Re-)derive the kernel sizing from a state row count — for
         loops whose state can grow round over round (path enumeration):
         the caller feeds each round's frontier count back in, so a state
-        that outgrows the narrow regime gets its width (and AQE) back
-        before the next round's actions. Confs are read at action time,
-        so the change applies to everything after the call."""
-        if self._spark is None:
-            return
+        that outgrows the narrow regime gets the session's width (and
+        AQE) back before the next round's actions. Confs are read at
+        action time, so the change applies to everything after the call."""
         width = iter_width(n_rows, self._cap, self._rpp)
         narrow = width <= AQE_OFF_MAX_WIDTH and width < self._cap
         if narrow == self.narrow and width == self.width:
             return
         self.width, self.narrow = width, narrow
         if narrow:
-            self._spark.conf.set(
-                "spark.sql.shuffle.partitions", str(max(width, 2))
-            )
-            self._spark.conf.set("spark.sql.adaptive.enabled", "false")
-        elif self._prev is not None:
-            self._spark.conf.set("spark.sql.shuffle.partitions", self._prev[0])
-            self._spark.conf.set("spark.sql.adaptive.enabled", self._prev[1])
+            # narrow state: explicit width, no per-exchange AQE jobs. The
+            # floor of 2 keeps a retried/second core usable for ~free.
+            shuf, aqe = str(max(width, 2)), "false"
+        else:
+            shuf, aqe = self._prev
+        self._spark.conf.set("spark.sql.shuffle.partitions", shuf)
+        self._spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
 @contextmanager
@@ -153,23 +158,9 @@ def iter_kernel(
             cap = int(prev_shuf)
         except (TypeError, ValueError):
             cap = 200
-        width = iter_width(n_rows, cap, rows_per_partition)
-        narrow = width <= AQE_OFF_MAX_WIDTH and width < cap
         try:
-            if narrow:
-                # narrow state: explicit width, no per-exchange AQE jobs. The
-                # floor of 2 keeps a retried/second core usable for ~free.
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(max(width, 2))
-                )
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
             yield IterKernel(
-                width,
-                narrow,
-                spark=spark,
-                cap=cap,
-                rows_per_partition=rows_per_partition,
-                prev=(prev_shuf, prev_aqe),
+                spark, n_rows, cap, rows_per_partition, (prev_shuf, prev_aqe)
             )
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev_shuf)
@@ -264,3 +255,55 @@ def _changed(
         .filter(~F.col(f"n.{value}").eqNullSafe(F.col(f"o.{value}")))
         .count()
     )
+
+
+def frontier_levels(
+    k: IterKernel,
+    seeds: DataFrame,
+    expand: Callable[[DataFrame], DataFrame],
+    max_levels: int,
+    n_edges: int,
+    settled_on: list[str] | None = None,
+    undrained: Exception | None = None,
+) -> Iterator[tuple[DataFrame, int]]:
+    """Level-synchronous frontier expansion; yields ``(level, n_rows)``
+    for each non-empty level ``1..max_levels``.
+
+    Level 0 is ``seeds`` and level ``i`` is ``expand(level i-1)``. With
+    ``settled_on`` (BFS) a level keeps only the rows whose key is in no
+    earlier level, so every key settles at its first level; without it
+    (path enumeration) levels are kept whole.
+
+    Runs inside the caller's kernel scope ``k`` (no nested scope: the
+    caller may need the same scope after the last level). Each level is
+    lazily checkpointed and materialized by ONE count, which is also the
+    drain test and re-derives the kernel sizing from ``max(n_rows,
+    n_edges)``. The settled keys are a lazily checkpointed 2-way union,
+    materialized by the next level's count. The anti-join against them
+    is not broadcast-hinted (as in ``_changed``): a hint adds a
+    broadcast job per level.
+
+    The expansion drains when a level is empty. Levels ``1..max_levels``
+    may be non-empty; with ``undrained`` set, a non-empty level
+    ``max_levels + 1`` raises it, and without it the expansion stops
+    after level ``max_levels`` (a bounded walk).
+    """
+    frontier = seeds
+    settled = None if settled_on is None else seeds.select(*settled_on)
+    last = max_levels if undrained is None else max_levels + 1
+    for level in range(1, last + 1):
+        nxt = expand(frontier)
+        if settled is not None:
+            nxt = nxt.join(settled, settled_on, "left_anti")
+        frontier = nxt.localCheckpoint(eager=False)
+        n = frontier.count()
+        if n == 0:
+            return
+        if level > max_levels:
+            raise undrained
+        k.resize(max(n, n_edges))
+        yield frontier, n
+        if settled is not None:
+            settled = settled.unionByName(
+                frontier.select(*settled_on)
+            ).localCheckpoint(eager=False)

@@ -5087,6 +5087,25 @@ def test_unbounded_nondrain_raises(spark, monkeypatch):
         cypher_read(g, "MATCH (x:N)-[:T*]->(y) RETURN id(x)").collect()
 
 
+def test_unbounded_ceiling_equal_to_longest_path_drains(spark, monkeypatch):
+    # a 4-chain's longest path (and diameter) is 3 hops: a ceiling of 3
+    # admits it in both the enumeration and the shortestPath BFS
+    import flink_neo4j_spark.cypher_frontend as cf
+
+    g = cypher_create_graph(
+        spark,
+        "CREATE (a:N {i:0}), (b:N {i:1}), (c:N {i:2}), (d:N {i:3}), "
+        "(a)-[:T]->(b), (b)-[:T]->(c), (c)-[:T]->(d)",
+    )
+    monkeypatch.setattr(cf, "VAR_UNBOUNDED_MAX_ROUNDS", 3)
+    for q in (
+        "MATCH (x:N)-[:T*]->(y) RETURN x.i AS x, y.i AS y",
+        "MATCH p = shortestPath((x:N)-[:T*]->(y:N)) RETURN x.i AS x, y.i AS y",
+    ):
+        got = sorted(tuple(r) for r in cypher_read(g, q).collect())
+        assert got == [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)], q
+
+
 def test_unbounded_frontier_cap_raises(fixture_graph, monkeypatch):
     import flink_neo4j_spark.cypher_frontend as cf
 

@@ -196,6 +196,12 @@ class TestBetweennessCentrality:
         got = self._bc(spark, [(0, 1), (1, 2), (2, 3)])
         assert got == {0: 0.0, 1: 2.0, 2: 2.0, 3: 0.0}
 
+    def test_bfs_depth_equal_to_bound_drains(self, spark):
+        # from an end vertex the forward BFS needs exactly 3 levels:
+        # max_iters=3 is enough (levels 1..N may be non-empty)
+        got = self._bc(spark, [(0, 1), (1, 2), (2, 3)], max_iters=3)
+        assert got == {0: 0.0, 1: 2.0, 2: 2.0, 3: 0.0}
+
     def test_star_graph(self, spark):
         # center crosses every leaf pair: C(4,2) = 6
         got = self._bc(spark, [(0, 1), (0, 2), (0, 3), (0, 4)])

@@ -33,6 +33,26 @@ def test_nested_iter_kernel_scopes_restore_lifo(spark):
     assert spark.conf.get(_AQE) == prev_aqe
 
 
+def test_resize_toggles_narrow_sizing(spark):
+    prev_shuf = spark.conf.get(_SHUF)
+    prev_aqe = spark.conf.get(_AQE)
+    df = spark.range(3)
+    with iter_kernel(spark, 100) as k:
+        assert k.narrow and spark.conf.get(_AQE) == "false"
+        k.resize(10_000_000)  # outgrew the narrow regime
+        assert not k.narrow
+        assert spark.conf.get(_SHUF) == prev_shuf
+        assert spark.conf.get(_AQE) == prev_aqe
+        assert k.bc(df) is df  # no broadcast hint at scale
+        k.resize(100)
+        assert k.narrow
+        assert spark.conf.get(_SHUF) == "2"
+        assert spark.conf.get(_AQE) == "false"
+        assert k.bc(df) is not df
+    assert spark.conf.get(_SHUF) == prev_shuf
+    assert spark.conf.get(_AQE) == prev_aqe
+
+
 def test_conf_swap_lock_held_for_scope_duration(spark):
     """While one thread is inside an iter_kernel scope, another thread's
     attempt to take the swap lock must block — that is the property that
