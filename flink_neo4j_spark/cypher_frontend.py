@@ -75,8 +75,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_neo4j_spark.graph import (
+    EDGE_STRUCTURAL,
     EXTRA_LABELS,
+    STRUCTURAL,
+    VERTEX_STRUCTURAL,
     PropertyGraph,
+    assign_where,
     label_cond,
     rel_type_cond,
 )
@@ -2304,8 +2308,7 @@ def _scalar_fn_column(call: FuncCall, colmap, df: DataFrame) -> Column:
         elif ref.var in structs:
             # WITH-carried node/edge struct: its property fields minus
             # the meta columns — same inventory a pattern scope serves
-            meta = {"id", "label", EXTRA_LABELS, "src", "dst", "rel_type"}
-            props = sorted(f for f in structs[ref.var] if f not in meta)
+            props = sorted(f for f in structs[ref.var] if f not in STRUCTURAL)
         else:
             raise CypherSyntaxError(
                 f"{call.fn}({ref.var}) is not supported in this clause "
@@ -2860,8 +2863,7 @@ def _expr_column(expr, colmap, df: DataFrame) -> Column:
         if var_props is not None and expr.var in var_props:
             avail = sorted(var_props[expr.var])
         elif expr.var in structs:
-            meta = {"id", "label", EXTRA_LABELS, "src", "dst", "rel_type"}
-            avail = [f for f in structs[expr.var] if f not in meta]
+            avail = [f for f in structs[expr.var] if f not in STRUCTURAL]
         else:
             raise CypherSyntaxError(
                 f"map projection over unknown variable {expr.var!r}"
@@ -3917,10 +3919,10 @@ def _optional_match(
         )
 
     vertex_props = [c for c in graph.vertices.columns
-                 if c not in ("id", "label", EXTRA_LABELS)]
+                 if c not in VERTEX_STRUCTURAL]
     edge_props = [
         c for c in graph.edges.columns
-        if c not in ("id", "src", "dst", "rel_type")
+        if c not in EDGE_STRUCTURAL
     ]
     #: var -> (prefix, kind) for every optional-clause variable
     prefixes: dict[str, tuple[str, str]] = {}
@@ -4310,12 +4312,11 @@ def _match_chain(
             )
         return F.col(name)
 
-    internal = {"id", "label", EXTRA_LABELS, "src", "dst", "rel_type"}
     colmap.var_props = {
         v: [
             c[len(v) + 1:]
             for c in cols
-            if c[len(v) + 1:] not in internal
+            if c[len(v) + 1:] not in STRUCTURAL
         ]
         for v, cols in varmap.items()
     }
@@ -4454,9 +4455,8 @@ def _optional_join_prefixed(
             return F.col(name)
         return prev(ref)
 
-    internal = {"id", "label", EXTRA_LABELS, "src", "dst", "rel_type"}
-    props_map[other.var] = [c for c in vcols if c not in internal]
-    props_map[evar] = [c for c in ecols if c not in internal]
+    props_map[other.var] = [c for c in vcols if c not in STRUCTURAL]
+    props_map[evar] = [c for c in ecols if c not in STRUCTURAL]
     kinds[other.var] = "node"
     kinds[evar] = "edge"
     new_colmap.var_props = props_map
@@ -4783,7 +4783,7 @@ def _shortest_path(
     # shared var_kinds/scope_graph contract (round 8)
     vertex_props = [
         c for c in graph.vertices.columns
-        if c not in ("id", "label", EXTRA_LABELS)
+        if c not in VERTEX_STRUCTURAL
     ]
     colmap.var_props = {
         v: vertex_props
@@ -5028,11 +5028,11 @@ def _bind_pattern_subqueries(
             # node/edge struct collects per anchor, like RETURN m in a CALL
             vertex_props=[
                 c for c in graph.vertices.columns
-                if c not in ("id", "label", EXTRA_LABELS)
+                if c not in VERTEX_STRUCTURAL
             ],
             edge_props=[
                 c for c in graph.edges.columns
-                if c not in ("id", "src", "dst", "rel_type")
+                if c not in EDGE_STRUCTURAL
             ],
         )
 
@@ -5929,7 +5929,7 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
 
         colmap.var_props = {
             var: [c for c in graph.vertices.columns
-                 if c not in ("id", "label", EXTRA_LABELS)]
+                 if c not in VERTEX_STRUCTURAL]
         }
         colmap.var_kinds = {var: "node"}
         colmap.pattern_count_ctx = (graph, var)
@@ -5967,7 +5967,7 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
         # predicates anchor on them like any scope
         _vl_vprops = [
             c for c in graph.vertices.columns
-            if c not in ("id", "label", EXTRA_LABELS)
+            if c not in VERTEX_STRUCTURAL
         ]
         colmap.var_props = {
             v: _vl_vprops
@@ -6006,7 +6006,7 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
 
         vertex_props = [
             c for c in graph.vertices.columns
-                 if c not in ("id", "label", EXTRA_LABELS)
+                 if c not in VERTEX_STRUCTURAL
         ]
         colmap.var_props = {
             v: vertex_props for v in (pat.src.var, pat.dst.var) if v is not None
@@ -6017,7 +6017,7 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
             colmap.var_props[pat.var] = [
                 c
                 for c in graph.edges.columns
-                if c not in ("id", "src", "dst", "rel_type")
+                if c not in EDGE_STRUCTURAL
             ]
             colmap.var_kinds[pat.var] = "edge"
 
@@ -6377,11 +6377,11 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
                 op,
                 vertex_props=[
                     c for c in graph.vertices.columns
-                    if c not in ("id", "label", EXTRA_LABELS)
+                    if c not in VERTEX_STRUCTURAL
                 ],
                 edge_props=[
                     c for c in graph.edges.columns
-                    if c not in ("id", "src", "dst", "rel_type")
+                    if c not in EDGE_STRUCTURAL
                 ],
             )
             if c_disj is not None:
@@ -6740,7 +6740,7 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
                 df = df.crossJoin(other_df)
                 vertex_props = sorted(
                     c for c in graph.vertices.columns
-                    if c not in ("id", "label", EXTRA_LABELS)
+                    if c not in VERTEX_STRUCTURAL
                 )
                 meta = ["label"]
                 if EXTRA_LABELS in graph.vertices.columns:
@@ -6865,11 +6865,11 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
             # the same semantics as a carried node, no special casing
             vertex_props = sorted(
                 c for c in graph.vertices.columns
-                 if c not in ("id", "label", EXTRA_LABELS)
+                 if c not in VERTEX_STRUCTURAL
             )
             edge_props = sorted(
                 c for c in graph.edges.columns
-                if c not in ("id", "src", "dst", "rel_type")
+                if c not in EDGE_STRUCTURAL
             )
             added = {}
             if other.var is not None:
@@ -7272,24 +7272,247 @@ def _resolve(value: Any, row: dict[str, Any]) -> Any:
     return value
 
 
+@dataclass
+class SetList:
+    """One parsed SET / REMOVE item list — the single representation of a
+    property write: ordered ``prop → value`` (``None`` removes the
+    property), the labels it adds and removes (node targets only), and
+    whether a ``SET x = {map}`` replaces every unlisted property."""
+
+    values: dict[str, Any] = field(default_factory=dict)
+    add_labels: list[str] = field(default_factory=list)
+    remove_labels: list[str] = field(default_factory=list)
+    replace: bool = False
+
+
+def _parse_set_list(
+    p: _Parser,
+    var: str,
+    reserved: tuple[str, ...],
+    value,
+    removing: bool = False,
+) -> SetList:
+    """The items after ``SET`` (or ``REMOVE`` with ``removing``), comma
+    separated: ``x.p = v``, ``x += {k: v, …}`` / ``x += $m`` (map merge:
+    listed properties overwrite, the rest stay), ``x = {…}`` / ``x = $m``
+    (replace: unlisted properties are removed too), ``x:L[:M…]`` (labels),
+    and under REMOVE ``x.p`` / ``x:L``.
+
+    ``value()`` parses one right-hand side — ``parse_value`` over the
+    UNWIND variable for batch writes, a full expression for bare ones.
+    ``reserved`` names what no item may assign: the target's structural
+    columns plus any key the write matches on. A target whose reserved
+    columns lack ``label`` is a relationship and takes no label items.
+    One property assigned twice in the list is an error in every form;
+    so is a map value (Neo4j stores scalars and lists only)."""
+    out = SetList()
+    clause = "REMOVE" if removing else "SET"
+
+    def assign(prop: str, val: Any) -> None:
+        if prop in reserved:
+            if prop not in STRUCTURAL:
+                raise CypherSyntaxError(
+                    f"cannot {clause} {prop!r}: it is the MERGE key / match "
+                    "key of this write"
+                )
+            hint = (
+                "; labels change with SET n:Label / REMOVE n:Label"
+                if prop in ("label", EXTRA_LABELS)
+                else ""
+            )
+            raise CypherSyntaxError(f"reserved property name {prop!r}{hint}")
+        if prop in out.values:
+            raise CypherSyntaxError(
+                f"property {prop!r} assigned twice in one {clause}"
+            )
+        if isinstance(val, (dict, MapLit, MapProj)):
+            raise CypherSyntaxError(
+                f"cannot store a map in property {prop!r}: property values "
+                f"are scalars or lists (use {var} += {{…}} to set several)"
+            )
+        out.values[prop] = val
+
+    def target() -> None:
+        if p.expect("word").text != var:
+            raise CypherSyntaxError(f"{clause} target must be {var!r}")
+
+    while True:
+        nxt, nxt2 = p.peek(1), p.peek(2)
+        if (
+            p.at("word")
+            and nxt is not None
+            and nxt.kind == "punct"
+            and nxt.text == ":"
+        ):
+            if "label" not in reserved:
+                raise CypherSyntaxError(
+                    "relationships have exactly one type; SET e:Label is "
+                    "not defined (Neo4j errors here too)"
+                )
+            target()
+            while p.at("punct", ":"):
+                p.next()
+                lbl = p.expect("word").text
+                (out.remove_labels if removing else out.add_labels).append(lbl)
+        elif (
+            not removing
+            and p.at("word")
+            and nxt is not None
+            and nxt2 is not None
+            and nxt.kind == "op"
+            and (
+                (nxt.text == "+" and nxt2.kind == "op" and nxt2.text == "=")
+                or (nxt.text == "=" and nxt2.text in ("{", "$"))
+            )
+        ):
+            target()
+            if p.next().text == "+":
+                p.next()  # =
+            else:
+                out.replace = True
+            if p.at("punct", "$"):
+                m = p.parse_value(None)
+                if not isinstance(m, dict):
+                    raise CypherSyntaxError("SET += $param requires a map value")
+                entries = list(m.items())
+            else:
+                p.expect("punct", "{")
+                entries = []
+                while True:
+                    k = p.expect("word").text
+                    p.expect("punct", ":")
+                    entries.append((k, value()))
+                    if not p.at("punct", ","):
+                        break
+                    p.next()
+                p.expect("punct", "}")
+            for k, val in entries:
+                assign(k, val)
+        else:
+            ref = p.parse_prop_ref()
+            if ref.var != var or ref.prop is None:
+                raise CypherSyntaxError(
+                    f"{clause} target must be {var!r}.<property>"
+                )
+            if removing:
+                assign(ref.prop, None)
+            else:
+                p.expect("op", "=")
+                assign(ref.prop, value())
+        if not p.at("punct", ","):
+            return out
+        p.next()
+
+
+def _set_expr(p: _Parser) -> Any:
+    """A bare write's SET right-hand side: any non-aggregate expression
+    (the counter idiom ``SET n.visits = n.visits + 1``, ``toUpper(n.name)``)."""
+    val = p.parse_return_expr()
+    if _contains_agg(val):
+        raise CypherSyntaxError("aggregates are not allowed in SET values")
+    return val
+
+
+def _batch_set_list(
+    p: _Parser, var: str, reserved: tuple[str, ...], uvar: str
+) -> dict[str, Any]:
+    """A SET list inside an UNWIND batch write: property items only, each
+    value a literal or a field of the UNWIND row (it travels as a batch
+    column)."""
+    sl = _parse_set_list(p, var, reserved, lambda: p.parse_value(uvar))
+    if sl.add_labels or sl.replace:
+        raise CypherSyntaxError(
+            "UNWIND batch writes set properties only; SET x:Label and "
+            "SET x = {map} need a MATCH … SET statement"
+        )
+    return sl.values
+
+
+def _parse_merge_arms(
+    p: _Parser, parse_items, plain_set: bool
+) -> tuple[dict[str, Any], dict[str, Any], dict[str, Any]]:
+    """``ON CREATE SET …`` / ``ON MATCH SET …`` (and, with ``plain_set``,
+    a plain ``SET …`` that applies on both arms) after a MERGE pattern, in
+    any order, each at most once. ``parse_items()`` parses one SET list.
+    Returns ``(both, on_create, on_match)``. A property assigned in the
+    plain SET and again in an arm is rejected rather than silently
+    picking a winner; the two arms may set the same property to
+    different values."""
+    both: dict[str, Any] | None = None
+    arms: dict[str, dict[str, Any] | None] = {"CREATE": None, "MATCH": None}
+    while True:
+        if p._at_word_ci("ON"):
+            p.next()
+            arm_tok = p.next()
+            if arm_tok.kind != "kw" or arm_tok.text not in arms:
+                raise CypherSyntaxError(
+                    f"expected CREATE or MATCH after ON, got {arm_tok.text!r}"
+                )
+            p.expect("kw", "SET")
+            if arms[arm_tok.text] is not None:
+                raise CypherSyntaxError(
+                    f"duplicate ON {arm_tok.text} SET clause"
+                )
+            arms[arm_tok.text] = parse_items()
+        elif plain_set and p.at("kw", "SET"):
+            if both is not None:
+                raise CypherSyntaxError("duplicate SET clause")
+            p.next()
+            both = parse_items()
+        else:
+            break
+    both = both or {}
+    for arm in arms.values():
+        for prop in arm or ():
+            if prop in both:
+                raise CypherSyntaxError(
+                    f"property {prop!r} assigned in both SET and an "
+                    "ON CREATE/ON MATCH arm"
+                )
+    return both, arms["CREATE"] or {}, arms["MATCH"] or {}
+
+
 @_typed_analysis_errors
 def cypher_write(
     graph: PropertyGraph,
     query: str,
     params: dict[str, list[dict[str, Any]]] | None = None,
 ) -> PropertyGraph:
-    """Execute ``UNWIND $param AS v CREATE ...`` or ``UNWIND $param AS v
-    MATCH ... WHERE ... SET ...`` against the graph; returns the new graph.
+    """Execute one write statement against the graph; returns the new
+    graph (the input is never modified).
 
-    The parameter batch semantics mirror the sink (`Neo4jOutputFormat`):
-    ``params[name]`` is the list of row dicts the reference would send as
-    one UNWIND batch.
+    UNWIND batch forms — ``params[name]`` is the list of row dicts the
+    reference's sink sends as one batch (`Neo4jOutputFormat`); values are
+    literals or fields of the UNWIND row ``r``:
 
-    Non-UNWIND statements are also accepted: the bare interactive writes
-    ``MATCH (n[:L]) [WHERE ...] [DETACH] DELETE n`` (Neo4j's most common
-    ad-hoc cleanup), ``... SET n.p = <literal>, ...``, and
-    ``... REMOVE n.p, ...`` — no parameter batch needed; the match set
-    comes from the WHERE predicate, not a key list.
+    - ``UNWIND $rows AS r CREATE (n:L {k: r.k, …})``
+    - ``UNWIND $rows AS r MERGE (n:L {k: r.k}) [ON CREATE SET …]
+      [ON MATCH SET …] [SET …]`` — upsert on one key property
+      (:meth:`PropertyGraph.merge_nodes`)
+    - ``UNWIND $rows AS r MATCH (p) WHERE p.k = r.k SET p.a = r.a, …``
+      (:meth:`PropertyGraph.update_nodes`)
+    - ``UNWIND $rows AS r MATCH (n:L {k: r.k}) [DETACH] DELETE n``
+    - ``UNWIND $rows AS r MATCH (a:LA {k: r.x}), (b:LB {k: r.y})
+      CREATE (a)-[:T {…}]->(b)`` and ``… MERGE (a)-[e:T {…}]->(b)
+      [ON CREATE SET e.p = …] [ON MATCH SET e.q = …]``
+
+    Their SET lists take property items (``x.p = v``, ``x += {…}``).
+
+    Bare forms — no batch; the match set is the pattern and its WHERE:
+
+    - ``MATCH (n[:L] [{k: v}]) [WHERE …] SET … | REMOVE …`` — ``n.p =
+      <expr>``, ``n += {…}|$m``, ``n = {…}|$m`` (replace), ``n:L``;
+      REMOVE takes ``n.p`` and ``n:L``
+    - ``MATCH (n[:L]) [WHERE …] [DETACH] DELETE n``
+    - ``MATCH (a[:L1])-[e:T]->(b[:L2]) [WHERE …] SET … | REMOVE … |
+      DELETE e`` — the same SET items minus labels
+    - ``FOREACH (x IN <src> | CREATE (:L {k: <expr(x)>, …}))`` over
+      ``range(lo, hi[, step])``, a literal list or a ``$list``
+
+    Every SET list is parsed by :func:`_parse_set_list`: structural
+    columns (and the key a write matches on) cannot be assigned, a
+    property assigned twice is an error, and ``SET x.p = null`` removes
+    the property, per Neo4j.
     """
     p = _Parser(_tokenize(query), params)
     if p.at("kw", "MATCH"):
@@ -7351,61 +7574,11 @@ def cypher_write(
                 "MERGE pattern needs exactly one key property"
             )
         ((key, key_val),) = node.props.items()
-
-        def _set_items() -> dict[str, Any]:
-            items: dict[str, Any] = {}
-            while True:
-                ref = p.parse_prop_ref()
-                if ref.var != node.var:
-                    raise CypherSyntaxError(f"SET target must be {node.var!r}")
-                if ref.prop == key:
-                    raise CypherSyntaxError(
-                        f"cannot SET the MERGE key property {key!r}"
-                    )
-                if ref.prop in items:
-                    raise CypherSyntaxError(
-                        f"property {ref.prop!r} assigned twice in one SET"
-                    )
-                p.expect("op", "=")
-                items[ref.prop] = p.parse_value(unwind_var=uvar)
-                if p.at("punct", ","):
-                    p.next()
-                    continue
-                break
-            return items
-
-        both: dict[str, Any] = {}
-        arm_create: dict[str, Any] = {}
-        arm_match: dict[str, Any] = {}
-        while True:
-            if p.at("word") and p.peek().text.upper() == "ON":
-                p.next()
-                arm_tok = p.next()
-                if arm_tok.kind != "kw" or arm_tok.text not in ("CREATE", "MATCH"):
-                    raise CypherSyntaxError(
-                        f"expected CREATE or MATCH after ON, got {arm_tok.text!r}"
-                    )
-                p.expect("kw", "SET")
-                arm = arm_create if arm_tok.text == "CREATE" else arm_match
-                if arm:
-                    raise CypherSyntaxError(
-                        f"duplicate ON {arm_tok.text} SET clause"
-                    )
-                arm.update(_set_items())
-            elif p.at("kw", "SET"):
-                if both:
-                    raise CypherSyntaxError("duplicate SET clause")
-                p.next()
-                both.update(_set_items())
-            else:
-                break
-        for arm in (arm_create, arm_match):
-            for prop in arm:
-                if prop in both:
-                    raise CypherSyntaxError(
-                        f"property {prop!r} assigned in both SET and an "
-                        "ON CREATE/ON MATCH arm"
-                    )
+        both, arm_create, arm_match = _parse_merge_arms(
+            p,
+            lambda: _batch_set_list(p, node.var, (*VERTEX_STRUCTURAL, key), uvar),
+            plain_set=True,
+        )
         p.expect_end()
         spark = graph.vertices.sparkSession
         data = [
@@ -7490,9 +7663,7 @@ def cypher_write(
         # edge, ON MATCH only for rows that matched an existing one. The
         # same property may take different values per arm (each arm's
         # values travel in their own batch column, `__oc_*` / `__om_*`).
-        arm_create: dict[str, Any] = {}
-        arm_match: dict[str, Any] = {}
-        while p.at("word") and p.peek().text.upper() == "ON":
+        if p._at_word_ci("ON"):
             if not idempotent:
                 raise CypherSyntaxError(
                     "ON CREATE/ON MATCH arms require MERGE"
@@ -7502,48 +7673,18 @@ def cypher_write(
                     "ON CREATE/ON MATCH SET needs an edge variable: "
                     "MERGE (a)-[e:T]->(b) ON CREATE SET e.p = …"
                 )
-            p.next()
-            arm_tok = p.next()
-            if arm_tok.kind != "kw" or arm_tok.text not in ("CREATE", "MATCH"):
-                raise CypherSyntaxError(
-                    f"expected CREATE or MATCH after ON, got {arm_tok.text!r}"
-                )
-            p.expect("kw", "SET")
-            arm = arm_create if arm_tok.text == "CREATE" else arm_match
-            if arm:
-                raise CypherSyntaxError(
-                    f"duplicate ON {arm_tok.text} SET clause"
-                )
-            while True:
-                ref = p.parse_prop_ref()
-                if ref.var != pat.var or ref.prop is None:
-                    raise CypherSyntaxError(
-                        f"arm SET target must be {pat.var!r}.<property>"
-                    )
-                if ref.prop in ("src", "dst", "id", "rel_type"):
-                    raise CypherSyntaxError(
-                        f"reserved edge property name {ref.prop!r}"
-                    )
-                if ref.prop in pat.props:
-                    raise CypherSyntaxError(
-                        f"property {ref.prop!r} is part of the MERGE "
-                        "match map; arms cannot reassign it"
-                    )
-                if ref.prop in arm:
-                    raise CypherSyntaxError(
-                        f"property {ref.prop!r} assigned twice in one SET"
-                    )
-                p.expect("op", "=")
-                arm[ref.prop] = p.parse_value(unwind_var=uvar)
-                if p.at("punct", ","):
-                    p.next()
-                    continue
-                break
+        _, arm_create, arm_match = _parse_merge_arms(
+            p,
+            lambda: _batch_set_list(
+                p, pat.var, (*EDGE_STRUCTURAL, *pat.props), uvar
+            ),
+            plain_set=False,
+        )
         p.expect_end()
         ((akey, aval),) = src_node.props.items()
         ((bkey, bval),) = dst_node.props.items()
         for ep in pat.props:
-            if ep in ("__a", "__b", "src", "dst", "id", "rel_type"):
+            if ep in ("__a", "__b", *EDGE_STRUCTURAL):
                 raise CypherSyntaxError(
                     f"reserved edge property name {ep!r}"
                 )
@@ -7630,18 +7771,7 @@ def cypher_write(
         raise CypherSyntaxError("WHERE must be <node>.<key> = <unwind>.<key>")
     key = cond.left.prop
 
-    updates: dict[str, Any] = {}
-    while True:
-        ref = p.parse_prop_ref()
-        if ref.var != target.var:
-            raise CypherSyntaxError(f"SET target must be {target.var!r}")
-        p.expect("op", "=")
-        updates[ref.prop] = p.parse_value(unwind_var=uvar)
-        if p.at("punct", ","):
-            p.next()
-            continue
-        break
-
+    updates = _batch_set_list(p, target.var, (*VERTEX_STRUCTURAL, key), uvar)
     p.expect_end()
     spark = graph.vertices.sparkSession
     data = [
@@ -7770,6 +7900,67 @@ def _foreach_write(graph: PropertyGraph, p: _Parser) -> PropertyGraph:
     return graph.create_nodes(batch, label)
 
 
+def _set_columns(
+    sl: SetList, table: DataFrame, colmap, structural: tuple[str, ...]
+) -> dict[str, Column | None]:
+    """A bare SET list's values compiled to Columns over ``table``, so
+    every right-hand side reads the row's PRE-update values (Cypher
+    evaluates all SET right-hand sides before any assignment applies).
+    A replacing ``SET x = {map}`` also removes every unlisted property —
+    every column outside ``structural``."""
+    cols: dict[str, Column | None] = {}
+    if sl.replace:
+        cols = {c: None for c in table.columns if c not in structural}
+    for prop, val in sl.values.items():
+        cols[prop] = None if val is None else _expr_column(val, colmap, table)
+    return cols
+
+
+def _label_columns(
+    v: DataFrame, add: list[str], remove: list[str]
+) -> dict[str, Column]:
+    """``SET n:L`` / ``REMOVE n:L`` as assignments to the two label
+    columns (multi-label model, SURVEY §1.1). SET ADDS the label, as in
+    Neo4j: the primary ``label`` is untouched and each label the vertex
+    does not already carry (primary or extras) is appended to
+    ``extra_labels``. REMOVE drops the label wherever it appears — nulls
+    a primary that names it, removes it from the extras — and labels(n)
+    then reads whatever remains ([] when nothing does). Both read the
+    PRE-update state, like SET values."""
+    empty = F.array().cast("array<string>")
+    extras = (
+        F.col(EXTRA_LABELS) if EXTRA_LABELS in v.columns
+        else F.lit(None).cast("array<string>")
+    )
+    cols: dict[str, Column] = {}
+    if add:
+        additions = F.array_compact(
+            F.array(
+                *[
+                    F.when(
+                        ~F.coalesce(
+                            (F.col("label") == F.lit(lbl))
+                            | F.array_contains(extras, lbl),
+                            F.lit(False),
+                        ),
+                        F.lit(lbl),
+                    )
+                    for lbl in add
+                ]
+            )
+        )
+        extras = F.concat(F.coalesce(extras, empty), additions)
+    if remove:
+        cols["label"] = F.when(
+            F.col("label").isin(*remove), F.lit(None).cast("string")
+        ).otherwise(F.col("label"))
+        extras = F.coalesce(extras, empty)
+        for lbl in remove:
+            extras = F.array_remove(extras, lbl)
+    cols[EXTRA_LABELS] = extras
+    return cols
+
+
 def _bare_write(graph: PropertyGraph, p: _Parser) -> PropertyGraph:
     """Predicate-addressed interactive writes (no UNWIND batch):
 
@@ -7777,11 +7968,12 @@ def _bare_write(graph: PropertyGraph, p: _Parser) -> PropertyGraph:
       projection fed to :meth:`PropertyGraph.delete_nodes`, so plain
       DELETE keeps Neo4j's still-has-relationships refusal and DETACH
       cascades to incident edges.
-    - ``MATCH (n[:L]) [WHERE ...] SET n.p = <literal>, ...`` — ONE
-      conditional projection over the vertex frame (no join, no shuffle:
-      the match set is a predicate over the same rows being updated);
-      ``SET n.p = null`` removes the property, per Neo4j.
-    - ``MATCH (n[:L]) [WHERE ...] REMOVE n.p, ...`` — sugar for SET-null.
+    - ``MATCH (n[:L]) [WHERE ...] SET ... | REMOVE ...`` (the items of
+      :func:`_parse_set_list`) — ONE conditional projection over the
+      vertex frame (:func:`assign_where`; no join, no shuffle: the match
+      set is a predicate over the same rows being updated). ``SET n.p =
+      null`` removes the property, per Neo4j; ``REMOVE n.p`` is sugar for
+      it.
     """
     p.expect("kw", "MATCH")
     target = p.parse_pattern()
@@ -7806,234 +7998,24 @@ def _bare_write(graph: PropertyGraph, p: _Parser) -> PropertyGraph:
         return F.col("id" if ref.prop is None else ref.prop)
 
     if p.at("kw", "SET") or p.at("kw", "REMOVE"):
-        removing = p.next().text.upper() == "REMOVE"
-        values: dict[str, Any] = {}
-        set_labels: list[str] = []
-        remove_labels: list[str] = []
-        replace_props = False
-        while True:
-            # `n:Label[:Label2...]` item — label mutation (SET n:Archived
-            # / REMOVE n:Archived). Multi-label model (SURVEY §1.1):
-            # SET ADDS the label (Neo4j semantics) — the vertex keeps its
-            # primary ``label`` and grows the ``extra_labels`` set;
-            # REMOVE drops the label wherever it appears (nulls the
-            # primary, removes from extras), and labels(n) then reads
-            # whatever remains — [] when nothing does.
-            if (
-                p.at("word")
-                and p.peek(1) is not None
-                and p.peek(1).kind == "punct"
-                and p.peek(1).text == ":"
-            ):
-                lvar = p.next().text
-                if lvar != target.var:
-                    raise CypherSyntaxError(
-                        f"SET/REMOVE target must be {target.var!r}"
-                    )
-                while p.at("punct", ":"):
-                    p.next()  # ':'
-                    lbl = p.expect("word").text
-                    (remove_labels if removing else set_labels).append(lbl)
-            elif (
-                not removing
-                and p.at("word")
-                and p.peek(1) is not None
-                and p.peek(1).kind == "op"
-                and (
-                    (
-                        p.peek(1).text == "+"
-                        and p.peek(2) is not None
-                        and p.peek(2).kind == "op"
-                        and p.peek(2).text == "="
-                    )
-                    or (
-                        p.peek(1).text == "="
-                        and p.peek(2) is not None
-                        and p.peek(2).text in ("{", "$")
-                    )
-                )
-            ):
-                # SET n += {k: v, ...} / SET n += $props — Cypher's map
-                # merge: listed properties overwrite (null removes, per
-                # the SET-null contract), everything else is untouched —
-                # exactly a multi-property SET, so it folds into the same
-                # values dict / single conditional projection.
-                # SET n = {map} / SET n = $props — property REPLACEMENT:
-                # additionally every user property NOT listed is removed
-                # (nulled) on the matched rows, same single projection.
-                mvar = p.next().text
-                if p.peek().text == "+":
-                    p.next()  # +
-                else:
-                    replace_props = True
-                p.next()  # =
-                if mvar != target.var:
-                    raise CypherSyntaxError(
-                        f"SET/REMOVE target must be {target.var!r}"
-                    )
-                if p.at("punct", "$"):
-                    m = p.parse_value(None)
-                    if not isinstance(m, dict):
-                        raise CypherSyntaxError(
-                            "SET += $param requires a map value"
-                        )
-                    entries = list(m.items())
-                else:
-                    p.expect("punct", "{")
-                    entries = []
-                    while True:
-                        k = p.expect("word").text
-                        p.expect("punct", ":")
-                        val = p.parse_return_expr()
-                        if _contains_agg(val):
-                            raise CypherSyntaxError(
-                                "aggregates are not allowed in SET values"
-                            )
-                        entries.append((k, val))
-                        if p.at("punct", ","):
-                            p.next()
-                            continue
-                        break
-                    p.expect("punct", "}")
-                for k, val in entries:
-                    if k == "label":
-                        raise CypherSyntaxError(
-                            "the label is set with SET n:Label, not as a "
-                            "property"
-                        )
-                    values[k] = val
-            else:
-                ref = p.parse_prop_ref()
-                if ref.var != target.var or ref.prop is None:
-                    raise CypherSyntaxError(
-                        f"SET/REMOVE target must be {target.var!r}.<property>"
-                    )
-                if ref.prop == "label":
-                    raise CypherSyntaxError(
-                        "the label is set with SET n:Label, not as a property"
-                    )
-                if removing:
-                    values[ref.prop] = None
-                else:
-                    p.expect("op", "=")
-                    # full expressions over the matched node's own
-                    # properties — the counter idiom ``SET n.visits =
-                    # n.visits + 1`` and computed updates ``SET n.name =
-                    # toUpper(n.name)``; literals keep the old fast path
-                    val = p.parse_return_expr()
-                    if _contains_agg(val):
-                        raise CypherSyntaxError(
-                            "aggregates are not allowed in SET values"
-                        )
-                    values[ref.prop] = val
-            if p.at("punct", ","):
-                p.next()
-                continue
-            break
+        removing = p.next().text == "REMOVE"
+        sl = _parse_set_list(
+            p, target.var, VERTEX_STRUCTURAL, lambda: _set_expr(p), removing
+        )
         p.expect_end()
         v = graph.vertices
-        have = set(v.columns)
         matched = F.lit(True)
         if target.label is not None:
             matched = label_cond(v, target.label)
         if disj is not None:
             # 3VL: a null predicate does not match, as in MATCH..WHERE
             matched = matched & F.coalesce(
-                _where_to_column(disj, colmap, have, v), F.lit(False)
+                _where_to_column(disj, colmap, set(v.columns), v), F.lit(False)
             )
-        def _valcol(val) -> Column:
-            # AST values compile over the SAME projection input, so an
-            # expression reads the node's pre-update property values
-            # (Cypher: all SET right-hand sides evaluate before any
-            # assignment applies)
-            if isinstance(
-                val,
-                (
-                    PropRef, BareRef, BinOp, FuncCall, CaseExpr,
-                    ListComp, ReduceExpr, IndexExpr, SliceExpr,
-                    FieldAccess, ListExpr,
-                ),
-            ):
-                return _expr_column(val, colmap, v)
-            return F.lit(val)
-
-        empty_arr = F.array().cast("array<string>")
-        extras_in = (
-            F.col(EXTRA_LABELS) if EXTRA_LABELS in have
-            else F.lit(None).cast("array<string>")
-        )
-
-        def _label_out() -> Column:
-            # REMOVE nulls the primary where it names it; SET never
-            # touches the primary (additive model — extras carry growth)
-            col = F.col("label")
-            if remove_labels:
-                col = F.when(
-                    matched & col.isin(*remove_labels),
-                    F.lit(None).cast("string"),
-                ).otherwise(col)
-            return col.alias("label")
-
-        def _extras_out() -> Column:
-            # SET appends each label not already carried (primary or
-            # extras); REMOVE drops from the extras set. Both arms
-            # evaluate against the PRE-update state, like SET values.
-            col = extras_in
-            if set_labels:
-                additions = F.array_compact(
-                    F.array(
-                        *[
-                            F.when(
-                                ~F.coalesce(
-                                    (F.col("label") == F.lit(lbl))
-                                    | F.array_contains(extras_in, lbl),
-                                    F.lit(False),
-                                ),
-                                F.lit(lbl),
-                            )
-                            for lbl in set_labels
-                        ]
-                    )
-                )
-                col = F.when(
-                    matched,
-                    F.concat(F.coalesce(extras_in, empty_arr), additions),
-                ).otherwise(col)
-            if remove_labels:
-                base = col
-                cleaned = F.coalesce(base, empty_arr)
-                for lbl in remove_labels:
-                    cleaned = F.array_remove(cleaned, lbl)
-                col = F.when(matched, cleaned).otherwise(base)
-            return col.alias(EXTRA_LABELS)
-
-        out: list[Column] = []
-        for c in v.columns:
-            if c in values:
-                out.append(
-                    F.when(matched, _valcol(values[c])).otherwise(F.col(c)).alias(c)
-                )
-            elif c == "label" and (set_labels or remove_labels):
-                out.append(_label_out())
-            elif c == EXTRA_LABELS and (set_labels or remove_labels):
-                out.append(_extras_out())
-            elif replace_props and c not in ("id", "label", EXTRA_LABELS):
-                # SET n = {map}: unlisted user properties are REMOVED on
-                # the matched rows (nulled; type preserved elsewhere)
-                out.append(
-                    F.when(matched, F.lit(None)).otherwise(F.col(c)).alias(c)
-                )
-            else:
-                out.append(F.col(c))
-        if EXTRA_LABELS not in have and (set_labels or remove_labels):
-            out.append(_extras_out())
-        for prop, val in values.items():
-            # a brand-new property column: matched rows take the value,
-            # everyone else reads null (B5 missing-property semantics).
-            # REMOVE of a property that never existed is a no-op.
-            if prop not in have and val is not None:
-                out.append(F.when(matched, _valcol(val)).alias(prop))
-        return PropertyGraph(v.select(*out), graph.edges)
+        cols = _set_columns(sl, v, colmap, VERTEX_STRUCTURAL)
+        if sl.add_labels or sl.remove_labels:
+            cols.update(_label_columns(v, sl.add_labels, sl.remove_labels))
+        return PropertyGraph(assign_where(v, matched, cols), graph.edges)
 
     detach = False
     if p.at("kw", "DETACH"):
@@ -8049,10 +8031,6 @@ def _bare_write(graph: PropertyGraph, p: _Parser) -> PropertyGraph:
     if disj is not None:
         df = df.filter(_where_to_column(disj, colmap, set(df.columns), df))
     return graph.delete_nodes(df.select("id"), detach=detach)
-
-
-#: edge columns a SET/REMOVE may never target (structure, not properties)
-_EDGE_RESERVED = ("id", "src", "dst", "rel_type")
 
 
 def _bare_edge_write(graph: PropertyGraph, p: _Parser, pat: EdgePat) -> PropertyGraph:
@@ -8124,115 +8102,19 @@ def _bare_edge_write(graph: PropertyGraph, p: _Parser, pat: EdgePat) -> Property
         if var != evar:
             raise CypherSyntaxError(f"DELETE target must be {evar!r}")
         p.expect_end()
-        values: dict[str, Any] | None = None
-        removing = replace_props = False
+        sl = None
     else:
         if not (p.at("kw", "SET") or p.at("kw", "REMOVE")):
             raise CypherSyntaxError(
                 "expected SET, REMOVE or DELETE after the edge pattern"
             )
-        removing = p.next().text.upper() == "REMOVE"
-        values = {}
-        replace_props = False
-        while True:
-            if (
-                p.at("word")
-                and p.peek(1) is not None
-                and p.peek(1).kind == "punct"
-                and p.peek(1).text == ":"
-            ):
-                raise CypherSyntaxError(
-                    "relationships have exactly one type; SET e:Label is "
-                    "not defined (Neo4j errors here too)"
-                )
-            if (
-                not removing
-                and p.at("word")
-                and p.peek(1) is not None
-                and p.peek(1).kind == "op"
-                and (
-                    (
-                        p.peek(1).text == "+"
-                        and p.peek(2) is not None
-                        and p.peek(2).kind == "op"
-                        and p.peek(2).text == "="
-                    )
-                    or (
-                        p.peek(1).text == "="
-                        and p.peek(2) is not None
-                        and p.peek(2).text in ("{", "$")
-                    )
-                )
-            ):
-                # SET e += {map} (merge) / SET e = {map} (replace) — the
-                # node-SET map contract verbatim, minus label keys
-                mvar = p.next().text
-                if p.peek().text == "+":
-                    p.next()
-                else:
-                    replace_props = True
-                p.next()  # =
-                if mvar != evar:
-                    raise CypherSyntaxError(
-                        f"SET/REMOVE target must be {evar!r}"
-                    )
-                if p.at("punct", "$"):
-                    m = p.parse_value(None)
-                    if not isinstance(m, dict):
-                        raise CypherSyntaxError(
-                            "SET += $param requires a map value"
-                        )
-                    entries = list(m.items())
-                else:
-                    p.expect("punct", "{")
-                    entries = []
-                    while True:
-                        k = p.expect("word").text
-                        p.expect("punct", ":")
-                        val = p.parse_return_expr()
-                        if _contains_agg(val):
-                            raise CypherSyntaxError(
-                                "aggregates are not allowed in SET values"
-                            )
-                        entries.append((k, val))
-                        if p.at("punct", ","):
-                            p.next()
-                            continue
-                        break
-                    p.expect("punct", "}")
-                for k, val in entries:
-                    if k in _EDGE_RESERVED:
-                        raise CypherSyntaxError(
-                            f"reserved edge property name {k!r}"
-                        )
-                    values[k] = val
-            else:
-                ref = p.parse_prop_ref()
-                if ref.var != evar or ref.prop is None:
-                    raise CypherSyntaxError(
-                        f"SET/REMOVE target must be {evar!r}.<property>"
-                    )
-                if ref.prop in _EDGE_RESERVED:
-                    raise CypherSyntaxError(
-                        f"reserved edge property name {ref.prop!r}"
-                    )
-                if removing:
-                    values[ref.prop] = None
-                else:
-                    p.expect("op", "=")
-                    val = p.parse_return_expr()
-                    if _contains_agg(val):
-                        raise CypherSyntaxError(
-                            "aggregates are not allowed in SET values"
-                        )
-                    values[ref.prop] = val
-            if p.at("punct", ","):
-                p.next()
-                continue
-            break
+        removing = p.next().text == "REMOVE"
+        sl = _parse_set_list(
+            p, evar, EDGE_STRUCTURAL, lambda: _set_expr(p), removing
+        )
         p.expect_end()
         # SET values read the edge's own pre-update state only
-        for val in values.values():
+        for val in sl.values.values():
             vrefs: set[str] = set()
             _expr_vars(val, vrefs)
             if vrefs - {evar}:
@@ -8253,23 +8135,22 @@ def _bare_edge_write(graph: PropertyGraph, p: _Parser, pat: EdgePat) -> Property
     def edge_col(ref: PropRef, prefix: str = "") -> Column:
         return F.col(f"{prefix}{'id' if ref.prop is None else ref.prop}")
 
+    def ecolmap(ref: PropRef) -> Column:
+        if ref.var != evar:
+            raise CypherSyntaxError(f"unknown variable {ref.var!r}")
+        return edge_col(ref)
+
     if fast:
         matched = (
             rel_type_cond(pat.rel_type)
             if pat.rel_type is not None
             else F.lit(True)
         )
-
-        def fcolmap(ref: PropRef) -> Column:
-            if ref.var != evar:
-                raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-            return edge_col(ref)
-
         if disj is not None:
             # pass the edge frame so computed WHERE operands (e.w % 2 = 0)
             # resolve here exactly as they do on the expand path
             matched = matched & F.coalesce(
-                _where_to_column(disj, fcolmap, have, e), F.lit(False)
+                _where_to_column(disj, ecolmap, have, e), F.lit(False)
             )
         frame = e
     else:
@@ -8292,47 +8173,14 @@ def _bare_edge_write(graph: PropertyGraph, p: _Parser, pat: EdgePat) -> Property
         frame = e.join(ids, e["id"] == F.col("__mid"), "left")
         matched = F.col("__mid").isNotNull()
 
-    if values is None:  # DELETE e
+    if sl is None:  # DELETE e
         doomed = frame.filter(matched).select("id")
         return graph.delete_edges(doomed)
 
-    def ecolmap(ref: PropRef) -> Column:
-        if ref.var != evar:
-            raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-        return edge_col(ref)
-
-    def _valcol(val) -> Column:
-        # pre-update reads, like the node SET (all RHS evaluate first)
-        if isinstance(
-            val,
-            (
-                PropRef, BareRef, BinOp, FuncCall, CaseExpr,
-                ListComp, ReduceExpr, IndexExpr, SliceExpr,
-                FieldAccess, ListExpr,
-            ),
-        ):
-            return _expr_column(val, ecolmap, e)
-        return F.lit(val)
-
-    out: list[Column] = []
-    for c in e.columns:
-        if c in values:
-            out.append(
-                F.when(matched, _valcol(values[c])).otherwise(F.col(c)).alias(c)
-            )
-        elif replace_props and c not in _EDGE_RESERVED:
-            out.append(
-                F.when(matched, F.lit(None)).otherwise(F.col(c)).alias(c)
-            )
-        else:
-            out.append(F.col(c))
-    for prop, val in values.items():
-        # brand-new property column: matched rows take the value, the
-        # rest read null (missing-property semantics); REMOVE of a
-        # property that never existed is a no-op
-        if prop not in have and val is not None:
-            out.append(F.when(matched, _valcol(val)).alias(prop))
-    return PropertyGraph(graph.vertices, frame.select(*out))
+    cols = _set_columns(sl, e, ecolmap, EDGE_STRUCTURAL)
+    return PropertyGraph(
+        graph.vertices, assign_where(frame, matched, cols, e.columns)
+    )
 
 
 @_typed_analysis_errors

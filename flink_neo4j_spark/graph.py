@@ -33,6 +33,13 @@ EDGE_REQUIRED = ("id", "src", "dst", "rel_type")
 #: ``labels(n)`` reads primary-then-extras in addition order.
 EXTRA_LABELS = "extra_labels"
 
+#: Structural columns — identity, endpoints, labels and type, never user
+#: properties. No property write may assign them, and property listings
+#: (``keys(n)``, map projections, whole-variable structs) skip them.
+VERTEX_STRUCTURAL = (*VERTEX_REQUIRED, EXTRA_LABELS)
+EDGE_STRUCTURAL = EDGE_REQUIRED
+STRUCTURAL = frozenset(VERTEX_STRUCTURAL + EDGE_STRUCTURAL)
+
 
 def label_cond(df: DataFrame, label: str) -> Column:
     """Label-membership predicate honoring the multi-label model.
@@ -55,6 +62,41 @@ def rel_type_cond(rel_type) -> Column:
     if isinstance(rel_type, tuple):
         return F.col("rel_type").isin(*rel_type)
     return F.col("rel_type") == rel_type
+
+
+def assign_where(
+    frame: DataFrame,
+    matched: Column,
+    values: "dict[str, Column | None]",
+    columns: "list[str] | None" = None,
+) -> DataFrame:
+    """Conditional assignment — the one projection behind every property
+    write (Cypher SET/REMOVE, UNWIND..MATCH..SET, the MERGE match arms).
+
+    Projects ``frame`` onto ``columns`` (default: all of its columns;
+    pass the target table's when ``frame`` is a join over it). Rows where
+    ``matched`` holds take ``values[c]``; every other row keeps its old
+    value. ``None`` is Neo4j's SET-null: it REMOVES the property on
+    matched rows, and removing a property the table lacks is a no-op. A
+    property new to the table becomes a column that only matched rows
+    fill — everyone else reads null (B5 missing-property semantics). One
+    ``select``: no join, no shuffle of its own.
+    """
+    columns = frame.columns if columns is None else columns
+    out = [
+        F.when(matched, F.lit(None) if values[c] is None else values[c])
+        .otherwise(F.col(c))
+        .alias(c)
+        if c in values
+        else F.col(c)
+        for c in columns
+    ]
+    out += [
+        F.when(matched, v).alias(c)
+        for c, v in values.items()
+        if c not in columns and v is not None
+    ]
+    return frame.select(*out)
 
 
 def _allocate_ids(new: DataFrame, base: DataFrame) -> DataFrame:
@@ -242,30 +284,35 @@ class PropertyGraph:
         a null update must read back null, while unmatched rows keep their
         old values.
         """
-        upd_cols = [c for c in updates.columns if c != key]
-        renamed = updates.select(
+        props = {c: c for c in updates.columns if c != key}
+        return PropertyGraph(self._update_matched(updates, key, props), self.edges)
+
+    def _update_matched(
+        self,
+        batch: DataFrame,
+        key: str,
+        props: dict[str, str],
+        cond: Column | None = None,
+    ) -> DataFrame:
+        """The vertex table with ``props`` (vertex property → batch column)
+        assigned on every vertex whose ``key`` equals a batch row's (and
+        that satisfies ``cond``): a LEFT JOIN to the broadcast batch with
+        an explicit matched marker, then :func:`assign_where`."""
+        renamed = batch.select(
             F.col(key).alias(f"_u_{key}"),
             F.lit(True).alias("_u__matched"),
-            *[F.col(c).alias(f"_u_{c}") for c in upd_cols],
+            *[F.col(src).alias(f"_u_{prop}") for prop, src in props.items()],
         )
-        joined = self.vertices.join(
-            F.broadcast(renamed), self.vertices[key] == F.col(f"_u_{key}"), "left"
+        on = self.vertices[key] == F.col(f"_u_{key}")
+        if cond is not None:
+            on = on & cond
+        joined = self.vertices.join(F.broadcast(renamed), on, "left")
+        return assign_where(
+            joined,
+            F.coalesce(F.col("_u__matched"), F.lit(False)),
+            {prop: F.col(f"_u_{prop}") for prop in props},
+            self.vertices.columns,
         )
-        matched = F.coalesce(F.col("_u__matched"), F.lit(False))
-        out_cols: list[Column] = []
-        for c in self.vertices.columns:
-            if c in upd_cols:
-                out_cols.append(
-                    F.when(matched, F.col(f"_u_{c}")).otherwise(F.col(c)).alias(c)
-                )
-            else:
-                out_cols.append(F.col(c))
-        # columns created only by the update (e.g. `weight`,
-        # Neo4jOutputTest.java:87 — B5 null/missing-property semantics)
-        for c in upd_cols:
-            if c not in self.vertices.columns:
-                out_cols.append(F.col(f"_u_{c}").alias(c))
-        return PropertyGraph(joined.select(*out_cols), self.edges)
 
     def merge_nodes(
         self,
@@ -340,30 +387,9 @@ class PropertyGraph:
             # no-op update join entirely and go straight to the insert arm.
             return self.create_nodes(inserts, label)
 
-        renamed = batch.select(
-            F.col(key).alias(f"_u_{key}"),
-            F.lit(True).alias("_u__matched"),
-            *[F.col(src).alias(f"_u_{prop}") for prop, src in match_map.items()],
+        updated = self._update_matched(
+            batch, key, match_map, label_cond(self.vertices, label)
         )
-        lbl_ok = self.vertices["label"] == F.lit(label)
-        if EXTRA_LABELS in self.vertices.columns:
-            lbl_ok = lbl_ok | F.array_contains(
-                self.vertices[EXTRA_LABELS], label
-            )
-        cond = (self.vertices[key] == F.col(f"_u_{key}")) & lbl_ok
-        joined = self.vertices.join(F.broadcast(renamed), cond, "left")
-        matched = F.coalesce(F.col("_u__matched"), F.lit(False))
-        out_cols: list[Column] = []
-        for c in self.vertices.columns:
-            if c in match_map:
-                out_cols.append(
-                    F.when(matched, F.col(f"_u_{c}")).otherwise(F.col(c)).alias(c)
-                )
-            else:
-                out_cols.append(F.col(c))
-        for c in match_map:
-            if c not in self.vertices.columns:
-                out_cols.append(F.col(f"_u_{c}").alias(c))
         # Same id-allocation path as :meth:`create_nodes`, except the
         # max-id base reads the PRE-projection vertex table: the matched
         # arm's conditional projection never touches ``id``, so the
@@ -372,9 +398,7 @@ class PropertyGraph:
         # write→write lineage.
         base = self.vertices.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m"))
         new = _allocate_ids(inserts.withColumn("label", F.lit(label)), base)
-        merged = joined.select(*out_cols).unionByName(
-            new, allowMissingColumns=True
-        )
+        merged = updated.unionByName(new, allowMissingColumns=True)
         return PropertyGraph(merged, self.edges)
 
     def delete_nodes(
@@ -513,7 +537,7 @@ class PropertyGraph:
             if c not in ("src", "dst") and c not in arm_srcs
         ]
         for prop in (*oc, *om):
-            if prop in props or prop in ("id", "src", "dst", "rel_type"):
+            if prop in props or prop in EDGE_STRUCTURAL:
                 raise ValueError(
                     f"arm property {prop!r} is part of the match key or "
                     "reserved"
@@ -579,22 +603,12 @@ class PropertyGraph:
                 jcond = jcond & (
                     F.col(c) if c in have else F.lit(None)
                 ).eqNullSafe(F.col(f"__mk_{c}"))
-            joined = self.edges.join(marker, jcond, "left")
-            matched = F.col("__ms").isNotNull()
-            out = []
-            for c in self.edges.columns:
-                if c in om:
-                    out.append(
-                        F.when(matched, F.col(f"__mv_{c}"))
-                        .otherwise(F.col(c))
-                        .alias(c)
-                    )
-                else:
-                    out.append(F.col(c))
-            for prop in om:
-                if prop not in have:
-                    out.append(F.when(matched, F.col(f"__mv_{prop}")).alias(prop))
-            edges_out = joined.select(*out)
+            edges_out = assign_where(
+                self.edges.join(marker, jcond, "left"),
+                F.col("__ms").isNotNull(),
+                {prop: F.col(f"__mv_{prop}") for prop in om},
+                self.edges.columns,
+            )
 
         missing = wanted.join(existing, cond, "left_anti").select(
             "src",

@@ -1939,6 +1939,90 @@ def test_label_mutation_validation(fixture_graph):
         cypher_write(fixture_graph, "MATCH (n:User) SET m:A")
 
 
+#: every property-write form × the structural columns of its target:
+#: none may assign them (a write to ``label`` used to re-label the
+#: vertex, one to ``extra_labels`` turned the label array into a string)
+_NODE_WRITE_FORMS = [
+    "UNWIND $rows AS r MERGE (n:User {name: r.name}) SET n.{c} = r.v",
+    "UNWIND $rows AS r MERGE (n:User {name: r.name}) ON MATCH SET n.{c} = r.v",
+    "UNWIND $rows AS r MERGE (n:User {name: r.name}) ON CREATE SET n.{c} = r.v",
+    "UNWIND $rows AS r MATCH (p) WHERE p.name = r.name SET p.{c} = r.v",
+    "MATCH (n:User) SET n.{c} = 'x'",
+    "MATCH (n:User) SET n += {{c}: 'x'}",
+    "MATCH (n:User) SET n = {{c}: 'x'}",
+    "MATCH (n:User) REMOVE n.{c}",
+]
+_EDGE_WRITE_FORMS = [
+    "UNWIND $rows AS r MATCH (a:User {name: r.name}), (b:User {name: r.v}) "
+    "MERGE (a)-[e:KNOWS]->(b) ON CREATE SET e.{c} = r.v",
+    "UNWIND $rows AS r MATCH (a:User {name: r.name}), (b:User {name: r.v}) "
+    "MERGE (a)-[e:KNOWS]->(b) ON MATCH SET e.{c} = r.v",
+    "MATCH ()-[e:KNOWS]->() SET e.{c} = 'x'",
+    "MATCH (a:User)-[e:KNOWS]->() SET e += {{c}: 'x'}",
+    "MATCH ()-[e:KNOWS]->() SET e = {{c}: 'x'}",
+    "MATCH ()-[e:KNOWS]->() REMOVE e.{c}",
+]
+
+
+@pytest.mark.parametrize(
+    "form,col",
+    # (``id`` is a keyword: the grammar never reads it as a property name)
+    [(f, c) for f in _NODE_WRITE_FORMS for c in ("label", "extra_labels")]
+    + [(f, c) for f in _EDGE_WRITE_FORMS for c in ("src", "dst", "rel_type")],
+)
+def test_writes_reject_structural_columns(fixture_graph, form, col):
+    with pytest.raises(CypherSyntaxError, match="reserved"):
+        cypher_write(
+            fixture_graph,
+            form.replace("{c}", col),
+            {"rows": [{"name": "Alice", "v": "Bob"}]},
+        )
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        "MATCH (n:User) SET n.m = {a: 1}",
+        "MATCH (n:User) SET n += {m: {a: 1}}",
+        "MATCH (n:User) SET n.m = $m",
+        "MATCH ()-[e:KNOWS]->() SET e.m = {a: 1}",
+        "UNWIND $rows AS r MERGE (n:User {name: r.name}) SET n.m = {a: 1}",
+    ],
+)
+def test_map_valued_set_is_typed_error(fixture_graph, q):
+    # Neo4j stores scalars and lists only
+    with pytest.raises(CypherSyntaxError, match="map"):
+        cypher_write(
+            fixture_graph, q, {"rows": [{"name": "Alice"}], "m": {"a": 1}}
+        )
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        "MATCH (n:User) SET n.x = 1, n.x = 2",
+        "MATCH (n:User) SET n += {x: 1}, n.x = 2",
+        "MATCH (n:User) REMOVE n.born, n.born",
+        "MATCH ()-[e:KNOWS]->() SET e.w = 1, e.w = 2",
+        "UNWIND $rows AS r MATCH (p) WHERE p.name = r.name "
+        "SET p.x = r.a, p.x = r.b",
+        "UNWIND $rows AS r MERGE (n:User {name: r.name}) SET n.x = 1, n.x = 2",
+    ],
+)
+def test_property_assigned_twice_is_rejected_in_every_form(fixture_graph, q):
+    with pytest.raises(CypherSyntaxError, match="assigned twice"):
+        cypher_write(fixture_graph, q, {"rows": [{"name": "Alice"}]})
+
+
+def test_unwind_match_set_cannot_reassign_its_key(fixture_graph):
+    with pytest.raises(CypherSyntaxError, match="match key"):
+        cypher_write(
+            fixture_graph,
+            "UNWIND $rows AS r MATCH (p) WHERE p.name = r.name SET p.name = r.v",
+            {"rows": [{"name": "Alice", "v": "Zed"}]},
+        )
+
+
 def test_merge_on_create_on_match_divergence(fixture_graph):
     """The canonical conditional upsert: the SAME property takes a
     DIFFERENT value depending on whether the row matched or created

@@ -350,7 +350,26 @@ EXEC_WRITE_CORPUS = [
     "MATCH (a:User)-[e:KNOWS]->(b:User) WHERE b.name = 'Bob' REMOVE e.since",
     "MATCH ()-[e:KNOWS {since: 2001}]->() SET e += {w: 2, note: 'dup'}",
     "MATCH ()-[e:KNOWS]->() DELETE e",
+    # the UNWIND batch forms, all fed WRITE_ROWS
+    "UNWIND $rows AS r MATCH (p) WHERE p.name = r.name "
+    "SET p.born = r.born, p.tag = r.tag",
+    "UNWIND $rows AS r MERGE (n:User {name: r.name}) "
+    "ON CREATE SET n.born = r.born ON MATCH SET n.tag = r.tag SET n.seen = true",
+    "UNWIND $rows AS r MATCH (a:User {name: r.name}), (b:User {name: r.peer}) "
+    "MERGE (a)-[e:KNOWS]->(b) ON CREATE SET e.since = r.born "
+    "ON MATCH SET e.tag = r.tag",
 ]
+
+#: the one parameter batch every write-corpus entry runs with, so each
+#: MERGE takes both arms: Alice and Alice→Bob exist (ON MATCH), Eve→Alice
+#: and Zed do not (ON CREATE; Zed→Eve has no Zed endpoint to match)
+WRITE_ROWS = {
+    "rows": [
+        {"name": "Alice", "peer": "Bob", "born": 1990, "tag": "x"},
+        {"name": "Eve", "peer": "Alice", "born": 1985, "tag": "y"},
+        {"name": "Zed", "peer": "Eve", "born": 2000, "tag": "z"},
+    ]
+}
 
 
 @pytest.fixture(scope="module")
@@ -374,7 +393,7 @@ def test_exec_corpus_originals_translate_clean(fuzz_graph):
     for q in EXEC_READ_CORPUS:
         cypher_read(fuzz_graph, q)
     for q in EXEC_WRITE_CORPUS:
-        cypher_write(fuzz_graph, q)
+        cypher_write(fuzz_graph, q, WRITE_ROWS)
     # the eager-translation round-7 forms run once here, outside hypothesis
     # (each translation drives the BFS/expansion loop — jobs, not lazy)
     rows = cypher_read(
@@ -436,7 +455,7 @@ def test_write_translation_mutations_stay_typed(fuzz_graph, query, pos, mode):
     from flink_neo4j_spark.cypher_frontend import cypher_write
 
     try:
-        cypher_write(fuzz_graph, _mutate(query, pos, mode))
+        cypher_write(fuzz_graph, _mutate(query, pos, mode), WRITE_ROWS)
     except (CypherSyntaxError, ValueError):
         # ValueError: the documented write contracts (DELETE with
         # incident relationships, malformed batch shapes) — loud + typed

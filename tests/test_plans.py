@@ -214,6 +214,48 @@ def test_detach_delete_anti_joins(spark):
     assert "LeftAnti" in plan
 
 
+def test_bare_set_is_one_projection(spark):
+    """A bare node SET and a fast-path edge SET (no endpoint label, WHERE
+    over the edge only) are one conditional projection over the written
+    frame: no join, no exchange."""
+    from flink_neo4j_spark.cypher_frontend import cypher_write
+    from flink_neo4j_spark.operators.graph_algos import tpch_graph
+
+    g = tpch_graph(spark, SF_DIR)
+    nodes = cypher_write(
+        g,
+        "MATCH (n:Nation) WHERE n.name =~ 'NATION_1[0-9]' "
+        "SET n.flag = 1, n:Flagged",
+    ).vertices
+    edges = cypher_write(
+        g, "MATCH ()-[e:IN_NATION]->() WHERE e.w > 3 SET e.w = e.w + 1"
+    ).edges
+    for df in (nodes, edges):
+        plan = formatted_plan_of(df)
+        assert "Join" not in plan
+        assert not re.search(r"\bExchange\b", plan)
+
+
+def test_merge_upsert_broadcasts_the_batch(spark):
+    """g18's MERGE: the batch broadcasts into one left join and the vertex
+    table never shuffles."""
+    from flink_neo4j_spark.cypher_frontend import cypher_write
+    from flink_neo4j_spark.operators.graph_algos import (
+        MERGE_TIER_NATIONS,
+        tpch_graph,
+    )
+
+    rows = [{"name": n, "tier": "gold"} for n in MERGE_TIER_NATIONS]
+    g2 = cypher_write(
+        tpch_graph(spark, SF_DIR),
+        "UNWIND $rows AS r MERGE (n:Nation {name: r.name}) SET n.tier = r.tier",
+        {"rows": rows + [{"name": "ATLANTIS", "tier": "gold"}]},
+    )
+    plan = formatted_plan_of(g2.vertices)
+    assert "BroadcastHashJoin" in plan
+    assert not re.search(r"\bExchange\b", plan)
+
+
 def test_source_mixing_broadcasts_rates(spark):
     """q34's per-source rate table joins broadcast onto documents."""
     from flink_neo4j_spark.operators.sampling import q34_source_mixing
