@@ -82,6 +82,7 @@ from flink_neo4j_spark.graph import (
     PropertyGraph,
     assign_where,
     label_cond,
+    prefixed,
     rel_type_cond,
 )
 
@@ -160,6 +161,10 @@ class EdgePat:
     #: patterns ``(a)<-[e]-(b)`` never reach the AST — the parser swaps the
     #: endpoints into the equivalent outgoing form.
     undirected: bool = False
+    #: named-path variable of a variable-length pattern (``MATCH p =
+    #: (a)-[*]->(b)``), which ``length(p)``/``nodes(p)``/``relationships(p)``
+    #: read
+    path: str | None = None
 
 
 @dataclass
@@ -3570,10 +3575,11 @@ def _where_to_column(
 
 
 def _common_single_var_conds(
-    disj: "list[list[Cond]] | None", var: str | None
+    disjs: "list[list[list[Cond]]]", var: str | None
 ) -> list[Cond] | None:
     """Conjuncts referencing ONLY ``var`` that appear in EVERY OR branch
-    of a DNF WHERE — the subset that is IMPLIED by the full predicate and
+    of one of the DNF WHEREs ``disjs`` (the scope's clause WHEREs, all
+    ANDed) — the subset that is IMPLIED by the full predicate and
     therefore safe to push ahead of an iterative translation (frontier
     BFS, unbounded expansion). Catalyst pushes filters through lazy
     relational plans on its own, but it cannot see through the
@@ -3582,26 +3588,25 @@ def _common_single_var_conds(
     -[*]->(b))`` BFSes from EVERY a-label node and filters at the end,
     which is the difference between one source and 10^8 sources at scale.
     The full WHERE still applies after translation (idempotent)."""
-    if disj is None or var is None:
-        return None
-    common: dict[str, Cond] = {}
-    for i, conj in enumerate(disj):
-        keys: dict[str, Cond] = {}
-        for cond in conj:
-            if not isinstance(cond, Cond):
-                continue
-            refs: set[str] = set()
-            _expr_vars(cond.left, refs)
-            _expr_vars(getattr(cond, "right", None), refs)
-            if refs == {var}:
-                keys[repr(cond)] = cond
-        if i == 0:
-            common = keys
-        else:
-            common = {k: v for k, v in common.items() if k in keys}
-        if not common:
-            return None
-    return list(common.values())
+    out: list[Cond] = []
+    for disj in disjs if var is not None else ():
+        common: dict[str, Cond] = {}
+        for i, conj in enumerate(disj):
+            keys: dict[str, Cond] = {}
+            for cond in conj:
+                if not isinstance(cond, Cond):
+                    continue
+                refs: set[str] = set()
+                _expr_vars(cond.left, refs)
+                _expr_vars(getattr(cond, "right", None), refs)
+                if refs == {var}:
+                    keys[repr(cond)] = cond
+            if i == 0:
+                common = keys
+            else:
+                common = {k: v for k, v in common.items() if k in keys}
+        out.extend(common.values())
+    return out or None
 
 
 def _src_prefilter(df: DataFrame, var: str, conds: list[Cond]) -> DataFrame:
@@ -3649,6 +3654,9 @@ def _sym_edges(e: DataFrame) -> DataFrame:
 def _varlength_paths(
     graph: PropertyGraph,
     pat: EdgePat,
+    sp: str,
+    dp: str,
+    pp: str,
     carry_paths: bool = False,
     src_conds: list[Cond] | None = None,
 ) -> DataFrame:
@@ -3661,9 +3669,11 @@ def _varlength_paths(
     the bounded hop counts this front end admits (MAX_VAR_HOPS). Row
     multiplicity = number of distinct paths, matching Cypher.
 
-    ``carry_paths`` adds ``__path_nodes`` / ``__path_rels`` id arrays for
-    ``nodes(p)`` / ``relationships(p)`` on a named path — free here: the
-    hop columns already exist per chain, the arrays are pure projection.
+    Columns: the endpoints' vertex columns prefixed ``sp`` / ``dp``, the
+    path length ``{pp}length`` and, with ``carry_paths``, the node / edge
+    id arrays ``{pp}__nodes`` / ``{pp}__rels`` (what ``length(p)``,
+    ``nodes(p)`` and ``relationships(p)`` read) — free here: the hop
+    columns already exist per chain, the arrays are pure projection.
 
     Unbounded specs (``hi=None`` from ``*`` / ``*lo..``) dispatch to the
     iterative frontier expansion — same output contract, drain-or-raise.
@@ -3671,7 +3681,7 @@ def _varlength_paths(
     lo, hi = pat.hops
     if hi is None:
         return _varlength_paths_unbounded(
-            graph, pat, lo, carry_paths, src_conds=src_conds
+            graph, pat, lo, sp, dp, pp, carry_paths, src_conds
         )
     # bounded chains are fully lazy relational plans: Catalyst pushes the
     # post-translation WHERE into the a-side scan itself, so no manual
@@ -3683,66 +3693,54 @@ def _varlength_paths(
     e = e.select("id", "src", "dst")
     if pat.undirected:
         e = _sym_edges(e)
-    a = graph.nodes(pat.src.label).select(
-        *[F.col(c).alias(f"a_{c}") for c in graph.vertices.columns]
-    )
-    b = graph.nodes(pat.dst.label).select(
-        *[F.col(c).alias(f"b_{c}") for c in graph.vertices.columns]
-    )
+    vcols = graph.vertices.columns
+    a = prefixed(graph.nodes(pat.src.label), sp, vcols)
+    b = prefixed(graph.nodes(pat.dst.label), dp, vcols)
+    ends = [*[f"{sp}{c}" for c in vcols], *[f"{dp}{c}" for c in vcols]]
     out: DataFrame | None = None
     for length in range(lo, hi + 1):
         if length == 0:
             # zero-length path: both endpoints are the SAME node, which
             # must satisfy BOTH sides' labels; the rel type is ignored
             # (openCypher). One equi-join on id — label scans broadcast.
-            chain = a.join(b, F.col("a_id") == F.col("b_id"))
-            zextra = []
+            chain = a.join(b, F.col(f"{sp}id") == F.col(f"{dp}id"))
+            extra = []
             if carry_paths:
-                zextra = [
-                    F.array(F.col("a_id")).alias("__path_nodes"),
-                    F.array().cast("array<bigint>").alias("__path_rels"),
+                extra = [
+                    F.array(F.col(f"{sp}id")).alias(f"{pp}__nodes"),
+                    F.array().cast("array<bigint>").alias(f"{pp}__rels"),
                 ]
-            chain = chain.select(
-                *[f"a_{c}" for c in graph.vertices.columns],
-                *[f"b_{c}" for c in graph.vertices.columns],
-                F.lit(0).alias("__path_len"),
-                *zextra,
-            )
-            out = chain if out is None else out.unionByName(chain)
-            continue
-        hops = [
-            e.select(
-                F.col("id").alias(f"__h{k}_id"),
-                F.col("src").alias(f"__h{k}_src"),
-                F.col("dst").alias(f"__h{k}_dst"),
-            )
-            for k in range(length)
-        ]
-        chain = a.join(hops[0], F.col("a_id") == F.col("__h0_src"))
-        for k in range(1, length):
-            chain = chain.join(
-                hops[k], F.col(f"__h{k - 1}_dst") == F.col(f"__h{k}_src")
-            )
-        for i in range(length):  # relationship-isomorphism
-            for j in range(i + 1, length):
-                chain = chain.filter(F.col(f"__h{i}_id") != F.col(f"__h{j}_id"))
-        chain = chain.join(b, F.col(f"__h{length - 1}_dst") == F.col("b_id"))
-        extra = []
-        if carry_paths:
-            extra = [
-                F.array(
-                    F.col("a_id"),
-                    *[F.col(f"__h{k}_dst") for k in range(length)],
-                ).alias("__path_nodes"),
-                F.array(
-                    *[F.col(f"__h{k}_id") for k in range(length)]
-                ).alias("__path_rels"),
+        else:
+            hops = [
+                prefixed(e, f"__h{k}_", ["id", "src", "dst"])
+                for k in range(length)
             ]
+            chain = a.join(hops[0], F.col(f"{sp}id") == F.col("__h0_src"))
+            for k in range(1, length):
+                chain = chain.join(
+                    hops[k], F.col(f"__h{k - 1}_dst") == F.col(f"__h{k}_src")
+                )
+            for i in range(length):  # relationship-isomorphism
+                for j in range(i + 1, length):
+                    chain = chain.filter(
+                        F.col(f"__h{i}_id") != F.col(f"__h{j}_id")
+                    )
+            chain = chain.join(
+                b, F.col(f"__h{length - 1}_dst") == F.col(f"{dp}id")
+            )
+            extra = []
+            if carry_paths:
+                extra = [
+                    F.array(
+                        F.col(f"{sp}id"),
+                        *[F.col(f"__h{k}_dst") for k in range(length)],
+                    ).alias(f"{pp}__nodes"),
+                    F.array(
+                        *[F.col(f"__h{k}_id") for k in range(length)]
+                    ).alias(f"{pp}__rels"),
+                ]
         chain = chain.select(
-            *[f"a_{c}" for c in graph.vertices.columns],
-            *[f"b_{c}" for c in graph.vertices.columns],
-            F.lit(length).alias("__path_len"),
-            *extra,
+            *ends, F.lit(length).alias(f"{pp}length"), *extra
         )
         out = chain if out is None else out.unionByName(chain)
     return out
@@ -3752,8 +3750,11 @@ def _varlength_paths_unbounded(
     graph: PropertyGraph,
     pat: EdgePat,
     lo: int,
+    sp: str,
+    dp: str,
+    pp: str,
     carry_paths: bool,
-    src_conds: list[Cond] | None = None,
+    src_conds: list[Cond] | None,
 ) -> DataFrame:
     """``(a)-[:T*]->(b)`` / ``*lo..`` — the reachability idiom every Neo4j
     user types — as an ITERATIVE frontier expansion (the g6/g31 frontier
@@ -3774,9 +3775,8 @@ def _varlength_paths_unbounded(
     query, not the engine; the guard converts it from a data surprise into
     a conscious limit.
 
-    Output contract is identical to the bounded union-of-chains frame:
-    ``a_*`` / ``b_*`` vertex columns, ``__path_len``, plus
-    ``__path_nodes`` / ``__path_rels`` when ``carry_paths``.
+    Output contract is identical to the bounded union-of-chains frame
+    (see :func:`_varlength_paths`).
     """
     e = graph.edges
     if pat.rel_type is not None:
@@ -3856,314 +3856,187 @@ def _varlength_paths_unbounded(
         paths = paths.unionByName(part)
     if lo > 1:
         paths = paths.filter(F.col("__len") >= lo)
-    a = graph.nodes(pat.src.label).select(
-        *[F.col(c).alias(f"a_{c}") for c in vcols]
-    )
-    b = graph.nodes(pat.dst.label).select(
-        *[F.col(c).alias(f"b_{c}") for c in vcols]
-    )
+    a = prefixed(graph.nodes(pat.src.label), sp, vcols)
+    b = prefixed(graph.nodes(pat.dst.label), dp, vcols)
     extra = (
-        [F.col("__nodes").alias("__path_nodes"),
-         F.col("__rels").alias("__path_rels")]
+        [F.col("__nodes").alias(f"{pp}__nodes"),
+         F.col("__rels").alias(f"{pp}__rels")]
         if carry_paths
         else []
     )
     return (
-        paths.join(a, F.col("__a") == F.col("a_id"))
-        .join(b, F.col("__cur") == F.col("b_id"))
+        paths.join(a, F.col("__a") == F.col(f"{sp}id"))
+        .join(b, F.col("__cur") == F.col(f"{dp}id"))
         .select(
-            *[f"a_{c}" for c in vcols],
-            *[f"b_{c}" for c in vcols],
-            F.col("__len").alias("__path_len"),
+            *[f"{sp}{c}" for c in vcols],
+            *[f"{dp}{c}" for c in vcols],
+            F.col("__len").alias(f"{pp}length"),
             *extra,
         )
     )
 
 
-def _optional_match(
-    graph: PropertyGraph,
-    base: NodePat,
-    opt_clauses: list[
-        tuple["NodePat | EdgePat", "list[list[Cond]] | None", "list[Cond]"]
-    ],
-    base_disj: list[list[Cond]] | None,
-):
-    """``MATCH (a[:L]) [WHERE ...] (OPTIONAL MATCH (a)-[e:T]->(b[:L2])
-    [WHERE ...])+`` -> base LEFT JOIN each optional side, null-extended.
+#: the accessors a path variable answers — ``length(p)``, ``nodes(p)``,
+#: ``relationships(p)`` parse to these PropRef sentinels
+_PATH_PROPS = ("length", "__nodes", "__rels")
 
-    The anchor may be either endpoint of each clause, and may be the
-    base variable OR a node variable bound by an EARLIER optional clause
-    (chained optionals — a failed earlier binding has a null id, which
-    never equi-joins, so the chain null-extends transitively, per
-    Neo4j). An optional WHERE referencing only its own side's variables
-    filters that side before the join (semantics-preserving pushdown); a
-    WHERE referencing the base or earlier clauses rides the LEFT-join
-    condition, so failing rows null-extend instead of dropping (Neo4j's
-    OPTIONAL WHERE contract). Stacked clauses multiply per Neo4j: every
-    OPTIONAL MATCH left-joins independently, so a base row with m and n
-    matches in two clauses yields m*n rows (1 where a side is empty).
-    Plan shape: one left equi-join per clause; each optional side's
-    endpoint join broadcasts when its label restricts it to a
-    dimension-sized set.
-    """
-    base_df = graph.nodes(base.label)
 
-    def base_colmap(ref: PropRef) -> Column:
-        if ref.var != base.var:
-            raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-        return F.col("id" if ref.prop is None else ref.prop)
+def _scope_colmap(graph: PropertyGraph, scope: dict[str, tuple[str, str]]):
+    """The colmap of a MATCH scope: every pattern variable's columns sit
+    on one frame under the variable's own prefix (``scope``: var ->
+    (kind, prefix), kind ``node``, ``edge`` or ``path``). A reference
+    resolves to ``<prefix><prop>`` (``<prefix>id`` for the variable
+    itself), so only an unknown VARIABLE raises: a property no write ever
+    created names an absent column, which the shared
+    :func:`_ref_is_missing` rule reads as null. Path variables answer
+    their accessors only. ``var_props``/``var_kinds``/``scope_graph``
+    serve whole-variable projection, ``*`` expansion, pattern predicates
+    and COUNT { } / comprehension binding. Each column reference is built
+    once and reused: a Column is immutable, and building one costs a
+    dozen py4j round trips."""
+    cols: dict[str, Column] = {}
 
-    if base_disj is not None:
-        base_df = base_df.filter(
-            _where_to_column(base_disj, base_colmap, set(base_df.columns), base_df)
-        )
-
-    vertex_props = [c for c in graph.vertices.columns
-                 if c not in VERTEX_STRUCTURAL]
-    edge_props = [
-        c for c in graph.edges.columns
-        if c not in EDGE_STRUCTURAL
-    ]
-    #: var -> (prefix, kind) for every optional-clause variable
-    prefixes: dict[str, tuple[str, str]] = {}
-    df = base_df
-    for i, (opt, opt_disj, bound_conds) in enumerate(opt_clauses):
-        if not isinstance(opt, EdgePat) or opt.hops is not None:
-            raise CypherSyntaxError(
-                "OPTIONAL MATCH supports a single-hop edge pattern (a)-[e]->(b)"
-            )
-        if opt.props or opt.src.props or opt.dst.props:
-            # parse-level desugar clears every map (free/edge side into the
-            # clause WHERE, bound side into ``bound_conds``) — defensive
-            raise CypherSyntaxError(
-                "inline property match not supported in MATCH; use WHERE"
-            )
-        # the anchor endpoint may be the base variable OR a node variable
-        # bound by an EARLIER optional clause (round 8: ``OPTIONAL MATCH
-        # (n)-[:A]->(f) OPTIONAL MATCH (f)-[:B]->(g)`` — chaining off an
-        # optional binding; a failed earlier binding has a null id, which
-        # never equi-joins, so the chained clause null-extends too)
-        bound_node_vars = {base.var} | {
-            v for v, (_, kind) in prefixes.items() if kind == "node"
-        }
-        if opt.src.var in bound_node_vars:
-            bound_end, other, anchor = "src", opt.dst, opt.src.var
-        elif opt.dst.var in bound_node_vars:
-            bound_end, other, anchor = "dst", opt.src, opt.dst.var
-        else:
-            raise CypherSyntaxError(
-                "OPTIONAL MATCH pattern must reference a bound node variable "
-                f"(one of {sorted(bound_node_vars)!r})"
-            )
-        if other.label is None and other.var is None:
-            raise CypherSyntaxError("optional pattern's free endpoint needs a variable")
-        for v in (opt.var, other.var):
-            if v is None:
-                continue
-            if v == base.var or v in prefixes:
-                raise CypherSyntaxError(
-                    f"variable {v!r} is already bound; a repeated variable "
-                    "across OPTIONAL MATCH clauses is not supported"
-                )
-        ep, op = f"__e{i}_", f"__o{i}_"
-        e = graph.edges
-        if opt.rel_type is not None:
-            e = e.filter(rel_type_cond(opt.rel_type))
-        if opt.undirected:
-            # (n)-[e]-(m): the optional side matches either orientation —
-            # same symmetrized frame as every other undirected form
-            e = _sym_edges(e)
-        e = e.select(*[F.col(c).alias(f"{ep}{c}") for c in graph.edges.columns])
-        other_df = graph.nodes(other.label).select(
-            *[F.col(c).alias(f"{op}{c}") for c in graph.vertices.columns]
-        )
-        free_end = "dst" if bound_end == "src" else "src"
-        opt_side = e.join(other_df, F.col(f"{ep}{free_end}") == F.col(f"{op}id"))
-
-        def opt_colmap(ref, opt=opt, other=other, ep=ep, op=op) -> Column:
-            if ref.var == opt.var:
-                return F.col(f"{ep}{ref.prop or 'id'}")
-            if ref.var == other.var:
-                return F.col(f"{op}{ref.prop or 'id'}")
-            raise CypherSyntaxError(
-                f"OPTIONAL MATCH WHERE may only reference {opt.var!r}/{other.var!r}"
-            )
-
-        if opt_disj is not None:
-            # side-only WHERE pre-filters (semantics-preserving pushdown);
-            # a WHERE referencing the base or an earlier optional clause
-            # (round 8: ``OPTIONAL MATCH (n)-[e]->(m) WHERE m.x > n.y``,
-            # Neo4j's cross-variable form) is part of the OPTIONAL pattern
-            # — it rides the LEFT-join condition below, so failing rows
-            # null-extend instead of dropping
-            refs: set[str] = set()
-            _disj_vars(opt_disj, refs)
-            if refs <= {v for v in (opt.var, other.var) if v is not None}:
-                opt_side = opt_side.filter(
-                    _where_to_column(
-                        opt_disj, opt_colmap, set(opt_side.columns), opt_side
-                    )
-                )
-                opt_disj = None
-
-        anchor_id = (
-            base_df["id"]
-            if anchor == base.var
-            else F.col(f"{prefixes[anchor][0]}id")
-        )
-        join_cond = anchor_id == F.col(f"{ep}{bound_end}")
-        if opt_disj is not None:
-
-            def xcolmap(
-                ref, opt=opt, other=other, ep=ep, op=op
-            ) -> Column:
-                if ref.var == opt.var:
-                    return F.col(f"{ep}{ref.prop or 'id'}")
-                if ref.var == other.var:
-                    return F.col(f"{op}{ref.prop or 'id'}")
-                if ref.var == base.var:
-                    if ref.prop is None:
-                        return base_df["id"]
-                    if ref.prop not in base_df.columns:
-                        return F.lit(None)  # missing property reads null
-                    return base_df[ref.prop]
-                hit = prefixes.get(ref.var)
-                if hit is not None:
-                    return F.col(f"{hit[0]}{ref.prop or 'id'}")
-                raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-
-            # the cross join is a SCHEMA PROBE only (never executed):
-            # _where_to_column needs a frame carrying both sides' columns
-            # to type computed operands (``WHERE f.born + 1 > n.born``);
-            # the compiled Column then rides the real left join
-            probe = df.crossJoin(opt_side)
-            join_cond = join_cond & F.coalesce(
-                _where_to_column(
-                    opt_disj, xcolmap, set(probe.columns), probe
-                ),
-                F.lit(False),
-            )
-        if bound_conds:
-            # inline map on the BOUND endpoint: part of the OPTIONAL
-            # pattern, so a base row that fails it null-extends instead of
-            # dropping — expressed by ANDing it into the LEFT-join
-            # condition (coalesced: a null comparison never matches)
-            def bjcolmap(ref: PropRef) -> Column:
-                if ref.var != anchor:
-                    raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-                if anchor != base.var:
-                    # anchored on an earlier optional clause's endpoint:
-                    # its columns are prefixed on the accumulated frame
-                    return F.col(f"{prefixes[anchor][0]}{ref.prop or 'id'}")
-                if ref.prop is None:
-                    return base_df["id"]
-                if ref.prop not in base_df.columns:
-                    # missing property reads null — never matches (3VL)
-                    return F.lit(None)
-                return base_df[ref.prop]
-
-            join_cond = join_cond & F.coalesce(
-                _where_to_column(
-                    [list(bound_conds)],
-                    bjcolmap,
-                    set(base_df.columns),
-                    base_df,
-                ),
-                F.lit(False),
-            )
-        df = df.join(opt_side, join_cond, "left")
-        if other.var is not None:
-            prefixes[other.var] = (op, "node")
-        if opt.var is not None:
-            prefixes[opt.var] = (ep, "edge")
-
-    def colmap(ref: PropRef) -> Column:
-        if ref.var == base.var:
-            return base_df["id"] if ref.prop is None else F.col(ref.prop)
-        hit = prefixes.get(ref.var)
+    def colmap(ref) -> Column:
+        v = ref.var if isinstance(ref, PropRef) else getattr(ref, "name", None)
+        prop = ref.prop if isinstance(ref, PropRef) else None
+        hit = scope.get(v)
         if hit is None:
-            raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-        return F.col(f"{hit[0]}{ref.prop or 'id'}")
+            raise CypherSyntaxError(f"unknown variable {v!r}")
+        kind, prefix = hit
+        if kind == "path" and prop not in _PATH_PROPS:
+            raise CypherSyntaxError(
+                f"only length({v}), nodes({v}) and relationships({v}) are "
+                "defined for a path variable"
+            )
+        name = f"{prefix}{prop or 'id'}"
+        if name not in cols:
+            cols[name] = F.col(name)
+        return cols[name]
 
-    colmap.var_props = {base.var: vertex_props}
-    colmap.var_kinds = {base.var: "node"}
-    for v, (_, kind) in prefixes.items():
-        colmap.var_props[v] = vertex_props if kind == "node" else edge_props
-        colmap.var_kinds[v] = kind
+    colmap.scope = dict(scope)
+    colmap.var_kinds = {v: k for v, (k, _) in scope.items() if k != "path"}
+    colmap.var_props = {
+        v: [
+            c
+            for c in (graph.vertices if k == "node" else graph.edges).columns
+            if c not in (VERTEX_STRUCTURAL if k == "node" else EDGE_STRUCTURAL)
+        ]
+        for v, k in colmap.var_kinds.items()
+    }
     colmap.scope_graph = graph
-    return df, colmap
+    return colmap
+
+
+def _expand_side(
+    graph: PropertyGraph,
+    pat: EdgePat,
+    bound_end: str,
+    evar: str,
+    ovar: str,
+    eprefix: str,
+    oprefix: str,
+    disj: "list[list[Cond]] | None",
+):
+    """The anchored one-hop expansion behind every OPTIONAL MATCH,
+    pipeline ``[OPTIONAL] MATCH`` and correlated ``CALL``: the
+    rel-type-filtered edge scan (symmetrized for an undirected pattern),
+    prefixed ``eprefix``, joined on its free end to the free endpoint's
+    label scan, prefixed ``oprefix`` — broadcast when the label makes it
+    dimension-sized. The caller joins ``<eprefix><bound_end>`` to its
+    anchor. A WHERE over the side's own variables only (``evar`` /
+    ``ovar``) filters the side before that join; any other WHERE is
+    returned for the caller to place. Returns ``(side, side colmap,
+    remaining WHERE or None)``."""
+    e = graph.edges
+    if pat.rel_type is not None:
+        e = e.filter(rel_type_cond(pat.rel_type))
+    if pat.undirected:
+        e = _sym_edges(e)
+    free_end = "dst" if bound_end == "src" else "src"
+    other = pat.dst if bound_end == "src" else pat.src
+    side = prefixed(e, eprefix, graph.edges.columns).join(
+        prefixed(graph.nodes(other.label), oprefix, graph.vertices.columns),
+        F.col(f"{eprefix}{free_end}") == F.col(f"{oprefix}id"),
+    )
+    colmap = _scope_colmap(
+        graph, {evar: ("edge", eprefix), ovar: ("node", oprefix)}
+    )
+    if disj is not None:
+        refs: set[str] = set()
+        _disj_vars(disj, refs)
+        if refs <= {evar, ovar}:
+            side = side.filter(
+                _where_to_column(disj, colmap, set(side.columns), side)
+            )
+            disj = None
+    return side, colmap, disj
 
 
 def _prefixed_clause(
-    graph: PropertyGraph, pat: NodePat | EdgePat, idx: int
-) -> tuple[DataFrame, dict[str, list[str]]]:
-    """One MATCH clause as a DataFrame with every column prefixed by its
-    variable (``<var>_<col>``), plus the var -> column-list map. Node
-    clauses are a label scan; edge clauses are ``expand`` (two equi-joins
-    Catalyst broadcasts when a label restricts an endpoint)."""
+    graph: PropertyGraph,
+    pat: NodePat | EdgePat,
+    idx: int,
+    carry_paths: bool = False,
+    src_conds: "list[Cond] | None" = None,
+) -> tuple[DataFrame, dict[str, str]]:
+    """One MATCH pattern as a frame whose columns carry their variable's
+    prefix (``<var>_<col>``), plus its scope (var -> kind). Node patterns
+    are a label scan; single-hop edges are ``expand`` (two equi-joins
+    Catalyst broadcasts when a label restricts an endpoint); a
+    variable-length segment is the path expansion (one row per distinct
+    path) whose length and, with ``carry_paths``, id arrays land under
+    the path variable's prefix — or, unnamed, a hidden ``__vl<idx>_``
+    one. ``src_conds`` pre-filters an unbounded segment's sources."""
+    vcols = graph.vertices.columns
     if isinstance(pat, NodePat):
-        if pat.var is None:
-            raise CypherSyntaxError("chained MATCH patterns need node variables")
-        cols = [f"{pat.var}_{c}" for c in graph.vertices.columns]
-        df = graph.nodes(pat.label).select(
-            *[F.col(c).alias(f"{pat.var}_{c}") for c in graph.vertices.columns]
-        )
-        return df, {pat.var: cols}
-    if pat.src.var is None or pat.dst.var is None or pat.src.var == pat.dst.var:
-        raise CypherSyntaxError(
-            "chained edge patterns need distinct variables on both endpoints"
-        )
-    if pat.hops is not None:
-        # variable-length segment inside a chain (round-8 verdict ask #5):
-        # the ordinary expansion frame (one row per distinct path), with
-        # its endpoint columns renamed to the chain's variable prefixes so
-        # the name-based unification joins it like any clause. The path's
-        # edge-id array rides along as __vlr{idx} for the SAME-clause
-        # relationship-isomorphism filters in _match_chain, and is dropped
-        # before the frame reaches user scope.
-        vl = _varlength_paths(graph, pat, carry_paths=True)
-        vcols = graph.vertices.columns
-        sv, dv = pat.src.var, pat.dst.var
-        df = vl.select(
-            *[F.col(f"a_{c}").alias(f"{sv}_{c}") for c in vcols],
-            *[F.col(f"b_{c}").alias(f"{dv}_{c}") for c in vcols],
-            F.col("__path_rels").alias(f"__vlr{idx}"),
-        )
-        return df, {
-            sv: [f"{sv}_{c}" for c in vcols],
-            dv: [f"{dv}_{c}" for c in vcols],
+        return prefixed(graph.nodes(pat.label), f"{pat.var}_", vcols), {
+            pat.var: "node"
         }
-    evar = pat.var or f"__e{idx}"
-    df = graph.expand(
-        pat.src.label,
-        pat.rel_type,
-        pat.dst.label,
-        src_prefix=f"{pat.src.var}_",
-        dst_prefix=f"{pat.dst.var}_",
-    )
+    sv, dv = pat.src.var, pat.dst.var
+    for v in (pat.var, pat.path):
+        if v is not None and v in (sv, dv):
+            raise CypherSyntaxError(f"variable {v!r} is already bound")
+    if sv == dv:
+        # (a)-[..]->(a): bind the far end to a hidden variable and keep
+        # the rows that close the cycle
+        loop = f"__loop{idx}"
+        df, scope = _prefixed_clause(
+            graph,
+            dc_replace(pat, dst=dc_replace(pat.dst, var=loop)),
+            idx,
+            carry_paths,
+            src_conds,
+        )
+        del scope[loop]
+        df = df.filter(F.col(f"{sv}_id") == F.col(f"{loop}_id"))
+        return df.drop(*[f"{loop}_{c}" for c in vcols]), scope
+    if pat.hops is not None:
+        pp = f"{pat.path}_" if pat.path else f"__vl{idx}_"
+        df = _varlength_paths(
+            graph, pat, f"{sv}_", f"{dv}_", pp, carry_paths, src_conds
+        )
+        scope = {sv: "node", dv: "node"}
+        if pat.path:
+            scope[pat.path] = "path"
+        return df, scope
+    evar = pat.var
+    ren = {c: f"{evar}_{c}" for c in graph.edges.columns}
+
+    def oriented(s: NodePat, d: NodePat) -> DataFrame:
+        return graph.expand(
+            s.label, pat.rel_type, d.label, f"{s.var}_", f"{d.var}_"
+        ).withColumnsRenamed(ren)
+
+    df = oriented(pat.src, pat.dst)
     if pat.undirected:
-        # either-orientation clause inside a chain: union the reversed
-        # frame (swapped labels + swapped prefixes), minus self-loops
-        # (matched once, by the forward frame)
-        back = graph.expand(
-            pat.dst.label,
-            pat.rel_type,
-            pat.src.label,
-            src_prefix=f"{pat.dst.var}_",
-            dst_prefix=f"{pat.src.var}_",
-        ).filter(F.col("src") != F.col("dst"))
-        df = df.unionByName(back.select(*df.columns))
-    varmap = {
-        evar: [f"{evar}_{c}" for c in graph.edges.columns],
-        pat.src.var: [f"{pat.src.var}_{c}" for c in graph.vertices.columns],
-        pat.dst.var: [f"{pat.dst.var}_{c}" for c in graph.vertices.columns],
-    }
-    df = df.select(
-        *[F.col(c).alias(f"{evar}_{c}") for c in graph.edges.columns],
-        *varmap[pat.src.var],
-        *varmap[pat.dst.var],
-    )
-    return df, varmap
+        # either orientation: union the reversed frame (the pattern's src
+        # bound to the edge's dst), minus self-loops, which match once
+        df = df.unionByName(
+            oriented(pat.dst, pat.src).filter(
+                F.col(f"{evar}_src") != F.col(f"{evar}_dst")
+            )
+        )
+    return df, {evar: "edge", sv: "node", dv: "node"}
 
 
 def _rel_types_overlap(t1, t2) -> bool:
@@ -4180,53 +4053,85 @@ def _rel_types_overlap(t1, t2) -> bool:
 def _match_chain(
     graph: PropertyGraph,
     pats: list[NodePat | EdgePat],
-    groups: "list[list[NodePat | EdgePat]] | None" = None,
-    seed: "tuple[DataFrame, dict[str, list[str]]] | None" = None,
+    groups: "list[list[NodePat | EdgePat]]",
+    disjs: "list[list[list[Cond]]]",
+    carry_paths: bool = False,
+    seed: "tuple[DataFrame, dict[str, str]] | None" = None,
 ):
-    """Multi-clause ``MATCH ... MATCH ...`` translation: each clause becomes
-    a var-prefixed DataFrame; consecutive clauses join on the node ids of
-    their shared variables (Cypher's name-based unification). Every clause
-    must share at least one variable with the accumulated pattern — a
-    clause that shares none would be a cartesian product, which this front
-    end refuses by contract (the native crossJoin is available to users who
-    really mean it). Re-binding a relationship variable is rejected, as in
-    Cypher. Plan shape: a chain of equi-joins on vertex ids — exactly what
-    Catalyst reorders/broadcasts; label filters stay pushed at each
-    clause's own scan.
+    """Every first-stage MATCH — one node, one edge, a named or unnamed
+    variable-length path, comma patterns and ``MATCH ... MATCH ...``
+    clauses — as ONE var-prefixed frame and its scope colmap
+    (:func:`_scope_colmap`). Each pattern becomes a var-prefixed frame
+    (:func:`_prefixed_clause`); patterns join on the node ids of their
+    shared variables (Cypher's name-based unification). Every pattern
+    must share a variable with the accumulated pattern — one that shares
+    none would be a cartesian product, which this front end refuses by
+    contract (the native crossJoin is available to users who really mean
+    it). Re-binding a relationship or path variable is rejected, as in
+    Cypher. Plan shape: a chain of equi-joins on vertex ids — exactly
+    what Catalyst reorders/broadcasts; label filters stay pushed at each
+    pattern's own scan.
 
     ``groups`` (per-MATCH-clause pattern lists) drives openCypher's
     relationship isomorphism: edges bound WITHIN one MATCH clause are
     pairwise distinct — including the edges inside a variable-length
-    segment (its ``__vlr{idx}`` id array vs sibling single-hop edge ids
-    vs other segments' arrays), never across clauses.
+    segment (its edge-id array vs sibling single-hop edge ids vs other
+    segments' arrays), never across clauses. A segment carries its id
+    arrays only when a same-clause sibling or (``carry_paths``, for the
+    named path) a ``nodes(p)``/``relationships(p)`` accessor reads them.
 
-    ``seed`` (round 9) starts the chain from an EXISTING var-prefixed
-    frame instead of ``pats[0]`` — the shortestPath composition path: the
-    counting-BFS result (endpoint columns renamed to the chain
-    convention) becomes the accumulated frame, and every pattern in
-    ``pats`` joins onto it by the same name-based unification."""
-    if seed is None:
-        acc, varmap = _prefixed_clause(graph, pats[0], 0)
-        indexed = [(0, pats[0]), *enumerate(pats[1:], start=1)]
-        to_join = indexed[1:]
+    ``disjs`` (every clause's WHERE) supplies the single-variable
+    conjuncts pushed ahead of an unbounded segment's iterative expansion
+    (:func:`_common_single_var_conds`).
+
+    ``seed`` starts the chain from an existing var-prefixed frame and its
+    scope — the shortestPath composition: the counting-BFS result becomes
+    the accumulated frame, and every pattern in ``pats`` joins onto it by
+    the same name-based unification."""
+    rels_in = {
+        id(cp): sum(isinstance(x, EdgePat) for x in grp)
+        for grp in groups
+        for cp in grp
+    }
+    path_prefix: dict[int, str] = {}
+
+    def clause(idx: int, pat) -> tuple[DataFrame, dict[str, str]]:
+        if not isinstance(pat, EdgePat) or pat.hops is None:
+            return _prefixed_clause(graph, pat, idx)
+        path_prefix[id(pat)] = f"{pat.path}_" if pat.path else f"__vl{idx}_"
+        return _prefixed_clause(
+            graph,
+            pat,
+            idx,
+            rels_in.get(id(pat), 0) > 1 or (carry_paths and pat.path is not None),
+            _common_single_var_conds(disjs, pat.src.var),
+        )
+
+    #: var -> column prefix on the accumulated frame: ``<var>_``, except a
+    #: leading node pattern, whose label scan stays unprefixed (no rename)
+    prefix: dict[str, str] = {}
+    if seed is not None:
+        acc, scope = seed[0], dict(seed[1])
+        to_join = list(enumerate(pats, start=1))
+    elif isinstance(pats[0], NodePat):
+        acc, scope = graph.nodes(pats[0].label), {pats[0].var: "node"}
+        prefix[pats[0].var] = ""
+        to_join = list(enumerate(pats[1:], start=1))
     else:
-        acc, varmap = seed
-        varmap = dict(varmap)
-        indexed = list(enumerate(pats, start=1))
-        to_join = indexed
+        acc, scope = clause(0, pats[0])
+        to_join = list(enumerate(pats[1:], start=1))
 
-    # greedy connectivity ordering (round 9): join each pattern once it
-    # shares a node variable with the accumulated frame, regardless of
-    # clause ORDER — ``MATCH p = shortestPath((c)-[*..3]->(r)) MATCH
+    # greedy connectivity ordering: join each pattern once it shares a
+    # node variable with the accumulated frame, regardless of clause
+    # ORDER — ``MATCH p = shortestPath((c)-[*..3]->(r)) MATCH
     # (s)-[:A]->(n)-[:B]->(r)`` binds through the SECOND hop. Inner
     # equi-joins commute, so reordering never changes row semantics; a
-    # pattern that never connects is the same cartesian-product error as
-    # before.
+    # pattern that never connects is the same cartesian-product error.
     def _node_vars(pp) -> set:
         vs = {pp.var} if isinstance(pp, NodePat) else {pp.src.var, pp.dst.var}
         return vs - {None}
 
-    bound = set(varmap)
+    bound = set(scope)
     pending = list(to_join)
     ordered: list = []
     while pending:
@@ -4239,95 +4144,58 @@ def _match_chain(
             raise CypherSyntaxError(
                 "each MATCH clause must share a variable with an earlier clause"
             )
-    to_join = ordered
-    for idx, pat in to_join:
-        df, vm = _prefixed_clause(graph, pat, idx)
-        edge_vars = (
-            {pat.var}
-            if isinstance(pat, EdgePat) and pat.var is not None
-            else set()
-        )
-        if edge_vars & varmap.keys():
-            raise CypherSyntaxError(
-                f"relationship variable {pat.var!r} already bound"
-            )
-        shared = sorted(set(vm) & set(varmap) - edge_vars)
-        if not shared:
-            raise CypherSyntaxError(
-                "each MATCH clause must share a variable with an earlier clause"
-            )
-        renames = {}
+    vcols = graph.vertices.columns
+    for idx, pat in ordered:
+        df, sc = clause(idx, pat)
+        for v, kind in sc.items():
+            if v in scope and (kind != "node" or scope[v] != "node"):
+                raise CypherSyntaxError(f"{kind} variable {v!r} already bound")
+        shared = sorted(set(sc) & set(scope))
+        # the accumulated frame already holds a shared node's columns:
+        # the pattern keeps only its id, the USING-join key
+        df = df.drop(*[f"{v}_{c}" for v in shared for c in vcols if c != "id"])
         for v in shared:
-            for c in vm[v]:
-                renames[c] = f"__dup_{c}"
-        df = df.select(
-            *[F.col(c).alias(renames.get(c, c)) for c in df.columns]
-        )
-        cond = None
-        for v in shared:
-            eq = F.col(f"{v}_id") == F.col(f"__dup_{v}_id")
-            cond = eq if cond is None else (cond & eq)
-        acc = acc.join(df, cond).drop(*renames.values())
-        for v, cols in vm.items():
-            if v not in varmap:
-                varmap[v] = cols
-    if groups:
-        idx_of = {id(pp): i for i, pp in indexed}
-        for grp in groups:
-            evars = [
-                cp.var
-                for cp in grp
-                if isinstance(cp, EdgePat) and cp.hops is None
-            ]
-            vlcols = [
-                f"__vlr{idx_of[id(cp)]}"
-                for cp in grp
-                if isinstance(cp, EdgePat) and cp.hops is not None
-            ]
-            for i in range(len(evars)):
-                for j in range(i + 1, len(evars)):
-                    acc = acc.filter(
-                        F.col(f"{evars[i]}_id") != F.col(f"{evars[j]}_id")
-                    )
-            for rc in vlcols:
-                for ev in evars:
-                    acc = acc.filter(
-                        ~F.array_contains(F.col(rc), F.col(f"{ev}_id"))
-                    )
-            for i in range(len(vlcols)):
-                for j in range(i + 1, len(vlcols)):
-                    acc = acc.filter(
-                        ~F.arrays_overlap(F.col(vlcols[i]), F.col(vlcols[j]))
-                    )
-    drop_vl = [c for c in acc.columns if c.startswith("__vlr")]
-    if drop_vl:
-        acc = acc.drop(*drop_vl)
-    known = {c for cols in varmap.values() for c in cols}
-
-    def colmap(ref: PropRef) -> Column:
-        name = f"{ref.var}_{'id' if ref.prop is None else ref.prop}"
-        if name not in known:
-            raise CypherSyntaxError(
-                f"unknown variable or property {ref.var}.{ref.prop or 'id'}"
-            )
-        return F.col(name)
-
-    colmap.var_props = {
-        v: [
-            c[len(v) + 1:]
-            for c in cols
-            if c[len(v) + 1:] not in STRUCTURAL
+            if prefix.get(v) == "":
+                df = df.withColumnRenamed(f"{v}_id", "id")
+        acc = acc.join(df, [f"{prefix.get(v, f'{v}_')}id" for v in shared])
+        scope.update(sc)
+    for grp in groups:
+        evars = [
+            f"{cp.var}_id"
+            for cp in grp
+            if isinstance(cp, EdgePat) and cp.hops is None
         ]
-        for v, cols in varmap.items()
-    }
-    colmap.var_kinds = {
-        v: "node" if f"{v}_label" in known else "edge" for v in varmap
-    }
-    colmap.scope_graph = graph
-    return acc, colmap
+        vlcols = [
+            f"{path_prefix[id(cp)]}__rels"
+            for cp in grp
+            if isinstance(cp, EdgePat) and cp.hops is not None
+        ]
+        for i in range(len(evars)):
+            for j in range(i + 1, len(evars)):
+                acc = acc.filter(F.col(evars[i]) != F.col(evars[j]))
+        for rc in vlcols:
+            for ev in evars:
+                acc = acc.filter(~F.array_contains(F.col(rc), F.col(ev)))
+        for i in range(len(vlcols)):
+            for j in range(i + 1, len(vlcols)):
+                acc = acc.filter(
+                    ~F.arrays_overlap(F.col(vlcols[i]), F.col(vlcols[j]))
+                )
+    hidden = [
+        f"{pp}{c}"
+        for pp in path_prefix.values()
+        if pp.startswith("__vl")
+        for c in _PATH_PROPS
+    ]
+    if hidden:
+        acc = acc.drop(*hidden)
+    return acc, _scope_colmap(
+        graph,
+        {v: (kind, prefix.get(v, f"{v}_")) for v, kind in scope.items()},
+    )
 
 
-def _optional_join_prefixed(
+def _optional_join(
     graph: PropertyGraph,
     df: DataFrame,
     colmap,
@@ -4336,17 +4204,21 @@ def _optional_join_prefixed(
     i: int,
     bound_conds: "list[Cond] | None" = None,
 ):
-    """OPTIONAL MATCH onto a var-prefixed chain frame (round-8 verdict ask
-    #5): ONE left equi-join per clause, anchored on whichever chain node
-    variable the pattern binds. The optional side's columns land under the
-    new variables' own prefixes (``{var}_{col}``), so the chain colmap
-    contract extends unchanged; a failed binding leaves them null and the
-    whole-variable projection null-gates on the id. Undirected patterns
-    run over the symmetrized edge frame. Plan: edge scan ⋈ free-endpoint
-    label scan (broadcast when dimension-sized), then one left equi-join
-    on the anchor id — the same shape the first-stage OPTIONAL costs."""
-    kinds = dict(getattr(colmap, "var_kinds", {}))
-    props_map = dict(getattr(colmap, "var_props", {}))
+    """One OPTIONAL MATCH onto a MATCH scope: ONE left equi-join of the
+    :func:`_expand_side` frame, anchored on whichever scope node variable
+    the pattern binds — the scope's own variables or those of an EARLIER
+    OPTIONAL clause (a failed earlier binding has a null id, which never
+    equi-joins, so the chain null-extends transitively, per Neo4j). The
+    side's columns land under the new variables' own prefixes, so the
+    scope colmap extends unchanged; a failed binding leaves them null and
+    the whole-variable projection null-gates on the id. A WHERE over the
+    side's own variables filters the side pre-join; one that references
+    the scope, and an inline map on the bound endpoint, are predicates
+    of the OPTIONAL pattern: they ride the LEFT-join condition, so failing
+    rows null-extend instead of dropping (Neo4j's OPTIONAL WHERE
+    contract). Stacked clauses multiply per Neo4j: a row with m and n
+    matches in two clauses yields m*n rows (1 where a side is empty)."""
+    kinds = colmap.var_kinds
     if not isinstance(opt, EdgePat) or opt.hops is not None:
         raise CypherSyntaxError(
             "OPTIONAL MATCH supports a single-hop edge pattern (a)-[e]->(b)"
@@ -4355,114 +4227,46 @@ def _optional_join_prefixed(
     bound_dst = opt.dst.var in kinds
     if bound_src and bound_dst:
         raise CypherSyntaxError(
-            "OPTIONAL MATCH after a MATCH chain must leave one endpoint "
-            "free (both are already bound)"
+            "OPTIONAL MATCH must leave one endpoint free (both are already "
+            "bound)"
         )
     if not (bound_src or bound_dst):
         raise CypherSyntaxError(
             "OPTIONAL MATCH pattern must reference a variable bound by "
-            "the MATCH chain"
+            "the MATCH"
         )
     bv = opt.src.var if bound_src else opt.dst.var
-    if kinds.get(bv) != "node":
+    if kinds[bv] != "node":
         raise CypherSyntaxError(f"{bv!r} is not a node variable")
     bound_end = "src" if bound_src else "dst"
     other = opt.dst if bound_src else opt.src
-    if other.var is None:
-        raise CypherSyntaxError(
-            "optional pattern's free endpoint needs a variable"
-        )
     for v in (opt.var, other.var):
-        if v is not None and v in kinds:
+        if v is not None and v in colmap.scope:
             raise CypherSyntaxError(
                 f"variable {v!r} is already bound in this scope"
             )
-    e = graph.edges
-    if opt.rel_type is not None:
-        e = e.filter(rel_type_cond(opt.rel_type))
-    if opt.undirected:
-        e = _sym_edges(e)
     evar = opt.var or f"__oe{i}"
-    ecols = graph.edges.columns
-    vcols = graph.vertices.columns
-    eframe = e.select(*[F.col(c).alias(f"{evar}_{c}") for c in ecols])
-    oframe = graph.nodes(other.label).select(
-        *[F.col(c).alias(f"{other.var}_{c}") for c in vcols]
+    ovar = other.var or f"__oo{i}"
+    side, side_cm, opt_disj = _expand_side(
+        graph, opt, bound_end, evar, ovar, f"{evar}_", f"{ovar}_", opt_disj
     )
-    free_end = "dst" if bound_end == "src" else "src"
-    opt_side = eframe.join(
-        oframe, F.col(f"{evar}_{free_end}") == F.col(f"{other.var}_id")
-    )
-    if opt_disj is not None:
-        side_known = set(opt_side.columns)
-
-        def ocolmap(ref: PropRef) -> Column:
-            name = f"{ref.var}_{'id' if ref.prop is None else ref.prop}"
-            if ref.var in (evar, other.var) and name in side_known:
-                return F.col(name)
-            raise CypherSyntaxError(
-                "OPTIONAL MATCH WHERE may only reference the optional "
-                f"pattern's own variables ({evar!r}/{other.var!r})"
-            )
-
-        # side-only WHERE pre-filters; cross-variable WHERE (chain/outer
-        # variables — round 8) rides the LEFT-join condition so failing
-        # rows null-extend (Neo4j's OPTIONAL WHERE contract)
-        refs: set[str] = set()
-        _disj_vars(opt_disj, refs)
-        if refs <= {v for v in (opt.var, other.var) if v is not None}:
-            opt_side = opt_side.filter(
-                _where_to_column(opt_disj, ocolmap, side_known, opt_side)
-            )
-            opt_disj = None
-    # anchor through the scope colmap (chain scopes name it ``{bv}_id``,
-    # shortest-path scopes ``a_id``/``b_id`` — the colmap knows)
+    joined_cm = _scope_colmap(graph, {**colmap.scope, **side_cm.scope})
     join_cond = colmap(PropRef(bv, None)) == F.col(f"{evar}_{bound_end}")
     if opt_disj is not None:
-        side_known = set(opt_side.columns)
-
-        def xcolmap(ref: PropRef) -> Column:
-            name = f"{ref.var}_{'id' if ref.prop is None else ref.prop}"
-            if ref.var in (evar, other.var):
-                # missing property on the optional side reads null
-                return F.col(name) if name in side_known else F.lit(None)
-            return colmap(ref)  # chain/outer scope
-
-        # schema-probe cross join (never executed) so computed operands
-        # type-check against both sides' columns
-        probe = df.crossJoin(opt_side)
+        # the cross join is a SCHEMA PROBE only (never executed):
+        # computed operands type-check against both sides' columns; the
+        # compiled Column rides the real left join
+        probe = df.crossJoin(side)
         join_cond = join_cond & F.coalesce(
-            _where_to_column(opt_disj, xcolmap, set(probe.columns), probe),
+            _where_to_column(opt_disj, joined_cm, set(probe.columns), probe),
             F.lit(False),
         )
     if bound_conds:
-        # inline map on a chain-bound endpoint: a predicate of the OPTIONAL
-        # pattern — failing rows null-extend, so it rides the LEFT-join
-        # condition resolved through the chain colmap (never a pre-filter)
         join_cond = join_cond & F.coalesce(
             _where_to_column([list(bound_conds)], colmap, set(df.columns), df),
             F.lit(False),
         )
-    df = df.join(opt_side, join_cond, "left")
-    prev = colmap
-    add_known = {f"{evar}_{c}" for c in ecols} | {
-        f"{other.var}_{c}" for c in vcols
-    }
-
-    def new_colmap(ref: PropRef) -> Column:
-        name = f"{ref.var}_{'id' if ref.prop is None else ref.prop}"
-        if name in add_known:
-            return F.col(name)
-        return prev(ref)
-
-    props_map[other.var] = [c for c in vcols if c not in STRUCTURAL]
-    props_map[evar] = [c for c in ecols if c not in STRUCTURAL]
-    kinds[other.var] = "node"
-    kinds[evar] = "edge"
-    new_colmap.var_props = props_map
-    new_colmap.var_kinds = kinds
-    new_colmap.scope_graph = graph
-    return df, new_colmap
+    return df.join(side, join_cond, "left"), joined_cm
 
 
 def _out_name(item: ReturnItem) -> str:
@@ -4579,8 +4383,12 @@ def _shortest_path(
     count in both forms. Undirected patterns BFS over the symmetrized
     edge list. The levels run on ``tuning.frontier_levels``, whose one
     driver-side scalar per level is the frontier count. WHERE predicates
-    apply after translation; at scale a source-selective query should prefilter the
-    anchor label (the frontier starts from every a-label node)."""
+    apply after translation; ``src_conds`` (the WHERE's single-variable
+    conjuncts on ``a``) prefilter the frontier's sources.
+
+    Returns the seed of :func:`_match_chain`: the endpoints' columns under
+    their variables' prefixes, the path's length (and, with
+    ``carry_paths``, its id arrays) under ``<pathvar>_``, and the scope."""
     carry_rep = carry_paths and not all_paths
     carry_all = carry_paths and all_paths
     lo, hi = pat.hops
@@ -4715,14 +4523,13 @@ def _shortest_path(
     # lo=0 admits the zero-length self-pair (settled at BFS level 0);
     # every lo>=1 keeps excluding it, as before
     paths = dist.filter(F.col("__len") >= lo)
-    a = a_nodes.select(*[F.col(c).alias(f"a_{c}") for c in vcols])
-    b = graph.nodes(pat.dst.label).select(
-        *[F.col(c).alias(f"b_{c}") for c in vcols]
-    )
+    sp, dp = f"{pat.src.var}_", f"{pat.dst.var}_"
     df = (
-        paths.join(a, F.col("__a") == F.col("a_id"))
-        .join(b, F.col("__v") == F.col("b_id"))
-        .withColumnRenamed("__len", "__path_len")
+        paths.join(prefixed(a_nodes, sp, vcols), F.col("__a") == F.col(f"{sp}id"))
+        .join(
+            prefixed(graph.nodes(pat.dst.label), dp, vcols),
+            F.col("__v") == F.col(f"{dp}id"),
+        )
         .drop("__a", "__v")
     )
     if carry_all:
@@ -4758,41 +4565,10 @@ def _shortest_path(
         ).drop("__path_no", "__cnt")
     else:
         df = df.drop("__cnt")
-    names = {pat.src.var: "a_", pat.dst.var: "b_"}
-
-    def colmap(ref: PropRef) -> Column:
-        if ref.var == pathvar:
-            if ref.prop == "length":
-                return F.col("__path_len")
-            if carry_paths and ref.prop == "__nodes":
-                return F.col("__nodes")
-            if carry_paths and ref.prop == "__rels":
-                return F.col("__rels")
-            raise CypherSyntaxError(
-                f"only length({pathvar}), nodes({pathvar}) and "
-                f"relationships({pathvar}) are defined for a path variable"
-            )
-        prefix = names.get(ref.var)
-        if prefix is None:
-            raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-        return F.col(f"{prefix}{'id' if ref.prop is None else ref.prop}")
-
-    # scope metadata: the path's endpoints are ordinary node variables —
-    # OPTIONAL MATCH composition, COUNT { } / pattern-comprehension
-    # binding and pattern predicates all anchor on them through the
-    # shared var_kinds/scope_graph contract (round 8)
-    vertex_props = [
-        c for c in graph.vertices.columns
-        if c not in VERTEX_STRUCTURAL
-    ]
-    colmap.var_props = {
-        v: vertex_props
-        for v in (pat.src.var, pat.dst.var)
-        if v is not None
-    }
-    colmap.var_kinds = {v: "node" for v in colmap.var_props}
-    colmap.scope_graph = graph
-    return df, colmap
+    return df.withColumnsRenamed(
+        {"__len": f"{pathvar}_length", "__nodes": f"{pathvar}___nodes",
+         "__rels": f"{pathvar}___rels"}
+    ), {pat.src.var: "node", pat.dst.var: "node", pathvar: "path"}
 
 
 def _pattern_scope_colmap(
@@ -4871,7 +4647,6 @@ def _bind_pattern_subqueries(
     (CountPattern/PatternComp → RawCol) and returns the joined frame; the
     bound helper columns ride along until the next projection drops
     them."""
-    ctx = getattr(colmap, "pattern_count_ctx", None)
     stage_graph = getattr(colmap, "stage_graph", None)
     scope_structs = getattr(colmap, "structs", {})
     bound: dict[tuple, str] = {}
@@ -4879,12 +4654,8 @@ def _bind_pattern_subqueries(
 
     def resolve_ctx(v: str, what: str):
         """(graph, outer-id column) for the subquery's bound variable —
-        the pattern scope's plain ``id``, any NODE variable of a
-        multi-variable pattern scope (edge patterns, chains — round 8),
-        or a WITH-carried node struct's id field (post-WITH
-        degree/adjacency subqueries)."""
-        if ctx is not None and v == ctx[1]:
-            return ctx[0], F.col("id")
+        any NODE variable of a MATCH scope, or a WITH-carried node
+        struct's id field (post-WITH degree/adjacency subqueries)."""
         kinds = getattr(colmap, "var_kinds", None)
         sg = getattr(colmap, "scope_graph", None) or stage_graph
         if sg is not None and kinds and kinds.get(v) == "node":
@@ -5492,20 +5263,23 @@ def _path_accessors_ahead(p: "_Parser", var: str) -> bool:
 
 
 def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
-    """One single-query (MATCH ... RETURN ...) starting at the parser's
-    current position; trailing tokens (e.g. a following UNION) are left
-    for the caller. See :func:`cypher_read` for the supported surface:
+    """One single-query starting at the parser's current position;
+    trailing tokens (e.g. a following UNION) are left for the caller.
 
-    ``MATCH <pattern> [WHERE ...] [OPTIONAL MATCH <edge-pattern>
-    [WHERE ...]] RETURN ...``
+    ``MATCH <patterns> [WHERE ...] (MATCH <patterns> [WHERE ...])*
+    (OPTIONAL MATCH <edge-pattern> [WHERE ...])* <tail>`` — or a
+    standalone ``RETURN``/``WITH``, ``UNWIND`` or ``CALL { }`` source.
+    Every MATCH form (a node, an edge, a named or unnamed variable-length
+    path, a shortestPath seed, comma patterns, several clauses) binds
+    into ONE scope, :func:`_match_chain`'s var-prefixed frame; each
+    OPTIONAL MATCH left-joins an :func:`_expand_side` onto it anchored on
+    a bound node (a failed optional pattern yields nulls, never drops the
+    row). The tail (``WITH``/``UNWIND``/``MATCH``/``CALL`` stages, then
+    ``RETURN``) is :func:`_finish_read`.
 
     Column names follow aliases when given, else ``id_<var>`` /
     ``<var>_<prop>`` (Cypher's positional results have no canonical names;
-    DataFrames need them). The OPTIONAL MATCH clause requires a plain MATCH
-    node pattern whose variable appears as one endpoint of the optional
-    edge pattern; its WHERE conditions filter the optional side BEFORE the
-    left join (Cypher semantics: a failed optional pattern yields nulls,
-    never drops the base row).
+    DataFrames need them).
     """
     if p.at("kw", "RETURN") or p.at("kw", "WITH"):
         # standalone RETURN / WITH ... RETURN — expression evaluation over
@@ -5686,8 +5460,8 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
                 "shortestPath requires a bounded variable-length pattern "
                 "(a)-[:T*lo..hi]->(b)"
             )
-        # comma siblings in the same MATCH clause (round 9): the path
-        # composes with them as a chain seeded by the BFS frame
+        # comma siblings in the same MATCH clause: the path composes with
+        # them as a chain seeded by the BFS frame
         seq = [pat]
         if p.at("punct", ","):
             p.next()
@@ -5711,18 +5485,19 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
                 "a path variable requires a variable-length pattern "
                 "(a)-[:T*lo..hi]->(b) or shortestPath()/allShortestPaths()"
             )
+        pat.path = path_var
         seq = [pat]
     else:
         seq = p.parse_pattern_seq()
         pat = seq[0]
-    disj = None
+    #: every MATCH clause's WHERE — each a conjunct over the joined
+    #: pattern (all clauses are inner joins, so post-join filtering is
+    #: equivalent)
+    chain_disjs: list = []
     if p.at("kw", "WHERE"):
         p.next()
-        disj = p.parse_where()
-    # inline property maps desugar to WHERE conjuncts per clause (ANDed
-    # into every disjunct — maps distribute over OR); synthetic variables
-    # must avoid every user variable across all clauses, so collect first
-    chain_pats, chain_disjs = list(seq), ([disj] if disj is not None else [])
+        chain_disjs.append(p.parse_where())
+    chain_pats = list(seq)
     #: per-MATCH-clause pattern groups — openCypher's relationship
     #: isomorphism (distinct edges) holds WITHIN one MATCH clause, not
     #: across clauses
@@ -5735,16 +5510,12 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
         if p.at("kw", "WHERE"):
             p.next()
             chain_disjs.append(p.parse_where())
+    # inline property maps desugar to one more conjunct; synthetic
+    # variables must avoid every user variable across all clauses, so
+    # collect first
     taken = _pattern_vars(chain_pats)
     prop_conds = _desugar_inline_props(chain_pats, taken)
-    if len(chain_pats) == 1:
-        disj = _and_into(disj, prop_conds)
-        if chain_disjs:
-            chain_disjs[0] = disj
-        elif disj is not None:
-            chain_disjs.append(disj)
-    elif prop_conds:
-        # chains filter post-join, so the maps become one extra conjunct
+    if prop_conds:
         chain_disjs.append([list(prop_conds)])
     opt_clauses: list = []
     while p._at_word_ci("OPTIONAL"):
@@ -5773,257 +5544,57 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
             opt_disj, _desugar_inline_props([opt_pat], taken)
         )
         opt_clauses.append((opt_pat, opt_disj, bound_conds_i))
+    # the scope keys every column and join on variable names, so
+    # anonymous elements get synthetic dunder names
+    _assign_anon_vars(chain_pats, taken)
+    seed = None
     if sp_var is not None:
-        extra = chain_pats[1:]
-        df, colmap = _shortest_path(
+        # Same-clause relationship uniqueness between the path's
+        # internal edges and a sibling relationship is only vacuously
+        # satisfiable when their type sets cannot overlap — Neo4j
+        # re-selects among TIED shortest paths in the overlapping case,
+        # so silently filtering our one representative path would
+        # mis-answer; that case stays a loud typed error (workaround: a
+        # separate MATCH clause, where openCypher scopes uniqueness per
+        # clause).
+        for sib in groups[0][1:]:
+            if isinstance(sib, EdgePat) and _rel_types_overlap(
+                pat.rel_type, sib.rel_type
+            ):
+                raise CypherSyntaxError(
+                    "a relationship sharing a MATCH clause with "
+                    "shortestPath() needs a relationship type "
+                    "disjoint from the path's; move it to its own "
+                    "MATCH clause"
+                )
+        if len({pat.src.var, pat.dst.var, sp_var}) < 3:
+            raise CypherSyntaxError(
+                "shortestPath endpoints and path need distinct variables"
+            )
+        seed = _shortest_path(
             graph,
             pat,
             sp_var,
             all_paths=sp_all,
             carry_paths=_path_accessors_ahead(p, sp_var),
-            src_conds=_common_single_var_conds(disj, pat.src.var),
+            src_conds=_common_single_var_conds(chain_disjs, pat.src.var),
         )
-        if extra:
-            # chain composition (round 9): the counting-BFS frame seeds
-            # _match_chain — its endpoint columns rename to the chain's
-            # ``<var>_<col>`` convention and every remaining pattern
-            # (comma siblings + later MATCH clauses) joins on by
-            # name-based unification, exactly the X240 var-length-segment
-            # path. Same-clause relationship uniqueness between the
-            # path's internal edges and a sibling relationship is only
-            # vacuously satisfiable when their type sets cannot overlap —
-            # Neo4j re-selects among TIED shortest paths in the
-            # overlapping case, so silently filtering our one
-            # representative path would mis-answer; that case stays a
-            # loud typed error (workaround: a separate MATCH clause,
-            # where openCypher scopes uniqueness per clause).
-            for sib in groups[0][1:]:
-                if isinstance(sib, EdgePat) and _rel_types_overlap(
-                    pat.rel_type, sib.rel_type
-                ):
-                    raise CypherSyntaxError(
-                        "a relationship sharing a MATCH clause with "
-                        "shortestPath() needs a relationship type "
-                        "disjoint from the path's; move it to its own "
-                        "MATCH clause"
-                    )
-            src_v, dst_v = pat.src.var, pat.dst.var
-            if src_v is None or dst_v is None or src_v == dst_v:
-                raise CypherSyntaxError(
-                    "shortestPath endpoints need distinct variables to "
-                    "compose with additional patterns"
-                )
-            ren = {}
-            for c in df.columns:
-                if c.startswith("a_"):
-                    ren[c] = f"{src_v}_{c[2:]}"
-                elif c.startswith("b_"):
-                    ren[c] = f"{dst_v}_{c[2:]}"
-            df = df.select(
-                *[F.col(c).alias(ren.get(c, c)) for c in df.columns]
-            )
-            vcols = graph.vertices.columns
-            seed_vm = {
-                v: [f"{v}_{c}" for c in vcols] for v in (src_v, dst_v)
-            }
-            _assign_anon_vars(extra, taken)
-            chain_groups = [g for g in [groups[0][1:], *groups[1:]] if g]
-            df, chain_cm = _match_chain(
-                graph, extra, chain_groups, seed=(df, seed_vm)
-            )
-            sp_cm = colmap
-
-            def composed_cm(ref: PropRef) -> Column:
-                if ref.var == sp_var:
-                    return sp_cm(ref)
-                return chain_cm(ref)
-
-            composed_cm.var_props = dict(chain_cm.var_props)
-            composed_cm.var_kinds = dict(chain_cm.var_kinds)
-            composed_cm.scope_graph = graph
-            colmap = composed_cm
-            for dd in chain_disjs:
-                df = _apply_scope_where(df, colmap, graph, dd)
-            disj = None
-        # OPTIONAL MATCH after a shortestPath base (round 8): the path's
-        # endpoints are ordinary node variables of the scope — one left
-        # equi-join per clause, exactly the chain composition
-        for i, (opt_pat_i, opt_disj_i, bound_conds_i) in enumerate(
-            opt_clauses
-        ):
-            if disj is not None:
-                # apply the base WHERE before any null-extension (the
-                # optional clauses must see only surviving path rows)
-                df = df.filter(
-                    _where_to_column(disj, colmap, set(df.columns), df)
-                )
-                disj = None
-            df, colmap = _optional_join_prefixed(
-                graph, df, colmap, opt_pat_i, opt_disj_i, i, bound_conds_i
-            )
-        opt_clauses = []
-    elif len(chain_pats) > 1 or (
-        opt_clauses and not isinstance(pat, NodePat)
-    ):
-        # a single-EDGE base with OPTIONAL MATCH clauses runs as a
-        # one-clause chain: same prefixed frame, same left-join-per-clause
-        # optional composition (MATCH (a)-[e]->(b) OPTIONAL MATCH …)
-        _assign_anon_vars(chain_pats, taken)
-        # relationship isomorphism (incl. var-length segments) is applied
-        # inside _match_chain, per MATCH-clause group
-        df, colmap = _match_chain(graph, chain_pats, groups)
-        # each clause's WHERE is a conjunct over the joined pattern (all
-        # clauses are inner joins, so post-join filtering is equivalent);
-        # the shared helper gives chain WHEREs the full operand machinery
-        # (pattern predicates, COUNT { } / comprehension operands) too
-        for d in chain_disjs:
-            df = _apply_scope_where(df, colmap, graph, d)
-        disj = None
-        # OPTIONAL MATCH after a multi-clause chain (round-8 verdict ask
-        # #5): one left equi-join per clause onto the var-prefixed frame,
-        # anchored on whichever chain node variable the pattern binds
-        for i, (opt_pat_i, opt_disj_i, bound_conds_i) in enumerate(
-            opt_clauses
-        ):
-            df, colmap = _optional_join_prefixed(
-                graph, df, colmap, opt_pat_i, opt_disj_i, i, bound_conds_i
-            )
-        opt_clauses = []
-    elif opt_clauses:
-        if not isinstance(pat, NodePat):
-            raise CypherSyntaxError(
-                "OPTIONAL MATCH requires a plain MATCH (n[:Label]) base pattern"
-            )
-        df, colmap = _optional_match(graph, pat, opt_clauses, disj)
-        disj = None  # base WHERE already applied pre-join inside the helper
-    elif isinstance(pat, NodePat):
-        var = pat.var
-        df = graph.nodes(pat.label)
-        if disj is not None and any(
-            isinstance(c, PatternCond) for conj in disj for c in conj
-        ):
-            if len(disj) > 1:
-                raise CypherSyntaxError(
-                    "pattern predicates cannot be OR-combined"
-                )
-            pattern_conds = [c for c in disj[0] if isinstance(c, PatternCond)]
-            rest = [c for c in disj[0] if not isinstance(c, PatternCond)]
-            disj = [rest] if rest else None
-            # each pattern predicate is one semi-join (positive) or
-            # anti-join (NOT) against the distinct qualifying edge sources
-            # — the scale-correct existential form (never materializes the
-            # per-node match multiplicity)
-            for pc in pattern_conds:
-                if pc.var != var:
-                    raise CypherSyntaxError(f"unknown variable {pc.var!r}")
-                df = df.join(
-                    _pattern_qualifying_ids(graph, pc),
-                    F.col("id") == F.col("__pp_id"),
-                    "left_anti" if pc.negated else "left_semi",
-                )
-
-        def colmap(ref: PropRef) -> Column:
-            if ref.var != var:
-                raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-            return F.col("id" if ref.prop is None else ref.prop)
-
-        colmap.var_props = {
-            var: [c for c in graph.vertices.columns
-                 if c not in VERTEX_STRUCTURAL]
-        }
-        colmap.var_kinds = {var: "node"}
-        colmap.pattern_count_ctx = (graph, var)
-
-    elif pat.hops is not None:
-        carry_vl = path_var is not None and _path_accessors_ahead(p, path_var)
-        df = _varlength_paths(
-            graph,
-            pat,
-            carry_paths=carry_vl,
-            src_conds=_common_single_var_conds(disj, pat.src.var),
+        chain_pats, groups[0] = chain_pats[1:], groups[0][1:]
+    df, colmap = _match_chain(
+        graph,
+        chain_pats,
+        groups,
+        chain_disjs,
+        carry_paths=path_var is not None and _path_accessors_ahead(p, path_var),
+        seed=seed,
+    )
+    for d in chain_disjs:
+        df = _apply_scope_where(df, colmap, graph, d)
+    # OPTIONAL MATCH: one left equi-join per clause onto the scope frame
+    for i, (opt_pat_i, opt_disj_i, bound_conds_i) in enumerate(opt_clauses):
+        df, colmap = _optional_join(
+            graph, df, colmap, opt_pat_i, opt_disj_i, i, bound_conds_i
         )
-        names = {pat.src.var: "a_", pat.dst.var: "b_"}
-
-        def colmap(ref: PropRef) -> Column:
-            if path_var is not None and ref.var == path_var:
-                if ref.prop == "length":
-                    return F.col("__path_len")
-                if carry_vl and ref.prop == "__nodes":
-                    return F.col("__path_nodes")
-                if carry_vl and ref.prop == "__rels":
-                    return F.col("__path_rels")
-                raise CypherSyntaxError(
-                    f"only length({path_var}), nodes({path_var}) and "
-                    f"relationships({path_var}) are supported on a path "
-                    "variable; bind the endpoints for their properties"
-                )
-            prefix = names.get(ref.var)
-            if prefix is None:
-                raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-            return F.col(f"{prefix}{'id' if ref.prop is None else ref.prop}")
-
-        # scope metadata (round 8): the var-length endpoints are ordinary
-        # node variables — COUNT { } / comprehension binding and pattern
-        # predicates anchor on them like any scope
-        _vl_vprops = [
-            c for c in graph.vertices.columns
-            if c not in VERTEX_STRUCTURAL
-        ]
-        colmap.var_props = {
-            v: _vl_vprops
-            for v in (pat.src.var, pat.dst.var)
-            if v is not None
-        }
-        colmap.var_kinds = {v: "node" for v in colmap.var_props}
-        colmap.scope_graph = graph
-
-    else:
-        df = graph.expand(pat.src.label, pat.rel_type, pat.dst.label)
-        if pat.undirected:
-            # (a)-[e]-(b): union the reversed orientation (pattern src
-            # bound to the edge's dst side — expand with swapped labels
-            # and swapped prefixes so both frames share one naming).
-            # Self-loops match the pattern once, so the reversed frame
-            # drops them; rows stay distinct because orientations differ
-            # on (edge id, binding side).
-            back = graph.expand(
-                pat.dst.label,
-                pat.rel_type,
-                pat.src.label,
-                src_prefix="b_",
-                dst_prefix="a_",
-            ).filter(F.col("src") != F.col("dst"))
-            df = df.unionByName(back.select(*df.columns))
-        names = {pat.src.var: "a_", pat.dst.var: "b_"}
-
-        def colmap(ref: PropRef) -> Column:
-            if ref.var == pat.var:  # the edge variable
-                return F.col("id" if ref.prop is None else ref.prop)
-            prefix = names.get(ref.var)
-            if prefix is None:
-                raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-            return F.col(f"{prefix}{'id' if ref.prop is None else ref.prop}")
-
-        vertex_props = [
-            c for c in graph.vertices.columns
-                 if c not in VERTEX_STRUCTURAL
-        ]
-        colmap.var_props = {
-            v: vertex_props for v in (pat.src.var, pat.dst.var) if v is not None
-        }
-        colmap.var_kinds = {v: "node" for v in colmap.var_props}
-        colmap.scope_graph = graph
-        if pat.var is not None:
-            colmap.var_props[pat.var] = [
-                c
-                for c in graph.edges.columns
-                if c not in EDGE_STRUCTURAL
-            ]
-            colmap.var_kinds[pat.var] = "edge"
-
-    if disj is not None:
-        df = _apply_scope_where(df, colmap, graph, disj)
-
     colmap.stage_graph = graph
     return _finish_read(df, colmap, p, bare=False)
 
@@ -6036,10 +5607,8 @@ def _apply_scope_where(
     semi/anti-join each against the distinct qualifying ids (never the
     per-node match multiplicity); WHERE-position COUNT { } /
     pattern-comprehension operands bind per-node helper columns via left
-    joins; the residue filters through ``_where_to_column``. Shared by
-    the single-pattern path, MATCH chains, and shortestPath-chain
-    composition — queries outside the supported scope raise the same
-    typed errors everywhere."""
+    joins; the residue filters through ``_where_to_column``. Every MATCH
+    clause's WHERE goes through here."""
     if disj is None:
         return df
     if any(isinstance(c, PatternCond) for conj in disj for c in conj):
@@ -6221,8 +5790,6 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
             # WITH) — openCypher allows it; desugar by injecting an
             # implicit ``WITH *`` so the pattern scope flips to the bare
             # carried-variable scope every stage form already speaks.
-            # (The first-stage OPTIONAL MATCH special form was consumed
-            # by _read_single before this loop ever runs.)
             p.toks[p.i:p.i] = [_Tok("kw", "WITH"), _Tok("punct", "*")]
             continue
         if p._at_word_ci("CALL"):
@@ -6351,42 +5918,15 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
             # ORDER BY scope)
             ep, op = f"__we{wopt_n}_", f"__wo{wopt_n}_"
             wopt_n += 1
-            e = graph.edges
-            if cpat.rel_type is not None:
-                e = e.filter(rel_type_cond(cpat.rel_type))
-            if cpat.undirected:
-                # either-orientation CALL pattern: the symmetrized frame,
-                # anchored on whichever side the imported variable names
-                e = _sym_edges(e)
-            e = e.select(
-                *[F.col(c).alias(f"{ep}{c}") for c in graph.edges.columns]
-            )
-            other_df = graph.nodes(c_other.label).select(
-                *[F.col(c).alias(f"{op}{c}") for c in graph.vertices.columns]
-            )
             bound_end = "src" if c_is_src else "dst"
-            free_end = "dst" if c_is_src else "src"
-            side = e.join(
-                other_df, F.col(f"{ep}{free_end}") == F.col(f"{op}id")
+            side, icolmap, c_rest = _expand_side(
+                graph, cpat, bound_end, cpat.var or ep, c_other.var or op,
+                ep, op, c_disj,
             )
-            icolmap = _pattern_scope_colmap(
-                "a CALL subquery",
-                cpat.var,
-                c_other.var,
-                ep,
-                op,
-                vertex_props=[
-                    c for c in graph.vertices.columns
-                    if c not in VERTEX_STRUCTURAL
-                ],
-                edge_props=[
-                    c for c in graph.edges.columns
-                    if c not in EDGE_STRUCTURAL
-                ],
-            )
-            if c_disj is not None:
-                side = side.filter(
-                    _where_to_column(c_disj, icolmap, set(side.columns), side)
+            if c_rest is not None:
+                raise CypherSyntaxError(
+                    "a CALL subquery WHERE may only reference its own "
+                    "pattern variables"
                 )
             anchor = F.col(f"{ep}{bound_end}")
             out_names = [_out_name(i) for i in c_items]
@@ -6731,13 +6271,9 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
                     )
                 op = f"__wo{wopt_n}_"
                 wopt_n += 1
-                other_df = graph.nodes(opt.label).select(
-                    *[
-                        F.col(c).alias(f"{op}{c}")
-                        for c in graph.vertices.columns
-                    ]
+                df = df.crossJoin(
+                    prefixed(graph.nodes(opt.label), op, graph.vertices.columns)
                 )
-                df = df.crossJoin(other_df)
                 vertex_props = sorted(
                     c for c in graph.vertices.columns
                     if c not in VERTEX_STRUCTURAL
@@ -6789,10 +6325,6 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
             bound_end = "src" if bound_is_src else "dst"
             bound_var = opt.src.var if bound_is_src else opt.dst.var
             other = opt.dst if bound_is_src else opt.src
-            if other.label is None and other.var is None:
-                raise CypherSyntaxError(
-                    "optional pattern's free endpoint needs a variable"
-                )
             for v in (opt.var, other.var):
                 if v is not None and (v in structs or v in names):
                     raise CypherSyntaxError(
@@ -6828,31 +6360,14 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
             )
             ep, op = f"__we{wopt_n}_", f"__wo{wopt_n}_"
             wopt_n += 1
-            e = graph.edges
-            if opt.rel_type is not None:
-                e = e.filter(rel_type_cond(opt.rel_type))
-            if opt.undirected:
-                # either-orientation pipeline [OPTIONAL] MATCH: the same
-                # symmetrized frame every other undirected form uses
-                e = _sym_edges(e)
-            e = e.select(
-                *[F.col(c).alias(f"{ep}{c}") for c in graph.edges.columns]
+            opt_side, _, opt_rest = _expand_side(
+                graph, opt, bound_end, opt.var or ep, other.var or op,
+                ep, op, opt_disj,
             )
-            other_df = graph.nodes(other.label).select(
-                *[F.col(c).alias(f"{op}{c}") for c in graph.vertices.columns]
-            )
-            free_end = "dst" if bound_end == "src" else "src"
-            opt_side = e.join(
-                other_df, F.col(f"{ep}{free_end}") == F.col(f"{op}id")
-            )
-            if opt_disj is not None:
-                icolmap = _pattern_scope_colmap(
-                    "an OPTIONAL MATCH WHERE", opt.var, other.var, ep, op
-                )
-                opt_side = opt_side.filter(
-                    _where_to_column(
-                        opt_disj, icolmap, set(opt_side.columns), opt_side
-                    )
+            if opt_rest is not None:
+                raise CypherSyntaxError(
+                    "a MATCH WHERE after WITH may only reference its own "
+                    "pattern variables"
                 )
             pipe_jc = F.col(bound_var)["id"] == F.col(f"{ep}{bound_end}")
             if bound_jcol is not None:
@@ -7219,7 +6734,10 @@ def cypher_read(
 ) -> DataFrame:
     """Execute a read-only query — one single-query (see
     :func:`_read_single` for the clause surface) or several combined with
-    ``UNION`` / ``UNION ALL``.
+    ``UNION`` / ``UNION ALL``. Each single-query's MATCH clauses bind into
+    one scope: every pattern variable's columns on one frame under the
+    variable's prefix, resolved by one colmap, where an unknown variable
+    raises and a property no write created reads null.
 
     openCypher UNION rules enforced: every part must return the SAME
     column names, and plain UNION deduplicates the combined rows (one

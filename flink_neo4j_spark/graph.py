@@ -64,6 +64,14 @@ def rel_type_cond(rel_type) -> Column:
     return F.col("rel_type") == rel_type
 
 
+def prefixed(frame: DataFrame, prefix: str, columns: "list[str]") -> DataFrame:
+    """``frame`` with every column renamed ``<prefix><column>`` in one
+    ``toDF`` call; ``columns`` must be ``frame``'s columns, in order (pass
+    the graph table's, whose schema is already fetched, so the rename
+    costs no schema round trip)."""
+    return frame.toDF(*[f"{prefix}{c}" for c in columns])
+
+
 def assign_where(
     frame: DataFrame,
     matched: Column,
@@ -97,6 +105,32 @@ def assign_where(
         if c not in columns and v is not None
     ]
     return frame.select(*out)
+
+
+def check_write_batch(
+    batch: DataFrame, reserved: "tuple[str, ...]" = (), key: str | None = None
+) -> None:
+    """The write-batch contract every graph write checks, by schema alone
+    (no Spark job): no batch column other than the match ``key`` may be
+    named like a ``reserved`` structural column (a write assigns
+    properties, never identity, endpoints or labels), and no value may be
+    a map or a struct — Neo4j stores scalars and lists of scalars only."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    for f in batch.schema.fields:
+        if f.name in reserved and f.name != key:
+            raise ValueError(
+                f"batch column {f.name!r} names a structural column; a "
+                "write may not assign it"
+            )
+        t = f.dataType
+        while isinstance(t, ArrayType):
+            t = t.elementType
+        if isinstance(t, (MapType, StructType)):
+            raise ValueError(
+                f"batch column {f.name!r} holds {f.dataType.simpleString()} "
+                "values; a property must be a scalar or a list of scalars"
+            )
 
 
 def _allocate_ids(new: DataFrame, base: DataFrame) -> DataFrame:
@@ -241,12 +275,8 @@ class PropertyGraph:
         """Full one-hop pattern ``(a)-[e]->(b)`` with both endpoint property
         sets, prefixed to avoid collisions. Two equi hash joins; Catalyst
         reorders/broadcasts as stats allow."""
-        a = self.nodes(src_label).select(
-            *[F.col(c).alias(f"{src_prefix}{c}") for c in self.vertices.columns]
-        )
-        b = self.nodes(dst_label).select(
-            *[F.col(c).alias(f"{dst_prefix}{c}") for c in self.vertices.columns]
-        )
+        a = prefixed(self.nodes(src_label), src_prefix, self.vertices.columns)
+        b = prefixed(self.nodes(dst_label), dst_prefix, self.vertices.columns)
         e = self.edges if rel_type is None else self.edges.filter(
             rel_type_cond(rel_type)
         )
@@ -265,6 +295,7 @@ class PropertyGraph:
         collect-gaps (see :func:`_allocate_ids`); the max-id base is a
         scalar agg (one tiny job, no row data to driver).
         """
+        check_write_batch(batch)
         base = self.vertices.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m"))
         new = _allocate_ids(batch.withColumn("label", F.lit(label)), base)
         merged = self.vertices.unionByName(new, allowMissingColumns=True)
@@ -284,6 +315,7 @@ class PropertyGraph:
         a null update must read back null, while unmatched rows keep their
         old values.
         """
+        check_write_batch(updates, VERTEX_STRUCTURAL, key)
         props = {c: c for c in updates.columns if c != key}
         return PropertyGraph(self._update_matched(updates, key, props), self.edges)
 
@@ -347,6 +379,7 @@ class PropertyGraph:
             raise ValueError(
                 f"merge key {key!r} not a vertex property; cannot match"
             )
+        check_write_batch(batch, VERTEX_STRUCTURAL, key)
 
         def _norm(spec) -> dict[str, str] | None:
             if spec is None:
@@ -487,6 +520,7 @@ class PropertyGraph:
         Cypher. Property columns on ``endpoints`` beyond (src, dst) become
         edge properties (schema widens by name; existing edges read
         null)."""
+        check_write_batch(endpoints)
         base = self.edges.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m"))
         new = _allocate_ids(
             endpoints.withColumn("rel_type", F.lit(rel_type)),
@@ -529,6 +563,7 @@ class PropertyGraph:
         sequence — documented divergence from Neo4j's row-sequential
         apply, which creates on the first row and fires ON MATCH for the
         second)."""
+        check_write_batch(endpoints)
         oc = dict(on_create or {})
         om = dict(on_match or {})
         arm_srcs = set(oc.values()) | set(om.values())

@@ -317,6 +317,56 @@ def test_match_chain_edge_var_rebind_rejected(fixture_graph):
         )
 
 
+#: every way a MATCH binds ``x``; ``{w}`` is the WHERE of the clause that
+#: binds it (for the OPTIONAL forms, the optional clause's own WHERE)
+SCOPE_FORMS = {
+    "node": "MATCH (x:User) {w}",
+    "edge": "MATCH (a:User)-[x:KNOWS]->(b) {w}",
+    "varlength": "MATCH (a:User)-[:KNOWS*1..2]->(x) {w}",
+    "named_path": "MATCH p = (a:User)-[:KNOWS*1..2]->(x) {w}",
+    "comma_chain": "MATCH (x:User)-[e:KNOWS]->(b:User), (b)-[f:KNOWS]->(x) {w}",
+    "two_clauses": "MATCH (a:User)-[e:KNOWS]->(b) MATCH (b)-[f:KNOWS]->(x) {w}",
+    "shortest_path": "MATCH p = shortestPath((a:User)-[:KNOWS*1..2]->(x:User)) {w}",
+    "node_optional": "MATCH (a:User) OPTIONAL MATCH (a)-[e:KNOWS]->(x) {w}",
+    "edge_optional": "MATCH (a)-[e]->(b) OPTIONAL MATCH (b)-[e2]->(x) {w}",
+    "pipeline": "MATCH (a:User) WITH a MATCH (a)-[e:KNOWS]->(x) {w}",
+}
+
+
+@pytest.mark.parametrize("form", sorted(SCOPE_FORMS))
+def test_missing_property_reads_null_in_every_match_scope(fixture_graph, form):
+    # one MATCH scope: a property no write created reads null everywhere
+    # (openCypher), so it compares null and never matches; only an
+    # unknown VARIABLE is an error
+    pattern = SCOPE_FORMS[form]
+    rows = cypher_read(
+        fixture_graph, pattern.format(w="") + " RETURN x.ghost AS g"
+    ).collect()
+    assert rows and all(r["g"] is None for r in rows)
+    rows = cypher_read(
+        fixture_graph,
+        pattern.format(w="WHERE x.ghost = 1") + " RETURN count(x) AS n",
+    ).collect()
+    assert rows[0]["n"] == 0
+    with pytest.raises(CypherSyntaxError):
+        cypher_read(fixture_graph, pattern.format(w="") + " RETURN y.name")
+
+
+def test_pattern_back_to_its_start_variable(spark):
+    # (x)-[..]->(x) binds only relationships that close the cycle: the
+    # self-loop, once, in every pattern form
+    g = cypher_create_graph(
+        spark, "CREATE (a:N {k: 1})-[:T]->(a), (a)-[:T]->(b:N {k: 2})"
+    )
+    for q in (
+        "MATCH (x)-[e:T]->(x) RETURN count(*) AS n",
+        "MATCH (x)-[e:T]-(x) RETURN count(*) AS n",
+        "MATCH (x)-[:T*1..2]->(x) RETURN count(*) AS n",
+        "MATCH (x)-[e:T]->(x), (x)-[f:T]->(y:N {k: 2}) RETURN count(*) AS n",
+    ):
+        assert cypher_read(g, q).collect()[0]["n"] == 1, q
+
+
 # -- WITH pipeline stages --------------------------------------------------
 
 
@@ -1925,6 +1975,18 @@ def test_set_map_merge(fixture_graph):
             fixture_graph,
             "MATCH (n:User) SET n += $p",
             {"p": [1, 2]},
+        )
+
+
+def test_batch_map_value_rejected(fixture_graph):
+    # a map that arrives in a row field (no literal for the parser to see)
+    # is refused where the batch frame is written, not stored as a
+    # map-typed property column
+    with pytest.raises(ValueError, match="scalar"):
+        cypher_write(
+            fixture_graph,
+            "UNWIND $rows AS r MATCH (p) WHERE p.name = r.name SET p.m = r.m",
+            {"rows": [{"name": "Alice", "m": {"a": 1}}]},
         )
 
 

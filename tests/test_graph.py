@@ -242,3 +242,16 @@ def test_merge_nodes_unknown_key_raises(spark, graph):
     batch = spark.createDataFrame([("x",)], "nope string")
     with pytest.raises(ValueError, match="merge key"):
         graph.merge_nodes(batch, "User", "nope")
+
+
+def test_update_nodes_rejects_structural_batch_columns(spark, graph):
+    # a batch column named like a structural column would overwrite it:
+    # a `label` column re-labelled Alice
+    relabel = spark.createDataFrame([("Alice", "X")], "name string, label string")
+    with pytest.raises(ValueError, match="structural"):
+        graph.update_nodes(relabel, "name")
+    with pytest.raises(ValueError, match="structural"):
+        graph.merge_nodes(relabel, "User", "name")
+    assert graph.update_nodes(
+        spark.createDataFrame([(0, 7)], "id long, w int"), "id"
+    ).vertices.filter("id = 0").collect()[0]["w"] == 7

@@ -1090,6 +1090,61 @@ def test_plan_budget(spark, name):
     )
 
 
+# -- construct round-trip budgets ------------------------------------------
+#
+# Building a Cypher query's plan talks to the JVM over py4j: every column
+# reference, alias and schema fetch is one or more round trips, and plan
+# construction is about half of a short Cypher query's time. Freeze each
+# query's py4j command count during a WARM (second) construction — the
+# ten operations of the `cypher` benchmark workload plus three more
+# Cypher reads. py4j's
+# memory-release commands (``m\nd\n…``) are excluded: they follow Python
+# GC timing and move the raw count by up to half between repetitions;
+# without them the count repeats exactly. Budgets are the counts measured
+# before the MATCH scope was unified; a change that adds round trips to
+# these queries fails here.
+
+CONSTRUCT_RT_BUDGETS = {
+    "g5_cypher_frontend": 395,
+    "g8_cypher_optional": 507,
+    "g9_cypher_varlength": 901,
+    "g11_detach_delete": 339,
+    "g12_match_chain": 1386,
+    "g17_cypher_with_agg": 548,
+    "g18_cypher_merge": 580,
+    "g38_cypher_undirected": 857,
+    "g44_cypher_label_set": 1048,
+    "g49_cypher_foreach": 468,
+    "g50_cypher_count_subquery": 832,
+    "g56_cypher_call_union": 427,
+    "g58_cypher_path_nodes": 1662,
+}
+
+
+@pytest.mark.parametrize("name", sorted(CONSTRUCT_RT_BUDGETS))
+def test_construct_round_trip_budget(spark, name):
+    from flink_neo4j_spark.registry import all_queries
+
+    query = all_queries()[name]
+    query(spark, SF_DIR)  # cold: memo builds and first-use lookups
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = [0]
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        query(spark, SF_DIR)
+    finally:
+        del client.send_command
+    budget = CONSTRUCT_RT_BUDGETS[name]
+    assert sent[0] <= budget, f"{name}: {sent[0]} py4j commands (budget {budget})"
+
+
 def test_rrf_pools_are_take_ordered(spark):
     # s21's ranker pools must plan as distributed top-k
     # (TakeOrderedAndProject), never a global row_number window over the
