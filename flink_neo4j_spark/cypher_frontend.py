@@ -3406,7 +3406,9 @@ def _plain_name(col: Column) -> str | None:
     return m.group(1) if m else None
 
 
-def _ref_is_missing(ref, colmap, have: set[str]) -> bool:
+def _ref_is_missing(
+    ref, colmap, have: set[str], col: Column | None = None
+) -> bool:
     """Neo4j semantics: reading a property that no write ever created
     yields null, NOT an error (openCypher §"property access on missing
     keys"). Our vertex frame only has columns some write created, so a
@@ -3420,7 +3422,7 @@ def _ref_is_missing(ref, colmap, have: set[str]) -> bool:
         isinstance(ref, PropRef) and ref.var in lam
     ):
         return False  # comprehension loop variable — always bound
-    name = _plain_name(colmap(ref))
+    name = _plain_name(colmap(ref) if col is None else col)
     return name is not None and name not in have
 
 
@@ -3428,9 +3430,10 @@ def _resolve_ref(ref, colmap, df: DataFrame) -> Column:
     """Column for one RETURN/WITH ref with missing-property-reads-null
     semantics — the single resolution point every projection path shares
     (WHERE has its own tri-state handling in :func:`_where_to_column`)."""
-    if _ref_is_missing(ref, colmap, set(df.columns)):
+    col = colmap(ref)
+    if _ref_is_missing(ref, colmap, set(df.columns), col):
         return F.lit(None)
-    return colmap(ref)
+    return col
 
 
 def _where_to_column(
@@ -3937,39 +3940,58 @@ def _expand_side(
     oprefix: str,
     disj: "list[list[Cond]] | None",
 ):
-    """The anchored one-hop expansion behind every OPTIONAL MATCH,
-    pipeline ``[OPTIONAL] MATCH`` and correlated ``CALL``: the
-    rel-type-filtered edge scan (symmetrized for an undirected pattern),
-    prefixed ``eprefix``, joined on its free end to the free endpoint's
-    label scan, prefixed ``oprefix`` — broadcast when the label makes it
-    dimension-sized. The caller joins ``<eprefix><bound_end>`` to its
-    anchor. A WHERE over the side's own variables only (``evar`` /
-    ``ovar``) filters the side before that join; any other WHERE is
-    returned for the caller to place. Returns ``(side, side colmap,
-    remaining WHERE or None)``."""
+    """The anchored one-hop expansion — the one builder behind OPTIONAL
+    MATCH, pipeline ``[OPTIONAL] MATCH``, correlated ``CALL``, ``COUNT
+    { }``, ``EXISTS`` / pattern predicates and pattern comprehensions.
+    ``bound_end`` names the pattern end the caller's anchor binds.
+
+    The side is the rel-type-filtered edge scan, prefixed ``eprefix``
+    (edge variable ``evar``). An undirected pattern is the union of both
+    stored orientations; edge columns keep their stored ``src``/``dst``,
+    and a self-loop matches once. The free endpoint's label scan,
+    prefixed ``oprefix`` (node variable ``ovar``), joins on the far end
+    only when that endpoint has a label or a name: a ``()`` end stays a
+    pure edge scan, and an unnamed ``(:L)`` end is a semi-join, so the
+    side keeps the edge scan's size estimate. The label makes the scan
+    dimension-sized, so Catalyst can broadcast it.
+
+    Anchor contract: the caller equi-joins (or groups) on the returned
+    anchor column name, never on ``<eprefix><bound_end>``. A WHERE over
+    the side's own variables only filters the side before that join;
+    any other WHERE is returned for the caller to place. Returns
+    ``(side, anchor column name, side colmap, remaining WHERE or
+    None)``."""
     e = graph.edges
     if pat.rel_type is not None:
         e = e.filter(rel_type_cond(pat.rel_type))
+    e = prefixed(e, eprefix, graph.edges.columns)
     if pat.undirected:
-        e = _sym_edges(e)
-    free_end = "dst" if bound_end == "src" else "src"
+        anchor, far = f"{eprefix}__anchor", f"{eprefix}__far"
+        s, d = F.col(f"{eprefix}src"), F.col(f"{eprefix}dst")
+        e = e.withColumns({anchor: s, far: d}).unionByName(
+            e.filter(s != d).withColumns({anchor: d, far: s})
+        )
+    else:
+        free_end = "dst" if bound_end == "src" else "src"
+        anchor, far = f"{eprefix}{bound_end}", f"{eprefix}{free_end}"
     other = pat.dst if bound_end == "src" else pat.src
-    side = prefixed(e, eprefix, graph.edges.columns).join(
-        prefixed(graph.nodes(other.label), oprefix, graph.vertices.columns),
-        F.col(f"{eprefix}{free_end}") == F.col(f"{oprefix}id"),
-    )
-    colmap = _scope_colmap(
-        graph, {evar: ("edge", eprefix), ovar: ("node", oprefix)}
-    )
+    scope = {evar: ("edge", eprefix)}
+    if other.var is not None or other.label is not None:
+        e = e.join(
+            prefixed(graph.nodes(other.label), oprefix, graph.vertices.columns),
+            F.col(far) == F.col(f"{oprefix}id"),
+            "inner" if other.var is not None else "left_semi",
+        )
+        if other.var is not None:
+            scope[ovar] = ("node", oprefix)
+    colmap = _scope_colmap(graph, scope)
     if disj is not None:
         refs: set[str] = set()
         _disj_vars(disj, refs)
-        if refs <= {evar, ovar}:
-            side = side.filter(
-                _where_to_column(disj, colmap, set(side.columns), side)
-            )
+        if refs <= set(scope):
+            e = e.filter(_where_to_column(disj, colmap, set(e.columns), e))
             disj = None
-    return side, colmap, disj
+    return e, anchor, colmap, disj
 
 
 def _prefixed_clause(
@@ -4247,11 +4269,11 @@ def _optional_join(
             )
     evar = opt.var or f"__oe{i}"
     ovar = other.var or f"__oo{i}"
-    side, side_cm, opt_disj = _expand_side(
+    side, anchor, side_cm, opt_disj = _expand_side(
         graph, opt, bound_end, evar, ovar, f"{evar}_", f"{ovar}_", opt_disj
     )
     joined_cm = _scope_colmap(graph, {**colmap.scope, **side_cm.scope})
-    join_cond = colmap(PropRef(bv, None)) == F.col(f"{evar}_{bound_end}")
+    join_cond = colmap(PropRef(bv, None)) == F.col(anchor)
     if opt_disj is not None:
         # the cross join is a SCHEMA PROBE only (never executed):
         # computed operands type-check against both sides' columns; the
@@ -4571,62 +4593,64 @@ def _shortest_path(
     ), {pat.src.var: "node", pat.dst.var: "node", pathvar: "path"}
 
 
-def _pattern_scope_colmap(
-    what: str,
-    edge_var,
-    dst_var,
-    eprefix,
-    nprefix,
-    vertex_props: "list[str] | None" = None,
-    edge_props: "list[str] | None" = None,
-):
-    """Colmap for the INNER scope of a pattern subquery (EXISTS/COUNT
-    block WHERE, pattern-comprehension WHERE/projection, correlated CALL):
-    the pattern's own edge/far-endpoint variables only — outer-scope
-    references raise loudly rather than silently correlating. Passing
-    ``vertex_props``/``edge_props`` additionally enables WHOLE-variable
-    projection (``RETURN m`` inside a CALL): bare references resolve to
-    the id column and ``var_props``/``var_kinds`` let the shared WholeVar
-    struct builder assemble the full node/edge value."""
-    whole_ok = vertex_props is not None or edge_props is not None
+def _pattern_anchor(colmap, v: str, what: str):
+    """(graph, anchor id column) for a pattern subquery or predicate bound
+    at ``v``: a node variable of a MATCH scope, or the ``id`` field of a
+    WITH-carried node struct (post-WITH degree / adjacency / existence
+    forms)."""
+    graph = getattr(colmap, "scope_graph", None) or getattr(
+        colmap, "stage_graph", None
+    )
+    if graph is not None and (
+        getattr(colmap, "var_kinds", {}).get(v) == "node"
+        or "id" in getattr(colmap, "structs", {}).get(v, ())
+    ):
+        return graph, colmap(PropRef(v, None))
+    raise CypherSyntaxError(
+        f"{what} are only supported over a MATCHed node or a "
+        f"WITH-carried node; {v!r} is neither in this scope"
+    )
 
-    def icolmap(ref) -> Column:
-        v = ref.var if isinstance(ref, PropRef) else getattr(ref, "name", None)
-        prop = ref.prop if isinstance(ref, PropRef) else None
-        if edge_var is not None and v == edge_var:
-            if prop is None:
-                if whole_ok:
-                    return F.col(f"{eprefix}id")
-                raise CypherSyntaxError(
-                    f"project a property inside {what} (e.g. {v}.prop), "
-                    "not the bare variable"
-                )
-            return F.col(f"{eprefix}{prop}")
-        if dst_var is not None and v == dst_var:
-            if prop is None:
-                if whole_ok:
-                    return F.col(f"{nprefix}id")
-                raise CypherSyntaxError(
-                    f"project a property inside {what} (e.g. {v}.prop), "
-                    "not the bare variable"
-                )
-            return F.col(f"{nprefix}{prop}")
-        scope = ", ".join(x for x in (edge_var, dst_var) if x is not None)
+
+def _pattern_side(graph: PropertyGraph, pc: "PatternCond | PatternComp"):
+    """The :func:`_expand_side` of one ``COUNT { }`` / ``EXISTS`` /
+    pattern-comprehension pattern anchored at ``pc.var``, its inner WHERE
+    applied. The inner scope is the pattern's own edge and far-node
+    variables; an outer reference raises rather than silently
+    correlating. Returns ``(side, anchor column name, inner colmap)``."""
+    what = (
+        "a pattern comprehension"
+        if isinstance(pc, PatternComp)
+        else "a pattern subquery"
+    )
+    own = {pc.edge_var, pc.dst_var} - {None}
+    refs: set[str] = set()
+    if pc.pred is not None:
+        _disj_vars(pc.pred, refs)
+    _expr_vars(getattr(pc, "expr", None), refs)
+    stray = sorted(refs - own)
+    if stray:
         raise CypherSyntaxError(
             f"{what} may only reference its own pattern variables "
-            f"({scope or 'none bound'}); got {v!r}"
+            f"({', '.join(sorted(own)) or 'none bound'}); got {stray[0]!r}"
         )
-
-    if whole_ok:
-        icolmap.var_props = {}
-        icolmap.var_kinds = {}
-        if edge_var is not None:
-            icolmap.var_props[edge_var] = sorted(edge_props or [])
-            icolmap.var_kinds[edge_var] = "edge"
-        if dst_var is not None:
-            icolmap.var_props[dst_var] = sorted(vertex_props or [])
-            icolmap.var_kinds[dst_var] = "node"
-    return icolmap
+    # an unreferenced far variable is unobservable: the far end is then
+    # a label semi-join (or nothing), exactly like ``(:L)`` / ``()``
+    anchor = NodePat(pc.var, None)
+    far = NodePat(pc.dst_var if pc.dst_var in refs else None, pc.dst_label)
+    incoming = pc.direction == "in"
+    pat = EdgePat(
+        pc.edge_var, pc.rel_type,
+        far if incoming else anchor, anchor if incoming else far,
+        undirected=pc.direction == "undirected",
+    )
+    # the side aggregates before it meets the outer frame, so only the
+    # far node's columns need a prefix (an edge rename costs py4j calls)
+    side, anchor_col, colmap, _ = _expand_side(
+        graph, pat, "dst" if incoming else "src",
+        pc.edge_var or "__pe", pc.dst_var or "__pn", "", "__pn_", pc.pred,
+    )
+    return side, anchor_col, colmap
 
 
 def _bind_pattern_subqueries(
@@ -4637,230 +4661,71 @@ def _bind_pattern_subqueries(
 ) -> DataFrame:
     """Bind every ``COUNT { pattern }`` subquery and ``[pattern | expr]``
     pattern comprehension in ``items`` (or, when ``items`` is None, in
-    the operands of ``where_disj``'s conditions) to a real column: one
-    partial-aggregated per-node row (count, or collected value list) per
-    distinct subquery, left-joined on the bound variable's id (coalesced
-    to 0 / ``[]`` — a node with no matches counts zero / reads an empty
-    list, per Cypher). The subquery side is ONE row per node, so the join
-    never multiplies rows, and at scale it is the same shuffle a degree
-    computation costs anyway. Mutates the exprs in place
-    (CountPattern/PatternComp → RawCol) and returns the joined frame; the
-    bound helper columns ride along until the next projection drops
-    them."""
-    stage_graph = getattr(colmap, "stage_graph", None)
-    scope_structs = getattr(colmap, "structs", {})
-    bound: dict[tuple, str] = {}
-    state = {"df": df, "n": 0}
+    the operands of ``where_disj``'s conditions) to a real column.
 
-    def resolve_ctx(v: str, what: str):
-        """(graph, outer-id column) for the subquery's bound variable —
-        any NODE variable of a MATCH scope, or a WITH-carried node
-        struct's id field (post-WITH degree/adjacency subqueries)."""
-        kinds = getattr(colmap, "var_kinds", None)
-        sg = getattr(colmap, "scope_graph", None) or stage_graph
-        if sg is not None and kinds and kinds.get(v) == "node":
-            return sg, colmap(PropRef(v, None))
-        if (
-            stage_graph is not None
-            and v in scope_structs
-            and "id" in scope_structs[v]
-        ):
-            return stage_graph, F.col(v)["id"]
-        raise CypherSyntaxError(
-            f"{what} are only supported over a MATCHed node or a "
-            f"WITH-carried node; {v!r} is neither in this scope"
-        )
+    One binder serves both forms: the :func:`_pattern_side` (built by
+    :func:`_expand_side`, so an undirected pattern counts a self-loop
+    once and a ``()`` far end stays a pure edge scan) aggregates to ONE
+    row per anchor id — ``count(*)`` or the value-sorted collected list —
+    and left-joins on the anchor (:func:`_pattern_anchor`), the empty
+    default (0 / ``[]``) filling anchors with no match, per Cypher. The
+    join never multiplies rows, and at scale it is the same shuffle a
+    degree computation costs anyway. Identical subqueries bind once.
+    Mutates the exprs in place (CountPattern/PatternComp → RawCol) and
+    returns the joined frame; the bound helper columns ride along until
+    the next projection drops them."""
+    bound: dict[str, str] = {}
 
-    def bind(cp: CountPattern) -> RawCol:
-        pc = cp.pattern
-        graph, outer_id = resolve_ctx(pc.var, "COUNT { } subqueries")
-        key = (
-            pc.var, pc.rel_type, pc.dst_label, pc.direction,
-            pc.edge_var, pc.dst_var, repr(pc.pred),
+    def bind(x: "CountPattern | PatternComp") -> RawCol:
+        nonlocal df
+        comp = isinstance(x, PatternComp)
+        pc = x if comp else x.pattern
+        graph, outer_id = _pattern_anchor(
+            colmap,
+            pc.var,
+            "pattern comprehensions" if comp else "COUNT { } subqueries",
         )
+        key = repr(x)
         if key in bound:
             return RawCol(bound[key])
-        name = f"__pcnt_{state['n']}"
-        state["n"] += 1
-        edges = graph.edges
-        if pc.rel_type is not None:
-            edges = edges.filter(rel_type_cond(pc.rel_type))
-
-        def counted(bound_end: str) -> DataFrame:
-            other = "dst" if bound_end == "src" else "src"
-            if pc.pred is None:
-                # unfiltered form: label restriction as a pure semi-join
-                e = edges
-                if pc.dst_label is not None:
-                    lbl = graph.nodes(pc.dst_label).select(
-                        F.col("id").alias("__pc_l")
-                    )
-                    e = e.join(
-                        lbl, F.col(other) == F.col("__pc_l"), "left_semi"
-                    )
-                return e.select(F.col(bound_end).alias("__pc_id"))
-            # inner-WHERE form (COUNT { (v)-[e:T]->(m:L) WHERE … }):
-            # prefix the edge (and, when observable, far-node) columns,
-            # filter, then project the bound endpoint — still one row per
-            # match, never a row multiplication of the outer frame
-            e = edges.select(
-                F.col(bound_end).alias("__pc_id"),
-                F.col(other).alias("__pc_other"),
-                *[
-                    F.col(c).alias(f"__pce_{c}")
-                    for c in graph.edges.columns
-                ],
+        name = f"__pcnt_{len(bound)}"
+        side, anchor, icolmap = _pattern_side(graph, pc)
+        if comp:
+            expr = pc.expr
+            if isinstance(expr, BareRef) and expr.name in (
+                pc.edge_var, pc.dst_var
+            ):
+                # bare `| b` projection: the WHOLE node/edge value (the
+                # comprehension body parses bare words as refs, not
+                # WholeVar)
+                expr = WholeVar(expr.name)
+            # collect via a struct wrapper so null projected values
+            # SURVIVE (Neo4j keeps them in a pattern comprehension; bare
+            # collect_list would silently drop them), then unwrap — one
+            # hash aggregate
+            val = F.struct(_expr_column(expr, icolmap, side).alias("v"))
+            agg = F.transform(
+                F.array_sort(F.collect_list(val)), lambda s: s["v"]
             )
-            if pc.dst_label is not None or pc.dst_var is not None:
-                nodes = (
-                    graph.nodes(pc.dst_label)
-                    if pc.dst_label is not None
-                    else graph.vertices
-                )
-                n = nodes.select(
-                    *[
-                        F.col(c).alias(f"__pcn_{c}")
-                        for c in graph.vertices.columns
-                    ]
-                )
-                e = e.join(n, F.col("__pc_other") == F.col("__pcn_id"))
-            icolmap = _pattern_scope_colmap(
-                "a COUNT { } subquery", pc.edge_var, pc.dst_var,
-                "__pce_", "__pcn_",
-            )
-            e = e.filter(
-                _where_to_column(pc.pred, icolmap, set(e.columns), e)
-            )
-            return e.select("__pc_id")
-
-        if pc.direction == "out":
-            ep = counted("src")
-        elif pc.direction == "in":
-            ep = counted("dst")
         else:
-            ep = counted("src").unionByName(counted("dst"))
-        cnt = ep.groupBy("__pc_id").agg(F.count("*").alias(name))
-        state["df"] = (
-            state["df"]
-            .join(cnt, outer_id == F.col("__pc_id"), "left")
+            agg = F.count("*")
+        per = side.groupBy(F.col(anchor).alias("__pc_id")).agg(agg.alias(name))
+        empty = (
+            F.array().cast(per.schema[name].dataType.simpleString())
+            if comp
+            else F.lit(0)
+        )
+        df = (
+            df.join(per, outer_id == F.col("__pc_id"), "left")
             .drop("__pc_id")
-            .withColumn(name, F.coalesce(F.col(name), F.lit(0)))
-        )
-        bound[key] = name
-        return RawCol(name)
-
-    def bind_comp(pc: PatternComp) -> RawCol:
-        graph, outer_id = resolve_ctx(pc.var, "pattern comprehensions")
-        key = (
-            "comp", pc.var, pc.rel_type, pc.direction, pc.edge_var,
-            pc.dst_var, pc.dst_label, repr(pc.pred), repr(pc.expr),
-        )
-        if key in bound:
-            return RawCol(bound[key])
-        name = f"__pcomp_{state['n']}"
-        state["n"] += 1
-        edges = graph.edges
-        if pc.rel_type is not None:
-            edges = edges.filter(rel_type_cond(pc.rel_type))
-        # the far-endpoint node join is only needed when the comprehension
-        # can observe the node (a label restriction or a bound variable);
-        # `[(v)-[e:T]->() | e.w]` stays a pure edge-table aggregate
-        needs_nodes = pc.dst_label is not None or pc.dst_var is not None
-
-        def side(bound_end: str) -> DataFrame:
-            other = "dst" if bound_end == "src" else "src"
-            e = edges.select(
-                F.col(bound_end).alias("__pc_id"),
-                F.col(other).alias("__pc_other"),
-                *[
-                    F.col(c).alias(f"__pce_{c}")
-                    for c in graph.edges.columns
-                ],
-            )
-            if not needs_nodes:
-                return e
-            nodes = (
-                graph.nodes(pc.dst_label)
-                if pc.dst_label is not None
-                else graph.vertices
-            )
-            n = nodes.select(
-                *[
-                    F.col(c).alias(f"__pcn_{c}")
-                    for c in graph.vertices.columns
-                ]
-            )
-            return e.join(n, F.col("__pc_other") == F.col("__pcn_id"))
-
-        inner_colmap = _pattern_scope_colmap(
-            "a pattern comprehension", pc.edge_var, pc.dst_var,
-            "__pce_", "__pcn_",
-            # whole-variable projection ([(v)-[e:T]->(m:L) | m]): the full
-            # node/edge struct collects per anchor, like RETURN m in a CALL
-            vertex_props=[
-                c for c in graph.vertices.columns
-                if c not in VERTEX_STRUCTURAL
-            ],
-            edge_props=[
-                c for c in graph.edges.columns
-                if c not in EDGE_STRUCTURAL
-            ],
-        )
-
-        if pc.direction == "out":
-            side_df = side("src")
-        elif pc.direction == "in":
-            side_df = side("dst")
-        else:
-            side_df = side("src").unionByName(side("dst"))
-        if pc.pred is not None:
-            side_df = side_df.filter(
-                _where_to_column(
-                    pc.pred, inner_colmap, set(side_df.columns), side_df
-                )
-            )
-        comp_expr = pc.expr
-        if (
-            isinstance(comp_expr, BareRef)
-            and comp_expr.name in (pc.edge_var, pc.dst_var)
-        ):
-            # bare `| b` projection: the WHOLE node/edge value (the
-            # comprehension body parses bare words as refs, not WholeVar)
-            comp_expr = WholeVar(comp_expr.name)
-        val = _expr_column(comp_expr, inner_colmap, side_df)
-        # collect via a struct wrapper so null projected values SURVIVE
-        # (Neo4j keeps them in a pattern comprehension; bare collect_list
-        # would silently drop them), then unwrap — one hash aggregate
-        lists = (
-            side_df.select(F.col("__pc_id"), val.alias("__pc_val"))
-            .groupBy("__pc_id")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("__pc_val").alias("v")))
-                    ),
-                    lambda x: x["v"],
-                ).alias(name)
-            )
-        )
-        dtype = lists.schema[name].dataType.simpleString()
-        state["df"] = (
-            state["df"]
-            .join(lists, outer_id == F.col("__pc_id"), "left")
-            .drop("__pc_id")
-            .withColumn(
-                name,
-                F.coalesce(F.col(name), F.array().cast(dtype)),
-            )
+            .withColumn(name, F.coalesce(F.col(name), empty))
         )
         bound[key] = name
         return RawCol(name)
 
     def rewrite(expr):
-        if isinstance(expr, CountPattern):
+        if isinstance(expr, (CountPattern, PatternComp)):
             return bind(expr)
-        if isinstance(expr, PatternComp):
-            return bind_comp(expr)
         if isinstance(expr, BinOp):
             return BinOp(expr.op, rewrite(expr.left), rewrite(expr.right))
         if isinstance(expr, FuncCall):
@@ -4872,7 +4737,7 @@ def _bind_pattern_subqueries(
     if items is not None:
         for i in items:
             i.expr = rewrite(i.expr)
-        return state["df"]
+        return df
     # WHERE-position binding (the Neo4j 5 degree-filter idiom
     # ``WHERE COUNT { (n)-[:T]->() } >= 2`` and size-of-comprehension
     # filters): rewrite every cond operand in place. Pattern PREDICATES
@@ -4884,7 +4749,7 @@ def _bind_pattern_subqueries(
                 continue
             cond.left = rewrite(cond.left)
             cond.right = rewrite(cond.right)
-    return state["df"]
+    return df
 
 
 def _contains_agg(x) -> bool:
@@ -5148,10 +5013,22 @@ def _bare_colmap(
     map projection) to their field names: ``n.born`` after ``WITH n``
     resolves to the struct field, and a field no write ever created reads
     null (the same missing-property contract as pattern scopes / Cypher's
-    map access on a missing key)."""
+    map access on a missing key). Each reference resolves once: a Column
+    is immutable, and building one costs a dozen py4j round trips."""
     structs = structs or {}
+    cols: dict[tuple, Column] = {}
 
     def colmap(ref) -> Column:
+        key = (
+            (ref.var, ref.prop)
+            if isinstance(ref, PropRef)
+            else getattr(ref, "name", None)
+        )
+        if key not in cols:
+            cols[key] = resolve(ref)
+        return cols[key]
+
+    def resolve(ref) -> Column:
         if isinstance(ref, BareRef):
             if ref.name not in names:
                 raise CypherSyntaxError(f"unknown name {ref.name!r} after WITH")
@@ -5589,7 +5466,7 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
         seed=seed,
     )
     for d in chain_disjs:
-        df = _apply_scope_where(df, colmap, graph, d)
+        df = _apply_scope_where(df, colmap, d)
     # OPTIONAL MATCH: one left equi-join per clause onto the scope frame
     for i, (opt_pat_i, opt_disj_i, bound_conds_i) in enumerate(opt_clauses):
         df, colmap = _optional_join(
@@ -5599,16 +5476,15 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
     return _finish_read(df, colmap, p, bare=False)
 
 
-def _apply_scope_where(
-    df: DataFrame, colmap, graph: PropertyGraph, disj
-) -> DataFrame:
-    """One MATCH-scope WHERE, with the full operand machinery: pattern
-    predicates over any NODE variable of the scope compile to one
-    semi/anti-join each against the distinct qualifying ids (never the
-    per-node match multiplicity); WHERE-position COUNT { } /
-    pattern-comprehension operands bind per-node helper columns via left
-    joins; the residue filters through ``_where_to_column``. Every MATCH
-    clause's WHERE goes through here."""
+def _apply_scope_where(df: DataFrame, colmap, disj) -> DataFrame:
+    """One WHERE over a MATCH scope or a WITH stage, with the full operand
+    machinery: pattern predicates compile to one semi/anti-join each
+    against their :func:`_pattern_side`'s anchor column (never the
+    per-node match multiplicity), anchored by :func:`_pattern_anchor`;
+    COUNT { } / pattern-comprehension operands bind per-node helper
+    columns via left joins; the residue filters through
+    ``_where_to_column``. Every MATCH clause's WHERE and every stage
+    WHERE after WITH goes through here."""
     if disj is None:
         return df
     if any(isinstance(c, PatternCond) for conj in disj for c in conj):
@@ -5616,21 +5492,20 @@ def _apply_scope_where(
             raise CypherSyntaxError(
                 "pattern predicates cannot be OR-combined"
             )
-        kinds = getattr(colmap, "var_kinds", {})
-        pattern_conds = [c for c in disj[0] if isinstance(c, PatternCond)]
-        rest = [c for c in disj[0] if not isinstance(c, PatternCond)]
-        disj = [rest] if rest else None
-        for pc in pattern_conds:
-            if kinds.get(pc.var) != "node":
-                raise CypherSyntaxError(
-                    f"pattern predicate on {pc.var!r} requires a "
-                    "node variable of this MATCH"
-                )
+        for pc in disj[0]:
+            if not isinstance(pc, PatternCond):
+                continue
+            graph, outer_id = _pattern_anchor(
+                colmap, pc.var, "pattern predicates"
+            )
+            side, anchor, _ = _pattern_side(graph, pc)
             df = df.join(
-                _pattern_qualifying_ids(graph, pc),
-                colmap(PropRef(pc.var, None)) == F.col("__pp_id"),
+                side.select(F.col(anchor).alias("__pp_id")),
+                outer_id == F.col("__pp_id"),
                 "left_anti" if pc.negated else "left_semi",
             )
+        rest = [c for c in disj[0] if not isinstance(c, PatternCond)]
+        disj = [rest] if rest else None
     if disj is not None and any(
         isinstance(c.left, (CountPattern, PatternComp))
         or isinstance(c.right, (CountPattern, PatternComp))
@@ -5643,57 +5518,6 @@ def _apply_scope_where(
     if disj is not None:
         df = df.filter(_where_to_column(disj, colmap, set(df.columns), df))
     return df
-
-
-def _pattern_qualifying_ids(graph: PropertyGraph, pc: PatternCond) -> DataFrame:
-    """ids satisfying one pattern predicate at its bound end(s) — the
-    semi/anti-join side (``__pp_id``). The target label (if any)
-    constrains the OTHER endpoint as a semi-join, and the block form's
-    inner WHERE filters a column-prefixed edge(+far-node) frame — per-node
-    match multiplicity never materializes either way."""
-    edges = graph.edges
-    if pc.rel_type is not None:
-        edges = edges.filter(rel_type_cond(pc.rel_type))
-
-    def qualifying(bound_end: str) -> DataFrame:
-        other_end = "dst" if bound_end == "src" else "src"
-        if pc.pred is None:
-            e = edges
-            if pc.dst_label is not None:
-                lbl = graph.nodes(pc.dst_label).select(
-                    F.col("id").alias("__pp_l")
-                )
-                e = e.join(
-                    lbl, F.col(other_end) == F.col("__pp_l"), "left_semi"
-                )
-            return e.select(F.col(bound_end).alias("__pp_id"))
-        e = edges.select(
-            F.col(bound_end).alias("__pp_id"),
-            F.col(other_end).alias("__pp_other"),
-            *[F.col(c).alias(f"__ppe_{c}") for c in graph.edges.columns],
-        )
-        if pc.dst_label is not None or pc.dst_var is not None:
-            nodes = (
-                graph.nodes(pc.dst_label)
-                if pc.dst_label is not None
-                else graph.vertices
-            )
-            nn = nodes.select(
-                *[F.col(c).alias(f"__ppn_{c}") for c in graph.vertices.columns]
-            )
-            e = e.join(nn, F.col("__pp_other") == F.col("__ppn_id"))
-        icolmap = _pattern_scope_colmap(
-            "an EXISTS { } subquery", pc.edge_var, pc.dst_var,
-            "__ppe_", "__ppn_",
-        )
-        e = e.filter(_where_to_column(pc.pred, icolmap, set(e.columns), e))
-        return e.select("__pp_id")
-
-    if pc.direction == "out":
-        return qualifying("src")
-    if pc.direction == "in":
-        return qualifying("dst")
-    return qualifying("src").unionByName(qualifying("dst"))
 
 
 def _expr_vars(x, out: set[str]) -> None:
@@ -5919,7 +5743,7 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
             ep, op = f"__we{wopt_n}_", f"__wo{wopt_n}_"
             wopt_n += 1
             bound_end = "src" if c_is_src else "dst"
-            side, icolmap, c_rest = _expand_side(
+            side, anchor_name, icolmap, c_rest = _expand_side(
                 graph, cpat, bound_end, cpat.var or ep, c_other.var or op,
                 ep, op, c_disj,
             )
@@ -5928,7 +5752,7 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
                     "a CALL subquery WHERE may only reference its own "
                     "pattern variables"
                 )
-            anchor = F.col(f"{ep}{bound_end}")
+            anchor = F.col(anchor_name)
             out_names = [_out_name(i) for i in c_items]
             for nm in out_names:
                 if nm in names or nm in structs:
@@ -6360,7 +6184,7 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
             )
             ep, op = f"__we{wopt_n}_", f"__wo{wopt_n}_"
             wopt_n += 1
-            opt_side, _, opt_rest = _expand_side(
+            opt_side, anchor, _, opt_rest = _expand_side(
                 graph, opt, bound_end, opt.var or ep, other.var or op,
                 ep, op, opt_disj,
             )
@@ -6369,7 +6193,7 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
                     "a MATCH WHERE after WITH may only reference its own "
                     "pattern variables"
                 )
-            pipe_jc = F.col(bound_var)["id"] == F.col(f"{ep}{bound_end}")
+            pipe_jc = F.col(bound_var)["id"] == F.col(anchor)
             if bound_jcol is not None:
                 pipe_jc = pipe_jc & bound_jcol
             df = df.join(opt_side, pipe_jc, "left" if optional else "inner")
@@ -6526,56 +6350,7 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
                 df = df.offset(w_skip)
             if w_limit is not None:
                 df = df.limit(w_limit)
-        if w_disj is not None:
-            # stage-WHERE COUNT { } / comprehension operands bind first
-            # (the post-WITH degree-filter idiom), same as the
-            # first-scope WHERE site
-            if any(
-                isinstance(c.left, (CountPattern, PatternComp, BinOp, FuncCall))
-                or isinstance(
-                    c.right, (CountPattern, PatternComp, BinOp, FuncCall)
-                )
-                for conj in w_disj
-                for c in conj
-                if not isinstance(c, PatternCond)
-            ):
-                df = _bind_pattern_subqueries(df, colmap, None, w_disj)
-            # stage-WHERE pattern predicates (``WITH n, count(x) AS c
-            # WHERE c > 1 AND (n)-[:T]->()`` / EXISTS blocks): semi/anti-
-            # join on the carried node struct's id, exactly the
-            # first-scope compile
-            pcs = [
-                c for conj in w_disj for c in conj
-                if isinstance(c, PatternCond)
-            ]
-            if pcs:
-                if graph is None:
-                    raise CypherSyntaxError(
-                        "pattern predicates after WITH require a graph "
-                        "scope"
-                    )
-                if len(w_disj) > 1:
-                    raise CypherSyntaxError(
-                        "pattern predicates cannot be OR-combined"
-                    )
-                structs = getattr(colmap, "structs", {})
-                for pc in pcs:
-                    if pc.var not in structs or "id" not in structs[pc.var]:
-                        raise CypherSyntaxError(
-                            f"pattern predicate on {pc.var!r} requires a "
-                            "carried node (WITH n … WHERE (n)-[:T]->())"
-                        )
-                    df = df.join(
-                        _pattern_qualifying_ids(graph, pc),
-                        F.col(pc.var)["id"] == F.col("__pp_id"),
-                        "left_anti" if pc.negated else "left_semi",
-                    )
-                rest = [
-                    c for c in w_disj[0] if not isinstance(c, PatternCond)
-                ]
-                w_disj = [rest] if rest else None
-            if w_disj is not None:
-                df = df.filter(_where_to_column(w_disj, colmap, None, df))
+        df = _apply_scope_where(df, colmap, w_disj)
         bare = True
     p.expect("kw", "RETURN")
     distinct, items = p.parse_return(allow_bare=bare)

@@ -68,7 +68,9 @@ def prefixed(frame: DataFrame, prefix: str, columns: "list[str]") -> DataFrame:
     """``frame`` with every column renamed ``<prefix><column>`` in one
     ``toDF`` call; ``columns`` must be ``frame``'s columns, in order (pass
     the graph table's, whose schema is already fetched, so the rename
-    costs no schema round trip)."""
+    costs no schema round trip). An empty prefix is ``frame`` itself."""
+    if not prefix:
+        return frame
     return frame.toDF(*[f"{prefix}{c}" for c in columns])
 
 

@@ -966,12 +966,14 @@ def test_count_block_inner_where(fixture_graph):
         fixture_graph,
         "MATCH (n:User) RETURN n.name AS name, "
         "COUNT { (n)-[e:KNOWS]-(f) WHERE f.trust } AS trusted, "
-        "COUNT { (n)-[e:KNOWS]->() WHERE e.since >= 2002 } AS late "
+        "COUNT { (n)-[e:KNOWS]->() WHERE e.since >= 2002 } AS late, "
+        "COUNT { (n)-[e:KNOWS]->(f) WHERE e IS NOT NULL } AS bound "
         "ORDER BY name",
     ).collect()
-    assert [(r["name"], r["trusted"], r["late"]) for r in rows] == [
-        ("Alice", 2, 0), ("Bob", 2, 1), ("Eve", 0, 0),
-    ]
+    # a bare pattern variable resolves inside the block (its id)
+    assert [
+        (r["name"], r["trusted"], r["late"], r["bound"]) for r in rows
+    ] == [("Alice", 2, 0, 1), ("Bob", 2, 1, 1), ("Eve", 0, 0, 0)]
 
 
 def test_exists_block_as_expression(fixture_graph):
@@ -6122,3 +6124,68 @@ def test_shortest_path_comma_overlapping_type_rejected(sp_chain_graph):
             "MATCH p = shortestPath((a:User)-[:KNOWS*1..2]->(b:User)), "
             "(b)-[e]->(c) RETURN a.name AS a",
         )
+
+
+#: one stored edge A->B plus a self-loop on A: an undirected one-hop
+#: pattern anchored at A matches twice (the loop once), and a relationship
+#: read from B's side keeps its stored endpoints
+LOOP_FIXTURE = (
+    "CREATE (a:U {name: 'A'}), (b:U {name: 'B'}), "
+    "(a)-[:K {w: 1}]->(b), (a)-[:K {w: 2}]->(a)"
+)
+
+
+@pytest.fixture(scope="module")
+def loop_graph(spark):
+    return cypher_create_graph(spark, LOOP_FIXTURE)
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "MATCH (x:U {name: 'B'}) OPTIONAL MATCH (x)-[e]-(y) "
+        "RETURN e.src AS s, e.dst AS d, e AS rel",
+        "MATCH (x:U {name: 'B'}) WITH x MATCH (x)-[e]-(y) "
+        "RETURN e.src AS s, e.dst AS d, e AS rel",
+        "MATCH (x:U {name: 'B'}) WITH x CALL { WITH x MATCH (x)-[e]-(y) "
+        "RETURN e.src AS s, e.dst AS d, e AS rel } RETURN s, d, rel",
+    ],
+    ids=["optional", "pipeline", "call"],
+)
+def test_undirected_expand_keeps_stored_endpoints(loop_graph, query):
+    # every anchored form returns the relationship as stored, exactly like
+    # plain MATCH: matching it against its direction swaps no endpoints
+    def rows(q):
+        return [
+            (r["s"], r["d"], r["rel"].asDict())
+            for r in cypher_read(loop_graph, q).collect()
+        ]
+
+    plain = rows(
+        "MATCH (x:U {name: 'B'})-[e]-(y) "
+        "RETURN e.src AS s, e.dst AS d, e AS rel"
+    )
+    assert [(s, d) for s, d, _ in plain] == [(0, 1)]
+    assert rows(query) == plain
+
+
+def test_undirected_subqueries_count_self_loop_once(loop_graph):
+    # COUNT { } and pattern comprehensions expand like MATCH: the
+    # self-loop is one match, not one per orientation
+    def one(q):
+        return cypher_read(loop_graph, q).collect()[0]["c"]
+
+    assert one(
+        "MATCH (x:U {name: 'A'})-[e:K]-(y) RETURN count(*) AS c"
+    ) == 2
+    assert one(
+        "MATCH (x:U {name: 'A'}) RETURN COUNT { (x)-[:K]-() } AS c"
+    ) == 2
+    assert one(
+        "MATCH (x:U {name: 'A'}) "
+        "RETURN size([(x)-[e:K]-(y) | e.w]) AS c"
+    ) == 2
+    assert one(
+        "MATCH (x:U {name: 'A'}) WITH x "
+        "RETURN COUNT { (x)-[e:K]-(y) WHERE e.w > 0 } AS c"
+    ) == 2

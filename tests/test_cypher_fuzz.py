@@ -330,6 +330,16 @@ EXEC_READ_CORPUS = [
     "RETURN m.name AS fn, e.since AS fs ORDER BY e.since DESC LIMIT 2 } "
     "RETURN c.name AS cn, fn, fs ORDER BY cn, fn",
     "MATCH (n:User) RETURN properties(n) AS p ORDER BY n.name",
+    # undirected subquery / comprehension / CALL sides and a stage-WHERE
+    # pattern predicate: every anchored one-hop form
+    "MATCH (n:User) RETURN n.name AS name, "
+    "COUNT { (n)-[e:KNOWS]-(f) WHERE f.born > 1983 } AS c ORDER BY name",
+    "MATCH (n:User) RETURN n.name AS name, "
+    "[(n)-[e:KNOWS]-(f) WHERE e.since > 2000 | f.name] AS fs ORDER BY name",
+    "MATCH (n:User) WITH n, n.born AS b "
+    "WHERE b > 1980 AND (n)-[:KNOWS]->() RETURN n.name AS name ORDER BY name",
+    "MATCH (c:User) WITH c CALL { WITH c MATCH (c)-[e:KNOWS]-(m:User) "
+    "RETURN count(*) AS k } RETURN c.name AS cn, k ORDER BY cn",
     "MATCH (n:User) RETURN n {.name, yr: n.born + 1, "
     "ini: toUpper(left(n.name, 1))} AS rec ORDER BY n.name",
     "MATCH (n:User) SET n.x = 1" if False else

@@ -1112,12 +1112,15 @@ CONSTRUCT_RT_BUDGETS = {
     "g12_match_chain": 1386,
     "g17_cypher_with_agg": 548,
     "g18_cypher_merge": 580,
+    "g27_cypher_pattern_predicate": 134,
     "g38_cypher_undirected": 857,
     "g44_cypher_label_set": 1048,
     "g49_cypher_foreach": 468,
     "g50_cypher_count_subquery": 832,
     "g56_cypher_call_union": 427,
+    "g57_cypher_pattern_comp": 1410,
     "g58_cypher_path_nodes": 1662,
+    "g88_cypher_varlength_count_subquery": 810,
 }
 
 
