@@ -3930,6 +3930,19 @@ def _scope_colmap(graph: PropertyGraph, scope: dict[str, tuple[str, str]]):
     return colmap
 
 
+def _both_orientations(
+    fwd: DataFrame, rev: DataFrame, src: Column, dst: Column
+) -> DataFrame:
+    """An undirected one-hop match: ``fwd`` binds the pattern along each
+    edge's stored direction, ``rev`` against it; ``src``/``dst`` are
+    the edge's stored endpoint columns in both. Their union, minus
+    ``rev``'s self-loops, keeps stored endpoints and matches a self-loop
+    once. MATCH
+    (:func:`_prefixed_clause`) and every anchored side
+    (:func:`_expand_side`) orient through here."""
+    return fwd.unionByName(rev.filter(src != dst))
+
+
 def _expand_side(
     graph: PropertyGraph,
     pat: EdgePat,
@@ -3947,12 +3960,13 @@ def _expand_side(
 
     The side is the rel-type-filtered edge scan, prefixed ``eprefix``
     (edge variable ``evar``). An undirected pattern is the union of both
-    stored orientations; edge columns keep their stored ``src``/``dst``,
-    and a self-loop matches once. The free endpoint's label scan,
-    prefixed ``oprefix`` (node variable ``ovar``), joins on the far end
-    only when that endpoint has a label or a name: a ``()`` end stays a
-    pure edge scan, and an unnamed ``(:L)`` end is a semi-join, so the
-    side keeps the edge scan's size estimate. The label makes the scan
+    stored orientations (:func:`_both_orientations`); edge columns keep
+    their stored ``src``/``dst``, and a self-loop matches once. The free
+    endpoint's label scan, prefixed ``oprefix`` (node variable
+    ``ovar``), joins on the far end only when that endpoint has a label
+    or a name: a ``()`` end stays a pure edge scan, and an unnamed
+    ``(:L)`` end is a semi-join, so the side keeps the edge scan's size
+    estimate. The label makes the scan
     dimension-sized, so Catalyst can broadcast it.
 
     Anchor contract: the caller equi-joins (or groups) on the returned
@@ -3968,8 +3982,11 @@ def _expand_side(
     if pat.undirected:
         anchor, far = f"{eprefix}__anchor", f"{eprefix}__far"
         s, d = F.col(f"{eprefix}src"), F.col(f"{eprefix}dst")
-        e = e.withColumns({anchor: s, far: d}).unionByName(
-            e.filter(s != d).withColumns({anchor: d, far: s})
+        e = _both_orientations(
+            e.withColumns({anchor: s, far: d}),
+            e.withColumns({anchor: d, far: s}),
+            s,
+            d,
         )
     else:
         free_end = "dst" if bound_end == "src" else "src"
@@ -4051,12 +4068,12 @@ def _prefixed_clause(
 
     df = oriented(pat.src, pat.dst)
     if pat.undirected:
-        # either orientation: union the reversed frame (the pattern's src
-        # bound to the edge's dst), minus self-loops, which match once
-        df = df.unionByName(
-            oriented(pat.dst, pat.src).filter(
-                F.col(f"{evar}_src") != F.col(f"{evar}_dst")
-            )
+        # the reversed frame binds the pattern's src to the edge's dst
+        df = _both_orientations(
+            df,
+            oriented(pat.dst, pat.src),
+            F.col(f"{evar}_src"),
+            F.col(f"{evar}_dst"),
         )
     return df, {evar: "edge", sv: "node", dv: "node"}
 
@@ -4658,7 +4675,7 @@ def _bind_pattern_subqueries(
     colmap,
     items: list[ReturnItem] | None,
     where_disj: list[list[Cond]] | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, list[str]]:
     """Bind every ``COUNT { pattern }`` subquery and ``[pattern | expr]``
     pattern comprehension in ``items`` (or, when ``items`` is None, in
     the operands of ``where_disj``'s conditions) to a real column.
@@ -4672,8 +4689,9 @@ def _bind_pattern_subqueries(
     join never multiplies rows, and at scale it is the same shuffle a
     degree computation costs anyway. Identical subqueries bind once.
     Mutates the exprs in place (CountPattern/PatternComp → RawCol) and
-    returns the joined frame; the bound helper columns ride along until
-    the next projection drops them."""
+    returns the joined frame with the helper column names it bound. A
+    RETURN/WITH projection drops the helpers; a WHERE or an UNWIND drops
+    them once it has used them, so a later binding never meets them."""
     bound: dict[str, str] = {}
 
     def bind(x: "CountPattern | PatternComp") -> RawCol:
@@ -4737,7 +4755,7 @@ def _bind_pattern_subqueries(
     if items is not None:
         for i in items:
             i.expr = rewrite(i.expr)
-        return df
+        return df, list(bound.values())
     # WHERE-position binding (the Neo4j 5 degree-filter idiom
     # ``WHERE COUNT { (n)-[:T]->() } >= 2`` and size-of-comprehension
     # filters): rewrite every cond operand in place. Pattern PREDICATES
@@ -4749,7 +4767,7 @@ def _bind_pattern_subqueries(
                 continue
             cond.left = rewrite(cond.left)
             cond.right = rewrite(cond.right)
-    return df
+    return df, list(bound.values())
 
 
 def _contains_agg(x) -> bool:
@@ -5482,9 +5500,9 @@ def _apply_scope_where(df: DataFrame, colmap, disj) -> DataFrame:
     against their :func:`_pattern_side`'s anchor column (never the
     per-node match multiplicity), anchored by :func:`_pattern_anchor`;
     COUNT { } / pattern-comprehension operands bind per-node helper
-    columns via left joins; the residue filters through
-    ``_where_to_column``. Every MATCH clause's WHERE and every stage
-    WHERE after WITH goes through here."""
+    columns via left joins, dropped after the filter; the residue
+    filters through ``_where_to_column``. Every MATCH clause's WHERE and
+    every stage WHERE after WITH goes through here."""
     if disj is None:
         return df
     if any(isinstance(c, PatternCond) for conj in disj for c in conj):
@@ -5506,6 +5524,7 @@ def _apply_scope_where(df: DataFrame, colmap, disj) -> DataFrame:
             )
         rest = [c for c in disj[0] if not isinstance(c, PatternCond)]
         disj = [rest] if rest else None
+    helpers: list[str] = []
     if disj is not None and any(
         isinstance(c.left, (CountPattern, PatternComp))
         or isinstance(c.right, (CountPattern, PatternComp))
@@ -5514,10 +5533,11 @@ def _apply_scope_where(df: DataFrame, colmap, disj) -> DataFrame:
         for conj in disj
         for c in conj
     ):
-        df = _bind_pattern_subqueries(df, colmap, None, disj)
+        df, helpers = _bind_pattern_subqueries(df, colmap, None, disj)
     if disj is not None:
         df = df.filter(_where_to_column(disj, colmap, set(df.columns), df))
-    return df
+    # the helper columns are spent: a later binding never meets them
+    return df.drop(*helpers) if helpers else df
 
 
 def _expr_vars(x, out: set[str]) -> None:
@@ -6268,7 +6288,7 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
             # (``WITH n UNWIND [(n)-[:T]->(m) | m.x] AS v``): bind the
             # per-node list first, then explode it like any list source
             pseudo = [ReturnItem(src, alias)]
-            df = _bind_pattern_subqueries(df, colmap, pseudo)
+            df, helpers = _bind_pattern_subqueries(df, colmap, pseudo)
             src = pseudo[0].expr
             pend = getattr(colmap, "row_order", None)
             if pend:
@@ -6277,6 +6297,8 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
                 # exploded rows are no longer coverable by the keys
                 df = df.orderBy(*_specs_columns(pend, colmap, df))
             df = df.withColumn(alias, F.explode(_expr_column(src, colmap, df)))
+            if helpers:
+                df = df.drop(*helpers)
             names = set(getattr(colmap, "star_names", set())) | {alias}
             # struct scopes survive the explode (their columns do); any
             # row-order metadata does NOT (element order within a row is
@@ -6299,7 +6321,7 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
             p.next()
             w_disj = p.parse_where(allow_bare=True)
         w_items = _expand_star(w_items, colmap, "WITH")
-        df = _bind_pattern_subqueries(df, colmap, w_items)
+        df, _ = _bind_pattern_subqueries(df, colmap, w_items)
         prev_specs = getattr(colmap, "row_order", None)
         carry_items = list(w_items)
         next_specs = None
@@ -6356,7 +6378,7 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
     distinct, items = p.parse_return(allow_bare=bare)
     order, skip, limit = p.parse_tail(require_end=False, allow_bare=bare)
     items = _expand_star(items, colmap, "RETURN")
-    df = _bind_pattern_subqueries(df, colmap, items)
+    df, _ = _bind_pattern_subqueries(df, colmap, items)
     pending = getattr(colmap, "row_order", None)
     pre_scope = None
     if (

@@ -1041,6 +1041,31 @@ def test_comprehension_size_in_where_position(fixture_graph):
     assert [r["a"] for r in rows] == ["Alice", "Bob"]
 
 
+@pytest.mark.parametrize(
+    "query",
+    [
+        "MATCH (n:User) WHERE size([(n)-[:KNOWS]->(f) | f.name]) > 0 "
+        "RETURN n.name AS name, COUNT { (n)<-[:KNOWS]-() } AS c",
+        "MATCH (n:User) WHERE COUNT { (n)-[:KNOWS]->() } >= 1 "
+        "RETURN n.name AS name, COUNT { (n)<-[:KNOWS]-() } AS c",
+        "MATCH (n:User) WITH n UNWIND [(n)-[:KNOWS]->(m) | m.name] AS v "
+        "RETURN n.name AS name, COUNT { (n)-[:KNOWS]->() } AS c",
+        "MATCH (n:User) WITH n WHERE COUNT { (n)-[:KNOWS]->() } >= 1 "
+        "UNWIND [(n)<-[:KNOWS]-(m) | m.name] AS v "
+        "RETURN n.name AS name, size([(n)-[:KNOWS]-(f) | f.name]) - 1 AS c",
+    ],
+    ids=["where-comp", "where-count", "unwind-comp", "stage-where-unwind"],
+)
+def test_pattern_subquery_helpers_do_not_collide(fixture_graph, query):
+    # a subquery bound for a WHERE or an UNWIND is spent there: a second
+    # one later in the query binds a fresh helper column, never an
+    # ambiguous one
+    rows = cypher_read(fixture_graph, query).collect()
+    assert sorted((r["name"], r["c"]) for r in rows) == [
+        ("Alice", 1), ("Bob", 1),
+    ]
+
+
 def test_pattern_block_inner_where_scope_validation(fixture_graph):
     # outer-scope references inside a block's WHERE raise loudly rather
     # than silently correlating
