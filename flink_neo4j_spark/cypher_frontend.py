@@ -750,8 +750,8 @@ class _Parser:
                 "variable-length patterns cannot bind a relationship variable"
             )
         # undirected variable-length hops are legal everywhere: both the
-        # shortestPath BFS and the general expansion run over the
-        # symmetrized edge frame (see _sym_edges)
+        # shortestPath BFS and the general expansion run over both stored
+        # orientations of the edge frame (see _both_orientations)
         return EdgePat(evar, rtype, src, dst, props, hops, undirected), surface_dst
 
     # expressions -----------------------------------------------------------
@@ -2810,16 +2810,17 @@ def _expr_column(expr, colmap, df: DataFrame) -> Column:
         meta = ["label"] if kind == "node" else ["src", "dst", "rel_type"]
         fields = [colmap(PropRef(expr.var, None)).alias("id")]
         fields += [colmap(PropRef(expr.var, m)).alias(m) for m in meta]
-        if kind == "node" and df is not None and _has_extra_labels(df):
+        if (
+            kind == "node"
+            and EXTRA_LABELS in colmap.scope_graph.vertices.columns
+        ):
             # carry the extra-label set so labels(n) stays correct after
             # the WITH horizon (multi-label model); absent on graphs that
-            # were never label-mutated
-            try:
-                xc = colmap(PropRef(expr.var, EXTRA_LABELS))
-                df.select(xc)  # analysis probe: column exists?
-                fields.append(xc.alias(EXTRA_LABELS))
-            except Exception:
-                pass
+            # were never label-mutated. Every node variable of a scope
+            # carries all of its graph's vertex columns.
+            fields.append(
+                colmap(PropRef(expr.var, EXTRA_LABELS)).alias(EXTRA_LABELS)
+            )
         fields += [
             colmap(PropRef(expr.var, p)).alias(p)
             for p in sorted(var_props[expr.var])
@@ -3630,28 +3631,26 @@ def _src_prefilter(df: DataFrame, var: str, conds: list[Cond]) -> DataFrame:
     )
 
 
-def _sym_edges(e: DataFrame) -> DataFrame:
-    """Symmetrize an edge frame (any schema with src/dst) for undirected
-    traversal: union the reversed orientation, dropping reversed
-    self-loops (an undirected self-loop matches ONCE, exactly like the
-    single-hop undirected expand). Edge ids and properties are preserved,
-    so the downstream relationship-isomorphism filters (pairwise id
-    inequality / the array_contains visited check) keep holding: one
-    relationship is used at most once per path REGARDLESS of traversal
-    direction — openCypher's rule. Pure narrow union: no shuffle, 2× the
-    scan, the same plan shape the single-hop undirected form already
-    pays."""
-    back = e.filter(F.col("src") != F.col("dst")).select(
-        *[
-            F.col("dst").alias("src")
-            if c == "src"
-            else F.col("src").alias("dst")
-            if c == "dst"
-            else F.col(c)
-            for c in e.columns
-        ]
-    )
-    return e.unionByName(back)
+def _path_edges(graph: PropertyGraph, pat: EdgePat) -> DataFrame:
+    """The ``(id, src, dst)`` edge frame a variable-length expansion
+    walks, filtered to the pattern's relationship types. An
+    undirected pattern walks both stored orientations
+    (:func:`_both_orientations`), so an undirected self-loop matches once.
+    Edge ids are preserved, so the relationship-isomorphism filters (the
+    pairwise id inequality, the ``array_contains`` visited check) use a
+    relationship at most once per path in either direction."""
+    e = graph.edges
+    if pat.rel_type is not None:
+        e = e.filter(rel_type_cond(pat.rel_type))
+    e = e.select("id", "src", "dst")
+    if pat.undirected:
+        e = _both_orientations(
+            e,
+            e.select("id", F.col("dst").alias("src"), F.col("src").alias("dst")),
+            F.col("src"),
+            F.col("dst"),
+        )
+    return e
 
 
 def _varlength_paths(
@@ -3690,12 +3689,7 @@ def _varlength_paths(
     # post-translation WHERE into the a-side scan itself, so no manual
     # prefilter is needed here (src_conds is consumed by the ITERATIVE
     # forms, where per-round actions block that pushdown)
-    e = graph.edges
-    if pat.rel_type is not None:
-        e = e.filter(rel_type_cond(pat.rel_type))
-    e = e.select("id", "src", "dst")
-    if pat.undirected:
-        e = _sym_edges(e)
+    e = _path_edges(graph, pat)
     vcols = graph.vertices.columns
     a = prefixed(graph.nodes(pat.src.label), sp, vcols)
     b = prefixed(graph.nodes(pat.dst.label), dp, vcols)
@@ -3781,12 +3775,7 @@ def _varlength_paths_unbounded(
     Output contract is identical to the bounded union-of-chains frame
     (see :func:`_varlength_paths`).
     """
-    e = graph.edges
-    if pat.rel_type is not None:
-        e = e.filter(rel_type_cond(pat.rel_type))
-    e = e.select("id", "src", "dst")
-    if pat.undirected:
-        e = _sym_edges(e)
+    e = _path_edges(graph, pat)
     vcols = graph.vertices.columns
     a_src = graph.nodes(pat.src.label)
     if src_conds and pat.src.var is not None:
@@ -3937,9 +3926,10 @@ def _both_orientations(
     edge's stored direction, ``rev`` against it; ``src``/``dst`` are
     the edge's stored endpoint columns in both. Their union, minus
     ``rev``'s self-loops, keeps stored endpoints and matches a self-loop
-    once. MATCH
-    (:func:`_prefixed_clause`) and every anchored side
-    (:func:`_expand_side`) orient through here."""
+    once. MATCH (:func:`_prefixed_clause`), every anchored side
+    (:func:`_expand_side`), the variable-length expansions
+    (:func:`_path_edges`) and the shortestPath BFS orient through
+    here."""
     return fwd.unionByName(rev.filter(src != dst))
 
 
@@ -3953,8 +3943,11 @@ def _expand_side(
     oprefix: str,
     disj: "list[list[Cond]] | None",
 ):
-    """The anchored one-hop expansion — the one builder behind OPTIONAL
-    MATCH, pipeline ``[OPTIONAL] MATCH``, correlated ``CALL``, ``COUNT
+    """The anchored one-hop expansion — the one builder of a side one hop
+    out from a bound node. It has two callers: :func:`_anchored_match`,
+    the compiler of every anchored MATCH clause (first-stage OPTIONAL
+    MATCH, pipeline ``[OPTIONAL] MATCH`` after WITH, the MATCH inside a
+    correlated ``CALL``), and :func:`_pattern_side`, behind ``COUNT
     { }``, ``EXISTS`` / pattern predicates and pattern comprehensions.
     ``bound_end`` names the pattern end the caller's anchor binds.
 
@@ -4234,80 +4227,6 @@ def _match_chain(
     )
 
 
-def _optional_join(
-    graph: PropertyGraph,
-    df: DataFrame,
-    colmap,
-    opt: "NodePat | EdgePat",
-    opt_disj,
-    i: int,
-    bound_conds: "list[Cond] | None" = None,
-):
-    """One OPTIONAL MATCH onto a MATCH scope: ONE left equi-join of the
-    :func:`_expand_side` frame, anchored on whichever scope node variable
-    the pattern binds — the scope's own variables or those of an EARLIER
-    OPTIONAL clause (a failed earlier binding has a null id, which never
-    equi-joins, so the chain null-extends transitively, per Neo4j). The
-    side's columns land under the new variables' own prefixes, so the
-    scope colmap extends unchanged; a failed binding leaves them null and
-    the whole-variable projection null-gates on the id. A WHERE over the
-    side's own variables filters the side pre-join; one that references
-    the scope, and an inline map on the bound endpoint, are predicates
-    of the OPTIONAL pattern: they ride the LEFT-join condition, so failing
-    rows null-extend instead of dropping (Neo4j's OPTIONAL WHERE
-    contract). Stacked clauses multiply per Neo4j: a row with m and n
-    matches in two clauses yields m*n rows (1 where a side is empty)."""
-    kinds = colmap.var_kinds
-    if not isinstance(opt, EdgePat) or opt.hops is not None:
-        raise CypherSyntaxError(
-            "OPTIONAL MATCH supports a single-hop edge pattern (a)-[e]->(b)"
-        )
-    bound_src = opt.src.var in kinds
-    bound_dst = opt.dst.var in kinds
-    if bound_src and bound_dst:
-        raise CypherSyntaxError(
-            "OPTIONAL MATCH must leave one endpoint free (both are already "
-            "bound)"
-        )
-    if not (bound_src or bound_dst):
-        raise CypherSyntaxError(
-            "OPTIONAL MATCH pattern must reference a variable bound by "
-            "the MATCH"
-        )
-    bv = opt.src.var if bound_src else opt.dst.var
-    if kinds[bv] != "node":
-        raise CypherSyntaxError(f"{bv!r} is not a node variable")
-    bound_end = "src" if bound_src else "dst"
-    other = opt.dst if bound_src else opt.src
-    for v in (opt.var, other.var):
-        if v is not None and v in colmap.scope:
-            raise CypherSyntaxError(
-                f"variable {v!r} is already bound in this scope"
-            )
-    evar = opt.var or f"__oe{i}"
-    ovar = other.var or f"__oo{i}"
-    side, anchor, side_cm, opt_disj = _expand_side(
-        graph, opt, bound_end, evar, ovar, f"{evar}_", f"{ovar}_", opt_disj
-    )
-    joined_cm = _scope_colmap(graph, {**colmap.scope, **side_cm.scope})
-    join_cond = colmap(PropRef(bv, None)) == F.col(anchor)
-    if opt_disj is not None:
-        # the cross join is a SCHEMA PROBE only (never executed):
-        # computed operands type-check against both sides' columns; the
-        # compiled Column rides the real left join
-        probe = df.crossJoin(side)
-        join_cond = join_cond & F.coalesce(
-            _where_to_column(opt_disj, joined_cm, set(probe.columns), probe),
-            F.lit(False),
-        )
-    if bound_conds:
-        join_cond = join_cond & F.coalesce(
-            _where_to_column([list(bound_conds)], colmap, set(df.columns), df),
-            F.lit(False),
-        )
-    return df.join(side, join_cond, "left"), joined_cm
-
-
 def _out_name(item: ReturnItem) -> str:
     return item.alias or _default_name(item.expr)
 
@@ -4419,8 +4338,9 @@ def _shortest_path(
     shortest path, matching Neo4j's row semantics) via an explode over
     ``sequence(1, count)`` — counts stay bounded because ties only
     accumulate within the hop bound. ``length(p)`` resolves to the hop
-    count in both forms. Undirected patterns BFS over the symmetrized
-    edge list. The levels run on ``tuning.frontier_levels``, whose one
+    count in both forms. Undirected patterns BFS over both stored
+    orientations (:func:`_both_orientations`). The levels run on
+    ``tuning.frontier_levels``, whose one
     driver-side scalar per level is the frontier count. WHERE predicates
     apply after translation; ``src_conds`` (the WHERE's single-variable
     conjuncts on ``a``) prefilter the frontier's sources.
@@ -4450,7 +4370,9 @@ def _shortest_path(
         rcols = [F.col("__d").alias("__s"), F.col("__s").alias("__d")]
         if carry_paths:
             rcols.append(F.col("__eid"))
-        e = e.unionByName(e.select(*rcols))
+        e = _both_orientations(
+            e, e.select(*rcols), F.col("__s"), F.col("__d")
+        )
     vcols = graph.vertices.columns
     a_nodes = graph.nodes(pat.src.label)
     if src_conds and pat.src.var is not None:
@@ -4668,6 +4590,248 @@ def _pattern_side(graph: PropertyGraph, pc: "PatternCond | PatternComp"):
         pc.edge_var or "__pe", pc.dst_var or "__pn", "", "__pn_", pc.pred,
     )
     return side, anchor_col, colmap
+
+
+@dataclass
+class _Anchored:
+    """One compiled anchored clause (:func:`_anchored_match`)."""
+
+    df: DataFrame  # the current rows (bound-endpoint map applied if plain)
+    side: DataFrame  # the one-hop side, built by _expand_side
+    anchor: str  # the side's anchor column
+    on: Column  # join condition: bound endpoint id = anchor [AND its map]
+    colmap: Any  # the side's scope colmap
+    rest: "list[list[Cond]] | None"  # WHERE terms not over the side alone
+    new_vars: list[str]  # the clause's named new variables
+
+
+def _anchored_match(
+    df: DataFrame,
+    colmap,
+    pat: "NodePat | EdgePat",
+    disj: "list[list[Cond]] | None",
+    optional: bool,
+    n: int,
+    clause: str,
+) -> _Anchored:
+    """The one compiler of an anchored ``[OPTIONAL] MATCH (a)-[e]->(b)``
+    — one hop out from a node the query has already bound. First-stage
+    OPTIONAL MATCH, pipeline ``[OPTIONAL] MATCH`` after WITH and the
+    MATCH inside a correlated ``CALL { WITH n MATCH … }`` all compile
+    here; ``clause`` names the form in error messages.
+
+    Exactly one endpoint must be bound in ``colmap``'s scope, to a
+    MATCHed node or a WITH-carried node struct (:func:`_pattern_anchor`);
+    the relationship and the free endpoint must be new variables. An
+    inline map on the bound endpoint is a predicate of the clause and
+    becomes one Column: part of the left-join condition when
+    ``optional`` (failing rows null-extend, per Neo4j), a filter of the
+    current rows otherwise (an inner join, so pre-join equals
+    post-join). The other maps desugar into ``disj``
+    (:func:`_desugar_inline_props`), and :func:`_expand_side` builds the
+    side: WHERE terms over the side's own variables filter it before the
+    join; the rest come back for the caller to place.
+
+    In a MATCH scope the side's columns land under the new variables' own
+    prefixes (``<var>_``; ``__oe<n>``/``__oo<n>`` name unnamed ones), so
+    the scope colmap extends unchanged; after a WITH horizon they sit
+    under hidden ``__we<n>_``/``__wo<n>_`` prefixes."""
+    if not isinstance(pat, EdgePat) or pat.hops is not None:
+        raise CypherSyntaxError(
+            f"{clause} supports a single-hop edge pattern (a)-[e]->(b)"
+        )
+    scope = getattr(colmap, "scope", None)
+    names = (
+        set(scope or ())
+        | set(getattr(colmap, "star_names", ()))
+        | set(getattr(colmap, "structs", {}))
+    )
+    src_bound, dst_bound = pat.src.var in names, pat.dst.var in names
+    if src_bound and dst_bound:
+        raise CypherSyntaxError(
+            f"{clause} must leave one endpoint free (both are already bound)"
+        )
+    if not (src_bound or dst_bound):
+        raise CypherSyntaxError(
+            f"{clause} must anchor one endpoint on a bound node variable"
+        )
+    if pat.var is not None and pat.var in names:
+        raise CypherSyntaxError(
+            f"variable {pat.var!r} is already bound in this scope"
+        )
+    bound, other = (pat.src, pat.dst) if src_bound else (pat.dst, pat.src)
+    graph, bound_id = _pattern_anchor(colmap, bound.var, f"{clause} patterns")
+    new_vars = [v for v in (other.var, pat.var) if v is not None]
+    bound_map = None
+    if bound.props:
+        conds = [
+            Cond(PropRef(bound.var, k), "=", v) for k, v in bound.props.items()
+        ]
+        bound.props = {}
+        bound_map = F.coalesce(
+            _where_to_column([conds], colmap, set(df.columns), df), F.lit(False)
+        )
+        if not optional:
+            df, bound_map = df.filter(bound_map), None
+    disj = _and_into(
+        disj, _desugar_inline_props([pat], names | _pattern_vars([pat]))
+    )
+    if scope is not None:
+        evar, ovar = pat.var or f"__oe{n}", other.var or f"__oo{n}"
+        ep, op = f"{evar}_", f"{ovar}_"
+    else:
+        ep, op = f"__we{n}_", f"__wo{n}_"
+        evar, ovar = pat.var or ep, other.var or op
+    side, anchor, side_cm, rest = _expand_side(
+        graph, pat, "src" if src_bound else "dst", evar, ovar, ep, op, disj
+    )
+    on = bound_id == F.col(anchor)
+    if bound_map is not None:
+        on = on & bound_map
+    return _Anchored(df, side, anchor, on, side_cm, rest, new_vars)
+
+
+def _carry_new_vars(df: DataFrame, side_cm, new_vars: list[str]) -> DataFrame:
+    """Past a WITH horizon every variable is one struct column: bind each
+    new pattern variable by the whole-variable projection rule
+    (``_expr_column(WholeVar)``: a failed OPTIONAL binding is a NULL
+    variable), then drop the side's prefixed columns."""
+    if new_vars:
+        df = df.withColumns(
+            {v: _expr_column(WholeVar(v), side_cm, df) for v in new_vars}
+        )
+    prefixes = tuple(pref for _, pref in side_cm.scope.values())
+    return df.drop(*[c for c in df.columns if c.startswith(prefixes)])
+
+
+def _stage_colmap(prev, names: set[str], df: DataFrame):
+    """The bare scope after a pipeline MATCH or CALL adds columns to a
+    WITH stage: the stage's graph and pending row order carry over."""
+    cm = _bare_colmap(names, _struct_outputs(df), df)
+    cm.stage_graph = getattr(prev, "stage_graph", None)
+    pend = getattr(prev, "row_order", None)
+    if pend:
+        cm.row_order = pend
+    return cm
+
+
+def _call_rows(
+    a: _Anchored,
+    items: list[ReturnItem],
+    distinct: bool,
+    order: list[tuple],
+    skip: int | None,
+    limit: int | None,
+) -> tuple[DataFrame, bool]:
+    """The per-anchor rows of a correlated ``CALL { WITH n MATCH …
+    RETURN items [ORDER BY …] [SKIP s] [LIMIT k] }``, built on the
+    side before it meets the outer rows: the side's anchor column
+    (``a.anchor``, so the caller joins on ``a.on``) and the outputs.
+
+    1. Project the side, or aggregate it per anchor (one partial
+       aggregate; the COUNT { } shape generalized to any aggregate), or
+       dedup the projection for ``RETURN DISTINCT``.
+    2. Resolve ORDER BY like RETURN/WITH (:func:`_order_columns`): an
+       alias, an expression equal to an item, a property of a projected
+       whole variable, or an expression over aliases.
+    3. A plain RETURN may also sort by any other expression over the
+       side's variables, computed as a hidden ``__ord<i>`` column; after
+       an aggregate or DISTINCT that scope is gone, and such a key
+       raises.
+    4. SKIP/LIMIT cut through one ``row_number`` window per anchor, ties
+       broken by the projected columns. Without a cut the inner order is
+       unobservable (the join does not keep it), so no sort is built.
+
+    Returns the rows and whether the RETURN is aggregate-only (one row
+    per anchor, so the caller left-joins to keep empty anchors)."""
+    if (skip is not None or limit is not None) and not order:
+        raise CypherSyntaxError(
+            "SKIP/LIMIT inside a correlated CALL requires ORDER BY (an "
+            "unordered per-anchor cut would be nondeterministic)"
+        )
+    has_agg = any(_contains_agg(i.expr) for i in items)
+    if has_agg and any(
+        _contains_agg(i.expr) and not isinstance(i.expr, AggCall)
+        for i in items
+    ):
+        # the per-anchor groupBy splits items shallowly; composite
+        # aggregate expressions would land on the key side and mis-group
+        raise CypherSyntaxError(
+            "composite aggregate expressions are not supported inside "
+            "CALL { }; RETURN the plain aggregate and compute the "
+            "expression outside"
+        )
+    side, cm = a.side, a.colmap
+    outs = [_out_name(i) for i in items]
+    cut = skip is not None or limit is not None
+
+    def project(extra: list[ReturnItem]) -> DataFrame:
+        return side.select(
+            a.anchor,
+            *[
+                _expr_column(i.expr, cm, side).alias(_out_name(i))
+                for i in [*items, *extra]
+            ],
+        )
+
+    keys = [i for i in items if not isinstance(i.expr, AggCall)]
+    if has_agg:
+        if cut and not keys:
+            # one (possibly fabricated count-0) row per anchor, so there
+            # is nothing to cut
+            raise CypherSyntaxError(
+                "SKIP/LIMIT on an aggregate-only CALL RETURN is not "
+                "supported (each anchor yields exactly one row); drop the "
+                "SKIP/LIMIT"
+            )
+        rows = side.groupBy(
+            a.anchor,
+            *[_expr_column(i.expr, cm, side).alias(_out_name(i)) for i in keys],
+        ).agg(
+            *[
+                _agg_column(i.expr, cm, side).alias(_out_name(i))
+                for i in items
+                if isinstance(i.expr, AggCall)
+            ]
+        ).select(a.anchor, *outs)
+    else:
+        # DISTINCT dedups the projected rows (anchor included) before any
+        # per-anchor ranking: openCypher's DISTINCT, ORDER BY, LIMIT order
+        rows = project([])
+        if distinct:
+            rows = rows.dropDuplicates()
+    sort_cols: list[Column] = []
+    hidden: list[ReturnItem] = []
+    for k, (key, asc) in enumerate(order):
+        try:
+            sort_cols += _order_columns([(key, asc)], items, "CALL RETURN", rows)
+        except CypherSyntaxError:
+            if has_agg:
+                raise CypherSyntaxError(
+                    "ORDER BY inside an aggregating CALL may only reference "
+                    "RETURN items or expressions over them (the "
+                    "post-aggregation scope)"
+                ) from None
+            if distinct:
+                raise CypherSyntaxError(
+                    "ORDER BY inside CALL { RETURN DISTINCT } may only "
+                    "reference the RETURN aliases or expressions over them"
+                ) from None
+            if isinstance(key, str):
+                raise
+            hidden.append(ReturnItem(key, f"__ord{k}"))
+            sort_cols.append(_order_dir(F.col(f"__ord{k}"), asc))
+    if not cut:
+        return rows, has_agg and not keys
+    if hidden:
+        rows = project(hidden)
+    w = Window.partitionBy(a.anchor).orderBy(*sort_cols, *outs)
+    rows = rows.withColumn("__call_rn", F.row_number().over(w))
+    if skip is not None:
+        rows = rows.filter(F.col("__call_rn") > skip)
+    if limit is not None:
+        rows = rows.filter(F.col("__call_rn") <= (skip or 0) + limit)
+    return rows.drop("__call_rn", *[h.alias for h in hidden]), False
 
 
 def _bind_pattern_subqueries(
@@ -5138,6 +5302,120 @@ def _expand_star(items: list[ReturnItem], colmap, clause: str) -> list[ReturnIte
     return out
 
 
+def _list_source(p: "_Parser", spark, clause: str):
+    """The row source of ``UNWIND <list> AS x`` and ``FOREACH (x IN
+    <list> | …)``, parsed at the parser's position: ``range(lo, hi[,
+    step])``, a literal list or a ``$param`` list. The caller selects
+    ``column`` from ``frame`` under its variable: one row per element.
+
+    ``range`` compiles to ``spark.range``: a distributed, lazily
+    generated relation, never a driver-side list, so ``range(1, 10^9)``
+    behaves like any other scan; its bounds are integer literals or
+    parameters, and a step pointing away from the bound yields no rows,
+    as in Cypher. A list must be homogeneous — a mixed one raises here
+    rather than failing or stringifying in Spark. Integers are 64-bit and
+    int mixed with float promotes to float, as in Cypher; a list of maps
+    becomes one struct row per map (a key missing from a map reads null).
+    A null element yields one row with a null value.
+
+    Returns ``(frame, column, struct field names or None)``; the frame
+    is None for an empty list."""
+    if (
+        p.at("word")
+        and p.peek().text == "range"
+        and p.peek(1) is not None
+        and p.peek(1).text == "("
+    ):
+        p.next()
+        p.expect("punct", "(")
+        rargs: list[int] = []
+        while True:
+            v = p.parse_value(None)
+            if isinstance(v, bool) or not isinstance(v, int):
+                raise CypherSyntaxError(
+                    f"range() bounds in {clause} must be integer literals "
+                    "or integer parameters"
+                )
+            rargs.append(v)
+            if p.at("punct", ","):
+                p.next()
+                continue
+            break
+        p.expect("punct", ")")
+        if len(rargs) not in (2, 3):
+            raise CypherSyntaxError("range() takes 2 or 3 arguments")
+        lo, hi = rargs[0], rargs[1]
+        step = rargs[2] if len(rargs) > 2 else 1
+        if step == 0:
+            raise CypherSyntaxError("range() step must be non-zero")
+        # inclusive hi → exclusive end, stepping toward the bound
+        end = hi + (1 if step > 0 else -1)
+        return spark.range(lo, end, step), F.col("id"), None
+    if p.at("punct", "$"):
+        vals = p.parse_value(None)
+        if not isinstance(vals, list):
+            raise CypherSyntaxError(f"{clause} $param requires a list value")
+    else:
+        p.expect("punct", "[")
+        vals = []
+        if not p.at("punct", "]"):
+            while True:
+                vals.append(p.parse_value(None))
+                if p.at("punct", ","):
+                    p.next()
+                    continue
+                break
+        p.expect("punct", "]")
+    kinds = set()
+    for v in vals:
+        if v is None:
+            continue
+        if isinstance(v, bool):
+            kinds.add("boolean")
+        elif isinstance(v, (int, float)):
+            kinds.add("number")
+        elif isinstance(v, str):
+            kinds.add("string")
+        elif isinstance(v, dict):
+            kinds.add("map")
+        else:
+            kinds.add(type(v).__name__)
+    if len(kinds) > 1:
+        raise CypherSyntaxError(
+            f"{clause} list must be homogeneous; got mixed "
+            + "/".join(sorted(kinds))
+        )
+    if not vals:
+        return None, None, None
+    if kinds == {"map"}:
+        allkeys = sorted({k for v in vals if v is not None for k in v})
+        rows = [
+            {
+                "__isnull__": v is None,
+                **{k: (None if v is None else v.get(k)) for k in allkeys},
+            }
+            for v in vals
+        ]
+        try:
+            flat = spark.createDataFrame(rows)
+        except Exception:
+            raise CypherSyntaxError(
+                f"{clause} map-list values must be type-consistent "
+                "per key (and no key may be null in every map)"
+            ) from None
+        row = F.when(
+            ~F.col("__isnull__"), F.struct(*[F.col(k) for k in allkeys])
+        )
+        return flat, row, tuple(allkeys)
+    arr = F.lit(vals)
+    if kinds == {"number"}:
+        if any(isinstance(v, float) for v in vals):
+            arr = F.lit([None if v is None else float(v) for v in vals])
+        else:
+            arr = arr.cast("array<bigint>")
+    return spark.range(1), F.explode(arr), None
+
+
 def _path_accessors_ahead(p: "_Parser", var: str) -> bool:
     """Token lookahead: does the remaining query read ``nodes(var)`` or
     ``relationships(var)``? Decides whether the path compile must carry
@@ -5167,9 +5445,9 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
     Every MATCH form (a node, an edge, a named or unnamed variable-length
     path, a shortestPath seed, comma patterns, several clauses) binds
     into ONE scope, :func:`_match_chain`'s var-prefixed frame; each
-    OPTIONAL MATCH left-joins an :func:`_expand_side` onto it anchored on
-    a bound node (a failed optional pattern yields nulls, never drops the
-    row). The tail (``WITH``/``UNWIND``/``MATCH``/``CALL`` stages, then
+    OPTIONAL MATCH, compiled by :func:`_anchored_match`, left-joins its
+    side onto it anchored on a bound node (a failed optional pattern
+    yields nulls, never drops the row). The tail (``WITH``/``UNWIND``/``MATCH``/``CALL`` stages, then
     ``RETURN``) is :func:`_finish_read`.
 
     Column names follow aliases when given, else ``id_<var>`` /
@@ -5204,132 +5482,17 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
             bare=True,
         )
     if p.at("kw", "UNWIND"):
-        # standalone UNWIND: a literal list as the row source —
-        # ``UNWIND [1, 2, 3] AS x RETURN x * 2 AS y``. Planned as a
-        # one-row local relation exploded driver-side (no scan).
+        # standalone UNWIND: ``range()``, a literal list or a $param list
+        # as the row source — ``UNWIND [1, 2, 3] AS x RETURN x * 2 AS y``
         p.next()
-        if (
-            p.at("word")
-            and p.peek().text == "range"
-            and p.peek(1) is not None
-            and p.peek(1).text == "("
-        ):
-            # UNWIND range(lo, hi[, step]) AS x — THE Cypher batch-row
-            # generator (`UNWIND range(1, n)`). Compiled to spark.range:
-            # a distributed, lazily-generated row source (splits across
-            # executors) — never a driver-side literal array, so
-            # range(1, 10^9) behaves like any other scan at scale.
-            p.next()
-            p.expect("punct", "(")
-            rargs: list[int] = []
-            while True:
-                v = p.parse_value(None)
-                if isinstance(v, bool) or not isinstance(v, int):
-                    raise CypherSyntaxError(
-                        "range() bounds in UNWIND must be integer "
-                        "literals or integer parameters"
-                    )
-                rargs.append(v)
-                if p.at("punct", ","):
-                    p.next()
-                    continue
-                break
-            p.expect("punct", ")")
-            if len(rargs) not in (2, 3):
-                raise CypherSyntaxError("range() takes 2 or 3 arguments")
-            lo, hi = rargs[0], rargs[1]
-            step = rargs[2] if len(rargs) > 2 else 1
-            if step == 0:
-                raise CypherSyntaxError("range() step must be non-zero")
-            p.expect("kw", "AS")
-            alias = p.expect("word").text
-            spark = graph.vertices.sparkSession
-            # inclusive hi → exclusive end, stepping toward the bound;
-            # a step pointing away yields the empty relation, as in Cypher
-            df = spark.range(lo, hi + (1 if step > 0 else -1), step).select(
-                F.col("id").alias(alias)
-            )
-            cm = _bare_colmap({alias}, None, df)
-            cm.stage_graph = graph
-            return _finish_read(df, cm, p, bare=True)
-        if p.at("punct", "$"):
-            vals = p.parse_value(None)
-            if not isinstance(vals, list):
-                raise CypherSyntaxError("UNWIND $param requires a list value")
-        else:
-            p.expect("punct", "[")
-            vals: list[Any] = []
-            if not p.at("punct", "]"):
-                while True:
-                    vals.append(p.parse_value(None))
-                    if p.at("punct", ","):
-                        p.next()
-                        continue
-                    break
-            p.expect("punct", "]")
+        spark = graph.vertices.sparkSession
+        base, col, fields = _list_source(p, spark, "UNWIND")
         p.expect("kw", "AS")
         alias = p.expect("word").text
-        # homogeneity check at parse time — a mixed list would otherwise
-        # surface as a Spark cast error at execution (array literals are
-        # monomorphic); int+float promote to float, as in Cypher
-        kinds = set()
-        for v in vals:
-            if v is None:
-                continue
-            if isinstance(v, bool):
-                kinds.add("boolean")
-            elif isinstance(v, (int, float)):
-                kinds.add("number")
-            elif isinstance(v, str):
-                kinds.add("string")
-            elif isinstance(v, dict):
-                kinds.add("map")
-            else:
-                kinds.add(type(v).__name__)
-        if len(kinds) > 1:
-            raise CypherSyntaxError(
-                "UNWIND list must be homogeneous; got mixed "
-                + "/".join(sorted(kinds))
-            )
-        spark = graph.vertices.sparkSession
-        if kinds == {"map"}:
-            # list of literal maps — the inline-batch idiom ``UNWIND
-            # [{a: 1}, {a: 2}] AS r`` (same row shape as UNWIND $rows);
-            # each map becomes one struct row, missing keys read null,
-            # and a null list element yields one row with a null value
-            # (openCypher — matching the scalar literal-list path, where
-            # explode keeps null array elements)
-            allkeys = sorted({k for v in vals if v is not None for k in v})
-            rows = [
-                {
-                    "__isnull__": v is None,
-                    **{k: (None if v is None else v.get(k)) for k in allkeys},
-                }
-                for v in vals
-            ]
-            try:
-                flat = spark.createDataFrame(rows)
-            except Exception:
-                raise CypherSyntaxError(
-                    "UNWIND map-list values must be type-consistent "
-                    "per key (and no key may be null in every map)"
-                ) from None
-            df = flat.select(
-                F.when(
-                    ~F.col("__isnull__"),
-                    F.struct(*[F.col(k) for k in allkeys]),
-                ).alias(alias)
-            )
-            cm = _bare_colmap({alias}, _struct_outputs(df), df)
-            cm.stage_graph = graph
-            return _finish_read(df, cm, p, bare=True)
-        if kinds == {"number"} and any(isinstance(v, float) for v in vals):
-            vals = [None if v is None else float(v) for v in vals]
-        if vals:
-            df = spark.range(1).select(F.explode(F.lit(vals)).alias(alias))
-        else:
-            df = spark.range(0).select(F.lit(None).alias(alias))
-        cm = _bare_colmap({alias}, None, df)
+        if base is None:
+            base, col = spark.range(0), F.lit(None)
+        df = base.select(col.alias(alias))
+        cm = _bare_colmap({alias}, fields and {alias: fields}, df)
         cm.stage_graph = graph
         return _finish_read(df, cm, p, bare=True)
     p.expect("kw", "MATCH")
@@ -5421,24 +5584,7 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
         if p.at("kw", "WHERE"):
             p.next()
             opt_disj = p.parse_where()
-        bound_conds_i: list[Cond] = []
-        if isinstance(opt_pat, EdgePat):
-            # optional-side inline maps filter the optional side pre-join
-            # (same contract as the optional WHERE). A map on the BOUND
-            # endpoint is a predicate of the OPTIONAL pattern: rows that
-            # fail it null-extend rather than drop, so it is carried into
-            # the LEFT-join condition (never a pre-filter on the base).
-            for nd in (opt_pat.src, opt_pat.dst):
-                if nd.var is not None and nd.var in taken and nd.props:
-                    bound_conds_i.extend(
-                        Cond(PropRef(nd.var, k), "=", v)
-                        for k, v in nd.props.items()
-                    )
-                    nd.props = {}
-        opt_disj = _and_into(
-            opt_disj, _desugar_inline_props([opt_pat], taken)
-        )
-        opt_clauses.append((opt_pat, opt_disj, bound_conds_i))
+        opt_clauses.append((opt_pat, opt_disj))
     # the scope keys every column and join on variable names, so
     # anonymous elements get synthetic dunder names
     _assign_anon_vars(chain_pats, taken)
@@ -5485,11 +5631,29 @@ def _read_single(graph: PropertyGraph, p: "_Parser") -> DataFrame:
     )
     for d in chain_disjs:
         df = _apply_scope_where(df, colmap, d)
-    # OPTIONAL MATCH: one left equi-join per clause onto the scope frame
-    for i, (opt_pat_i, opt_disj_i, bound_conds_i) in enumerate(opt_clauses):
-        df, colmap = _optional_join(
-            graph, df, colmap, opt_pat_i, opt_disj_i, i, bound_conds_i
+    # OPTIONAL MATCH: one left equi-join per clause onto the scope frame.
+    # The anchor may be a variable of an EARLIER optional clause: a failed
+    # binding has a null id, which never equi-joins, so the chain
+    # null-extends transitively (Neo4j). A WHERE that reaches outside the
+    # side rides the left-join condition, so failing rows null-extend
+    # instead of dropping. Stacked clauses multiply per Neo4j: m and n
+    # matches in two clauses give m*n rows (1 where a side is empty).
+    for i, (opt_pat, opt_disj) in enumerate(opt_clauses):
+        a = _anchored_match(
+            df, colmap, opt_pat, opt_disj, True, i, "OPTIONAL MATCH"
         )
+        joined = _scope_colmap(graph, {**colmap.scope, **a.colmap.scope})
+        on = a.on
+        if a.rest is not None:
+            # the cross join is a SCHEMA PROBE only (never executed):
+            # computed operands type-check against both sides' columns;
+            # the compiled Column rides the real left join
+            probe = df.crossJoin(a.side)
+            on = on & F.coalesce(
+                _where_to_column(a.rest, joined, set(probe.columns), probe),
+                F.lit(False),
+            )
+        df, colmap = df.join(a.side, on, "left"), joined
     colmap.stage_graph = graph
     return _finish_read(df, colmap, p, bare=False)
 
@@ -5608,12 +5772,20 @@ def _disj_vars(disj, out: set[str]) -> None:
 
 
 def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
-    """Shared tail of every read form: ``[WITH ... | UNWIND x AS y]*
-    RETURN items [ORDER BY ...] [SKIP n] [LIMIT m]`` — parsed and executed
-    stage by stage (openCypher clause order ``WITH items [ORDER BY/LIMIT]
-    [WHERE]``). ``bare`` is True when the incoming row scope is named
-    scalar columns (a standalone UNWIND source) rather than pattern
-    variables; every WITH horizon flips the scope to bare."""
+    """Shared tail of every read form: ``[WITH ... | UNWIND x AS y |
+    [OPTIONAL] MATCH ... | CALL { WITH n ... }]* RETURN items [ORDER BY
+    ...] [SKIP n] [LIMIT m]`` — parsed and executed stage by stage
+    (openCypher clause order ``WITH items [ORDER BY/LIMIT] [WHERE]``).
+    ``bare`` is True when the incoming row scope is named scalar columns
+    (a standalone UNWIND source) rather than pattern variables; every
+    WITH horizon flips the scope to bare.
+
+    A pipeline MATCH and a correlated CALL compile their pattern through
+    :func:`_anchored_match`, then differ only in what they do with the
+    side: MATCH joins it and binds each new variable as a struct column
+    (:func:`_carry_new_vars`); CALL builds its per-anchor rows first
+    (:func:`_call_rows`). The unanchored ``MATCH (n:L) WHERE id(n) = x``
+    lookup binds its variable the same way."""
     graph = getattr(colmap, "stage_graph", None)
     wopt_n = 0
     while (
@@ -5641,14 +5813,12 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
             # ``WITH n CALL { WITH n MATCH (n)-[e:T]->(m[:L]) [WHERE …]
             # RETURN items ORDER BY … LIMIT k }`` — the per-anchor-row
             # subquery whose canonical use is TOP-K-PER-KEY: ORDER BY +
-            # LIMIT apply PER anchor (a row_number window over the
-            # anchor's edge endpoint), never globally — and the window
-            # runs on the expansion side BEFORE the join, so the k-cap
-            # prunes the fan-out ahead of the outer row multiplication.
-            # Plain CALL inner-joins (anchors with no inner rows drop,
-            # per Neo4j). Aggregating inner RETURNs are rejected toward
-            # COUNT { } / pattern comprehensions, which already compile
-            # to the non-multiplying left-join forms.
+            # SKIP/LIMIT apply PER anchor, never globally, on the side
+            # BEFORE the join (_call_rows), so the cut prunes the fan-out
+            # ahead of the outer row multiplication. Plain CALL
+            # inner-joins (anchors with no inner rows drop, per Neo4j); an
+            # aggregate-only RETURN keeps every anchor (left join, typed
+            # empty defaults).
             if graph is None:
                 raise CypherSyntaxError(
                     "CALL after WITH requires a graph scope"
@@ -5665,7 +5835,7 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
             p.next()
             ivar = p.expect("word").text
             structs = dict(getattr(colmap, "structs", {}))
-            names = set(getattr(colmap, "star_names", set()))
+            names = set(getattr(colmap, "star_names", set())) | set(structs)
             if ivar not in structs or "id" not in structs[ivar]:
                 raise CypherSyntaxError(
                     f"CALL imports {ivar!r}, which is not a carried node "
@@ -5673,343 +5843,58 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
                 )
             p.expect("kw", "MATCH")
             cpat = p.parse_pattern()
-            if not isinstance(cpat, EdgePat) or cpat.hops is not None:
-                raise CypherSyntaxError(
-                    "correlated CALL supports a single-hop pattern "
-                    "anchored on the imported node"
-                )
-            c_is_src = cpat.src.var == ivar
-            c_is_dst = cpat.dst.var == ivar
-            if c_is_src == c_is_dst:
-                raise CypherSyntaxError(
-                    "the imported variable must be exactly one endpoint "
-                    "of the CALL pattern"
-                )
-            c_other = cpat.dst if c_is_src else cpat.src
-            for v in (cpat.var, c_other.var):
-                if v is not None and (v in structs or v in names):
-                    raise CypherSyntaxError(
-                        f"variable {v!r} is already bound in this scope"
-                    )
             c_disj = None
             if p.at("kw", "WHERE"):
                 p.next()
                 c_disj = p.parse_where()
-            # inline property maps (round-8 verdict ask #6): the imported
-            # endpoint's map filters the CURRENT rows (CALL inner-joins,
-            # so pre-join == post-join); edge / free-endpoint maps desugar
-            # into the inner WHERE like every first-stage clause
-            c_bound_nd = cpat.src if c_is_src else cpat.dst
-            if c_bound_nd.props:
-                bconds = [
-                    Cond(PropRef(ivar, k), "=", v)
-                    for k, v in c_bound_nd.props.items()
-                ]
-                c_bound_nd.props = {}
-                df = df.filter(
-                    F.coalesce(
-                        _where_to_column(
-                            [bconds], colmap, set(df.columns), df
-                        ),
-                        F.lit(False),
-                    )
-                )
-            call_taken = set(structs) | names | {
-                v for v in (cpat.var, c_other.var) if v is not None
-            }
-            c_disj = _and_into(
-                c_disj, _desugar_inline_props([cpat], call_taken)
-            )
             p.expect("kw", "RETURN")
             c_distinct, c_items = p.parse_return(allow_bare=False)
             c_order, c_skip, c_limit = p.parse_tail(
                 require_end=False, allow_bare=False
             )
             p.expect("punct", "}")
-            if c_skip is not None and not c_order:
-                raise CypherSyntaxError(
-                    "SKIP inside a correlated CALL requires ORDER BY "
-                    "(an unordered per-anchor cut would be "
-                    "nondeterministic)"
-                )
-            if c_limit is not None and not c_order:
-                raise CypherSyntaxError(
-                    "LIMIT inside a correlated CALL requires ORDER BY "
-                    "(an unordered per-anchor cut would be "
-                    "nondeterministic)"
-                )
-            c_has_agg = any(_contains_agg(i.expr) for i in c_items)
-            if c_has_agg and any(
-                _contains_agg(i.expr) and not isinstance(i.expr, AggCall)
-                for i in c_items
+            if isinstance(cpat, EdgePat) and ivar not in (
+                cpat.src.var, cpat.dst.var
             ):
-                # the per-anchor groupBy below splits items shallowly;
-                # composite aggregate expressions would land on the key
-                # side and mis-group — reject loudly until supported
                 raise CypherSyntaxError(
-                    "composite aggregate expressions are not supported "
-                    "inside CALL { }; RETURN the plain aggregate and "
-                    "compute the expression outside"
+                    "the imported variable must be exactly one endpoint "
+                    "of the CALL pattern"
                 )
-            # DISTINCT over an aggregating RETURN is a no-op (grouping
-            # already yields one row per distinct key tuple) — openCypher
-            # accepts it, so we do too
-            if c_has_agg and c_distinct:
-                c_distinct = False
-            # (aggregating ORDER BY keys validate where the sort builds:
-            # aliases, expressions equal to a projected item, or
-            # expressions computed over aliases — Neo4j's post-aggregation
-            # ORDER BY scope)
-            ep, op = f"__we{wopt_n}_", f"__wo{wopt_n}_"
-            wopt_n += 1
-            bound_end = "src" if c_is_src else "dst"
-            side, anchor_name, icolmap, c_rest = _expand_side(
-                graph, cpat, bound_end, cpat.var or ep, c_other.var or op,
-                ep, op, c_disj,
+            a = _anchored_match(
+                df, colmap, cpat, c_disj, False, wopt_n, "correlated CALL"
             )
-            if c_rest is not None:
+            wopt_n += 1
+            if a.rest is not None:
                 raise CypherSyntaxError(
                     "a CALL subquery WHERE may only reference its own "
                     "pattern variables"
                 )
-            anchor = F.col(anchor_name)
             out_names = [_out_name(i) for i in c_items]
             for nm in out_names:
-                if nm in names or nm in structs:
+                if nm in names:
                     raise CypherSyntaxError(
                         f"CALL output {nm!r} collides with a variable "
                         "already in scope; alias it"
                     )
-            if c_has_agg:
-                # per-anchor aggregation (round-8 verdict ask #7): ONE
-                # partial-aggregated groupBy on the expansion side BEFORE
-                # the join — the COUNT { } shape generalized to any
-                # aggregate. Aggregate-only RETURNs keep every anchor
-                # (aggregation over zero rows still yields a row: count 0,
-                # sum/min/max null, collect []) via a left join; a RETURN
-                # that mixes grouping keys drops empty anchors, exactly
-                # the plain-CALL inner-join contract.
-                key_cols = [
-                    _expr_column(i.expr, icolmap, side).alias(nm)
-                    for i, nm in zip(c_items, out_names)
-                    if not isinstance(i.expr, AggCall)
-                ]
-                agg_cols = [
-                    _agg_column(i.expr, icolmap, side).alias(nm)
-                    for i, nm in zip(c_items, out_names)
-                    if isinstance(i.expr, AggCall)
-                ]
-                side = side.groupBy(
-                    anchor.alias("__call_anchor"), *key_cols
-                ).agg(*agg_cols)
-                side = side.select("__call_anchor", *out_names)
-                if (
-                    c_skip is not None or c_limit is not None
-                ) and not key_cols:
-                    # one (possibly fabricated count-0) row per anchor: a
-                    # SKIP/LIMIT cut would have to apply to rows the left
-                    # join fabricates AFTER this point — reject loudly
-                    raise CypherSyntaxError(
-                        "SKIP/LIMIT on an aggregate-only CALL RETURN is "
-                        "not supported (each anchor yields exactly one "
-                        "row); drop the SKIP/LIMIT"
-                    )
-                def agg_sort_col(key) -> Column:
-                    # post-aggregation key resolution (round 9): a RETURN
-                    # alias, an expression EQUAL to a projected item's AST
-                    # (Neo4j lets ORDER BY restate a grouping key or
-                    # aggregate — ``RETURN m.born AS born, count(*) AS c
-                    # ORDER BY m.born``), or an expression over aliases
-                    # (``ORDER BY toLower(friend)``)
-                    if isinstance(key, str):
-                        if key not in out_names:
-                            raise CypherSyntaxError(
-                                f"ORDER BY key {key!r} is not a CALL "
-                                "RETURN alias"
-                            )
-                        return F.col(key)
-                    for i, nm in zip(c_items, out_names):
-                        if i.expr == key:
-                            return F.col(nm)
-
-                    def acolmap(ref) -> Column:
-                        v = (
-                            ref.var
-                            if isinstance(ref, PropRef)
-                            else getattr(ref, "name", None)
-                        )
-                        prop = ref.prop if isinstance(ref, PropRef) else None
-                        if v in out_names and prop is None:
-                            return F.col(v)
-                        raise CypherSyntaxError(
-                            "ORDER BY inside an aggregating CALL may only "
-                            "reference RETURN items or expressions over "
-                            "them (the post-aggregation scope)"
-                        )
-
-                    return _expr_column(key, acolmap, side)
-
-                if c_order and key_cols:
-                    # per-anchor ORDER BY / SKIP / LIMIT over the grouped
-                    # rows (top-k groups per anchor): one window cut; the
-                    # full projection tiebreaks deterministically
-                    sort_cols = [
-                        _order_dir(agg_sort_col(key), asc)
-                        for key, asc in c_order
-                    ]
-                    w = Window.partitionBy("__call_anchor").orderBy(
-                        *sort_cols, *[F.col(n) for n in out_names]
-                    )
-                    side = side.withColumn(
-                        "__call_rn", F.row_number().over(w)
-                    )
-                    if c_skip is not None:
-                        side = side.filter(F.col("__call_rn") > c_skip)
-                    if c_limit is not None:
-                        side = side.filter(
-                            F.col("__call_rn") <= (c_skip or 0) + c_limit
-                        )
-                    side = side.drop("__call_rn")
-                elif c_order:
-                    # aggregate-only: exactly one row per anchor, so the
-                    # inner ORDER BY cannot change anything — validate the
-                    # keys and move on
-                    for key, _asc in c_order:
-                        agg_sort_col(key)
-                df = df.join(
-                    side,
-                    F.col(ivar)["id"] == F.col("__call_anchor"),
-                    "inner" if key_cols else "left",
-                ).drop("__call_anchor")
-                if not key_cols:
-                    side_types = dict(side.dtypes)
-                    for i, nm in zip(c_items, out_names):
-                        if i.expr.fn == "COUNT":
-                            df = df.withColumn(
-                                nm,
-                                F.coalesce(
-                                    F.col(nm), F.lit(0).cast("long")
-                                ),
-                            )
-                        elif i.expr.fn == "COLLECT":
-                            df = df.withColumn(
-                                nm,
-                                F.coalesce(
-                                    F.col(nm),
-                                    F.array().cast(side_types[nm]),
-                                ),
-                            )
-            else:
-                if c_distinct:
-                    # dedup the PROJECTED inner rows (anchor included)
-                    # before any per-anchor ranking — openCypher's
-                    # DISTINCT-then-ORDER BY-then-LIMIT order
-                    side = side.select(
-                        anchor.alias("__call_anchor"),
-                        *[
-                            _expr_column(i.expr, icolmap, side).alias(nm)
-                            for i, nm in zip(c_items, out_names)
-                        ],
-                    ).dropDuplicates()
-                    if c_order:
-                        # post-DISTINCT scope: the projected aliases only.
-                        # Plain keys name an alias; expression keys may
-                        # compute over aliases (ORDER BY toLower(nm) after
-                        # RETURN DISTINCT x.name AS nm)
-                        def acolmap(ref) -> Column:
-                            v = (
-                                ref.var
-                                if isinstance(ref, PropRef)
-                                else getattr(ref, "name", None)
-                            )
-                            prop = (
-                                ref.prop if isinstance(ref, PropRef) else None
-                            )
-                            if v in out_names and prop is None:
-                                return F.col(v)
-                            raise CypherSyntaxError(
-                                "ORDER BY inside CALL { RETURN DISTINCT } "
-                                "may only reference the RETURN aliases"
-                            )
-
-                        sort_cols = []
-                        for key, asc in c_order:
-                            if isinstance(key, str):
-                                if key not in out_names:
-                                    raise CypherSyntaxError(
-                                        f"ORDER BY key {key!r} is not a "
-                                        "CALL RETURN alias"
-                                    )
-                                kc = F.col(key)
-                            else:
-                                kc = _expr_column(key, acolmap, side)
-                            sort_cols.append(_order_dir(kc, asc))
-                        # rows are distinct, so the full projection is a
-                        # deterministic tiebreak
-                        w = Window.partitionBy("__call_anchor").orderBy(
-                            *sort_cols, *[F.col(n) for n in out_names]
-                        )
-                        side = side.withColumn(
-                            "__call_rn", F.row_number().over(w)
-                        )
-                else:
-                    if c_order:
-                        alias_map = {
-                            nm: i.expr
-                            for nm, i in zip(out_names, c_items)
-                        }
-                        sort_cols = []
-                        for key, asc in c_order:
-                            if isinstance(key, str):
-                                if key not in alias_map:
-                                    raise CypherSyntaxError(
-                                        f"ORDER BY key {key!r} is not a "
-                                        "CALL RETURN alias"
-                                    )
-                                key = alias_map[key]
-                            sort_cols.append(
-                                _order_dir(
-                                    _expr_column(key, icolmap, side), asc
-                                )
-                            )
-                        w = Window.partitionBy(anchor).orderBy(
-                            *sort_cols, F.col(f"{ep}id")
-                        )
-                        side = side.withColumn(
-                            "__call_rn", F.row_number().over(w)
-                        )
-                    proj = [anchor.alias("__call_anchor")] + [
-                        _expr_column(i.expr, icolmap, side).alias(nm)
-                        for i, nm in zip(c_items, out_names)
-                    ]
-                    if c_order:
-                        # inner declared order survives into the joined
-                        # frame as a sortable column, so a later ORDER BY
-                        # can restate it
-                        proj.append(F.col("__call_rn"))
-                    side = side.select(*proj)
-                if c_order and c_skip is not None:
-                    side = side.filter(F.col("__call_rn") > c_skip)
-                if c_order and c_limit is not None:
-                    side = side.filter(
-                        F.col("__call_rn") <= (c_skip or 0) + c_limit
-                    )
-                df = df.join(
-                    side,
-                    F.col(ivar)["id"] == F.col("__call_anchor"),
-                    "inner",
-                ).drop("__call_anchor")
-                if c_order:
-                    df = df.drop("__call_rn")
-            pend = getattr(colmap, "row_order", None)
-            colmap = _bare_colmap(
-                names | set(structs) | set(out_names),
-                _struct_outputs(df),
-                df,
+            rows, agg_only = _call_rows(
+                a, c_items, c_distinct, c_order, c_skip, c_limit
             )
-            colmap.stage_graph = graph
-            if pend:
-                colmap.row_order = pend
+            df = a.df.join(
+                rows, a.on, "left" if agg_only else "inner"
+            ).drop(a.anchor)
+            if agg_only:
+                # aggregation over zero rows still yields a row: count 0,
+                # collect [] (sum/min/max stay null)
+                side_types = dict(rows.dtypes)
+                for i, nm in zip(c_items, out_names):
+                    if i.expr.fn == "COUNT":
+                        empty = F.lit(0).cast("long")
+                    elif i.expr.fn == "COLLECT":
+                        empty = F.array().cast(side_types[nm])
+                    else:
+                        continue
+                    df = df.withColumn(nm, F.coalesce(F.col(nm), empty))
+            colmap = _stage_colmap(colmap, names | set(out_names), df)
             continue
         if p._at_word_ci("OPTIONAL") or p.at("kw", "MATCH"):
             # pipeline [OPTIONAL] MATCH: re-expand off a WITH-carried node
@@ -6034,6 +5919,8 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
             if p.at("kw", "WHERE"):
                 p.next()
                 opt_disj = p.parse_where(allow_bare=True)
+            structs = dict(getattr(colmap, "structs", {}))
+            names = set(getattr(colmap, "star_names", set()))
             if isinstance(opt, NodePat) and not optional:
                 # unanchored pipeline MATCH — the parameter-batch lookup
                 # idiom ``UNWIND $ids AS uid MATCH (n:User) WHERE
@@ -6045,8 +5932,6 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
                 # scale-correct shape — while an uncorrelated pattern
                 # (a true cartesian) is rejected loudly, matching the
                 # first-stage shared-variable contract.
-                structs = dict(getattr(colmap, "structs", {}))
-                names = set(getattr(colmap, "star_names", set()))
                 if opt.var is None:
                     raise CypherSyntaxError(
                         "pipeline MATCH node pattern needs a variable"
@@ -6058,10 +5943,10 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
                     )
                 if opt.props:
                     # inline property map = implicit WHERE conjuncts on
-                    # the fresh variable (round-8 verdict ask #6); they
-                    # AND into every disjunct (maps distribute over OR)
-                    # and cannot themselves correlate, so the top-level
-                    # equality requirement below still applies unchanged
+                    # the fresh variable; they AND into every disjunct
+                    # (maps distribute over OR) and cannot themselves
+                    # correlate, so the top-level equality requirement
+                    # below still applies unchanged
                     pconds = [
                         Cond(PropRef(opt.var, k), "=", v)
                         for k, v in opt.props.items()
@@ -6115,154 +6000,38 @@ def _finish_read(df: DataFrame, colmap, p: "_Parser", bare: bool) -> DataFrame:
                     )
                 op = f"__wo{wopt_n}_"
                 wopt_n += 1
-                df = df.crossJoin(
-                    prefixed(graph.nodes(opt.label), op, graph.vertices.columns)
+                df = _carry_new_vars(
+                    df.crossJoin(
+                        prefixed(
+                            graph.nodes(opt.label), op, graph.vertices.columns
+                        )
+                    ),
+                    _scope_colmap(graph, {opt.var: ("node", op)}),
+                    [opt.var],
                 )
-                vertex_props = sorted(
-                    c for c in graph.vertices.columns
-                    if c not in VERTEX_STRUCTURAL
+                colmap = _stage_colmap(
+                    colmap, names | set(structs) | {opt.var}, df
                 )
-                meta = ["label"]
-                if EXTRA_LABELS in graph.vertices.columns:
-                    meta = meta + [EXTRA_LABELS]
-                st = F.struct(
-                    F.col(f"{op}id").alias("id"),
-                    *[F.col(f"{op}{m}").alias(m) for m in meta],
-                    *[F.col(f"{op}{pr}").alias(pr) for pr in vertex_props],
-                )
-                df = df.withColumn(opt.var, st).drop(
-                    *[c for c in df.columns if c.startswith(op)]
-                )
-                pend = getattr(colmap, "row_order", None)
-                colmap = _bare_colmap(
-                    names | set(structs) | {opt.var},
-                    _struct_outputs(df),
-                    df,
-                )
-                colmap.stage_graph = graph
-                if pend:
-                    colmap.row_order = pend
                 df = df.filter(
-                    _where_to_column(
-                        opt_disj, colmap, set(df.columns), df
-                    )
+                    _where_to_column(opt_disj, colmap, set(df.columns), df)
                 )
                 continue
-            if not isinstance(opt, EdgePat) or opt.hops is not None:
-                raise CypherSyntaxError(
-                    "OPTIONAL MATCH supports a single-hop edge pattern "
-                    "(a)-[e]->(b)"
-                )
-            structs = dict(getattr(colmap, "structs", {}))
-            names = set(getattr(colmap, "star_names", set()))
-            bound_is_src = (
-                opt.src.var in structs and "id" in structs[opt.src.var]
+            a = _anchored_match(
+                df, colmap, opt, opt_disj, optional, wopt_n,
+                "OPTIONAL MATCH" if optional else "MATCH after WITH",
             )
-            bound_is_dst = (
-                opt.dst.var in structs and "id" in structs[opt.dst.var]
-            )
-            if bound_is_src == bound_is_dst:
-                raise CypherSyntaxError(
-                    "MATCH after WITH must bind exactly one endpoint to "
-                    "a carried node (WITH n MATCH (n)-[e:T]->(m))"
-                )
-            bound_end = "src" if bound_is_src else "dst"
-            bound_var = opt.src.var if bound_is_src else opt.dst.var
-            other = opt.dst if bound_is_src else opt.src
-            for v in (opt.var, other.var):
-                if v is not None and (v in structs or v in names):
-                    raise CypherSyntaxError(
-                        f"variable {v!r} is already bound in this scope"
-                    )
-            # inline property maps desugar to WHERE equality conjuncts
-            # exactly like first-stage clauses (round-8 verdict ask #6).
-            # A map on the BOUND endpoint filters the CURRENT rows for a
-            # plain MATCH (inner join: pre-join == post-join); on an
-            # OPTIONAL it is a predicate of the optional pattern — failing
-            # rows null-extend, so it rides the LEFT-join condition.
-            bound_nd = opt.src if bound_is_src else opt.dst
-            bound_jcol: Column | None = None
-            if bound_nd.props:
-                bconds = [
-                    Cond(PropRef(bound_var, k), "=", v)
-                    for k, v in bound_nd.props.items()
-                ]
-                bound_nd.props = {}
-                bcol = F.coalesce(
-                    _where_to_column([bconds], colmap, set(df.columns), df),
-                    F.lit(False),
-                )
-                if optional:
-                    bound_jcol = bcol
-                else:
-                    df = df.filter(bcol)
-            side_taken = set(structs) | names | {
-                v for v in (opt.var, other.var) if v is not None
-            }
-            opt_disj = _and_into(
-                opt_disj, _desugar_inline_props([opt], side_taken)
-            )
-            ep, op = f"__we{wopt_n}_", f"__wo{wopt_n}_"
             wopt_n += 1
-            opt_side, anchor, _, opt_rest = _expand_side(
-                graph, opt, bound_end, opt.var or ep, other.var or op,
-                ep, op, opt_disj,
-            )
-            if opt_rest is not None:
+            if a.rest is not None:
                 raise CypherSyntaxError(
                     "a MATCH WHERE after WITH may only reference its own "
                     "pattern variables"
                 )
-            pipe_jc = F.col(bound_var)["id"] == F.col(anchor)
-            if bound_jcol is not None:
-                pipe_jc = pipe_jc & bound_jcol
-            df = df.join(opt_side, pipe_jc, "left" if optional else "inner")
-            # materialize each new variable as ONE null-gated struct
-            # column (a failed OPTIONAL binding is a NULL variable, not a
-            # struct of nulls) — the scope then IS a plain WITH-carry
-            # scope, so _bare_colmap serves m.prop/collect(m)/id(m) with
-            # the same semantics as a carried node, no special casing
-            vertex_props = sorted(
-                c for c in graph.vertices.columns
-                 if c not in VERTEX_STRUCTURAL
+            df = _carry_new_vars(
+                a.df.join(a.side, a.on, "left" if optional else "inner"),
+                a.colmap,
+                a.new_vars,
             )
-            edge_props = sorted(
-                c for c in graph.edges.columns
-                if c not in EDGE_STRUCTURAL
-            )
-            added = {}
-            if other.var is not None:
-                added[other.var] = (op, "node")
-            if opt.var is not None:
-                added[opt.var] = (ep, "edge")
-            for v, (pref, kind) in added.items():
-                meta = (
-                    ["label"] if kind == "node" else ["src", "dst", "rel_type"]
-                )
-                if kind == "node" and EXTRA_LABELS in graph.vertices.columns:
-                    meta = meta + [EXTRA_LABELS]
-                props = vertex_props if kind == "node" else edge_props
-                idc = F.col(f"{pref}id")
-                st = F.struct(
-                    idc.alias("id"),
-                    *[F.col(f"{pref}{m}").alias(m) for m in meta],
-                    *[F.col(f"{pref}{p}").alias(p) for p in props],
-                )
-                df = df.withColumn(v, F.when(idc.isNotNull(), st))
-            df = df.drop(
-                *[
-                    c
-                    for c in df.columns
-                    if c.startswith(ep) or c.startswith(op)
-                ]
-            )
-            pend = getattr(colmap, "row_order", None)
-            colmap = _bare_colmap(
-                names | set(added), _struct_outputs(df), df
-            )
-            colmap.stage_graph = graph
-            if pend:
-                colmap.row_order = pend
+            colmap = _stage_colmap(colmap, names | set(a.new_vars), df)
             continue
         if p.at("kw", "UNWIND"):
             # pipeline UNWIND: explode a projected list into one row per
@@ -6822,7 +6591,10 @@ def cypher_write(
     - ``MATCH (a[:L1])-[e:T]->(b[:L2]) [WHERE …] SET … | REMOVE … |
       DELETE e`` — the same SET items minus labels
     - ``FOREACH (x IN <src> | CREATE (:L {k: <expr(x)>, …}))`` over
-      ``range(lo, hi[, step])``, a literal list or a ``$list``
+      ``range(lo, hi[, step])``, a literal list or a ``$list``, with
+      UNWIND's list rules: a list must be homogeneous (``[1, 'a']``
+      raises), integers are 64-bit, int mixed with float promotes to
+      float, and an empty list writes nothing
 
     Every SET list is parsed by :func:`_parse_set_list`: structural
     columns (and the key a write matches on) cannot be assigned, a
@@ -7104,66 +6876,23 @@ def cypher_write(
 def _foreach_write(graph: PropertyGraph, p: _Parser) -> PropertyGraph:
     """``FOREACH (x IN range(lo, hi[, step]) | CREATE (:L {k: <expr(x)>,
     ...}))`` (and literal-list / ``$param``-list sources) — Neo4j's batch
-    row-generation idiom. The range source compiles to ``spark.range``,
-    so the batch is a DISTRIBUTED lazily-generated relation and property
-    expressions are JVM column arithmetic over it: ``FOREACH (i IN
-    range(1, 10^9) | CREATE ...)`` inserts a billion vertices without a
-    driver-side list. Only the CREATE body is supported — FOREACH's
-    SET/MERGE/DELETE bodies raise loudly (use the UNWIND..MATCH forms)."""
+    row-generation idiom. The source is UNWIND's (:func:`_list_source`):
+    ``range`` compiles to ``spark.range``, so the batch is a DISTRIBUTED
+    lazily-generated relation and property expressions are JVM column
+    arithmetic over it (``FOREACH (i IN range(1, 10^9) | CREATE ...)``
+    inserts a billion vertices without a driver-side list), and a list
+    follows UNWIND's type rules. An empty list is a no-op. Only the
+    CREATE body is supported — FOREACH's SET/MERGE/DELETE bodies raise
+    loudly (use the UNWIND..MATCH forms)."""
     p.next()  # FOREACH
     p.expect("punct", "(")
     var = p.expect("word").text
     if not p._at_word_ci("IN"):
         raise CypherSyntaxError("expected IN in FOREACH")
     p.next()
-    spark = graph.vertices.sparkSession
-    if p.at("word") and p.peek().text == "range":
-        p.next()
-        p.expect("punct", "(")
-        rargs: list[int] = []
-        while True:
-            v = p.parse_value(None)
-            if isinstance(v, bool) or not isinstance(v, int):
-                raise CypherSyntaxError(
-                    "FOREACH range() bounds must be integer literals or "
-                    "integer parameters"
-                )
-            rargs.append(v)
-            if p.at("punct", ","):
-                p.next()
-                continue
-            break
-        p.expect("punct", ")")
-        if len(rargs) not in (2, 3):
-            raise CypherSyntaxError("range() takes 2 or 3 arguments")
-        lo, hi = rargs[0], rargs[1]
-        step = rargs[2] if len(rargs) > 2 else 1
-        if step == 0:
-            raise CypherSyntaxError("range() step must be non-zero")
-        src = spark.range(lo, hi + (1 if step > 0 else -1), step).select(
-            F.col("id").alias("__x")
-        )
-    else:
-        if p.at("punct", "$"):
-            vals = p.parse_value(None)
-            if not isinstance(vals, list):
-                raise CypherSyntaxError("FOREACH $param requires a list value")
-        else:
-            p.expect("punct", "[")
-            vals = []
-            if not p.at("punct", "]"):
-                while True:
-                    vals.append(p.parse_value(None))
-                    if p.at("punct", ","):
-                        p.next()
-                        continue
-                    break
-            p.expect("punct", "]")
-        if not vals:
-            # empty source: FOREACH over nothing is a no-op, as in Cypher
-            src = None
-        else:
-            src = spark.createDataFrame([(v,) for v in vals], ["__x"])
+    src, col, _ = _list_source(p, graph.vertices.sparkSession, "FOREACH")
+    if src is not None:
+        src = src.select(col.alias("__x"))
     p.expect("punct", "|")
     if not p.at("kw", "CREATE"):
         raise CypherSyntaxError(

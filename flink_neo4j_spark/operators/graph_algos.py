@@ -4403,7 +4403,7 @@ ORACLE["g74_cypher_rel_merge_arms"] = """
 # (reversed second hop) — exactly what the symmetrized edge frame must
 # produce, with the customer's own edge excluded by relationship
 # isomorphism (never a path back to yourself through the same edge).
-# Plan: the bounded union-of-chains over _sym_edges — equi-joins only;
+# Plan: the bounded union-of-chains over _path_edges — equi-joins only;
 # the single-var id(c) % 100 source predicate reaches the customer scan
 # via Catalyst pushdown (the chains are fully lazy). Scale: the source
 # cut keeps rows ∝ |customers|/100 × nation size; no all-pairs shape.

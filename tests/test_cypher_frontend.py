@@ -801,6 +801,43 @@ def test_shortest_path_undirected_pattern(diamond_graph):
     assert [r["l"] for r in rows] == [2, 2]
 
 
+#: one rule for an undirected hop — both stored orientations, minus the
+#: reversed self-loop — in var-length paths and (all)shortestPath, on
+#: A with a self-loop and one edge A->B
+SELF_LOOP_UNDIRECTED = {
+    "fixed_one": (
+        "MATCH (x:U)-[:K*1..1]-(y:U) RETURN x.name AS x, y.name AS y",
+        [("A", "A"), ("A", "B"), ("B", "A")],
+    ),
+    "unbounded": (
+        "MATCH (x:U)-[:K*]-(y:U) RETURN x.name AS x, y.name AS y",
+        [("A", "A"), ("A", "B"), ("A", "B"), ("B", "A"), ("B", "A")],
+    ),
+    "shortest": (
+        "MATCH p = shortestPath((x:U)-[:K*1..2]-(y:U)) "
+        "RETURN x.name AS x, y.name AS y, length(p) AS l",
+        [("A", "B", 1), ("B", "A", 1)],
+    ),
+    "all_shortest": (
+        "MATCH p = allShortestPaths((x:U)-[:K*1..2]-(y:U)) "
+        "RETURN x.name AS x, y.name AS y, length(p) AS l",
+        [("A", "B", 1), ("B", "A", 1)],
+    ),
+}
+
+
+@pytest.mark.parametrize("form", sorted(SELF_LOOP_UNDIRECTED))
+def test_undirected_paths_match_self_loop_once(spark, form):
+    g = cypher_create_graph(
+        spark,
+        "CREATE (a:U {name:'A'}), (b:U {name:'B'}), "
+        "(a)-[:K]->(a), (a)-[:K]->(b)",
+    )
+    query, expected = SELF_LOOP_UNDIRECTED[form]
+    rows = cypher_read(g, query).collect()
+    assert sorted(tuple(r) for r in rows) == expected
+
+
 def test_path_accessors_on_shortest_path(diamond_graph):
     """nodes(p)/relationships(p) off a bound shortestPath read the id
     arrays of ONE deterministic representative — the lexicographically
@@ -1873,6 +1910,27 @@ def test_foreach_rejects_non_create_bodies(fixture_graph):
             fixture_graph,
             "FOREACH (i IN range(1, 3) | CREATE (:X {n: j}))",
         )
+
+
+def test_foreach_list_follows_unwind_rules(fixture_graph):
+    """FOREACH and UNWIND share one list source: a mixed list raises the
+    typed homogeneity error in both, and int mixed with float promotes
+    to float in both."""
+    for query in (
+        "FOREACH (i IN [1, 'a'] | CREATE (:Z {n: i}))",
+        "UNWIND [1, 'a'] AS i RETURN i",
+    ):
+        with pytest.raises(CypherSyntaxError, match="homogeneous"):
+            run = cypher_write if query.startswith("FOREACH") else cypher_read
+            run(fixture_graph, query)
+    g2 = cypher_write(fixture_graph, "FOREACH (i IN [1, 2.5] | CREATE (:Z {n: i}))")
+    stored = sorted(r["n"] for r in g2.nodes("Z").collect())
+    unwound = sorted(
+        r["i"]
+        for r in cypher_read(fixture_graph, "UNWIND [1, 2.5] AS i RETURN i").collect()
+    )
+    assert stored == unwound == [1.0, 2.5]
+    assert all(isinstance(v, float) for v in stored)
 
 
 def test_set_label_adds_to_matched_rows(fixture_graph):
@@ -4653,6 +4711,25 @@ def test_call_distinct_expression_orderby(fixture_graph):
         ("Alice", "Bob"),
         ("Bob", "Alice"),
     ]
+
+
+def test_call_distinct_orders_by_projected_expression(fixture_graph):
+    """Inside CALL { RETURN DISTINCT } an ORDER BY key equal to a
+    projected item sorts by that item, as it does in RETURN/WITH and in
+    the plain and aggregating CALL forms."""
+    def call(key: str):
+        return [
+            tuple(r)
+            for r in cypher_read(
+                fixture_graph,
+                "MATCH (a:User) WITH a "
+                "CALL { WITH a MATCH (a)-[e:KNOWS]-(b:User) "
+                f"RETURN DISTINCT b.name AS nm ORDER BY {key} DESC LIMIT 1 }} "
+                "RETURN a.name AS an, nm ORDER BY an",
+            ).collect()
+        ]
+
+    assert call("b.name") == call("nm") == [("Alice", "Bob"), ("Bob", "Alice")]
 
 
 def test_correlated_call_whole_variable_return(fixture_graph):

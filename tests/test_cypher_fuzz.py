@@ -340,6 +340,17 @@ EXEC_READ_CORPUS = [
     "WHERE b > 1980 AND (n)-[:KNOWS]->() RETURN n.name AS name ORDER BY name",
     "MATCH (c:User) WITH c CALL { WITH c MATCH (c)-[e:KNOWS]-(m:User) "
     "RETURN count(*) AS k } RETURN c.name AS cn, k ORDER BY cn",
+    # the one CALL ORDER BY resolver (DISTINCT + projected expression,
+    # plain + unprojected key) and a pipeline OPTIONAL MATCH whose bound
+    # endpoint carries an inline map (the anchored-clause compiler)
+    "MATCH (c:User) WITH c CALL { WITH c MATCH (c)-[e:KNOWS]-(m:User) "
+    "RETURN DISTINCT m.name AS fn ORDER BY m.name DESC LIMIT 1 } "
+    "RETURN c.name AS cn, fn ORDER BY cn",
+    "MATCH (c:User) WITH c CALL { WITH c MATCH (c)-[e:KNOWS]->(m:User) "
+    "RETURN m.name AS fn ORDER BY m.born DESC LIMIT 1 } "
+    "RETURN c.name AS cn, fn ORDER BY cn",
+    "MATCH (n:User) WITH n OPTIONAL MATCH (n {trust: true})-[e:KNOWS]->(m) "
+    "RETURN n.name AS nm, m.name AS fr ORDER BY nm",
     "MATCH (n:User) RETURN n {.name, yr: n.born + 1, "
     "ini: toUpper(left(n.name, 1))} AS rec ORDER BY n.name",
     "MATCH (n:User) SET n.x = 1" if False else
@@ -360,6 +371,7 @@ EXEC_WRITE_CORPUS = [
     "MATCH (a:User)-[e:KNOWS]->(b:User) WHERE b.name = 'Bob' REMOVE e.since",
     "MATCH ()-[e:KNOWS {since: 2001}]->() SET e += {w: 2, note: 'dup'}",
     "MATCH ()-[e:KNOWS]->() DELETE e",
+    "FOREACH (i IN [1, 2.5] | CREATE (:Batch {n: i, sq: i * i}))",
     # the UNWIND batch forms, all fed WRITE_ROWS
     "UNWIND $rows AS r MATCH (p) WHERE p.name = r.name "
     "SET p.born = r.born, p.tag = r.tag",

@@ -1120,6 +1120,12 @@ CONSTRUCT_RT_BUDGETS = {
     "g56_cypher_call_union": 427,
     "g57_cypher_pattern_comp": 1410,
     "g58_cypher_path_nodes": 1662,
+    "g62_cypher_call_topk": 600,
+    "g76_cypher_call_agg": 1014,
+    "g78_cypher_inline_props_chain": 1112,
+    "g80_cypher_call_agg_topk": 728,
+    "g81_cypher_optional_bound_map": 335,
+    "g86_cypher_call_agg_keyexpr": 678,
     "g88_cypher_varlength_count_subquery": 810,
 }
 
