@@ -3613,28 +3613,20 @@ def _common_single_var_conds(
     return out or None
 
 
-def _src_prefilter(df: DataFrame, var: str, conds: list[Cond]) -> DataFrame:
-    """Apply pushed-down single-variable conjuncts to a vertex frame
-    (3VL: null predicates do not match, same as the post-translation
-    WHERE)."""
-
-    def colmap(ref: PropRef) -> Column:
-        if ref.var != var:  # pragma: no cover - guarded by extraction
-            raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-        return F.col("id" if ref.prop is None else ref.prop)
-
-    return df.filter(
-        F.coalesce(
-            _where_to_column([list(conds)], colmap, set(df.columns), df),
-            F.lit(False),
-        )
-    )
+def _src_prefilter(
+    graph: PropertyGraph, df: DataFrame, var: str, conds: list[Cond]
+) -> DataFrame:
+    """Apply pushed-down single-variable conjuncts to a vertex frame of
+    ``graph``, resolved through the node's own scope (3VL: null
+    predicates do not match, same as the post-translation WHERE)."""
+    colmap = _scope_colmap(graph, {var: ("node", "")})
+    return df.filter(_where_to_column([list(conds)], colmap, set(df.columns), df))
 
 
 def _path_edges(graph: PropertyGraph, pat: EdgePat) -> DataFrame:
-    """The ``(id, src, dst)`` edge frame a variable-length expansion
-    walks, filtered to the pattern's relationship types. An
-    undirected pattern walks both stored orientations
+    """The ``(id, src, dst)`` edge frame a variable-length expansion or
+    the shortestPath BFS walks, filtered to the pattern's relationship
+    types. An undirected pattern walks both stored orientations
     (:func:`_both_orientations`), so an undirected self-loop matches once.
     Edge ids are preserved, so the relationship-isomorphism filters (the
     pairwise id inequality, the ``array_contains`` visited check) use a
@@ -3781,7 +3773,7 @@ def _varlength_paths_unbounded(
     if src_conds and pat.src.var is not None:
         # pushed-down source predicate: the expansion starts from the
         # MATCHED sources only (see _common_single_var_conds)
-        a_src = _src_prefilter(a_src, pat.src.var, src_conds)
+        a_src = _src_prefilter(graph, a_src, pat.src.var, src_conds)
     # level 0: the zero-length path of every source
     seeds = a_src.select(
         F.col("id").alias("__a"),
@@ -4359,20 +4351,9 @@ def _shortest_path(
     unbounded = hi is None
     if unbounded:
         hi = VAR_UNBOUNDED_MAX_ROUNDS
-    e = graph.edges
-    if pat.rel_type is not None:
-        e = e.filter(rel_type_cond(pat.rel_type))
-    ecols = [F.col("src").alias("__s"), F.col("dst").alias("__d")]
-    if carry_paths:
-        ecols.append(F.col("id").alias("__eid"))
-    e = e.select(*ecols)
-    if pat.undirected:
-        rcols = [F.col("__d").alias("__s"), F.col("__s").alias("__d")]
-        if carry_paths:
-            rcols.append(F.col("__eid"))
-        e = _both_orientations(
-            e, e.select(*rcols), F.col("__s"), F.col("__d")
-        )
+    e = _path_edges(graph, pat)
+    if not carry_paths:
+        e = e.select("src", "dst")
     vcols = graph.vertices.columns
     a_nodes = graph.nodes(pat.src.label)
     if src_conds and pat.src.var is not None:
@@ -4380,7 +4361,7 @@ def _shortest_path(
         # the BFS frontier starts from the MATCHED anchors only — at
         # scale this is the difference between one source and every
         # a-label node; the full WHERE still applies post-translation
-        a_nodes = _src_prefilter(a_nodes, pat.src.var, src_conds)
+        a_nodes = _src_prefilter(graph, a_nodes, pat.src.var, src_conds)
     init_cols = [
         F.col("id").alias("__a"),
         F.col("id").alias("__v"),
@@ -4431,8 +4412,8 @@ def _shortest_path(
                 aggs.append(
                     F.min(
                         F.struct(
-                            F.concat("__nodes", F.array(F.col("__d"))).alias("n"),
-                            F.concat("__rels", F.array(F.col("__eid"))).alias("r"),
+                            F.concat("__nodes", F.array(F.col("dst"))).alias("n"),
+                            F.concat("__rels", F.array(F.col("id"))).alias("r"),
                         )
                     ).alias("__rep")
                 )
@@ -4444,19 +4425,19 @@ def _shortest_path(
                         ALL_PATHS_TIE_CAP + 1,
                     ).alias("__paths")
                 )
-            joined = frontier.join(k.bc(e), F.col("__v") == F.col("__s"))
+            joined = frontier.join(k.bc(e), F.col("__v") == F.col("src"))
             if carry_all:
                 joined = joined.withColumn(
                     "__ext",
                     F.transform(
                         F.col("__paths"),
                         lambda pp: F.struct(
-                            F.concat(pp["n"], F.array(F.col("__d"))).alias("n"),
-                            F.concat(pp["r"], F.array(F.col("__eid"))).alias("r"),
+                            F.concat(pp["n"], F.array(F.col("dst"))).alias("n"),
+                            F.concat(pp["r"], F.array(F.col("id"))).alias("r"),
                         ),
                     ),
                 )
-            nxt = joined.groupBy("__a", F.col("__d").alias("__v")).agg(*aggs)
+            nxt = joined.groupBy("__a", F.col("dst").alias("__v")).agg(*aggs)
             if carry_rep:
                 nxt = nxt.select(
                     "__a",
@@ -4934,67 +4915,79 @@ def _bind_pattern_subqueries(
     return df, list(bound.values())
 
 
-def _contains_agg(x) -> bool:
-    """Deep test: does expression tree ``x`` contain an :class:`AggCall`
-    anywhere — including inside CASE branches, comprehension sources,
-    map/list constructors, and condition operands? The parser's top-level
-    ``isinstance`` checks miss nested aggregates now that composite
-    aggregate expressions parse; every clause that must REJECT aggregates
-    (WHERE, SET values, UNWIND) and every branch that must DETECT an
-    aggregating projection (implicit grouping, row-order carry) uses this
-    instead."""
-    if isinstance(x, AggCall):
+def _contains(x, kinds) -> bool:
+    """Deep test: does expression tree ``x`` contain a node of type
+    ``kinds`` anywhere — including inside CASE branches, comprehension
+    sources, map/list constructors, and condition operands? The parser's
+    top-level ``isinstance`` checks miss nested nodes now that composite
+    expressions parse; every clause that must REJECT aggregates (WHERE,
+    SET values, UNWIND), every branch that must DETECT an aggregating
+    projection (implicit grouping, row-order carry) and the bare writes'
+    test for a pattern subquery in WHERE use this instead."""
+    if isinstance(x, kinds):
         return True
     if isinstance(x, BinOp):
-        return _contains_agg(x.left) or _contains_agg(x.right)
+        return _contains(x.left, kinds) or _contains(x.right, kinds)
     if isinstance(x, FuncCall):
-        return _contains_agg(x.arg) or any(_contains_agg(a) for a in x.extra)
+        return _contains(x.arg, kinds) or any(_contains(a, kinds) for a in x.extra)
     if isinstance(x, CaseExpr):
         return (
             any(
-                _disj_contains_agg(disj) or _contains_agg(res)
+                _disj_contains(disj, kinds) or _contains(res, kinds)
                 for disj, res in x.whens
             )
-            or _contains_agg(x.default)
+            or _contains(x.default, kinds)
         )
     if isinstance(x, (IsNullExpr,)):
-        return _contains_agg(x.arg)
+        return _contains(x.arg, kinds)
     if isinstance(x, FieldAccess):
-        return _contains_agg(x.base)
+        return _contains(x.base, kinds)
     if isinstance(x, IndexExpr):
-        return _contains_agg(x.base) or _contains_agg(x.index)
+        return _contains(x.base, kinds) or _contains(x.index, kinds)
     if isinstance(x, SliceExpr):
-        return _contains_agg(x.base) or _contains_agg(x.lo) or _contains_agg(x.hi)
+        return (
+            _contains(x.base, kinds)
+            or _contains(x.lo, kinds)
+            or _contains(x.hi, kinds)
+        )
     if isinstance(x, ListComp):
         return (
-            _contains_agg(x.source)
-            or (x.pred is not None and _disj_contains_agg(x.pred))
-            or _contains_agg(x.expr)
+            _contains(x.source, kinds)
+            or (x.pred is not None and _disj_contains(x.pred, kinds))
+            or _contains(x.expr, kinds)
         )
     if isinstance(x, ReduceExpr):
         return (
-            _contains_agg(x.init)
-            or _contains_agg(x.source)
-            or _contains_agg(x.expr)
+            _contains(x.init, kinds)
+            or _contains(x.source, kinds)
+            or _contains(x.expr, kinds)
         )
     if isinstance(x, MapLit):
-        return any(_contains_agg(v) for _, v in x.entries)
+        return any(_contains(v, kinds) for _, v in x.entries)
     if isinstance(x, ListExpr):
-        return any(_contains_agg(v) for v in x.items)
+        return any(_contains(v, kinds) for v in x.items)
     if isinstance(x, MapProj):
-        return any(_contains_agg(v) for _, v in x.extras)
+        return any(_contains(v, kinds) for _, v in x.extras)
     if isinstance(x, Cond):
-        return _contains_agg(x.left) or _contains_agg(x.right)
+        return _contains(x.left, kinds) or _contains(x.right, kinds)
     return False
 
 
-def _disj_contains_agg(disj) -> bool:
+def _disj_contains(disj, kinds) -> bool:
     return any(
-        _contains_agg(cond)
+        _contains(cond, kinds)
         for conj in disj
         for cond in conj
         if not isinstance(cond, PatternCond)
     )
+
+
+def _contains_agg(x) -> bool:
+    return _contains(x, AggCall)
+
+
+def _disj_contains_agg(disj) -> bool:
+    return _disj_contains(disj, AggCall)
 
 
 def _is_literal_leaf(x) -> bool:
@@ -5224,9 +5217,9 @@ def _bare_colmap(
                         f"{ref.var!r} is not a node or relationship "
                         "variable in this scope"
                     )
-                return F.col(ref.var).getField("id")
+                return F.col(f"`{ref.var}`.`id`")
             if ref.prop in structs[ref.var]:
-                return F.col(ref.var).getField(ref.prop)
+                return F.col(f"`{ref.var}`.`{ref.prop}`")
             return F.lit(None)
         if (
             isinstance(ref, PropRef)
@@ -6582,7 +6575,9 @@ def cypher_write(
 
     Their SET lists take property items (``x.p = v``, ``x += {…}``).
 
-    Bare forms — no batch; the match set is the pattern and its WHERE:
+    Bare forms — no batch; the match set is the pattern and its WHERE,
+    which takes every read-side WHERE form (pattern predicates, EXISTS,
+    COUNT { }, comprehensions; :func:`_bare_match`):
 
     - ``MATCH (n[:L] [{k: v}]) [WHERE …] SET … | REMOVE …`` — ``n.p =
       <expr>``, ``n += {…}|$m``, ``n = {…}|$m`` (replace), ``n:L``;
@@ -7005,19 +7000,76 @@ def _label_columns(
     return cols
 
 
+def _bare_match(graph: PropertyGraph, pat: "NodePat | EdgePat", disj):
+    """The rows a bare write changes: ``(frame, matched, own)``, where
+    ``frame`` is the written table (``graph.vertices`` or
+    ``graph.edges``) or a left join over it, ``matched`` is the Column
+    that marks the pattern's rows (null reads as no match, as in
+    MATCH..WHERE) and ``own`` is the colmap of the target's own columns,
+    which SET values compile through. The WHERE is a read-side MATCH
+    WHERE; two plans:
+
+    - PLAIN (the WHERE reads only the target's own columns — no pattern
+      predicate, EXISTS, COUNT { } or comprehension — and an edge pattern
+      has no endpoint label and three distinct variables): ``matched``
+      is the label or type condition AND the WHERE compiled through
+      ``own``, so the write is ONE conditional projection over the table
+      (no join, no shuffle).
+    - otherwise the rows come from the read scope (:func:`_match_chain`
+      + :func:`_apply_scope_where`), and the distinct target ids are
+      marked back onto the table by ONE left equi-join on id — the same
+      shuffle the equivalent read costs."""
+    edge = isinstance(pat, EdgePat)
+    _assign_anon_vars([pat], _pattern_vars([pat]))
+    var = pat.var
+    table = graph.edges if edge else graph.vertices
+    own = _scope_colmap(graph, {var: ("edge" if edge else "node", "")})
+    refs: set[str] = set()
+    plain = True
+    if disj is not None:
+        _disj_vars(disj, refs)
+        subquery = (PatternCond, CountPattern, PatternComp)
+        plain = not any(_contains(c, subquery) for conj in disj for c in conj)
+    if edge:
+        plain = plain and (
+            pat.src.label is None
+            and pat.dst.label is None
+            and refs <= {var}
+            and len({var, pat.src.var, pat.dst.var}) == 3
+        )
+    if plain:
+        tag = pat.rel_type if edge else pat.label
+        kind = None
+        if tag is not None:
+            kind = rel_type_cond(tag) if edge else label_cond(table, tag)
+        matched = F.lit(True) if kind is None else kind
+        if disj is not None:
+            where = _where_to_column(disj, own, set(table.columns), table)
+            matched = where if kind is None else kind & where
+        return table, matched, own
+    df, colmap = _match_chain(
+        graph, [pat], [[pat]], [] if disj is None else [disj]
+    )
+    df = _apply_scope_where(df, colmap, disj)
+    ids = df.select(colmap(PropRef(var, None)).alias("__mid")).distinct()
+    frame = table.join(ids, F.col("id") == F.col("__mid"), "left")
+    return frame, F.col("__mid").isNotNull(), own
+
+
 def _bare_write(graph: PropertyGraph, p: _Parser) -> PropertyGraph:
     """Predicate-addressed interactive writes (no UNWIND batch):
 
-    - ``MATCH (n[:L]) [WHERE ...] [DETACH] DELETE n`` — filtered id
-      projection fed to :meth:`PropertyGraph.delete_nodes`, so plain
-      DELETE keeps Neo4j's still-has-relationships refusal and DETACH
-      cascades to incident edges.
+    - ``MATCH (n[:L]) [WHERE ...] [DETACH] DELETE n`` — the matched ids
+      fed to :meth:`PropertyGraph.delete_nodes`, so plain DELETE keeps
+      Neo4j's still-has-relationships refusal and DETACH cascades to
+      incident edges.
     - ``MATCH (n[:L]) [WHERE ...] SET ... | REMOVE ...`` (the items of
-      :func:`_parse_set_list`) — ONE conditional projection over the
-      vertex frame (:func:`assign_where`; no join, no shuffle: the match
-      set is a predicate over the same rows being updated). ``SET n.p =
-      null`` removes the property, per Neo4j; ``REMOVE n.p`` is sugar for
-      it.
+      :func:`_parse_set_list`) — one conditional projection
+      (:func:`assign_where`) over the vertex frame. ``SET n.p = null``
+      removes the property, per Neo4j; ``REMOVE n.p`` is sugar for it.
+
+    The WHERE takes every read-side form; :func:`_bare_match` finds the
+    rows.
     """
     p.expect("kw", "MATCH")
     target = p.parse_pattern()
@@ -7036,11 +7088,6 @@ def _bare_write(graph: PropertyGraph, p: _Parser) -> PropertyGraph:
     # is (n:L) WHERE n.k = v SET ...
     disj = _and_into(disj, _desugar_inline_props([target], {target.var}))
 
-    def colmap(ref: PropRef) -> Column:
-        if ref.var != target.var:
-            raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-        return F.col("id" if ref.prop is None else ref.prop)
-
     if p.at("kw", "SET") or p.at("kw", "REMOVE"):
         removing = p.next().text == "REMOVE"
         sl = _parse_set_list(
@@ -7048,18 +7095,13 @@ def _bare_write(graph: PropertyGraph, p: _Parser) -> PropertyGraph:
         )
         p.expect_end()
         v = graph.vertices
-        matched = F.lit(True)
-        if target.label is not None:
-            matched = label_cond(v, target.label)
-        if disj is not None:
-            # 3VL: a null predicate does not match, as in MATCH..WHERE
-            matched = matched & F.coalesce(
-                _where_to_column(disj, colmap, set(v.columns), v), F.lit(False)
-            )
-        cols = _set_columns(sl, v, colmap, VERTEX_STRUCTURAL)
+        frame, matched, own = _bare_match(graph, target, disj)
+        cols = _set_columns(sl, v, own, VERTEX_STRUCTURAL)
         if sl.add_labels or sl.remove_labels:
             cols.update(_label_columns(v, sl.add_labels, sl.remove_labels))
-        return PropertyGraph(assign_where(v, matched, cols), graph.edges)
+        return PropertyGraph(
+            assign_where(frame, matched, cols, v.columns), graph.edges
+        )
 
     detach = False
     if p.at("kw", "DETACH"):
@@ -7070,17 +7112,12 @@ def _bare_write(graph: PropertyGraph, p: _Parser) -> PropertyGraph:
     if var != target.var:
         raise CypherSyntaxError(f"DELETE target must be {target.var!r}")
     p.expect_end()
-
-    df = graph.nodes(target.label)
-    if disj is not None:
-        df = df.filter(_where_to_column(disj, colmap, set(df.columns), df))
-    return graph.delete_nodes(df.select("id"), detach=detach)
+    frame, matched, _ = _bare_match(graph, target, disj)
+    return graph.delete_nodes(frame.filter(matched).select("id"), detach=detach)
 
 
 def _bare_edge_write(graph: PropertyGraph, p: _Parser, pat: EdgePat) -> PropertyGraph:
-    """Relationship-property writes through the front end (round-6 verdict
-    ask #4 — ``MATCH (a)-[e:T]->(b) SET e.w = 1`` previously had no path;
-    edge properties were writable only at CREATE/MERGE):
+    """Relationship-property writes through the front end:
 
     - ``MATCH (a[:L1])-[e:T]->(b[:L2]) [WHERE …] SET e.p = <expr>, …``
     - ``SET e += {map}`` (merge) / ``SET e = {map}`` (replace: unlisted
@@ -7088,18 +7125,9 @@ def _bare_edge_write(graph: PropertyGraph, p: _Parser, pat: EdgePat) -> Property
     - ``… REMOVE e.p, …`` — sugar for SET-null
     - ``… DELETE e`` — one anti-join on edge id (:meth:`delete_edges`)
 
-    Mirrors the bare node SET contract (X176). Two plans:
-
-    - FAST PATH (no endpoint labels, WHERE over the edge variable only):
-      ONE conditional projection over the edge frame — no join, no
-      shuffle, exactly the node-SET shape.
-    - endpoint-constrained (a label or an a/b reference in WHERE): the
-      matched edge-id set comes from the expand frame (two equi-joins
-      Catalyst broadcasts on label-restricted sides), marked back onto
-      the edge frame by ONE equi-join on edge id; the update itself is
-      still a single conditional projection — at 100 TB this is the same
-      shuffle any edge-predicate read costs.
-
+    The rows come from :func:`_bare_match`, as for the node forms: one
+    conditional projection over the edge frame when the WHERE reads the
+    edge alone, else the read scope's edge ids marked back by one join.
     SET right-hand sides evaluate against the edge's PRE-update
     properties (``SET e.w = e.w + 1``); endpoint properties in SET
     values raise loudly (match them in WHERE, or carry values via an
@@ -7118,23 +7146,12 @@ def _bare_edge_write(graph: PropertyGraph, p: _Parser, pat: EdgePat) -> Property
     evar = pat.var
     if evar is None:
         raise CypherSyntaxError("the edge write pattern needs an edge variable")
-    avar, bvar = pat.src.var, pat.dst.var
     disj = None
     if p.at("kw", "WHERE"):
         p.next()
         disj = p.parse_where()
-    taken = {v for v in (evar, avar, bvar) if v is not None}
-    disj = _and_into(disj, _desugar_inline_props([pat], taken))
-    avar, bvar = pat.src.var, pat.dst.var  # desugar names anonymous endpoints
+    disj = _and_into(disj, _desugar_inline_props([pat], _pattern_vars([pat])))
 
-    refs: set[str] = set()
-    if disj is not None:
-        _disj_vars(disj, refs)
-    unknown = refs - {evar, avar, bvar}
-    if unknown:
-        raise CypherSyntaxError(f"unknown variable {sorted(unknown)[0]!r}")
-
-    # ---- parse the write clause ------------------------------------------
     if p.at("kw", "DELETE") or p.at("kw", "DETACH"):
         if p.at("kw", "DETACH"):
             raise CypherSyntaxError(
@@ -7146,85 +7163,28 @@ def _bare_edge_write(graph: PropertyGraph, p: _Parser, pat: EdgePat) -> Property
         if var != evar:
             raise CypherSyntaxError(f"DELETE target must be {evar!r}")
         p.expect_end()
-        sl = None
-    else:
-        if not (p.at("kw", "SET") or p.at("kw", "REMOVE")):
+        frame, matched, _ = _bare_match(graph, pat, disj)
+        return graph.delete_edges(frame.filter(matched).select("id"))
+    if not (p.at("kw", "SET") or p.at("kw", "REMOVE")):
+        raise CypherSyntaxError(
+            "expected SET, REMOVE or DELETE after the edge pattern"
+        )
+    removing = p.next().text == "REMOVE"
+    sl = _parse_set_list(p, evar, EDGE_STRUCTURAL, lambda: _set_expr(p), removing)
+    p.expect_end()
+    # SET values read the edge's own pre-update state only
+    for val in sl.values.values():
+        vrefs: set[str] = set()
+        _expr_vars(val, vrefs)
+        if vrefs - {evar}:
             raise CypherSyntaxError(
-                "expected SET, REMOVE or DELETE after the edge pattern"
+                "SET values may reference the edge's own properties "
+                f"only ({evar!r}); endpoint values need an UNWIND batch"
             )
-        removing = p.next().text == "REMOVE"
-        sl = _parse_set_list(
-            p, evar, EDGE_STRUCTURAL, lambda: _set_expr(p), removing
-        )
-        p.expect_end()
-        # SET values read the edge's own pre-update state only
-        for val in sl.values.values():
-            vrefs: set[str] = set()
-            _expr_vars(val, vrefs)
-            if vrefs - {evar}:
-                raise CypherSyntaxError(
-                    "SET values may reference the edge's own properties "
-                    f"only ({evar!r}); endpoint values need an UNWIND batch"
-                )
-
-    # ---- build the matched predicate --------------------------------------
     e = graph.edges
-    have = set(e.columns)
-    fast = (
-        pat.src.label is None
-        and pat.dst.label is None
-        and refs <= {evar}
-    )
-
-    def edge_col(ref: PropRef, prefix: str = "") -> Column:
-        return F.col(f"{prefix}{'id' if ref.prop is None else ref.prop}")
-
-    def ecolmap(ref: PropRef) -> Column:
-        if ref.var != evar:
-            raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-        return edge_col(ref)
-
-    if fast:
-        matched = (
-            rel_type_cond(pat.rel_type)
-            if pat.rel_type is not None
-            else F.lit(True)
-        )
-        if disj is not None:
-            # pass the edge frame so computed WHERE operands (e.w % 2 = 0)
-            # resolve here exactly as they do on the expand path
-            matched = matched & F.coalesce(
-                _where_to_column(disj, ecolmap, have, e), F.lit(False)
-            )
-        frame = e
-    else:
-        exp = graph.expand(pat.src.label, pat.rel_type, pat.dst.label)
-
-        def xcolmap(ref: PropRef) -> Column:
-            if ref.var == evar:
-                return edge_col(ref)
-            if avar is not None and ref.var == avar:
-                return edge_col(ref, "a_")
-            if bvar is not None and ref.var == bvar:
-                return edge_col(ref, "b_")
-            raise CypherSyntaxError(f"unknown variable {ref.var!r}")
-
-        if disj is not None:
-            exp = exp.filter(
-                _where_to_column(disj, xcolmap, set(exp.columns), exp)
-            )
-        ids = exp.select(F.col("id").alias("__mid")).distinct()
-        frame = e.join(ids, e["id"] == F.col("__mid"), "left")
-        matched = F.col("__mid").isNotNull()
-
-    if sl is None:  # DELETE e
-        doomed = frame.filter(matched).select("id")
-        return graph.delete_edges(doomed)
-
-    cols = _set_columns(sl, e, ecolmap, EDGE_STRUCTURAL)
-    return PropertyGraph(
-        graph.vertices, assign_where(frame, matched, cols, e.columns)
-    )
+    frame, matched, own = _bare_match(graph, pat, disj)
+    cols = _set_columns(sl, e, own, EDGE_STRUCTURAL)
+    return PropertyGraph(graph.vertices, assign_where(frame, matched, cols, e.columns))
 
 
 @_typed_analysis_errors

@@ -5490,6 +5490,79 @@ def test_edge_set_fast_path_computed_where(edge_write_graph):
     ) == [(2001, None), (2002, True)]
 
 
+@pytest.fixture(scope="module")
+def bare_write_graph(spark):
+    # a K chain A->B->C, an L edge closing the cycle and a K self-loop on
+    # D, so every predicate below matches some rows and misses others
+    return cypher_create_graph(
+        spark,
+        "CREATE (a:U {name: 'A'}), (b:U {name: 'B'}), (c:U {name: 'C'}), "
+        "(d:U {name: 'D'}), (a)-[:K {w: 1}]->(b), (b)-[:K {w: 2}]->(c), "
+        "(c)-[:L {w: 3}]->(a), (d)-[:K {w: 4}]->(d)",
+    )
+
+
+@pytest.mark.parametrize(
+    "match, var, write",
+    [
+        pytest.param(
+            "MATCH (n:U) WHERE (n)-[:K]->()", "n", "SET n.x = 1",
+            id="node-set-pattern-predicate",
+        ),
+        pytest.param(
+            "MATCH (n:U) WHERE NOT (n)-[:K]->()", "n", "DETACH DELETE n",
+            id="node-detach-delete-negated-pattern",
+        ),
+        pytest.param(
+            "MATCH (n:U) WHERE COUNT { (n)-[:K]->() } >= 1", "n",
+            "SET n.x = 1", id="node-set-count-subquery",
+        ),
+        pytest.param(
+            "MATCH (n:U) WHERE EXISTS { (n)-[:K]->() }", "n", "SET n.x = 1",
+            id="node-set-exists",
+        ),
+        pytest.param(
+            "MATCH (a:U)-[e:K]->(b) WHERE (b)-[:K]->()", "e", "SET e.x = 1",
+            id="edge-set-endpoint-pattern-predicate",
+        ),
+        pytest.param(
+            "MATCH (n:U) WHERE n.name = 'A'", "n", "SET n.x = 1",
+            id="node-set-plain",
+        ),
+        pytest.param(
+            "MATCH ()-[e:K]->() WHERE e.w = 2", "e", "SET e.x = 1",
+            id="edge-set-plain",
+        ),
+        pytest.param(
+            "MATCH (a:U)-[e:K]->(b:U) WHERE b.name = 'C'", "e", "SET e.x = 1",
+            id="edge-set-endpoint-label",
+        ),
+        pytest.param(
+            "MATCH (a)-[e:K]->(a)", "e", "SET e.x = 1",
+            id="edge-set-self-loop-pattern",
+        ),
+    ],
+)
+def test_bare_write_where_matches_read(bare_write_graph, match, var, write):
+    # a bare write's MATCH is a read: the ids it changes are exactly the
+    # ids the same MATCH … WHERE returns
+    g = bare_write_graph
+    want = {
+        r[0]
+        for r in cypher_read(g, f"{match} RETURN id({var}) AS i").collect()
+    }
+    g2 = cypher_write(g, f"{match} {write}")
+    if write.startswith("DETACH"):
+        changed = {r[0] for r in g.vertices.select("id").collect()} - {
+            r[0] for r in g2.vertices.select("id").collect()
+        }
+    else:
+        table = g2.edges if var == "e" else g2.vertices
+        changed = {r[0] for r in table.filter("x IS NOT NULL").select("id").collect()}
+    assert want
+    assert changed == want
+
+
 # --- allShortestPaths accessors: capped tie enumeration (round-7) ---
 
 

@@ -360,8 +360,9 @@ EXEC_READ_CORPUS = [
 ]
 
 #: write surface (X184 label mutation, X176 bare SET, X237 edge writes).
-#: Bare node DELETE is excluded: its still-has-relationships check runs an
-#: eager count per attempt (a Spark job per hypothesis example).
+#: Plain bare node DELETE is excluded: its still-has-relationships check
+#: runs an eager count per attempt (a Spark job per hypothesis example);
+#: DETACH DELETE runs none.
 EXEC_WRITE_CORPUS = [
     "MATCH (n:User) WHERE n.born = 1984 SET n:Archived:Vip, n.flag = true",
     "MATCH (n:User {name: 'Alice'}) REMOVE n:User",
@@ -371,6 +372,10 @@ EXEC_WRITE_CORPUS = [
     "MATCH (a:User)-[e:KNOWS]->(b:User) WHERE b.name = 'Bob' REMOVE e.since",
     "MATCH ()-[e:KNOWS {since: 2001}]->() SET e += {w: 2, note: 'dup'}",
     "MATCH ()-[e:KNOWS]->() DELETE e",
+    # bare writes whose WHERE needs the read scope
+    "MATCH (n:User) WHERE (n)-[:KNOWS]->() SET n.flag = true",
+    "MATCH (n:User) WHERE COUNT { (n)-[:KNOWS]->() } = 0 DETACH DELETE n",
+    "MATCH (a:User)-[e:KNOWS]->(b) WHERE (b)-[:KNOWS]->() SET e.w = 1",
     "FOREACH (i IN [1, 2.5] | CREATE (:Batch {n: i, sq: i * i}))",
     # the UNWIND batch forms, all fed WRITE_ROWS
     "UNWIND $rows AS r MATCH (p) WHERE p.name = r.name "
