@@ -110,6 +110,23 @@ def session_memo(spark: SparkSession, key: tuple, builder):
     return cache[key]
 
 
+def frame_memo(frame: DataFrame, key, builder):
+    """Memoize a value derived from one DataFrame on that DataFrame — the
+    per-frame twin of :func:`session_memo` (project once per graph: a
+    path kernel's checkpointed edge set and its count, a table's
+    ``max(id)``).
+
+    The value is stored on the frame object, so it lives exactly as long
+    as the frame. A DataFrame is an immutable plan, and every write
+    returns a graph over NEW frames, so a value memoized on the old frame
+    can never be read for the new one: there is nothing to invalidate.
+    """
+    cache = frame.__dict__.setdefault("_fns_frame_memo", {})
+    if key not in cache:
+        cache[key] = builder()
+    return cache[key]
+
+
 def parallelize_for_compute(df: DataFrame) -> DataFrame:
     """Round-robin repartition up to ``defaultParallelism`` when the scan
     yields fewer partitions than cores.

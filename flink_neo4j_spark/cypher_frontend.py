@@ -67,7 +67,7 @@ from __future__ import annotations
 
 import math
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields, is_dataclass
 from dataclasses import replace as dc_replace
 from typing import Any
 
@@ -82,6 +82,7 @@ from flink_neo4j_spark.graph import (
     PropertyGraph,
     assign_where,
     label_cond,
+    local_frame,
     prefixed,
     rel_type_cond,
 )
@@ -3645,6 +3646,28 @@ def _path_edges(graph: PropertyGraph, pat: EdgePat) -> DataFrame:
     return e
 
 
+def _walk_edges(
+    graph: PropertyGraph, pat: EdgePat, narrow: bool
+) -> tuple[DataFrame, int]:
+    """The edge frame an iterative path kernel walks — :func:`_path_edges`,
+    cut to ``(src, dst)`` when ``narrow`` — checkpointed and counted ONCE
+    per edge frame (:func:`~flink_neo4j_spark.catalog.frame_memo`): every
+    shortestPath or unbounded ``*`` over the same graph reuses it, and a
+    write's new graph builds its own. The checkpoint is lazy; the count
+    materializes it. Returns ``(edges, row count)``."""
+    from flink_neo4j_spark.catalog import frame_memo
+
+    def build() -> tuple[DataFrame, int]:
+        e = _path_edges(graph, pat)
+        if narrow:
+            e = e.select("src", "dst")
+        e = e.localCheckpoint(eager=False)
+        return e, e.count()
+
+    key = ("walk_edges", pat.rel_type, pat.undirected, narrow)
+    return frame_memo(graph.edges, key, build)
+
+
 def _varlength_paths(
     graph: PropertyGraph,
     pat: EdgePat,
@@ -3767,7 +3790,6 @@ def _varlength_paths_unbounded(
     Output contract is identical to the bounded union-of-chains frame
     (see :func:`_varlength_paths`).
     """
-    e = _path_edges(graph, pat)
     vcols = graph.vertices.columns
     a_src = graph.nodes(pat.src.label)
     if src_conds and pat.src.var is not None:
@@ -3782,14 +3804,13 @@ def _varlength_paths_unbounded(
         F.array("id").alias("__nodes"),
         F.lit(0).alias("__len"),
     )
-    # the edge list is checkpointed ONCE and the kernel sized by
-    # max(|e|, frontier), so a tiny frontier on a huge graph never forces
-    # the edge shuffle narrow; rows carry node/edge-id arrays, hence the
-    # smaller PATH_STATE_ROWS_PER_PARTITION target
+    # the edge list is checkpointed ONCE per graph and the kernel sized
+    # by max(|e|, frontier), so a tiny frontier on a huge graph never
+    # forces the edge shuffle narrow; rows carry node/edge-id arrays,
+    # hence the smaller PATH_STATE_ROWS_PER_PARTITION target
     from flink_neo4j_spark.tuning import frontier_levels, iter_kernel
 
-    e = e.localCheckpoint()
-    n_e = e.count()
+    e, n_e = _walk_edges(graph, pat, narrow=False)
     with iter_kernel(
         e.sparkSession, n_e, rows_per_partition=PATH_STATE_ROWS_PER_PARTITION
     ) as k:
@@ -4351,9 +4372,6 @@ def _shortest_path(
     unbounded = hi is None
     if unbounded:
         hi = VAR_UNBOUNDED_MAX_ROUNDS
-    e = _path_edges(graph, pat)
-    if not carry_paths:
-        e = e.select("src", "dst")
     vcols = graph.vertices.columns
     a_nodes = graph.nodes(pat.src.label)
     if src_conds and pat.src.var is not None:
@@ -4390,16 +4408,17 @@ def _shortest_path(
                 )
             ).alias("__paths")
         )
-    # edges checkpointed once, kernel sized by max(|e|, frontier) with
-    # the path-state row target (as in _varlength_paths_unbounded)
+    # edges checkpointed once per graph, kernel sized by max(|e|,
+    # frontier) with the path-state row target (as in
+    # _varlength_paths_unbounded); the seeds' checkpoint is lazy — the
+    # level-1 count materializes it
     from flink_neo4j_spark.tuning import frontier_levels, iter_kernel
 
-    e = e.localCheckpoint()
-    n_e = e.count()
+    e, n_e = _walk_edges(graph, pat, narrow=not carry_paths)
     with iter_kernel(
         e.sparkSession, n_e, rows_per_partition=PATH_STATE_ROWS_PER_PARTITION
     ) as k:
-        seeds = a_nodes.select(*init_cols).localCheckpoint()
+        seeds = a_nodes.select(*init_cols).localCheckpoint(eager=False)
 
         def expand(frontier: DataFrame) -> DataFrame:
             # every frontier row has the same __len; aggregating it keeps
@@ -4887,14 +4906,18 @@ def _bind_pattern_subqueries(
         return RawCol(name)
 
     def rewrite(expr):
+        # every expression node, CASE branches, list and map entries
+        # included; a pattern predicate's own inner scope is not ours
         if isinstance(expr, (CountPattern, PatternComp)):
             return bind(expr)
-        if isinstance(expr, BinOp):
-            return BinOp(expr.op, rewrite(expr.left), rewrite(expr.right))
-        if isinstance(expr, FuncCall):
-            return FuncCall(
-                expr.fn, rewrite(expr.arg), tuple(rewrite(a) for a in expr.extra)
-            )
+        if isinstance(expr, (list, tuple)):
+            new = [rewrite(v) for v in expr]
+            changed = any(n is not v for n, v in zip(new, expr))
+            return type(expr)(new) if changed else expr
+        if is_dataclass(expr) and not isinstance(expr, PatternCond):
+            new = {f.name: rewrite(getattr(expr, f.name)) for f in fields(expr)}
+            if any(v is not getattr(expr, k) for k, v in new.items()):
+                return dc_replace(expr, **new)
         return expr
 
     if items is not None:
@@ -5295,6 +5318,20 @@ def _expand_star(items: list[ReturnItem], colmap, clause: str) -> list[ReturnIte
     return out
 
 
+def _local_rows(spark, rows: list[dict], clause: str) -> DataFrame:
+    """The literal rows of a batch, list or CREATE pattern as one local
+    frame (:func:`~flink_neo4j_spark.graph.local_frame`). A value that
+    fits no single column type — values of different kinds under one
+    key, an integer beyond 64 bits, a key null in every row — is a typed
+    error, never a silently stringified or nulled value."""
+    try:
+        return local_frame(spark, rows)
+    except TypeError as e:
+        raise CypherSyntaxError(
+            f"{clause} values must be type-consistent per key: {e}"
+        ) from None
+
+
 def _list_source(p: "_Parser", spark, clause: str):
     """The row source of ``UNWIND <list> AS x`` and ``FOREACH (x IN
     <list> | …)``, parsed at the parser's position: ``range(lo, hi[,
@@ -5389,13 +5426,7 @@ def _list_source(p: "_Parser", spark, clause: str):
             }
             for v in vals
         ]
-        try:
-            flat = spark.createDataFrame(rows)
-        except Exception:
-            raise CypherSyntaxError(
-                f"{clause} map-list values must be type-consistent "
-                "per key (and no key may be null in every map)"
-            ) from None
+        flat = _local_rows(spark, rows, f"{clause} map-list")
         row = F.when(
             ~F.col("__isnull__"), F.struct(*[F.col(k) for k in allkeys])
         )
@@ -5682,14 +5713,7 @@ def _apply_scope_where(df: DataFrame, colmap, disj) -> DataFrame:
         rest = [c for c in disj[0] if not isinstance(c, PatternCond)]
         disj = [rest] if rest else None
     helpers: list[str] = []
-    if disj is not None and any(
-        isinstance(c.left, (CountPattern, PatternComp))
-        or isinstance(c.right, (CountPattern, PatternComp))
-        or isinstance(c.left, (BinOp, FuncCall))
-        or isinstance(c.right, (BinOp, FuncCall))
-        for conj in disj
-        for c in conj
-    ):
+    if disj is not None and _disj_contains(disj, (CountPattern, PatternComp)):
         df, helpers = _bind_pattern_subqueries(df, colmap, None, disj)
     if disj is not None:
         df = df.filter(_where_to_column(disj, colmap, set(df.columns), df))
@@ -6626,10 +6650,9 @@ def cypher_write(
         data = [
             {k: _resolve(v, row) for k, v in node.props.items()} for row in rows
         ]
-        batch = spark.createDataFrame(data) if data else None
-        if batch is None:
+        if not data:
             return graph
-        return graph.create_nodes(batch, node.label)
+        return graph.create_nodes(_local_rows(spark, data, "UNWIND"), node.label)
 
     if p.at("kw", "MERGE"):
         # UNWIND $rows AS r MERGE (n:L {k: r.k})
@@ -6674,14 +6697,13 @@ def cypher_write(
         ]
         if not data:
             return graph
+        batch = _local_rows(spark, data, "UNWIND")
         if not arm_create and not arm_match:
-            return graph.merge_nodes(
-                spark.createDataFrame(data), node.label, key
-            )
+            return graph.merge_nodes(batch, node.label, key)
         create_map = {c: c for c in both} | {c: f"__oc_{c}" for c in arm_create}
         match_map = {c: c for c in both} | {c: f"__om_{c}" for c in arm_match}
         return graph.merge_nodes(
-            spark.createDataFrame(data),
+            batch,
             node.label,
             key,
             on_create=create_map,
@@ -6793,7 +6815,7 @@ def cypher_write(
             return graph
         spark = graph.vertices.sparkSession
         eps = graph._resolve_endpoints(
-            spark.createDataFrame(data),
+            _local_rows(spark, data, "UNWIND"),
             src_node.label, akey, "__a",
             dst_node.label, bkey, "__b",
         )
@@ -6828,7 +6850,7 @@ def cypher_write(
         if not data:
             return graph
         spark = graph.vertices.sparkSession
-        batch = spark.createDataFrame(data)
+        batch = _local_rows(spark, data, "UNWIND")
         ids = (
             graph.vertices.filter(label_cond(graph.vertices, target.label))
             .join(batch, graph.vertices[key] == batch["__k"], "left_semi")
@@ -6865,7 +6887,7 @@ def cypher_write(
         return graph
     if target.label is not None:
         raise CypherSyntaxError("labeled MATCH in update not supported (B8 is unlabeled)")
-    return graph.update_nodes(spark.createDataFrame(data), key)
+    return graph.update_nodes(_local_rows(spark, data, "UNWIND"), key)
 
 
 def _foreach_write(graph: PropertyGraph, p: _Parser) -> PropertyGraph:
@@ -7257,10 +7279,10 @@ def cypher_create_graph(spark, query: str) -> PropertyGraph:
          "rel_type": e.rel_type or "REL", **{c: e.props.get(c) for c in ecols}}
         for i, (s, d, e) in enumerate(edges)
     ]
-    v = spark.createDataFrame(vrows)
+    v = _local_rows(spark, vrows, "CREATE")
     e = (
-        spark.createDataFrame(erows)
+        _local_rows(spark, erows, "CREATE")
         if erows
-        else spark.createDataFrame([], "id long, src long, dst long, rel_type string")
+        else local_frame(spark, [], "id long, src long, dst long, rel_type string")
     )
     return PropertyGraph(v, e)

@@ -135,30 +135,102 @@ def check_write_batch(
             )
 
 
-def _allocate_ids(new: DataFrame, base: DataFrame) -> DataFrame:
-    """Assign dense ids ``max(id)+1 .. max(id)+count`` to a write batch and
+def local_frame(
+    spark: SparkSession, rows: list, schema: str | None = None
+) -> DataFrame:
+    """A driver-side row list (a write batch, an UNWIND list, a fixture)
+    as a Spark ``LocalRelation``: the rows travel to the JVM as one Arrow
+    table, so every scan of the frame runs in the JVM alone (a
+    ``createDataFrame(list)`` frame starts a Python worker task per
+    partition on every scan) and the optimizer sees its exact size.
+
+    ``rows`` are tuples in the column order of a DDL ``schema``, whose
+    types the values are converted to, or dicts without one. Then the
+    columns are the sorted union of the dict keys (a key missing from a
+    row reads null) and each column's type is inferred from all of its
+    values. A value that fits no single type raises
+    ``TypeError`` naming the column: values of different kinds under one
+    key (int mixed with float included: Spark's own row inference never
+    promotes), an integer beyond 64 bits, and a column whose type cannot
+    be known — null in every row, or only empty lists."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if schema is not None:
+        struct = StructType.fromDDL(schema)
+        dicts = [dict(zip(struct.names, r)) for r in rows]
+        table = pa.Table.from_pylist(dicts, schema=to_arrow_schema(struct))
+        return spark.createDataFrame(table, struct)
+    columns = {}
+    for name in sorted({k for r in rows for k in r}):
+        values = [r.get(name) for r in rows]
+        try:
+            col = pa.array(values)
+        except OverflowError:
+            raise TypeError(
+                f"column {name!r} holds an integer beyond 64 bits"
+            ) from None
+        except (pa.ArrowInvalid, pa.ArrowTypeError) as e:
+            raise TypeError(f"column {name!r} has no single type: {e}") from None
+        t = col.type
+        while pa.types.is_list(t):
+            t = t.value_type
+        if pa.types.is_null(t):
+            raise TypeError(
+                f"cannot determine the type of column {name!r}: its values "
+                "are null or empty lists in every row"
+            )
+        if pa.types.is_floating(t) and _holds_int(values):
+            raise TypeError(f"column {name!r} mixes integers and floats")
+        columns[name] = col
+    return spark.createDataFrame(pa.Table.from_pydict(columns))
+
+
+def _holds_int(values) -> bool:
+    """Does ``values`` (lists searched too) hold a Python ``int``?"""
+    return any(
+        _holds_int(v) if isinstance(v, list)
+        else isinstance(v, int) and not isinstance(v, bool)
+        for v in values
+    )
+
+
+def _max_id(frame: DataFrame) -> int:
+    """``max(id)`` of a graph table (0 when it is empty), computed once
+    per frame (:func:`~flink_neo4j_spark.catalog.frame_memo`)."""
+    from flink_neo4j_spark.catalog import frame_memo
+
+    return frame_memo(
+        frame, "max_id", lambda: frame.agg(F.max("id")).first()[0] or 0
+    )
+
+
+def _allocate_ids(new: DataFrame, base: int) -> DataFrame:
+    """Assign dense ids ``base+1 .. base+count`` to a write batch and
     MATERIALIZE the assignment.
 
-    Two properties a lazy ``monotonically_increasing_id`` plan does not
-    give: (1) **stability** — without materialization, separate actions on
-    the returned graph can recompute the batch under a different partition
-    layout (AQE re-plan) and hand the same row a different id;
-    ``localCheckpoint`` freezes the assignment the way the memoized
-    projections do. (2) **density** — mono-id strides by partition<<33, so
-    every write would inflate ``max(id)`` by ~numPartitions·2³³,
-    compounding across successive writes. The global ``row_number`` window
-    is a deliberate single-partition pass over the BATCH ONLY (UNWIND write
-    batches are micro-batch-sized by contract — the reference caps them at
-    ``batchSize`` rows, `Neo4jOutputFormat.java:142-160`); the base table
-    never shuffles.
+    ``base`` is the target table's ``max(id)`` as a driver-side scalar
+    (:func:`_max_id`), so the assignment reads no other table: a write
+    on a frame whose maximum is already known fires only this
+    checkpoint's jobs. Two properties a lazy ``monotonically_increasing_id``
+    plan does not give: (1) **stability** — without materialization,
+    separate actions on the returned graph can recompute the batch under
+    a different partition layout (AQE re-plan) and hand the same row a
+    different id; ``localCheckpoint`` freezes the assignment the way the
+    memoized projections do. (2) **density** — mono-id strides by
+    partition<<33, so every write would inflate ``max(id)`` by
+    ~numPartitions·2³³, compounding across successive writes. The global
+    ``row_number`` window is a deliberate single-partition pass over the
+    BATCH ONLY (UNWIND write batches are micro-batch-sized by contract —
+    the reference caps them at ``batchSize`` rows,
+    `Neo4jOutputFormat.java:142-160`); the base table never shuffles.
     """
     w = Window.orderBy("_off")
     return (
         new.withColumn("_off", F.monotonically_increasing_id())
-        .withColumn("_rn", F.row_number().over(w))
-        .crossJoin(F.broadcast(base))
-        .withColumn("id", F.col("m") + F.col("_rn"))
-        .drop("m", "_off", "_rn")
+        .withColumn("id", F.lit(base).cast("long") + F.row_number().over(w))
+        .drop("_off")
         .localCheckpoint()
     )
 
@@ -202,8 +274,8 @@ class PropertyGraph:
         """Fixture ingest — the analogue of the reference's Cypher CREATE
         fixture (`Neo4jFormatTest.java:14-19`, capability B9)."""
         return cls(
-            spark.createDataFrame(vertex_rows, vertex_schema),
-            spark.createDataFrame(edge_rows, edge_schema),
+            local_frame(spark, vertex_rows, vertex_schema),
+            local_frame(spark, edge_rows, edge_schema),
         )
 
     @classmethod
@@ -295,11 +367,13 @@ class PropertyGraph:
 
         New ids are allocated dense above the current max without
         collect-gaps (see :func:`_allocate_ids`); the max-id base is a
-        scalar agg (one tiny job, no row data to driver).
+        scalar agg (one tiny job, no row data to driver), taken once per
+        vertex frame.
         """
         check_write_batch(batch)
-        base = self.vertices.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m"))
-        new = _allocate_ids(batch.withColumn("label", F.lit(label)), base)
+        new = _allocate_ids(
+            batch.withColumn("label", F.lit(label)), _max_id(self.vertices)
+        )
         merged = self.vertices.unionByName(new, allowMissingColumns=True)
         return PropertyGraph(merged, self.edges)
 
@@ -428,11 +502,11 @@ class PropertyGraph:
         # Same id-allocation path as :meth:`create_nodes`, except the
         # max-id base reads the PRE-projection vertex table: the matched
         # arm's conditional projection never touches ``id``, so the
-        # maximum is identical — and the scalar agg no longer re-executes
-        # the update join on every later allocation in a composed
-        # write→write lineage.
-        base = self.vertices.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m"))
-        new = _allocate_ids(inserts.withColumn("label", F.lit(label)), base)
+        # maximum is identical — and the scalar agg never re-executes the
+        # update join.
+        new = _allocate_ids(
+            inserts.withColumn("label", F.lit(label)), _max_id(self.vertices)
+        )
         merged = updated.unionByName(new, allowMissingColumns=True)
         return PropertyGraph(merged, self.edges)
 
@@ -523,10 +597,9 @@ class PropertyGraph:
         edge properties (schema widens by name; existing edges read
         null)."""
         check_write_batch(endpoints)
-        base = self.edges.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m"))
         new = _allocate_ids(
             endpoints.withColumn("rel_type", F.lit(rel_type)),
-            base,
+            _max_id(self.edges),
         )
         merged = self.edges.unionByName(new, allowMissingColumns=True)
         return PropertyGraph(self.vertices, merged)
@@ -656,12 +729,9 @@ class PropertyGraph:
         # Same id-allocation path as :meth:`create_relationships`, except
         # the max-id base reads the PRE-projection edge table: ON MATCH
         # arms never touch ``id``, so the maximum is identical — and the
-        # scalar agg no longer re-executes the marker join that the
-        # composed write→write lineage would otherwise recompute on every
-        # later allocation.
-        base = self.edges.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m"))
+        # scalar agg never re-executes the marker join.
         new = _allocate_ids(
-            missing.withColumn("rel_type", F.lit(rel_type)), base
+            missing.withColumn("rel_type", F.lit(rel_type)), _max_id(self.edges)
         )
         merged = edges_out.unionByName(new, allowMissingColumns=True)
         return PropertyGraph(self.vertices, merged)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_neo4j_spark.catalog import load_table
+from flink_neo4j_spark.graph import local_frame
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -87,8 +88,8 @@ def q5_join_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 # B6 — UNWIND+CREATE as literal-batch append (README.md:45)
 def q6_batch_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    batch = spark.createDataFrame(
-        [(900001, "Frank"), (900002, "Dave")], "c_custkey long, c_name string"
+    batch = local_frame(
+        spark, [(900001, "Frank"), (900002, "Dave")], "c_custkey long, c_name string"
     )
     return c.unionAll(batch).orderBy("c_custkey")
 
@@ -589,7 +590,8 @@ def q29_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal"
     )
-    updates = spark.createDataFrame(
+    updates = local_frame(
+        spark,
         [
             (1, "ACCT_RESET", 0.0),       # update: existing key
             (2, None, 999.99),            # partial update: name keeps old value

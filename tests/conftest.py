@@ -4,6 +4,7 @@ and a normalized result comparator mirroring the driver's hash check
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
 import sys
@@ -134,6 +135,24 @@ def assert_matches_oracle(df, con, sql):
     sn, on = _canon_rows(spdf), _canon_rows(odf)
     mismatches = [(a, b) for a, b in zip(sn, on) if a != b]
     assert not mismatches, f"value mismatch (first 5): {mismatches[:5]}"
+
+
+def count_jobs(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` fires, read from the status
+    tracker under a job group of its own (jobs a broadcast starts on
+    another thread inherit the group)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_JOB_GROUPS = itertools.count()
 
 
 def pytest_configure(config):

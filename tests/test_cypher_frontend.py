@@ -12,6 +12,9 @@ from flink_neo4j_spark.cypher_frontend import (
     cypher_read,
     cypher_write,
 )
+from flink_neo4j_spark.graph import PropertyGraph
+
+from .conftest import count_jobs
 
 #: the reference's exact test fixture — Neo4jFormatTest.java:14-19
 FIXTURE = (
@@ -6364,3 +6367,184 @@ def test_undirected_subqueries_count_self_loop_once(loop_graph):
         "MATCH (x:U {name: 'A'}) WITH x "
         "RETURN COUNT { (x)-[e:K]-(y) WHERE e.w > 0 } AS c"
     ) == 2
+
+
+# -- literal batch frames ---------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "query,params",
+    [
+        ("UNWIND [{a: 1}, {a: 'x'}] AS r RETURN r.a AS a", None),
+        ("UNWIND $rows AS r RETURN r.a AS a", {"rows": [{"a": 1}, {"a": "x"}]}),
+        ("UNWIND $rows AS r RETURN r.a AS a", {"rows": [{"a": 2**63}]}),
+        ("UNWIND [{a: null}, {a: null}] AS r RETURN r.a AS a", None),
+        ("UNWIND [{a: 1}, {a: 2.5}] AS r RETURN r.a AS a", None),
+    ],
+    ids=["int-and-string", "param-int-and-string", "int-past-64-bits",
+         "null-in-every-map", "int-and-float"],
+)
+def test_unwind_map_values_need_one_type(fixture_graph, query, params):
+    # a key whose values fit no single column type is a typed error — never
+    # a stringified '1' or a nulled 2^63
+    with pytest.raises(CypherSyntaxError):
+        cypher_read(fixture_graph, query, params).collect()
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [{"v": 1}, {"v": "x"}],
+        [{"v": 2**63}],
+        [{"v": None}, {"v": None}],
+        [{"v": []}],
+        [{"v": 1}, {"v": 2.5}],
+    ],
+    ids=["int-and-string", "int-past-64-bits", "null-in-every-row",
+         "empty-list", "int-and-float"],
+)
+def test_unwind_batch_values_need_one_type(fixture_graph, rows):
+    with pytest.raises(CypherSyntaxError):
+        cypher_write(
+            fixture_graph,
+            "UNWIND $rows AS r CREATE (n:T {v: r.v})",
+            {"rows": rows},
+        ).vertices.collect()
+
+
+_BATCH_FAMILIES = {
+    "unwind-map-list": lambda s, g: cypher_read(
+        g, "UNWIND [{a: 1}, {a: 2}] AS r RETURN r.a AS a"
+    ),
+    "unwind-create": lambda s, g: cypher_write(
+        g, "UNWIND $rows AS r CREATE (n:T {v: r.v})", {"rows": [{"v": 1}]}
+    ),
+    "merge": lambda s, g: cypher_write(
+        g,
+        "UNWIND $rows AS r MERGE (n:User {name: r.name}) SET n.tier = r.t",
+        {"rows": [{"name": "Alice", "t": "gold"}, {"name": "Zed", "t": "new"}]},
+    ),
+    "merge-arms": lambda s, g: cypher_write(
+        g,
+        "UNWIND $rows AS r MERGE (n:User {name: r.name}) "
+        "ON CREATE SET n.tier = r.t ON MATCH SET n.seen = r.t",
+        {"rows": [{"name": "Alice", "t": "gold"}, {"name": "Zed", "t": "new"}]},
+    ),
+    "match-set": lambda s, g: cypher_write(
+        g,
+        "UNWIND $rows AS r MATCH (p) WHERE p.name = r.name SET p.w = r.w",
+        {"rows": [{"name": "Alice", "w": 70}]},
+    ),
+    "delete": lambda s, g: cypher_write(
+        g,
+        "UNWIND $rows AS r MATCH (n:User {name: r.name}) DETACH DELETE n",
+        {"rows": [{"name": "Eve"}]},
+    ),
+    "create-pattern": lambda s, g: cypher_create_graph(
+        s, "CREATE (a:A {x: 1})-[:R {w: 2}]->(b:A {x: 3})"
+    ),
+    "from-rows": lambda s, g: PropertyGraph.from_rows(
+        s,
+        [(0, "User", "Alice"), (1, "User", "Bob")],
+        "id long, label string, name string",
+        [(0, 0, 1, "KNOWS")],
+        "id long, src long, dst long, rel_type string",
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_BATCH_FAMILIES))
+def test_literal_batches_are_local_relations(spark, fixture_graph, monkeypatch, family):
+    # every driver-side batch reaches Spark as a LocalRelation: its scans
+    # run in the JVM, with no Python worker behind a PythonRDD
+    made = []
+    create = type(spark).createDataFrame
+
+    def recording(self, *args, **kwargs):
+        df = create(self, *args, **kwargs)
+        made.append(df)
+        return df
+
+    monkeypatch.setattr(type(spark), "createDataFrame", recording)
+    _BATCH_FAMILIES[family](spark, fixture_graph)
+    assert made
+    for df in made:
+        qe = df._jdf.queryExecution()
+        assert qe.optimizedPlan().nodeName() == "LocalRelation"
+        assert "PythonRDD" not in df._jdf.rdd().toDebugString()
+
+
+def test_path_edges_memo_is_per_graph_frame(spark):
+    # the path kernels checkpoint and count a graph's edges once: a second
+    # shortestPath on the same graph skips those two jobs, and a write's
+    # new graph walks its own, fresh edges
+    g = cypher_create_graph(
+        spark,
+        "CREATE (a:U {name: 'a'})-[:K]->(b:U {name: 'b'})"
+        "-[:K]->(c:U {name: 'c'})-[:K]->(d:U {name: 'd'})",
+    )
+    query = (
+        "MATCH p = shortestPath((x:U)-[:K*]->(y:U)) "
+        "WHERE x.name = 'a' AND y.name = 'd' RETURN length(p) AS n"
+    )
+    first = count_jobs(spark, lambda: cypher_read(g, query))
+    second = count_jobs(spark, lambda: cypher_read(g, query))
+    assert first - second == 2
+    assert [r["n"] for r in cypher_read(g, query).collect()] == [3]
+    g2 = cypher_write(
+        g,
+        "UNWIND $rows AS r MATCH (a:U {name: r.a}), (b:U {name: r.b}) "
+        "CREATE (a)-[:K]->(b)",
+        {"rows": [{"a": "a", "b": "d"}]},
+    )
+    assert [r["n"] for r in cypher_read(g2, query).collect()] == [1]
+    assert [r["n"] for r in cypher_read(g, query).collect()] == [3]
+
+
+def test_chained_creates_allocate_dense_ids(spark):
+    # each write's id base is the max of the graph it writes to, so two
+    # chained CREATEs stay dense above the second graph's maximum
+    g = cypher_create_graph(spark, "CREATE (a:U {name: 'a'})-[:K]->(b:U {name: 'b'})")
+    create = "UNWIND $rows AS r CREATE (n:U {name: r.name})"
+    g1 = cypher_write(g, create, {"rows": [{"name": "c"}, {"name": "d"}]})
+    g2 = cypher_write(g1, create, {"rows": [{"name": "e"}, {"name": "f"}]})
+    ids = {r["name"]: r["id"] for r in g2.vertices.collect()}
+    assert sorted(ids.values()) == list(range(6))
+    assert {ids["e"], ids["f"]} == {4, 5}
+    link = (
+        "UNWIND $rows AS r MATCH (a:U {name: r.a}), (b:U {name: r.b}) "
+        "CREATE (a)-[:K]->(b)"
+    )
+    g3 = cypher_write(g2, link, {"rows": [{"a": "c", "b": "d"}]})
+    g4 = cypher_write(g3, link, {"rows": [{"a": "e", "b": "f"}]})
+    assert sorted(r["id"] for r in g4.edges.collect()) == [0, 1, 2]
+
+
+def test_where_binds_pattern_subqueries_nested_in_expressions(spark):
+    # COUNT { } and pattern comprehensions bind wherever they sit in a
+    # WHERE expression, CASE branches included
+    g = cypher_create_graph(
+        spark,
+        "CREATE (a:U {name: 'a'}), (b:U {name: 'b'}), (c:U {name: 'c'}), "
+        "(a)-[:K]->(b), (b)-[:K]->(c), (a)-[:K]->(c)",
+    )
+
+    def names(q):
+        return sorted(r["name"] for r in cypher_read(g, q).collect())
+
+    assert names(
+        "MATCH (n:U) WHERE CASE WHEN COUNT { (n)-[:K]->() } > 0 "
+        "THEN true ELSE false END RETURN n.name AS name"
+    ) == ["a", "b"]
+    assert names(
+        "MATCH (n:U) WHERE CASE WHEN size([(n)-[:K]->(m) | m.name]) = 1 "
+        "THEN true ELSE false END RETURN n.name AS name"
+    ) == ["b"]
+    g2 = cypher_write(
+        g,
+        "MATCH (n:U) WHERE CASE WHEN COUNT { (n)-[:K]->() } > 1 "
+        "THEN true ELSE false END SET n.x = 1",
+    )
+    assert {r["name"]: r["x"] for r in g2.vertices.collect()} == {
+        "a": 1, "b": None, "c": None,
+    }

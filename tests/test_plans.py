@@ -25,7 +25,7 @@ from flink_neo4j_spark.plans import (
 )
 from pyspark.sql import functions as F
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, count_jobs
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -1159,6 +1159,36 @@ def test_construct_round_trip_budget(spark, name):
         del client.send_command
     budget = CONSTRUCT_RT_BUDGETS[name]
     assert sent[0] <= budget, f"{name}: {sent[0]} py4j commands (budget {budget})"
+
+
+#: Spark jobs fired while a warm query is CONSTRUCTED (sf0.001) — the
+#: eager work a plan build pays before any action. Before the per-frame
+#: memo and local batch frames the counts were g18 5, g31 11, g43 5,
+#: g48 9, g49 4, g58 9, g71 9: every shortestPath / unbounded ``*``
+#: re-checkpointed and re-counted the memoized graph's edges, the seeds'
+#: checkpoint was eager, and every id allocation re-ran a ``max(id)``
+#: aggregate. What is left is the id-allocation checkpoint of a write and
+#: one materializing count per BFS level.
+CONSTRUCT_JOB_BUDGETS = {
+    "g18_cypher_merge": 3,
+    "g31_cypher_shortest_path": 7,
+    "g43_cypher_merge_arms": 3,
+    "g48_cypher_all_shortest": 5,
+    "g49_cypher_foreach": 2,
+    "g58_cypher_path_nodes": 5,
+    "g71_cypher_unbounded_paths": 6,
+}
+
+
+@pytest.mark.parametrize("name", sorted(CONSTRUCT_JOB_BUDGETS))
+def test_construct_job_budget(spark, name):
+    from flink_neo4j_spark.registry import all_queries
+
+    query = all_queries()[name]
+    query(spark, SF_DIR)  # cold: memo builds
+    jobs = count_jobs(spark, lambda: query(spark, SF_DIR))
+    budget = CONSTRUCT_JOB_BUDGETS[name]
+    assert jobs <= budget, f"{name}: {jobs} construct jobs (budget {budget})"
 
 
 def test_rrf_pools_are_take_ordered(spark):
