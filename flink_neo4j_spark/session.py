@@ -10,8 +10,10 @@ semantics are deterministic across engines (the DuckDB oracle pins UTC too).
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -50,7 +52,9 @@ def ship_package(spark: SparkSession) -> None:
     root; on a real cluster (or a driver launched from elsewhere) it fails
     with ModuleNotFoundError. ``sc.addPyFile`` is the deployment-grade answer:
     the zip is distributed once per application to every executor and
-    prepended to worker ``sys.path``.
+    prepended to worker ``sys.path``. Tasks that run engine code on a
+    worker call :func:`release_zip_finders` when they end, so the zip
+    finders of a reused worker are not re-read at the next task start.
     """
     sc = spark.sparkContext
     if getattr(sc, _SHIPPED_ATTR, False):
@@ -70,6 +74,26 @@ def ship_package(spark: SparkSession) -> None:
     os.replace(tmp_path, zip_path)
     sc.addPyFile(zip_path)
     setattr(sc, _SHIPPED_ATTR, True)
+
+
+def release_zip_finders() -> None:
+    """Drop every zip finder from the import caches of this process.
+
+    PySpark calls ``importlib.invalidate_caches()`` at the start of every
+    Python worker task. On CPython 3.11 and 3.12 that makes each
+    ``zipimporter`` in ``sys.path_importer_cache`` re-read its archive's
+    directory at once: a reused worker holds finders for ``pyspark.zip``
+    and its sub-packages, the py4j zip, the spark-core jar and the engine
+    zip, about 0.17 s of CPU per task. CPython 3.13 only drops the cached
+    directory and re-reads it when an import next scans the archive. This
+    gives 3.11 the same lazy behaviour: the next import that scans an
+    archive builds a new finder and reads its directory once, and a warm
+    task whose imports are all loaded reads nothing.
+    """
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+            zipimport._zip_directory_cache.pop(finder.archive, None)
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:

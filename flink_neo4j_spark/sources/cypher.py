@@ -19,6 +19,11 @@ also *generate* the template from ``df.schema`` — column names are the
 parameter keys, making the reference's positional ``addParameterKey``
 (Output:261-282) and one-row type inference (Output:182-202) unnecessary.
 
+Each Python task body ends by releasing the worker's zip finders
+(``session.release_zip_finders``), so a reused worker does not re-read
+PySpark's archives at every task start, and a split's response is parsed
+and decoded with the cyclic GC paused (:func:`fetch_rows`).
+
 Delivery semantics: at-least-once for CREATE templates (Spark retries
 partitions; the reference has the same exposure, SURVEY §4); use MERGE
 templates for idempotent writes and disable speculation on the sink job.
@@ -26,6 +31,7 @@ templates for idempotent writes and disable speculation on the sink job.
 
 from __future__ import annotations
 
+import gc
 import itertools
 import re
 from collections.abc import Callable, Iterable, Iterator
@@ -37,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
+from flink_neo4j_spark.session import release_zip_finders
 from flink_neo4j_spark.sources.transport import Transport
 
 # -- A10: UNWIND parameter-name extraction (regex parity, incl. error) -----
@@ -212,15 +219,26 @@ def fetch_rows(
     decode the rows a column at a time into one ``RecordBatch``. ``params``
     are pushed-down predicate values (parameterized, never spliced — the
     injection-safe replacement for Base:60's escaping), passed only when
-    present so pre-pushdown ``run(statement, rows)`` transports still work."""
+    present so pre-pushdown ``run(statement, rows)`` transports still work.
+
+    The cyclic GC is off while the response is parsed and decoded (its
+    previous state restored after): the parsed rows hold no cycles, and
+    refcounting frees them, but each generation-0 collection would walk
+    the fresh containers again."""
+    gc_was_enabled = gc.isenabled()
+    gc.disable()
     try:
-        raw = transport.run(query, params=params) if params else transport.run(query)
+        try:
+            raw = transport.run(query, params=params) if params else transport.run(query)
+        finally:
+            transport.close()
+        return pa.RecordBatch.from_arrays(
+            [decode_column([r.get(f.name) for r in raw], f.dataType, f.name) for f in schema.fields],
+            schema=to_arrow_schema(schema),
+        )
     finally:
-        transport.close()
-    return pa.RecordBatch.from_arrays(
-        [decode_column([r.get(f.name) for r in raw], f.dataType, f.name) for f in schema.fields],
-        schema=to_arrow_schema(schema),
-    )
+        if gc_was_enabled:
+            gc.enable()
 
 
 def _arrow_rows(batches: Iterable[pa.RecordBatch]) -> Iterator[dict[str, Any]]:
@@ -287,8 +305,11 @@ def write_cypher(
     statement = sink_statement(df.columns, query, label, merge_key)
 
     def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        n_rows, _ = send_batches(transport_factory(), statement, batches, batch_size)
-        yield pa.RecordBatch.from_pydict({"rows": pa.array([n_rows], pa.int64())})
+        try:
+            n_rows, _ = send_batches(transport_factory(), statement, batches, batch_size)
+            yield pa.RecordBatch.from_pydict({"rows": pa.array([n_rows], pa.int64())})
+        finally:
+            release_zip_finders()
 
     return sum(r.rows for r in df.mapInArrow(write_partition, "rows long").collect())
 
@@ -506,9 +527,12 @@ def read_cypher(
     queries = split_queries(query, num_partitions, partition_template)
 
     def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for split in batch.column(0).to_pylist():
-                yield fetch_rows(transport_factory(), queries[split], schema, params)
+        try:
+            for batch in batches:
+                for split in batch.column(0).to_pylist():
+                    yield fetch_rows(transport_factory(), queries[split], schema, params)
+        finally:
+            release_zip_finders()
 
     # one split id per partition: the split's query is looked up on the
     # executor, so planning the read costs no shuffle

@@ -46,6 +46,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
+from flink_neo4j_spark.session import release_zip_finders
 from flink_neo4j_spark.sources.cypher import (
     extract_parameter_name,
     fetch_rows,
@@ -113,9 +114,12 @@ class CypherReader(DataSourceReader):
         return [CypherInputPartition(i, q) for i, q in enumerate(queries)]
 
     def read(self, partition: CypherInputPartition) -> Iterator[pa.RecordBatch]:
-        params = json.loads(self._options["params"]) if self._options.get("params") else None
-        transport = _transport_from_options(self._options)  # A1 open; A8 close in fetch_rows
-        yield fetch_rows(transport, partition.query, self._schema, params)
+        try:
+            params = json.loads(self._options["params"]) if self._options.get("params") else None
+            transport = _transport_from_options(self._options)  # A1 open; A8 close in fetch_rows
+            yield fetch_rows(transport, partition.query, self._schema, params)
+        finally:
+            release_zip_finders()
 
 
 class CypherCommit(WriterCommitMessage):
@@ -144,8 +148,11 @@ class CypherWriter(DataSourceArrowWriter):
         )
 
     def write(self, iterator: Iterator[pa.RecordBatch]) -> CypherCommit:
-        transport = _transport_from_options(self._options)  # A9 task open
-        return CypherCommit(*send_batches(transport, self._template, iterator, self._batch_size))
+        try:
+            transport = _transport_from_options(self._options)  # A9 task open
+            return CypherCommit(*send_batches(transport, self._template, iterator, self._batch_size))
+        finally:
+            release_zip_finders()
 
     def commit(self, messages):  # pragma: no cover - trivial
         return None

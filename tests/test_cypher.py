@@ -4,6 +4,7 @@ incl. error branches, template/param-name contract, builder validation."""
 
 from __future__ import annotations
 
+import gc
 import math
 
 import pyarrow as pa
@@ -17,6 +18,7 @@ from flink_neo4j_spark.sources.cypher import (
     decode_column,
     decode_value,
     extract_parameter_name,
+    fetch_rows,
     read_cypher,
     send_batches,
     unwind_create_template,
@@ -288,6 +290,52 @@ def test_partitioned_read_requires_template(spark, tmp_path):
         read_cypher(
             spark, make_factory(str(tmp_path)), "q", schema="n int", num_partitions=2
         )
+
+
+_N_LONG = T.StructType([T.StructField("n", T.LongType())])
+
+
+class _StubTransport:
+    """Read transport that records whether the cyclic GC ran during ``run``."""
+
+    def __init__(self, rows=None, error=None):
+        self.rows, self.error = rows or [], error
+        self.gc_during_run = None
+        self.closed = False
+
+    def run(self, statement, rows=None, params=None):
+        self.gc_during_run = gc.isenabled()
+        if self.error is not None:
+            raise self.error
+        return self.rows
+
+    def close(self):
+        self.closed = True
+
+
+def test_fetch_rows_pauses_gc_and_restores_it():
+    t = _StubTransport([{"n": 1}, {"n": None}])
+    batch = fetch_rows(t, "MATCH (n) RETURN n.n", _N_LONG, None)
+    assert batch.column(0).to_pylist() == [1, None]
+    assert t.gc_during_run is False and t.closed
+    assert gc.isenabled()
+
+
+def test_fetch_rows_restores_gc_when_run_raises():
+    t = _StubTransport(error=IOError("endpoint down"))
+    with pytest.raises(IOError, match="endpoint down"):
+        fetch_rows(t, "q", _N_LONG, None)
+    assert t.gc_during_run is False and t.closed
+    assert gc.isenabled()
+
+
+def test_fetch_rows_keeps_gc_disabled_when_it_was():
+    gc.disable()
+    try:
+        fetch_rows(_StubTransport([{"n": 1}]), "q", _N_LONG, None)
+        assert not gc.isenabled()
+    finally:
+        gc.enable()
 
 
 # -- builders (A18, Base:201-208 / Output:310-312) -------------------------
